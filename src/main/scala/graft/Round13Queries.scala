@@ -133,7 +133,7 @@ object Round13Queries {
     // can explode. Production corpora pass Some(cap) — the q_d23 gate
     // proves the binding-cap algebra.
     Dedup.nearDupPairsAuto(PipelineQueries.corpus(s, d), "id", "text",
-        truthDfCap = None, sampleMod = 2,
+        truthDfCap = None, gate = graft.ops.SampleGate.Mod(2),
         precisionFloorPpm = d21PrecisionFloorPpm,
         recallFloorPpm = d21RecallFloorPpm)
       .select(col("rows_per_band"), col("ia"), col("ib"), col("jac"))

@@ -45,7 +45,7 @@ object Round14Queries {
   /** Two PURE-boilerplate documents — an exact-duplicate family whose
     * ENTIRE shingle set is capped out: the within-group edge the
     * stop-shingle contract defines as NOT-true (informative Jaccard
-    * 0/0), gated here so the engine's [[Dedup]] withinTrueOf rule and
+    * 0/0), gated here so the engine's [[Dedup]] withinOf rule and
     * the oracle's member-level algebra are proven to agree on it. Ids
     * chosen so both land in the chooser's hash-gated sample
     * (hash60 % 2 = 0 for both — verified at authoring time).
@@ -303,7 +303,8 @@ object Round14Queries {
     */
   val d25AutoSimhash: Q = (s, d) =>
     Dedup.simhashPairsAuto(PipelineQueries.corpus(s, d), "id", "text",
-        bandConfigs = Seq(2, 3, 4, 6), maxDist = d24MaxDist, sampleMod = 2,
+        bandConfigs = Seq(2, 3, 4, 6), maxDist = d24MaxDist,
+        gate = graft.ops.SampleGate.Mod(2),
         precisionFloorPpm = d25PrecisionFloorPpm,
         recallFloorPpm = d25RecallFloorPpm)
       .orderBy("ia", "ib")
@@ -469,7 +470,7 @@ object Round14Queries {
       // by design). The exact-truth cost is batch-bounded either way,
       // which is the contract that makes first-batch tuning affordable.
       val idx = new KeepBestIndex(s, tuning = Some(KeepBestIndex.AutoTune(
-        rowsPerBandConfigs = Seq(2, 4, 8), sampleMod = 1,
+        rowsPerBandConfigs = Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = st19PrecisionFloorPpm,
         recallFloorPpm = st19RecallFloorPpm,
         // the planted corpus is boilerplate-free by construction (the
@@ -756,7 +757,8 @@ object Round14Queries {
       .imageDHash(PipelineQueries.imageRecords(s, d)).toDF()
       .localCheckpoint(true)
     graft.ops.Multimodal.bandedHammingPairsAuto(hashes,
-        maxDist = m16MaxDist, bandConfigs = Seq(2, 4, 8), sampleMod = 2,
+        maxDist = m16MaxDist, bandConfigs = Seq(2, 4, 8),
+        gate = graft.ops.SampleGate.Mod(2),
         precisionFloorPpm = m16PrecisionFloorPpm,
         recallFloorPpm = m16RecallFloorPpm)
       .orderBy("ia", "ib")
@@ -934,7 +936,7 @@ object Round14Queries {
       .select($"vec_id", $"embedding".cast("array<double>").as("e"))
     graft.ops.Vectors.cosineDupPairsAuto(vecs, "e", "vec_id",
         planeConfigs = Seq(2, 4, 6), dim = 64, threshold = e22Threshold,
-        sampleMod = 1,
+        gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = e22PrecisionFloorPpm,
         recallFloorPpm = e22RecallFloorPpm,
         truthRepCap = 25000) // the e22 sizing note
@@ -1249,7 +1251,7 @@ object Round14Queries {
       val storeDir = new java.io.File(root, "store").getAbsolutePath
       val score = pmod(TextOps.hash60(col("id").cast("string")), lit(1000L))
       val tune = KeepBestIndex.AutoTune(
-        rowsPerBandConfigs = Seq(2, 4, 8), sampleMod = 1,
+        rowsPerBandConfigs = Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = st19PrecisionFloorPpm,
         recallFloorPpm = st19RecallFloorPpm,
         truthDfCap = None) // the planted corpus is boilerplate-free (q_d22 posture)

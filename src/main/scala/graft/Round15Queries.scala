@@ -35,7 +35,7 @@ object Round15Queries {
     */
   val d26Budget = 400L
 
-  /** D26: [[Dedup.nearDupPairsAutoBudgeted]] — the q_d22 auto path
+  /** D26: [[Dedup.nearDupPairsAuto]] at a budget gate — the q_d22 auto path
     * with `sampleMod` DERIVED, not guessed: one corpus count, one
     * ceiling division against the 3σ-slacked target
     * ([[Dedup.chooseSampleMod]] — m = ⌈n / (budget − ⌈3√budget⌉)⌉),
@@ -51,8 +51,8 @@ object Round15Queries {
     * by construction.
     */
   val d26AutoDedupBudgeted: Q = (s, d) =>
-    Dedup.nearDupPairsAutoBudgeted(PipelineQueries.corpus(s, d), "id", "text",
-        truthDfCap = None, budget = d26Budget,
+    Dedup.nearDupPairsAuto(PipelineQueries.corpus(s, d), "id", "text",
+        truthDfCap = None, gate = graft.ops.SampleGate.Budget(d26Budget),
         precisionFloorPpm = Round13Queries.d21PrecisionFloorPpm,
         recallFloorPpm = Round13Queries.d21RecallFloorPpm)
       .select(col("sample_mod"), col("rows_per_band"), col("ia"), col("ib"),
@@ -161,7 +161,7 @@ object Round15Queries {
   val e25PrecisionFloorPpm = 1100L
   val e25RecallFloorPpm = 150000L
 
-  /** E25: [[Vectors.cosineDupPairsAutoBudgeted]] — q_d26's derived
+  /** E25: [[Vectors.cosineDupPairsAuto]] at a budget gate — q_d26's derived
     * sample gate on the cosine hyperplane family: the slacked ceiling
     * division picks the mod, `truthRepCap = budget` arms the family's own quadratic
     * refusal at exactly the stated budget, and the chooser prices the
@@ -176,9 +176,10 @@ object Round15Queries {
     import s.implicits._
     val vecs = Tables.embeddings(s, d)
       .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-    Vectors.cosineDupPairsAutoBudgeted(vecs, "e", "vec_id",
+    Vectors.cosineDupPairsAuto(vecs, "e", "vec_id",
         planeConfigs = Seq(2, 4, 6), dim = 64,
-        threshold = Round14Queries.e22Threshold, budget = e25Budget,
+        threshold = Round14Queries.e22Threshold,
+        gate = graft.ops.SampleGate.Budget(e25Budget),
         precisionFloorPpm = e25PrecisionFloorPpm,
         recallFloorPpm = e25RecallFloorPpm)
       .orderBy("ia", "ib")
@@ -567,7 +568,8 @@ object Round15Queries {
       val birth = Seq((9000001L, st26BirthText), (9000002L, st26BirthText))
         .toDF("id", "text")
       val score = pmod(TextOps.hash60(col("id").cast("string")), lit(1000L))
-      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8),
+        gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 600000L, truthDfCap = None)
       val st0 = graft.ops.KeepBestIndexStore.createLive(s, vroot, tune)
       st0.ingest(birth, "id", "text", score)

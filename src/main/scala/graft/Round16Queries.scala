@@ -428,7 +428,8 @@ object Round16Queries {
         .toDF("id", "text")
       val score = pmod(graft.ops.TextOps.hash60(col("id").cast("string")),
         lit(1000L))
-      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8),
+        gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 600000L, truthDfCap = None)
       graft.ops.KeepBestIndexStore.createLive(s, vroot, tune)
       val now = System.currentTimeMillis()

@@ -628,32 +628,31 @@ object Dedup {
   private[graft] def sampleGroupsOf(groups: DataFrame, sampleMod: Long): DataFrame =
     groups
       .select(col("hs"),
-        filter(col("members"), m =>
-          pmod(TextOps.hash60(m.cast("string")), lit(sampleMod.toLong)) === 0)
-          .as("members"))
+        filter(col("members"), SampleGate.admits(_, sampleMod)).as("members"))
       .where(size(col("members")) > 0)
       .withColumn("rep", element_at(col("members"), 1))
 
-  /** The shared rep-level scaffold of [[lshTuning]] and [[lshRecall]]
-    * over a (persisted) [[contentGroups]] frame — the pieces whose
-    * arithmetic the two tables must AGREE on (both oracles and the
-    * DupStress K-replication identity depend on identical group
-    * semantics): the within-group member-pair count Σ C(m, 2) (one
-    * driver scalar), the rep-level shingle postings, and the rep set
-    * sizes (both map-side off the cached group rows).
+  /** The rep-level shingle postings and set sizes of a (persisted)
+    * [[contentGroups]] frame — both map-side off the cached group rows;
+    * shared by [[lshTuning]] and the LSH chooser so their arithmetic
+    * stays in lockstep (both oracles and the DupStress K-replication
+    * identity depend on identical group semantics).
     */
-  private def groupScaffold(groups: DataFrame): (Long, DataFrame, DataFrame) = {
-    val nWithin = groups
-      .agg(coalesce(sum(expr("size(members) * cast(size(members) - 1 as bigint) div 2")),
-        lit(0L))).first().getLong(0)
-    val repSh = groups.select(col("rep").as("id"), explode(col("hs")).as("h"))
-    val sizes = groups.select(col("rep").as("id"),
-      size(col("hs")).cast(LongType).as("n"))
-    (nWithin, repSh, sizes)
-  }
+  private def repPostings(groups: DataFrame): (DataFrame, DataFrame) =
+    (groups.select(col("rep").as("id"), explode(col("hs")).as("h")),
+      groups.select(col("rep").as("id"), size(col("hs")).cast(LongType).as("n")))
+
+  /** The within-group member-pair weight Σ C(m, 2) over a
+    * [[contentGroups]] frame — one driver scalar.
+    */
+  private def withinPairs(groups: DataFrame): Long =
+    groups.agg(coalesce(sum(contentPairWeight), lit(0L))).first().getLong(0)
+
+  private def contentPairWeight: Column =
+    BandChooser.pairWeight("cast(size(members) as bigint)")
 
   /** All banding configurations in ONE frame, tagged by `rpb` — the
-    * single-pass multi-config shape [[lshTuning]] and [[lshRecall]]
+    * single-pass multi-config shape [[lshTuning]] and the LSH chooser
     * share: one union, one downstream bucket aggregation, never a
     * per-config job cascade.
     */
@@ -691,30 +690,11 @@ object Dedup {
       .localCheckpoint(eager = true)
   }
 
-  /** Truth-side postings + sizes under the optional informative-
-    * universe cap (rep-level df ≤ cap, sizes recomputed over that
-    * universe — [[ngramJaccardPairs]]'s stop-shingle contract). The
-    * Boolean says whether the postings frame is a fresh persist the
-    * caller must unpersist. Shared by [[lshRecall]] and
-    * [[chooseLshConfig]].
-    */
-  private def truthScaffold(repSh: DataFrame, fullSizes: DataFrame,
-                            truthDfCap: Option[Int])
-      : (DataFrame, DataFrame, Boolean) = truthDfCap match {
-    case Some(cap) =>
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("h")
-      val informative = repSh.withColumn("df", count(lit(1)).over(w))
-        .filter(col("df") <= cap).drop("df")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      informative.count()
-      (informative, informative.groupBy(col("id")).agg(count(lit(1)).as("n")), true)
-    case None => (repSh, fullSizes, false)
-  }
-
-  /** Within-group (identical-content) TRUE-pair weight under the truth
-    * universe: Σ C(m, 2) over content groups — restricted, when a
-    * `truthDfCap` BINDS (`capped`), to groups whose INFORMATIVE shingle
-    * set is non-empty. A group whose entire set is capped out (a
+  /** Within-group (identical-content) pair weights Σ C(m, 2) over
+    * content groups: (all — every such pair is a candidate in every
+    * config — and TRUE under the truth universe). Truth is restricted,
+    * when a `truthDfCap` BINDS (`capped`), to groups whose INFORMATIVE
+    * shingle set is non-empty. A group whose entire set is capped out (a
     * pure-boilerplate duplicate family) has informative Jaccard 0/0 —
     * NOT a true pair under the stop-shingle contract
     * ([[ngramJaccardPairs]]), exactly as the member-level
@@ -725,25 +705,30 @@ object Dedup {
     * fail verification, pricing the boilerplate waste into precision
     * instead of hiding it. Uncapped, every identical-content pair is
     * true by definition (equal sets are equal under the full
-    * universe) — the pre-r14 behavior, unchanged.
+    * universe). One job either way.
     */
-  private def withinTrueOf(groups: DataFrame, nWithin: Long,
-                           postings: DataFrame, capped: Boolean,
-                           threshold: Double): Long =
-    if (1.0 < threshold) 0L
-    else if (!capped) nWithin
-    else groups
-      .join(postings.select(col("id").as("rep")).distinct(), Seq("rep"))
-      .agg(coalesce(sum(expr(
-        "size(members) * cast(size(members) - 1 as bigint) div 2")), lit(0L)))
-      .first().getLong(0)
+  private def withinOf(groups: DataFrame, postings: DataFrame, capped: Boolean,
+                       threshold: Double): (Long, Long) = {
+    val (all, informative) =
+      if (!capped) { val n = withinPairs(groups); (n, n) }
+      else {
+        val r = groups
+          .join(postings.select(col("id").as("rep"), lit(true).as("inf")).distinct(),
+            Seq("rep"), "left")
+          .agg(coalesce(sum(contentPairWeight), lit(0L)),
+            coalesce(sum(when(col("inf"), contentPairWeight).otherwise(0L)), lit(0L)))
+          .first()
+        (r.getLong(0), r.getLong(1))
+      }
+    (all, if (1.0 < threshold) 0L else informative)
+  }
 
   /** The rep-level WEIGHTED truth relation (ia, ib, w = ma·mb): exact
     * Jaccard ≥ threshold off the inverted index — one self-join keyed
     * on the shingle hash (one row per SHARED shingle, never candidate
     * × set-size), then the size join; weights expand rep truth to
-    * member truth without enumerating members. Shared by
-    * [[lshRecall]] and [[chooseLshConfig]].
+    * member truth without enumerating members. The LSH chooser's
+    * truth ([[chooseLshConfigFromGroups]]).
     */
   private def repTruth(postings: DataFrame, sizes: DataFrame, mOf: DataFrame,
                        threshold: Double): DataFrame =
@@ -1299,8 +1284,6 @@ object Dedup {
     // prices the grid and [[simhashPairsAuto]] wires it in.
     require(nBands >= 1 && 60 % nBands == 0,
       s"nBands must divide 60, got $nBands")
-    val w = 60 / nBands
-    val mask = (1L << w) - 1
     // The distinct-signature groups feed the banded rep enumeration,
     // the within-group expansion, and both sides of the cross-group
     // expansion (4 plan references): the upstream simhash aggregation
@@ -1315,7 +1298,7 @@ object Dedup {
     groups.count()
     val repPairs = groups
       .withColumn("b", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("chunk", expr(s"(simhash >> ($w * b)) & $mask"))
+      .withColumn("chunk", simhashChunk(nBands))
       .groupBy(col("b"), col("chunk"))
       .agg(collect_list(struct(col("rep"), col("simhash"))).as("ms"))
       .where(size(col("ms")) > 1)
@@ -1403,7 +1386,8 @@ object Dedup {
     // On a dup-heavy corpus the tuning table therefore costs
     // O(distinct²-in-bucket), not O(output) — the measurement stays
     // cheap even when the relation it measures explodes.
-    val (nWithin, repSh, sizes) = groupScaffold(groups)
+    val nWithin = withinPairs(groups)
+    val (repSh, sizes) = repPostings(groups)
     val withinVerified = if (1.0 >= threshold) nWithin else 0L
     // Signatures come map-side off the cached hs arrays (sigFromHashSet
     // — bit-equal to minhashSigs, zero movement). The member count
@@ -1448,7 +1432,8 @@ object Dedup {
     * duplicates it MISSES — the S-curve trade-off both tables together
     * resolve before the full corpus run. (Post-verification recall
     * equals candidate recall: exact verification never drops a true
-    * pair.)
+    * pair.) A projection of [[chooseLshConfig]] at open floors: on the
+    * same sample its `n_verified` IS this table's `n_hit`.
     *
     * Ground truth requires exact all-pairs similarity, which nothing
     * can bound below quadratic in the worst case — so the eval runs on
@@ -1479,53 +1464,18 @@ object Dedup {
     */
   def lshRecall(df: DataFrame, idCol: String, textCol: String, shingleN: Int,
                 k: Int, rowsPerBandConfigs: Seq[Int], threshold: Double,
-                sampleMod: Long, truthDfCap: Option[Int] = None): DataFrame = {
-    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    require(truthDfCap.forall(_ >= 1), s"truthDfCap must be >= 1, got $truthDfCap")
-    val spark = df.sparkSession
-    val sample = df.filter(
-      pmod(TextOps.hash60(col(idCol).cast("string")), lit(sampleMod.toLong)) === 0)
-    val groups = contentGroups(sample, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    groups.count()
-    val (nWithin, repSh, fullSizes) = groupScaffold(groups)
-    val mOf = groups.select(col("rep"), size(col("members")).cast(LongType).as("m"))
-    // Informative-universe gate for the truth side only (candidates
-    // band over the FULL sets — that is what production LSH sees, and
-    // recall against informative-universe truth is the question asked).
-    val (postings, sizes, ownPostings) =
-      truthScaffold(repSh, fullSizes, truthDfCap)
-    // Within-group pairs are true only while their informative set is
-    // non-empty — see [[withinTrueOf]] (pure-boilerplate families are
-    // 0/0 under a binding cap, the stop-shingle contract).
-    val withinTrue = withinTrueOf(groups, nWithin, postings, ownPostings,
-      threshold)
-    val truth = repTruth(postings, sizes, mOf, threshold)
-    val nCross = truth.agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0)
-    val nTrue = withinTrue + nCross
-    // CANDIDATES: all configs in one banding pass (rpb tag), rep level;
-    // hits are the truth ∩ candidate join, weight carried by truth.
-    val candAll = weightedRepCandAll(groups, rowsPerBandConfigs, k)
-      .select(col("rpb"), col("ia"), col("ib"))
-    val hitByCfg = candAll.join(truth, Seq("ia", "ib"))
-      .groupBy(col("rpb"))
-      .agg(coalesce(sum(col("w")), lit(0L)).as("nh"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val rows = rowsPerBandConfigs.map { r =>
-      val nHit = withinTrue + hitByCfg.getOrElse(r, 0L)
-      (r, k / r, nTrue, nHit,
-        if (nTrue == 0) None else Some(nHit * 1000000L / nTrue))
-    }
-    if (ownPostings) postings.unpersist()
-    groups.unpersist()
-    import spark.implicits._
-    rows.toDF("rows_per_band", "n_bands", "n_true", "n_hit", "recall_ppm")
-  }
+                sampleMod: Long, truthDfCap: Option[Int] = None): DataFrame =
+    chooseLshConfig(df, idCol, textCol, shingleN, k, rowsPerBandConfigs,
+        threshold, sampleMod, 0L, 0L, truthDfCap)
+      .select(col("rows_per_band"), col("n_bands"), col("n_true"),
+        col("n_verified").as("n_hit"), col("recall_ppm"))
 
-  /** LSH OPERATING-POINT CHOOSER — closes the tuning loop the
-    * [[lshTuning]] (precision) and [[lshRecall]] (recall) tables exist
-    * for: measure BOTH axes for every (bands × rowsPerBand) config in
-    * ONE pass over the deterministic hash-gated sample, mark each
+  /** LSH OPERATING-POINT CHOOSER — the MinHash family of the one
+    * banded-candidate chooser ([[BandChooser]]); it closes the tuning
+    * loop the [[lshTuning]] (precision) and [[lshRecall]] (recall)
+    * tables exist for: measure BOTH axes for every (bands ×
+    * rowsPerBand) config in ONE pass over the deterministic hash-gated
+    * sample, mark each
     * config `feasible` iff its precision AND recall clear the caller's
     * floors, and mark `chosen` the cheapest feasible config — fewest
     * candidate pairs (candidates are the verify work a production run
@@ -1564,9 +1514,8 @@ object Dedup {
                       truthDfCap: Option[Int] = None,
                       sampleRepCap: Option[Long] = None): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    val sample = df.filter(
-      pmod(TextOps.hash60(col(idCol).cast("string")), lit(sampleMod.toLong)) === 0)
-    chooseLshConfigFromGroups(contentGroups(sample, idCol, textCol, shingleN),
+    chooseLshConfigFromGroups(contentGroups(
+        df.filter(SampleGate.admits(col(idCol), sampleMod)), idCol, textCol, shingleN),
       k, rowsPerBandConfigs, threshold, precisionFloorPpm, recallFloorPpm,
       truthDfCap, sampleRepCap)
   }
@@ -1576,12 +1525,17 @@ object Dedup {
     * [[sampleGroupsOf]] derivation off the full corpus's cached groups)
     * is the caller's, so the corpus is never re-shingled for the
     * chooser. `sampleRepCap`, when set, REFUSES if the sample holds
-    * more distinct contents than the caller's rep budget — the
-    * [[Vectors.chooseCosinePlanes]] truthRepCap posture: size
-    * `sampleMod` to the budget (see [[chooseSampleMod]]) instead of
-    * silently paying an unbudgeted sample pass. The count it checks is
-    * the persist-materialization count the method pays anyway — the
-    * refusal is free.
+    * more distinct contents than the caller's rep budget (see
+    * [[BandChooser.choose]]).
+    *
+    * The MinHash family of [[BandChooser]]: truth is the inverted-index
+    * exact-Jaccard join ([[repTruth]]) and candidates the weighted
+    * all-config banding ([[weightedRepCandAll]]), both materialized in
+    * wave 1; a candidate is verified iff it is in the truth relation —
+    * one candidate-bounded join prices precision's numerator and
+    * recall's hit count. Within-group pairs stay CANDIDATES
+    * unconditionally but are TRUE/verified only while their informative
+    * set is non-empty ([[withinOf]]).
     */
   def chooseLshConfigFromGroups(sampleGroups: DataFrame, k: Int,
                                 rowsPerBandConfigs: Seq[Int],
@@ -1590,84 +1544,41 @@ object Dedup {
                                 truthDfCap: Option[Int],
                                 sampleRepCap: Option[Long] = None): DataFrame = {
     require(truthDfCap.forall(_ >= 1), s"truthDfCap must be >= 1, got $truthDfCap")
-    require(sampleRepCap.forall(_ >= 1),
-      s"sampleRepCap must be >= 1, got $sampleRepCap")
-    val spark = sampleGroups.sparkSession
-    val groups = sampleGroups
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nReps = groups.count()
-    sampleRepCap.foreach { cap =>
-      if (nReps > cap) {
-        groups.unpersist()
-        throw new IllegalArgumentException(
-          s"requirement failed: chooseLshConfig: the sample holds $nReps " +
-            s"distinct contents, above sampleRepCap=$cap — the chooser would " +
-            "pay an unbudgeted sample pass; raise sampleMod (or derive it " +
-            "from the budget with chooseSampleMod) instead")
-      }
-    }
-    val (nWithin, repSh, fullSizes) = groupScaffold(groups)
-    val mOf = groups.select(col("rep"), size(col("members")).cast(LongType).as("m"))
-    val (postings, sizes, ownPostings) =
-      truthScaffold(repSh, fullSizes, truthDfCap)
-    // The chooser's measurement jobs fall into two independent waves
-    // over the persisted groups/postings — overlap each wave
-    // (guide §2.6; sequentially every job's stage tail idled the
-    // cores). Wave 1 materializes the two checkpointed relations
-    // (truth — the inverted-index join; the multi-config banding) plus
-    // the capped within-group weight; wave 2 runs the three aggregates
-    // off those checkpoints. Same relations, same arithmetic, same
-    // collected Longs as the sequential form.
-    var truth: DataFrame = null
-    var repCandAll: DataFrame = null
-    var withinTrue = 0L
-    Concurrent.runAll(Seq(
-      // truth: the lshRecall inverted-index join, rep level, weighted
-      () => truth = repTruth(postings, sizes, mOf, threshold),
-      // candidates: the lshTuning weighted banding, all configs one pass
-      () => repCandAll = weightedRepCandAll(groups, rowsPerBandConfigs, k),
-      // Within-group pairs stay CANDIDATES unconditionally (nCand below
-      // adds nWithin) but are TRUE/verified only while their informative
-      // set is non-empty — see [[withinTrueOf]].
-      () => withinTrue = withinTrueOf(groups, nWithin, postings, ownPostings,
-        threshold)))
-    var truthW = 0L
-    var candByCfg: Map[Int, Long] = null
-    var verByCfg: Map[Int, Long] = null
-    Concurrent.runAll(Seq(
-      () => truthW =
-        truth.agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0),
-      () => candByCfg = repCandAll.groupBy(col("rpb"))
-        .agg(coalesce(sum(col("w")), lit(0L)).as("nc"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap,
-      // verified = truth ∩ candidates: one candidate-bounded join prices
-      // both precision's numerator and recall's hit count
-      () => verByCfg = repCandAll
-        .join(truth.select(col("ia"), col("ib")), Seq("ia", "ib"))
-        .groupBy(col("rpb"))
-        .agg(coalesce(sum(col("w")), lit(0L)).as("nv"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap))
-    val nTrue = withinTrue + truthW
-    case class Cfg(rpb: Int, nCand: Long, nVer: Long,
-                   prec: Option[Long], rec: Option[Long], feasible: Boolean)
-    val cfgs = rowsPerBandConfigs.map { r =>
-      val nCand = nWithin + candByCfg.getOrElse(r, 0L)
-      val nVer = withinTrue + verByCfg.getOrElse(r, 0L)
-      val prec = if (nCand == 0) None else Some(nVer * 1000000L / nCand)
-      val rec = if (nTrue == 0) None else Some(nVer * 1000000L / nTrue)
-      Cfg(r, nCand, nVer, prec, rec,
-        prec.exists(_ >= precisionFloorPpm) && rec.exists(_ >= recallFloorPpm))
-    }
-    val chosenRpb = cfgs.filter(_.feasible)
-      .sortBy(c => (c.nCand, -c.rpb)).headOption.map(_.rpb)
-    if (ownPostings) postings.unpersist()
-    groups.unpersist()
-    import spark.implicits._
-    cfgs.map(c => (c.rpb, k / c.rpb, c.nCand, c.nVer, nTrue, c.prec, c.rec,
-        c.feasible, chosenRpb.contains(c.rpb)))
-      .toDF("rows_per_band", "n_bands", "n_candidates", "n_verified",
-        "n_true", "precision_ppm", "recall_ppm", "feasible", "chosen")
+    BandChooser.choose(minhashFamily(k, threshold, truthDfCap), sampleGroups,
+      rowsPerBandConfigs, precisionFloorPpm, recallFloorPpm, sampleRepCap)
   }
+
+  /** The MinHash family of [[BandChooser]] (see [[chooseLshConfigFromGroups]]). */
+  private[graft] def minhashFamily(k: Int, threshold: Double,
+                                   truthDfCap: Option[Int]): BandChooser.Family =
+    BandChooser.Family("lsh",
+      Seq("rows_per_band" -> identity, "n_bands" -> (k / _)),
+      preferLarger = true, "sampleRepCap", (groups, configs, pin) => {
+        val (repSh, fullSizes) = repPostings(groups)
+        // Informative-universe gate for the truth side only (candidates
+        // band over the FULL sets — that is what production LSH sees).
+        val (postings, sizes) = truthDfCap.fold((repSh, fullSizes)) { cap =>
+          val w = org.apache.spark.sql.expressions.Window.partitionBy("h")
+          val informative = pin(repSh.withColumn("df", count(lit(1)).over(w))
+            .filter(col("df") <= cap).drop("df"))
+          informative.count()
+          (informative, informative.groupBy(col("id")).agg(count(lit(1)).as("n")))
+        }
+        val mOf = groups.select(col("rep"), size(col("members")).cast(LongType).as("m"))
+        var truth: DataFrame = null
+        var cand: DataFrame = null
+        BandChooser.Measures(
+          prepare = Seq(
+            () => truth = repTruth(postings, sizes, mOf, threshold),
+            () => cand = weightedRepCandAll(groups, configs, k)),
+          within = () => withinOf(groups, postings, truthDfCap.isDefined, threshold),
+          candidates = () => cand
+            .join(truth.select(col("ia"), col("ib"), lit(true).as("v")),
+              Seq("ia", "ib"), "left")
+            .select(col("rpb").as("cfg"), col("w"), col("v").isNotNull.as("verified")),
+          truth = () =>
+            truth.agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0))
+      })
 
   /** AUTO-TUNED near-dup pairs — the tuning loop's final hop: run
     * [[chooseLshConfig]] on the deterministic hash-gated sample, take
@@ -1676,6 +1587,15 @@ object Dedup {
     * the driver between the two phases. The output carries the chosen
     * `rows_per_band` as a column so the decision is part of the
     * result's provenance.
+    *
+    * `gate` is the chooser's [[SampleGate]]: a fixed mod, or a rep
+    * budget the engine sizes the mod from. Under a budget the count
+    * feeding the derivation is the SHINGLED-doc count (Σ |members|
+    * over [[contentGroups]]): docs with null text or fewer than
+    * `shingleN` tokens yield no shingles, join no pair, and would only
+    * inflate the derived mod — an oracle replaying the derivation must
+    * count `DISTINCT id` over the shingle relation. The budget arms the
+    * chooser's rep cap and the derived mod rides out as `sample_mod`.
     *
     * THROWS when no configuration meets the floors — deliberately: a
     * silent fallback to some default banding would run the corpus at
@@ -1697,42 +1617,29 @@ object Dedup {
     */
   def nearDupPairsAuto(df: DataFrame, idCol: String, textCol: String,
                        truthDfCap: Option[Int],
+                       gate: SampleGate = SampleGate.Mod(2),
                        shingleN: Int = 3, k: Int = 16,
                        rowsPerBandConfigs: Seq[Int] = Seq(2, 4, 8),
-                       threshold: Double = 0.5, sampleMod: Long = 2,
+                       threshold: Double = 0.5,
                        precisionFloorPpm: Long = 0L,
-                       recallFloorPpm: Long = 0L,
-                       sampleRepCap: Option[Long] = None): DataFrame = {
-    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
+                       recallFloorPpm: Long = 0L): DataFrame =
     // ONE corpus representation pass (the q_d25 compute-once pattern,
     // applied to MinHash): shingle→hash→group the FULL corpus once,
     // derive the chooser's sample groups off the cached rows
     // ([[sampleGroupsOf]] — an array filter, zero corpus passes), and
-    // band the same cached rows for the production pairs phase. The
-    // pre-r15 shape re-ran contentGroups over the full corpus after
-    // the chooser's sample pass — a redundant corpus scan+hash that at
-    // 100 TB is a full extra pass.
-    val grouped = contentGroups(df, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grouped.count()
-    val choice =
-      try chooseLshConfigFromGroups(sampleGroupsOf(grouped, sampleMod), k,
+    // band the same cached rows for the production pairs phase. A
+    // budget's corpus count is Σ |members| over the same rows, never a
+    // second scan of a possibly-computed input view.
+    BandChooser.withPins { pin =>
+      val grouped = pin(contentGroups(df, idCol, textCol, shingleN))
+      BandChooser.auto("nearDupPairsAuto", "banding configuration", gate,
+          grouped.agg(coalesce(sum(size(col("members")).cast(LongType)), lit(0L)))
+            .first().getLong(0))(
+        (mod, cap) => chooseLshConfigFromGroups(sampleGroupsOf(grouped, mod), k,
           rowsPerBandConfigs, threshold, precisionFloorPpm, recallFloorPpm,
-          truthDfCap, sampleRepCap)
-        .filter(col("chosen")).select(col("rows_per_band")).collect()
-      catch { case e: Throwable => grouped.unpersist(); throw e }
-    if (choice.isEmpty) grouped.unpersist()
-    require(choice.nonEmpty,
-      "nearDupPairsAuto: no banding configuration meets the precision/recall " +
-        "floors on the sample — loosen a floor or extend rowsPerBandConfigs " +
-        "(a silent default would run the corpus at an operating point the " +
-        "floors just rejected)")
-    val rpb = choice.head.getInt(0)
-    val out = nearDupPairsFromGroups(grouped, k, rpb, threshold)
-      .withColumn("rows_per_band", lit(rpb))
-    grouped.unpersist()
-    out
-  }
+          truthDfCap, cap))(
+        rpb => nearDupPairsFromGroups(grouped, k, rpb, threshold))
+    }
 
   /** The sample-size TARGET a rep budget derives: the budget minus 3σ
     * of binomial headroom (sample size under the `hash60(id) mod m`
@@ -1770,97 +1677,17 @@ object Dedup {
     math.max(1L, (corpusCount + target - 1) / target)
   }
 
-  /** [[nearDupPairsAuto]] with the sample SELF-SIZED to a rep budget:
-    * one corpus count derives the cheapest `sampleMod` that fits
-    * `budget` in expectation ([[chooseSampleMod]]), and the chooser
-    * runs with `sampleRepCap = budget` so an over-budget actual sample
-    * (hash skew) refuses rather than silently paying. This replaces
-    * the caller-guessed `sampleMod` knob — a production user states
-    * the truth budget they can afford; the engine sizes the gate.
-    * The derived `sample_mod` rides out as a provenance column beside
-    * the chosen `rows_per_band`.
-    *
-    * COUNT SEMANTICS: the corpus count feeding the derivation is the
-    * SHINGLED-doc count — ids contributing at least one `shingleN`-gram
-    * (Σ |members| over [[contentGroups]], the only frame that ever
-    * reads the corpus). Docs with null text or fewer than `shingleN`
-    * tokens yield no shingles, participate in no pair, and are
-    * excluded from the count — they would only inflate the derived mod
-    * and shrink the sample the chooser actually measures. An oracle
-    * replaying the derivation must count `DISTINCT id` over the
-    * shingle relation, not `COUNT(*)` over the raw corpus (DedupSpec
-    * pins the degenerate sub-shingleN case).
+  /** Band `b`'s chunk of the 60-bit SimHash under an `nb`-band split —
+    * the one chunking [[simhashPairs]] and the SimHash chooser share.
     */
-  def nearDupPairsAutoBudgeted(df: DataFrame, idCol: String, textCol: String,
-                               truthDfCap: Option[Int], budget: Long,
-                               shingleN: Int = 3, k: Int = 16,
-                               rowsPerBandConfigs: Seq[Int] = Seq(2, 4, 8),
-                               threshold: Double = 0.5,
-                               precisionFloorPpm: Long = 0L,
-                               recallFloorPpm: Long = 0L): DataFrame = {
-    // ONE corpus pass, period: the groups frame is the only thing that
-    // ever reads the corpus — the id count the derivation needs is
-    // Σ |members| over the cached group rows (ids partition into
-    // groups), NOT a second df scan (df may be a computed view whose
-    // count() would re-run its whole lineage).
-    val grouped = contentGroups(df, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grouped.count()
-    val n = grouped
-      .agg(coalesce(sum(size(col("members")).cast(LongType)), lit(0L)))
-      .first().getLong(0)
-    val m = chooseSampleMod(n, budget)
-    val choice =
-      try chooseLshConfigFromGroups(sampleGroupsOf(grouped, m), k,
-          rowsPerBandConfigs, threshold, precisionFloorPpm, recallFloorPpm,
-          truthDfCap, sampleRepCap = Some(budget))
-        .filter(col("chosen")).select(col("rows_per_band")).collect()
-      catch { case e: Throwable => grouped.unpersist(); throw e }
-    if (choice.isEmpty) grouped.unpersist()
-    require(choice.nonEmpty,
-      "nearDupPairsAutoBudgeted: no banding configuration meets the " +
-        "precision/recall floors on the sample — loosen a floor or extend " +
-        "rowsPerBandConfigs (a silent default would run the corpus at an " +
-        "operating point the floors just rejected)")
-    val rpb = choice.head.getInt(0)
-    val out = nearDupPairsFromGroups(grouped, k, rpb, threshold)
-      .withColumn("rows_per_band", lit(rpb))
-      .withColumn("sample_mod", lit(m))
-    grouped.unpersist()
-    out
-  }
-
-  /** Distinct weighted rep-level SimHash pairs under an `nb`-band
-    * split of the 60-bit signature: (ia, ib, w = ma·mb, hamming) for
-    * every rep pair sharing at least one band chunk. In-bucket
-    * enumeration (chained streamed generators, the [[simhashPairs]]
-    * shape); hamming rides out of the bucket for free — signatures are
-    * IN the bucket rows, so no config ever re-joins the corpus to
-    * verify. `groups` is the value-collapsed frame below: collapse is
-    * EXACT for SimHash (unlike the minhash-signature collapse
-    * [[lshTuning]] must avoid) because candidacy AND the verified
-    * quantity are both pure functions of the signature value itself.
-    */
-  private def simhashRepCand(groups: DataFrame, nb: Int): DataFrame = {
+  private def simhashChunk(nb: Int): Column = {
     val w = 60 / nb
-    val mask = (1L << w) - 1
-    groups
-      .withColumn("b", explode(sequence(lit(0), lit(nb - 1))))
-      .withColumn("chunk", expr(s"(simhash >> ($w * b)) & $mask"))
-      .groupBy(col("b"), col("chunk"))
-      .agg(collect_list(struct(col("rep"), col("m"), col("simhash"))).as("ms"))
-      .where(size(col("ms")) > 1)
-      .select(explode(col("ms")).as("x"), col("ms"))
-      .select(col("x"), explode(col("ms")).as("y"))
-      .where(col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("ia"), col("y.rep").as("ib"),
-        (col("x.m") * col("y.m")).as("w"),
-        expr("bit_count(x.simhash ^ y.simhash)").cast(IntegerType).as("hamming"))
-      .distinct()
+    expr(s"(simhash >> ($w * b)) & ${(1L << w) - 1}")
   }
 
-  /** SIMHASH BAND-WIDTH CHOOSER — the [[chooseLshConfig]] pattern
-    * applied to the second banded family: for each candidate band
+  /** SIMHASH BAND-WIDTH CHOOSER — the SimHash family of the one
+    * banded-candidate chooser ([[BandChooser]],
+    * [[BandChooser.hammingBanded]]): for each candidate band
     * count over the 60-bit SimHash, measure BOTH axes against exact
     * Hamming truth on the deterministic hash-gated sample, mark
     * feasibility against the caller's floors, and mark `chosen` the
@@ -1878,7 +1705,7 @@ object Dedup {
     * `maxDist` ≤ 9 (required) — and filters by exact Hamming computed
     * in-bucket. Cost contract: truth-bucket occupancy is
     * sample-reps/2^6 expected per (band, chunk) cell, Σ df² over 10
-    * bands — sample-bounded, the same posture as [[lshRecall]]'s
+    * bands — sample-bounded, the same posture as the MinHash family's
     * inverted-index truth. Exact-value collapse applies throughout
     * (identical SimHash ⇒ identical chunks in every banding AND
     * Hamming 0 ≤ maxDist): weighted rep counting equals member
@@ -1889,143 +1716,67 @@ object Dedup {
     * n_verified, n_true, precision_ppm, recall_ppm, feasible, chosen).
     * Zero-candidate configs have NULL precision and are never feasible;
     * a zero-truth sample leaves every config infeasible (no evidence is
-    * not passing evidence — the [[chooseLshConfig]] rule).
+    * not passing evidence — [[BandChooser.certify]]).
     */
   def chooseSimhashBands(df: DataFrame, idCol: String, textCol: String,
                          bandConfigs: Seq[Int], maxDist: Int, sampleMod: Long,
                          precisionFloorPpm: Long,
                          recallFloorPpm: Long): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    val sample = df.filter(
-      pmod(TextOps.hash60(col(idCol).cast("string")), lit(sampleMod.toLong)) === 0)
-    chooseSimhashBandsFromSigs(simhash(sample, idCol, textCol),
-      bandConfigs, maxDist, precisionFloorPpm, recallFloorPpm)
+    chooseSimhashBandsFromSigs(
+      simhash(df.filter(SampleGate.admits(col(idCol), sampleMod)), idCol, textCol),
+      bandConfigs, maxDist, precisionFloorPpm, recallFloorPpm, None)
   }
 
   /** [[chooseSimhashBands]] off ALREADY-computed (id, simhash) rows —
     * the sample gating is the caller's; [[simhashPairsAuto]] uses this
     * so the corpus signatures are computed ONCE for both the chooser
-    * sample and the corpus pass.
+    * sample and the corpus pass. Collapse is EXACT for SimHash (unlike
+    * the minhash-signature collapse [[lshTuning]] must avoid): candidacy
+    * AND the verified quantity are pure functions of the signature.
     */
-  def chooseSimhashBandsFromSigs(sigs: DataFrame, bandConfigs: Seq[Int],
-                                 maxDist: Int,
-                                 precisionFloorPpm: Long,
-                                 recallFloorPpm: Long): DataFrame = {
+  private def chooseSimhashBandsFromSigs(sigs: DataFrame, bandConfigs: Seq[Int],
+                                         maxDist: Int,
+                                         precisionFloorPpm: Long,
+                                         recallFloorPpm: Long,
+                                         sampleRepCap: Option[Long]): DataFrame = {
     require(bandConfigs.nonEmpty && bandConfigs.forall(b => b >= 1 && 60 % b == 0),
       s"each band count must divide 60, got $bandConfigs")
     require(maxDist >= 0 && maxDist <= 9,
       s"maxDist must be in [0, 9] (the 10-band truth side is pigeonhole-" +
         s"complete only below its band count), got $maxDist")
-    val spark = sigs.sparkSession
-    val groups = sigs
-      .groupBy(col("simhash"))
-      .agg(count(lit(1)).cast(LongType).as("m"), min(col("id")).as("rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    groups.count()
-    val nWithin = groups
-      .agg(coalesce(sum(expr("m * (m - 1) div 2")), lit(0L)))
-      .first().getLong(0)
-    // all configs in one union'd pass, tagged by band count
-    val candAll = bandConfigs.map(nb =>
-        simhashRepCand(groups, nb).withColumn("nb", lit(nb)))
-      .reduce(_ unionByName _)
-      .localCheckpoint(eager = true)
-    val candByCfg = candAll.groupBy(col("nb"))
-      .agg(coalesce(sum(col("w")), lit(0L)).as("nc"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val verByCfg = candAll.filter(col("hamming") <= maxDist)
-      .groupBy(col("nb"))
-      .agg(coalesce(sum(col("w")), lit(0L)).as("nv"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // truth: the pigeonhole-complete 10-band enumeration, exact Hamming
-    val nCross = simhashRepCand(groups, 10)
-      .filter(col("hamming") <= maxDist)
-      .agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0)
-    val nTrue = nWithin + nCross
-    case class Cfg(nb: Int, nCand: Long, nVer: Long,
-                   prec: Option[Long], rec: Option[Long], feasible: Boolean)
-    val cfgs = bandConfigs.map { nb =>
-      val nCand = nWithin + candByCfg.getOrElse(nb, 0L)
-      val nVer = nWithin + verByCfg.getOrElse(nb, 0L)
-      val prec = if (nCand == 0) None else Some(nVer * 1000000L / nCand)
-      val rec = if (nTrue == 0) None else Some(nVer * 1000000L / nTrue)
-      Cfg(nb, nCand, nVer, prec, rec,
-        prec.exists(_ >= precisionFloorPpm) && rec.exists(_ >= recallFloorPpm))
-    }
-    val chosenNb = cfgs.filter(_.feasible)
-      .sortBy(c => (c.nCand, c.nb)).headOption.map(_.nb)
-    groups.unpersist()
-    import spark.implicits._
-    cfgs.map(c => (c.nb, 60 / c.nb, c.nCand, c.nVer, nTrue, c.prec, c.rec,
-        c.feasible, chosenNb.contains(c.nb)))
-      .toDF("n_bands", "chunk_bits", "n_candidates", "n_verified",
-        "n_true", "precision_ppm", "recall_ppm", "feasible", "chosen")
+    BandChooser.choose(simhashFamily(maxDist),
+      sigs.groupBy(col("simhash"))
+        .agg(count(lit(1)).cast(LongType).as("m"), min(col("id")).as("rep")),
+      bandConfigs, precisionFloorPpm, recallFloorPpm, sampleRepCap)
   }
+
+  /** The SimHash family of [[BandChooser]]: 10-band pigeonhole truth. */
+  private[graft] def simhashFamily(maxDist: Int): BandChooser.Family =
+    BandChooser.hammingBanded("simhash", 60, Seq("simhash"), simhashChunk,
+      truthBands = 10, maxDist)
 
   /** AUTO-TUNED SimHash near-dup pairs — [[chooseSimhashBands]]
-    * driving [[simhashPairs]], completing the chooser/auto pair for
-    * the last banded family (MinHash has d21/d22, perceptual m16/m17,
-    * cosine e22/e23): the corpus signatures are computed ONCE
+    * driving [[simhashPairs]] through the shared auto path
+    * ([[BandChooser.auto]]): the corpus signatures are computed ONCE
     * (checkpointed — the chooser's sample and the corpus pass share
-    * them through [[chooseSimhashBandsFromSigs]]), the cheapest
-    * floor-feasible band count runs the corpus pass with `n_bands`
-    * provenance, and an uncertifiable sample REFUSES. ONE integer
-    * crosses the driver between phases.
+    * them), the cheapest floor-feasible band count runs the corpus pass
+    * with `n_bands` provenance, and an uncertifiable sample REFUSES.
+    * Under a budget `gate` the signature count sizes the mod, the
+    * budget caps the sample's distinct signatures (the pigeonhole
+    * truth costs Σ df² over the sample's 10-band cells), and the
+    * derived mod rides out as `sample_mod`.
     */
   def simhashPairsAuto(df: DataFrame, idCol: String, textCol: String,
-                       bandConfigs: Seq[Int], maxDist: Int, sampleMod: Long,
+                       bandConfigs: Seq[Int], maxDist: Int, gate: SampleGate,
                        precisionFloorPpm: Long,
                        recallFloorPpm: Long): DataFrame = {
-    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
     val sigs = simhash(df, idCol, textCol).localCheckpoint(eager = true)
-    val sampleSigs = sigs.filter(
-      pmod(TextOps.hash60(col("id").cast("string")), lit(sampleMod.toLong)) === 0)
-    val choice = chooseSimhashBandsFromSigs(sampleSigs, bandConfigs, maxDist,
-        precisionFloorPpm, recallFloorPpm)
-      .filter(col("chosen")).select(col("n_bands")).collect()
-    require(choice.nonEmpty,
-      "simhashPairsAuto: no band count meets the precision/recall floors " +
-        "on the sample — loosen a floor or extend bandConfigs (a silent " +
-        "default would run the corpus at an operating point the floors " +
-        "just rejected)")
-    val nb = choice.head.getInt(0)
-    simhashPairs(sigs, maxDist, nb).withColumn("n_bands", lit(nb))
-  }
-
-  /** [[simhashPairsAuto]] with the sample SELF-SIZED to a rep budget —
-    * [[chooseSampleMod]]'s contract on the SimHash family: the corpus
-    * signature frame (computed once, shared by chooser and corpus
-    * pass) is counted, ⌈n/budget⌉ picks the mod, and an over-budget
-    * actual sample (hash skew) REFUSES — the chooser's pigeonhole
-    * truth costs Σ df² over the sample's 10-band cells, and the
-    * budget is the bound the caller is pricing that at. The derived
-    * `sample_mod` rides out beside `n_bands`.
-    */
-  def simhashPairsAutoBudgeted(df: DataFrame, idCol: String, textCol: String,
-                               bandConfigs: Seq[Int], maxDist: Int,
-                               budget: Long, precisionFloorPpm: Long,
-                               recallFloorPpm: Long): DataFrame = {
-    val sigs = simhash(df, idCol, textCol).localCheckpoint(eager = true)
-    val m = chooseSampleMod(sigs.count(), budget)
-    val sampleSigs = sigs.filter(
-      pmod(TextOps.hash60(col("id").cast("string")), lit(m.toLong)) === 0)
-    val nSample = sampleSigs.count()
-    require(nSample <= budget,
-      s"simhashPairsAutoBudgeted: the derived mod $m admits $nSample sample " +
-        s"ids, above the stated budget $budget (hash skew) — raise the " +
-        "budget knowingly rather than letting the chooser exceed the bill " +
-        "it was priced at")
-    val choice = chooseSimhashBandsFromSigs(sampleSigs, bandConfigs, maxDist,
-        precisionFloorPpm, recallFloorPpm)
-      .filter(col("chosen")).select(col("n_bands")).collect()
-    require(choice.nonEmpty,
-      "simhashPairsAutoBudgeted: no band count meets the precision/recall " +
-        "floors on the sample — loosen a floor or extend bandConfigs (a " +
-        "silent default would run the corpus at an operating point the " +
-        "floors just rejected)")
-    val nb = choice.head.getInt(0)
-    simhashPairs(sigs, maxDist, nb)
-      .withColumn("n_bands", lit(nb)).withColumn("sample_mod", lit(m))
+    BandChooser.auto("simhashPairsAuto", "band count", gate, sigs.count())(
+      (mod, cap) => chooseSimhashBandsFromSigs(
+        sigs.filter(SampleGate.admits(col("id"), mod)), bandConfigs, maxDist,
+        precisionFloorPpm, recallFloorPpm, cap))(
+      nb => simhashPairs(sigs, maxDist, nb))
   }
 
   /** Per-BENCHMARK contamination report — the deliverable a

@@ -121,20 +121,13 @@ final class KeepBestIndex(spark: SparkSession, shingleN: Int = 3, k: Int = 16,
     // Tune on the FIRST batch, before any state mutates: an infeasible
     // sample refuses here with every state frame still empty.
     tuning.foreach { t =>
-      if (tunedRpb.isEmpty) {
-        val (mod, cap) = t.gateFor(batch.count())
-        val choice = Dedup.chooseLshConfig(batch, idCol, textCol, shingleN, k,
-            t.rowsPerBandConfigs, threshold, mod,
-            t.precisionFloorPpm, t.recallFloorPpm, t.truthDfCap, cap)
-          .filter(col("chosen")).select(col("rows_per_band")).collect()
-        require(choice.nonEmpty,
-          "KeepBestIndex: no banding configuration meets the precision/recall " +
-            "floors on the first batch's sample — refusing BEFORE any state " +
-            "accumulates (a silent constructor-default banding would run the " +
-            "stream at an operating point the floors just rejected); loosen a " +
-            "floor or extend rowsPerBandConfigs")
-        tunedRpb = Some(choice.head.getInt(0))
-      }
+      if (tunedRpb.isEmpty) tunedRpb = Some(BandChooser.chosenOrRefuse(
+        t.chooseOn(batch, idCol, textCol, shingleN, k, threshold),
+        "KeepBestIndex: no banding configuration meets the precision/recall " +
+          "floors on the first batch's sample — refusing BEFORE any state " +
+          "accumulates (a silent constructor-default banding would run the " +
+          "stream at an operating point the floors just rejected); loosen a " +
+          "floor or extend rowsPerBandConfigs"))
     }
     // The two delta frames are independent — materialize them
     // concurrently (guide §2.6), then derive the five state updates.
@@ -227,23 +220,30 @@ object KeepBestIndex {
     * matching [[Dedup.chooseLshConfig]] at the same cap).
     */
   final case class AutoTune(rowsPerBandConfigs: Seq[Int],
-                            sampleMod: Long,
+                            gate: SampleGate,
                             precisionFloorPpm: Long,
                             recallFloorPpm: Long,
-                            truthDfCap: Option[Int],
-                            sampleBudget: Option[Long] = None) {
-    /** The (sampleMod, sampleRepCap) pair birth tuning actually runs
-      * at: a stated `sampleBudget` SELF-SIZES the gate from the birth
-      * batch's count ([[Dedup.chooseSampleMod]] — one count, one
-      * ceiling division) and arms the chooser's rep cap at exactly
-      * that budget, so hash-skew overshoot refuses; with no budget,
-      * the raw `sampleMod` uncapped (the pre-r15 contract, unchanged).
-      * The count is by-name — only a budgeted tune pays it.
+                            truthDfCap: Option[Int]) {
+    /** The LSH chooser table this tune certifies: the gate resolved
+      * against `count` (by-name — only a budget pays it: a budget
+      * SELF-SIZES the mod from the count and arms the chooser's rep cap
+      * at exactly that budget, so hash-skew overshoot refuses), the
+      * chooser run over `sampleGroups(mod)`.
       */
-    private[ops] def gateFor(batchCount: => Long): (Long, Option[Long]) =
-      sampleBudget match {
-        case Some(b) => (Dedup.chooseSampleMod(batchCount, b), Some(b))
-        case None => (sampleMod, None)
-      }
+    private[ops] def table(count: => Long, sampleGroups: Long => DataFrame,
+                           k: Int, threshold: Double): DataFrame = {
+      val (mod, cap) = gate.resolve(count)
+      Dedup.chooseLshConfigFromGroups(sampleGroups(mod), k, rowsPerBandConfigs,
+        threshold, precisionFloorPpm, recallFloorPpm, truthDfCap, cap)
+    }
+
+    /** [[table]] over a text batch: the gate counts the batch, the
+      * sample groups are the gated batch's [[Dedup.contentGroups]].
+      */
+    private[ops] def chooseOn(batch: DataFrame, idCol: String, textCol: String,
+                              shingleN: Int, k: Int, threshold: Double): DataFrame =
+      table(batch.count(), mod => Dedup.contentGroups(
+        batch.filter(SampleGate.admits(col(idCol), mod)), idCol, textCol, shingleN),
+        k, threshold)
   }
 }

@@ -241,19 +241,14 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     // unrecoverable from its hash).
     tuning.foreach { t =>
       if (tunedRpb.isEmpty) {
-        val (mod, cap) = t.gateFor(batch.count())
-        val choice = Concurrent.labeled(spark, "kbs:birth tuning")(
-          Dedup.chooseLshConfig(batch, idCol, textCol, shingleN, k,
-            t.rowsPerBandConfigs, threshold, mod,
-            t.precisionFloorPpm, t.recallFloorPpm, t.truthDfCap, cap)
-          .filter(col("chosen")).select(col("rows_per_band")).collect())
-        require(choice.nonEmpty,
+        val rpb = BandChooser.chosenOrRefuse(
+          Concurrent.labeled(spark, "kbs:birth tuning")(
+            t.chooseOn(batch, idCol, textCol, shingleN, k, threshold)),
           "KeepBestIndexStore: no banding configuration meets the precision/" +
             "recall floors on the first batch's sample — refusing BEFORE " +
             "anything is written (a silent default banding would run the " +
             "store at an operating point the floors just rejected); loosen a " +
             "floor or extend rowsPerBandConfigs")
-        val rpb = choice.head.getInt(0)
         writeTextAtomic(fs, new Path(root, "_tuned_rpb"), rpb.toString)
         writeTextAtomic(fs, new Path(root, "_params.sha256"),
           fingerprint(shingleN, k, rpb, threshold))
@@ -371,8 +366,8 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     * job.
     */
   private[graft] def effectiveSampleGroups(sampleMod: Long): DataFrame = {
-    def gated(df: DataFrame): DataFrame = df.filter(
-      pmod(TextOps.hash60(col("id").cast("string")), lit(sampleMod)) === 0)
+    def gated(df: DataFrame): DataFrame =
+      df.filter(SampleGate.admits(col("id"), sampleMod))
     val latest = gated(readFrame("ids", idsSchema))
       .groupBy(col("id")).agg(max(col("b")).as("lb"))
     gated(readFrame("sh", shSchema))
@@ -394,12 +389,8 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     * that refuses or alarms).
     */
   def rebandChoice(tune: KeepBestIndex.AutoTune): Option[Int] = {
-    val (mod, cap) = tune.gateFor(idsLatest.count())
-    Dedup.chooseLshConfigFromGroups(effectiveSampleGroups(mod), k,
-        tune.rowsPerBandConfigs, threshold,
-        tune.precisionFloorPpm, tune.recallFloorPpm, tune.truthDfCap, cap)
-      .filter(col("chosen")).select(col("rows_per_band")).collect()
-      .headOption.map(_.getInt(0))
+    BandChooser.chosen(
+      tune.table(idsLatest.count(), effectiveSampleGroups, k, threshold))
   }
 
   /** Build the reband payload for a NEW version at `newDir` — BY
@@ -768,7 +759,7 @@ object KeepBestIndexStore {
     * probe; on checked ticks one chooser pass whose SHUFFLES carry
     * only the hash-gated sample ([[effectiveSampleGroups]] — the state
     * is scanned map-side, never re-grouped in full) and whose truth is
-    * budget-bounded when the tune states a `sampleBudget`; and — only
+    * budget-bounded when the tune's gate is a budget; and — only
     * on a fired tick — the signature re-banding + one copy of the
     * effective frames. Never a corpus re-scan, never text.
     */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Output of the REAL image decode + perceptual-hash stage: decoded
@@ -443,9 +443,6 @@ object Multimodal {
     // the grid and [[bandedHammingPairsAuto]] wires it in.
     require(nBands >= 2 && nBands % 2 == 0 && 64 % nBands == 0,
       s"nBands must be even and divide 64, got $nBands")
-    val w = 64 / nBands
-    val mask = (1L << w) - 1
-    val half = nBands / 2
     // 1. collapse exact hash duplicates: one representative per value,
     //    members kept for the expansion
     val groups = hashes
@@ -456,9 +453,7 @@ object Multimodal {
     val repPairs = groups
       .select(col("rep"), col("dh_hi"), col("dh_lo"))
       .withColumn("b", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("chunk", expr(
-        s"""CASE WHEN b < $half THEN (dh_lo >> ($w * b)) & $mask
-           |     ELSE (dh_hi >> ($w * (b - $half))) & $mask END""".stripMargin))
+      .withColumn("chunk", hammingChunk(nBands))
       .groupBy(col("b"), col("chunk"))
       .agg(sort_array(collect_list(
         struct(col("rep"), col("dh_hi"), col("dh_lo")))).as("ms"))
@@ -504,43 +499,23 @@ object Multimodal {
   def imageNearDupPairs(hashes: DataFrame, maxDist: Int): DataFrame =
     bandedHammingPairs(hashes, maxDist)
 
-  /** Distinct weighted rep-level pairs under an `nb`-band split of the
-    * 64-bit perceptual hash: (ia, ib, w = ma·mb, hamming) for every
-    * rep pair sharing at least one band chunk. The
-    * [[Dedup.chooseSimhashBands]] candidate shape over the hi/lo-half
-    * layout: `nb` is even, so every chunk of width 64/nb lies entirely
-    * in one non-negative 32-bit half and the shifts never touch a sign
-    * bit. Hamming rides out of the bucket for free — the halves are in
-    * the bucket rows, no config ever re-joins the corpus to verify.
-    * `groups` is the value-collapsed frame (collapse is EXACT here for
-    * the same reason as SimHash: candidacy and Hamming are pure
-    * functions of the hash value).
+  /** Band `b`'s chunk of the 64-bit perceptual hash under an `nb`-band
+    * split over the hi/lo-half layout: `nb` is even, so every chunk of
+    * width 64/nb lies entirely in one non-negative 32-bit half and the
+    * shifts never touch a sign bit. Shared by [[bandedHammingPairs]]
+    * and its chooser.
     */
-  private def hammingRepCand(groups: DataFrame, nb: Int): DataFrame = {
+  private def hammingChunk(nb: Int): Column = {
     val w = 64 / nb
     val mask = (1L << w) - 1
     val half = nb / 2
-    groups
-      .withColumn("b", explode(sequence(lit(0), lit(nb - 1))))
-      .withColumn("chunk", expr(
-        s"""CASE WHEN b < $half THEN (dh_lo >> ($w * b)) & $mask
-           |     ELSE (dh_hi >> ($w * (b - $half))) & $mask END""".stripMargin))
-      .groupBy(col("b"), col("chunk"))
-      .agg(collect_list(struct(col("rep"), col("m"),
-        col("dh_hi"), col("dh_lo"))).as("ms"))
-      .where(size(col("ms")) > 1)
-      .select(explode(col("ms")).as("x"), col("ms"))
-      .select(col("x"), explode(col("ms")).as("y"))
-      .where(col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("ia"), col("y.rep").as("ib"),
-        (col("x.m") * col("y.m")).as("w"),
-        (expr("bit_count(x.dh_hi ^ y.dh_hi)") +
-          expr("bit_count(x.dh_lo ^ y.dh_lo)")).cast("int").as("hamming"))
-      .distinct()
+    expr(s"""CASE WHEN b < $half THEN (dh_lo >> ($w * b)) & $mask
+            |     ELSE (dh_hi >> ($w * (b - $half))) & $mask END""".stripMargin)
   }
 
-  /** PERCEPTUAL-HASH BAND-COUNT CHOOSER — the [[Dedup
-    * .chooseSimhashBands]] pattern applied to the THIRD banded family:
+  /** PERCEPTUAL-HASH BAND-COUNT CHOOSER — the perceptual family of the
+    * one banded-candidate chooser ([[BandChooser]],
+    * [[BandChooser.hammingBanded]]):
     * for each candidate band count over a 64-bit perceptual hash
     * (dHash, pHash, or the audio energy fingerprint — the banding
     * algebra is modality-blind, like [[bandedHammingPairs]] it
@@ -585,133 +560,44 @@ object Multimodal {
       s"maxDist must be in [0, 15] (the 16-band truth side is pigeonhole-" +
         s"complete only below its band count), got $maxDist")
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    require(sampleRepCap.forall(_ >= 1),
-      s"sampleRepCap must be >= 1, got $sampleRepCap")
-    val spark = hashes.sparkSession
     // modality-blind for real: the defaults are the image dHash schema,
     // audio fingerprints pass (idCol, hiCol = "fp_hi", loCol = "fp_lo")
     // instead of renaming columns first
-    val sample = hashes
-      .select(col(idCol).as("media_id"), col(hiCol).as("dh_hi"),
-        col(loCol).as("dh_lo"))
-      .filter(
-        pmod(TextOps.hash60(col("media_id").cast("string")),
-          lit(sampleMod.toLong)) === 0)
-    val groups = sample
-      .groupBy(col("dh_hi"), col("dh_lo"))
-      .agg(count(lit(1)).cast("long").as("m"), min(col("media_id")).as("rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nReps = groups.count()
-    sampleRepCap.foreach { cap =>
-      if (nReps > cap) {
-        groups.unpersist()
-        throw new IllegalArgumentException(
-          s"requirement failed: chooseHammingBands: the sample holds $nReps " +
-            s"distinct hashes, above sampleRepCap=$cap — raise sampleMod " +
-            "(or derive it from the budget with Dedup.chooseSampleMod) " +
-            "instead of paying an unbudgeted truth pass")
-      }
-    }
-    // Two waves of independent jobs over the persisted groups
-    // (guide §2.6 — the sequential form idled the cores in every
-    // job's stage tail): wave 1 = within-group weight, the
-    // multi-config candidate checkpoint, the 16-band truth count;
-    // wave 2 = the two per-config aggregates off the checkpoint. Same
-    // relations, same arithmetic, same collected Longs.
-    var nWithin = 0L
-    var candAll: DataFrame = null
-    var nCross = 0L
-    Concurrent.runAll(Seq(
-      () => nWithin = groups
-        .agg(coalesce(sum(expr("m * (m - 1) div 2")), lit(0L)))
-        .first().getLong(0),
-      () => candAll = bandConfigs.map(nb =>
-          hammingRepCand(groups, nb).withColumn("nb", lit(nb)))
-        .reduce(_ unionByName _)
-        .localCheckpoint(eager = true),
-      () => nCross = hammingRepCand(groups, 16)
-        .filter(col("hamming") <= maxDist)
-        .agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0)))
-    var candByCfg: Map[Int, Long] = null
-    var verByCfg: Map[Int, Long] = null
-    Concurrent.runAll(Seq(
-      () => candByCfg = candAll.groupBy(col("nb"))
-        .agg(coalesce(sum(col("w")), lit(0L)).as("nc"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap,
-      () => verByCfg = candAll.filter(col("hamming") <= maxDist)
-        .groupBy(col("nb"))
-        .agg(coalesce(sum(col("w")), lit(0L)).as("nv"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap))
-    val nTrue = nWithin + nCross
-    case class Cfg(nb: Int, nCand: Long, nVer: Long,
-                   prec: Option[Long], rec: Option[Long], feasible: Boolean)
-    val cfgs = bandConfigs.map { nb =>
-      val nCand = nWithin + candByCfg.getOrElse(nb, 0L)
-      val nVer = nWithin + verByCfg.getOrElse(nb, 0L)
-      val prec = if (nCand == 0) None else Some(nVer * 1000000L / nCand)
-      val rec = if (nTrue == 0) None else Some(nVer * 1000000L / nTrue)
-      Cfg(nb, nCand, nVer, prec, rec,
-        prec.exists(_ >= precisionFloorPpm) && rec.exists(_ >= recallFloorPpm))
-    }
-    val chosenNb = cfgs.filter(_.feasible)
-      .sortBy(c => (c.nCand, c.nb)).headOption.map(_.nb)
-    groups.unpersist()
-    import spark.implicits._
-    cfgs.map(c => (c.nb, 64 / c.nb, c.nCand, c.nVer, nTrue, c.prec, c.rec,
-        c.feasible, chosenNb.contains(c.nb)))
-      .toDF("n_bands", "chunk_bits", "n_candidates", "n_verified",
-        "n_true", "precision_ppm", "recall_ppm", "feasible", "chosen")
+    val groups = hashes
+      .filter(SampleGate.admits(col(idCol), sampleMod))
+      .groupBy(col(hiCol).as("dh_hi"), col(loCol).as("dh_lo"))
+      .agg(count(lit(1)).cast("long").as("m"), min(col(idCol)).as("rep"))
+    BandChooser.choose(hammingFamily(maxDist), groups, bandConfigs,
+      precisionFloorPpm, recallFloorPpm, sampleRepCap)
   }
+
+  /** The perceptual-hash family of [[BandChooser]]: 16-band pigeonhole
+    * truth over the hi/lo halves.
+    */
+  private[graft] def hammingFamily(maxDist: Int): BandChooser.Family =
+    BandChooser.hammingBanded("hamming", 64, Seq("dh_hi", "dh_lo"),
+      hammingChunk, truthBands = 16, maxDist)
 
   /** AUTO-TUNED perceptual near-dup pairs — [[chooseHammingBands]]
-    * driving [[bandedHammingPairs]], the [[Dedup.nearDupPairsAuto]]
-    * contract on this family: the chooser prices the grid on the
-    * hash-gated sample, the cheapest floor-feasible band count runs
-    * the corpus pass (carried out as the `n_bands` provenance column),
-    * and when NO config meets the floors the call REFUSES — a silent
+    * driving [[bandedHammingPairs]] through the shared auto path
+    * ([[BandChooser.auto]]): the chooser prices the grid on the
+    * hash-gated sample, the cheapest floor-feasible band count runs the
+    * corpus pass (carried out as the `n_bands` provenance column), and
+    * when NO config meets the floors the call REFUSES — a silent
     * default would run the corpus at an operating point the floors
-    * just rejected. ONE integer crosses the driver between phases.
+    * just rejected. Under a budget `gate` the row count sizes the mod,
+    * the budget caps the sample's distinct hashes (the pigeonhole truth
+    * is Σ df² over the sample's 16-band cells), and the derived mod
+    * rides out as `sample_mod`.
     */
   def bandedHammingPairsAuto(hashes: DataFrame, maxDist: Int,
-                             bandConfigs: Seq[Int], sampleMod: Long,
+                             bandConfigs: Seq[Int], gate: SampleGate,
                              precisionFloorPpm: Long,
-                             recallFloorPpm: Long): DataFrame = {
-    val choice = chooseHammingBands(hashes, bandConfigs, maxDist, sampleMod,
-        precisionFloorPpm, recallFloorPpm)
-      .filter(col("chosen")).select(col("n_bands")).collect()
-    require(choice.nonEmpty,
-      "bandedHammingPairsAuto: no band count meets the precision/recall " +
-        "floors on the sample — loosen a floor or extend bandConfigs " +
-        "(a silent default would run the corpus at an operating point the " +
-        "floors just rejected)")
-    val nb = choice.head.getInt(0)
-    bandedHammingPairs(hashes, maxDist, nb).withColumn("n_bands", lit(nb))
-  }
-
-  /** [[bandedHammingPairsAuto]] with the sample SELF-SIZED to a rep
-    * budget — [[Dedup.chooseSampleMod]] on the perceptual family: one
-    * count derives ⌈n/budget⌉, the chooser runs with `sampleRepCap =
-    * budget` so hash-skew overshoot refuses (its pigeonhole truth is
-    * Σ df² over the sample's 16-band cells — the budget bounds it),
-    * and the derived `sample_mod` rides out beside `n_bands`.
-    */
-  def bandedHammingPairsAutoBudgeted(hashes: DataFrame, maxDist: Int,
-                                     bandConfigs: Seq[Int], budget: Long,
-                                     precisionFloorPpm: Long,
-                                     recallFloorPpm: Long): DataFrame = {
-    val m = Dedup.chooseSampleMod(hashes.count(), budget)
-    val choice = chooseHammingBands(hashes, bandConfigs, maxDist, m,
-        precisionFloorPpm, recallFloorPpm, sampleRepCap = Some(budget))
-      .filter(col("chosen")).select(col("n_bands")).collect()
-    require(choice.nonEmpty,
-      "bandedHammingPairsAutoBudgeted: no band count meets the precision/" +
-        "recall floors on the sample — loosen a floor or extend bandConfigs " +
-        "(a silent default would run the corpus at an operating point the " +
-        "floors just rejected)")
-    val nb = choice.head.getInt(0)
-    bandedHammingPairs(hashes, maxDist, nb)
-      .withColumn("n_bands", lit(nb)).withColumn("sample_mod", lit(m))
-  }
+                             recallFloorPpm: Long): DataFrame =
+    BandChooser.auto("bandedHammingPairsAuto", "band count", gate, hashes.count())(
+      (mod, cap) => chooseHammingBands(hashes, bandConfigs, maxDist, mod,
+        precisionFloorPpm, recallFloorPpm, sampleRepCap = cap))(
+      nb => bandedHammingPairs(hashes, maxDist, nb))
 
   // ---- DCT pHash: the frequency-domain perceptual hash ----------------
   //

@@ -277,9 +277,7 @@ object Vectors {
                                           sampleMod: Long): DataFrame =
     groups
       .select(col("e"), col("bucket"),
-        filter(col("members"), v =>
-          pmod(graft.ops.TextOps.hash60(v.cast("string")),
-            lit(sampleMod.toLong)) === 0).as("members"))
+        filter(col("members"), SampleGate.admits(_, sampleMod)).as("members"))
       .where(size(col("members")) > 0)
       .withColumn("rep", element_at(col("members"), 1))
       .withColumn("m", size(col("members")).cast("long"))
@@ -358,12 +356,11 @@ object Vectors {
     withinGroup.unionByName(crossGroup).localCheckpoint(eager = true)
   }
 
-  /** COSINE-LSH PLANE-COUNT CHOOSER — the chooser pattern
-    * (`Dedup.chooseLshConfig` / `chooseSimhashBands` /
-    * `Multimodal.chooseHammingBands`) applied to the FOURTH banded
-    * family, the hyperplane AND-construction [[cosineDupPairs]] runs
-    * on: for each candidate plane count, measure precision and recall
-    * of "same full bucket" candidacy against exact-cosine truth on
+  /** COSINE-LSH PLANE-COUNT CHOOSER — the cosine family of the one
+    * banded-candidate chooser ([[BandChooser]]), over the hyperplane
+    * AND-construction [[cosineDupPairs]] runs on: for each candidate
+    * plane count, measure precision and recall of "same full bucket"
+    * candidacy against exact-cosine truth on
     * the deterministic hash-gated sample, mark feasibility against
     * the caller's floors, and mark `chosen` the cheapest feasible
     * config — fewest candidate pairs, ties to MORE planes (same
@@ -403,18 +400,19 @@ object Vectors {
                          planeConfigs: Seq[Int], dim: Int, threshold: Double,
                          sampleMod: Long,
                          precisionFloorPpm: Long, recallFloorPpm: Long,
-                         truthRepCap: Int = 10000): DataFrame = {
+                         truthRepCap: Long = 10000): DataFrame = {
+    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
+    requirePlanes(planeConfigs)
+    chooseCosinePlanesFromGroups(
+      vectorGroups(vecs.filter(SampleGate.admits(col(idCol), sampleMod)),
+        vecCol, idCol, planeConfigs.max, dim),
+      planeConfigs, threshold, precisionFloorPpm, recallFloorPpm, truthRepCap)
+  }
+
+  private def requirePlanes(planeConfigs: Seq[Int]): Unit =
     require(planeConfigs.nonEmpty && planeConfigs.forall(p => p >= 1 && p <= 62),
       s"plane counts must be in [1, 62] (the bucket is a sign-bit-packed " +
         s"long), got $planeConfigs")
-    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    val sample = vecs.filter(
-      pmod(graft.ops.TextOps.hash60(col(idCol).cast("string")),
-        lit(sampleMod.toLong)) === 0)
-    chooseCosinePlanesFromGroups(
-      vectorGroups(sample, vecCol, idCol, planeConfigs.max, dim),
-      planeConfigs, threshold, precisionFloorPpm, recallFloorPpm, truthRepCap)
-  }
 
   /** [[chooseCosinePlanes]] off an ALREADY-derived sample
     * [[vectorGroups]] frame (bucketed at ≥ max(planeConfigs)) — the
@@ -427,186 +425,95 @@ object Vectors {
                                    planeConfigs: Seq[Int], threshold: Double,
                                    precisionFloorPpm: Long,
                                    recallFloorPpm: Long,
-                                   truthRepCap: Int): DataFrame = {
-    require(planeConfigs.nonEmpty && planeConfigs.forall(p => p >= 1 && p <= 62),
-      s"plane counts must be in [1, 62] (the bucket is a sign-bit-packed " +
-        s"long), got $planeConfigs")
-    require(truthRepCap >= 1, s"truthRepCap must be >= 1, got $truthRepCap")
-    val spark = sampleGroups.sparkSession
-    val pMin = planeConfigs.min
-    def mask(p: Int): Long = planeMask(p)
-    val groups = sampleGroups
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nReps = groups.count()
-    if (nReps > truthRepCap) {
-      groups.unpersist()
-      throw new IllegalArgumentException(
-        s"requirement failed: chooseCosinePlanes: the sample has $nReps " +
-          s"distinct vectors, above truthRepCap=$truthRepCap — the " +
-          "exact-truth pass would pay an unbudgeted O(reps²·dim) bill; " +
-          "raise sampleMod (or the cap, knowingly) instead of letting the " +
-          "chooser become the quadratic step")
-    }
-    val selfCos = rankCosine(col("e"), col("e"))
-    // pairs once, in the coarsest buckets; per-config candidacy is a
-    // mask test on the signature XOR carried out of the bucket
-    val pairs = groups
-      .withColumn("bmin", col("bucket").bitwiseAND(lit(mask(pMin))))
-      .groupBy(col("bmin"))
-      .agg(collect_list(struct(col("rep"), col("m"), col("e"),
-        col("bucket"))).as("ms"))
-      .where(size(col("ms")) > 1)
-      .select(explode(col("ms")).as("x"), col("ms"))
-      .select(col("x"), explode(col("ms")).as("y"))
-      .where(col("x.rep") < col("y.rep"))
-      .select((col("x.m") * col("y.m")).as("w"),
-        col("x.bucket").bitwiseXOR(col("y.bucket")).as("sx"),
-        rankCosine(col("x.e"), col("y.e")).as("cos"))
-    val aggs = planeConfigs.flatMap { p =>
-      val in = col("sx").bitwiseAND(lit(mask(p))) === 0
-      Seq(coalesce(sum(when(in, col("w")).otherwise(0L)), lit(0L)).as(s"nc_$p"),
-        coalesce(sum(when(in && col("cos") >= threshold, col("w"))
-          .otherwise(0L)), lit(0L)).as(s"nv_$p"))
-    }
-    // The three measurement aggregates — within-group weights, the
-    // bucketed candidate/verify row, the cap-bounded exact truth — are
-    // independent reads of the persisted groups: overlap them
-    // (guide §2.6). Same aggregates, same collected Longs.
-    var wrow: Row = null
-    var arow: Row = null
-    var nCrossTrue = 0L
-    Concurrent.runAll(Seq(
-      () => wrow = groups.agg(
-        coalesce(sum(expr("m * (m - 1) div 2")), lit(0L)),
-        coalesce(sum(when(selfCos >= threshold, expr("m * (m - 1) div 2"))
-          .otherwise(0L)), lit(0L))).first(),
-      () => arow = pairs.agg(aggs.head, aggs.tail: _*).first(),
-      // exact truth: cap-bounded rep-level brute force (see scaladoc)
-      () => {
-        val gy = groups.select(col("rep").as("ry"), col("m").as("my"),
-          col("e").as("ey"))
-        nCrossTrue = groups
-          .select(col("rep").as("rx"), col("m").as("mx"), col("e").as("ex"))
-          .crossJoin(broadcast(gy))
-          .where(col("rx") < col("ry") &&
-            rankCosine(col("ex"), col("ey")) >= threshold)
-          .agg(coalesce(sum(col("mx") * col("my")), lit(0L))).first().getLong(0)
-      }))
-    val nWithin = wrow.getLong(0)
-    val nWithinTrue = wrow.getLong(1)
-    val nTrue = nWithinTrue + nCrossTrue
-    groups.unpersist()
-    case class Cfg(p: Int, nCand: Long, nVer: Long,
-                   prec: Option[Long], rec: Option[Long], feasible: Boolean)
-    val cfgs = planeConfigs.map { p =>
-      val nCand = nWithin + arow.getLong(arow.fieldIndex(s"nc_$p"))
-      val nVer = nWithinTrue + arow.getLong(arow.fieldIndex(s"nv_$p"))
-      val prec = if (nCand == 0) None else Some(nVer * 1000000L / nCand)
-      val rec = if (nTrue == 0) None else Some(nVer * 1000000L / nTrue)
-      Cfg(p, nCand, nVer, prec, rec,
-        prec.exists(_ >= precisionFloorPpm) && rec.exists(_ >= recallFloorPpm))
-    }
-    val chosenP = cfgs.filter(_.feasible)
-      .sortBy(c => (c.nCand, -c.p)).headOption.map(_.p)
-    import spark.implicits._
-    cfgs.map(c => (c.p, c.nCand, c.nVer, nTrue, c.prec, c.rec,
-        c.feasible, chosenP.contains(c.p)))
-      .toDF("n_planes", "n_candidates", "n_verified", "n_true",
-        "precision_ppm", "recall_ppm", "feasible", "chosen")
+                                   truthRepCap: Long): DataFrame = {
+    requirePlanes(planeConfigs)
+    BandChooser.choose(cosineFamily(threshold), sampleGroups, planeConfigs,
+      precisionFloorPpm, recallFloorPpm, Some(truthRepCap))
   }
 
+  /** The cosine family of [[BandChooser]] (see [[chooseCosinePlanes]]):
+    * pairs enumerate once in the coarsest buckets, exact cosine rides in
+    * the bucket rows, truth is cap-bounded rep-level brute force; ties
+    * go to MORE planes.
+    */
+  private[graft] def cosineFamily(threshold: Double): BandChooser.Family =
+    BandChooser.Family("cosine", Seq("n_planes" -> identity),
+      preferLarger = true, "truthRepCap", (groups, configs, _) => {
+        val selfCos = rankCosine(col("e"), col("e"))
+        BandChooser.Measures(Nil,
+          within = () => {
+            val r = groups.agg(
+              coalesce(sum(BandChooser.pairWeight("m")), lit(0L)),
+              coalesce(sum(when(selfCos >= threshold, BandChooser.pairWeight("m"))
+                .otherwise(0L)), lit(0L))).first()
+            (r.getLong(0), r.getLong(1))
+          },
+          // pairs once, in the coarsest buckets; candidacy at p is a mask
+          // test on the signature XOR carried out of the bucket
+          candidates = () => groups
+            .withColumn("bmin", col("bucket").bitwiseAND(lit(planeMask(configs.min))))
+            .groupBy(col("bmin"))
+            .agg(collect_list(struct(col("rep"), col("m"), col("e"),
+              col("bucket"))).as("ms"))
+            .where(size(col("ms")) > 1)
+            .select(explode(col("ms")).as("x"), col("ms"))
+            .select(col("x"), explode(col("ms")).as("y"))
+            .where(col("x.rep") < col("y.rep"))
+            .select((col("x.m") * col("y.m")).as("w"),
+              col("x.bucket").bitwiseXOR(col("y.bucket")).as("sx"),
+              rankCosine(col("x.e"), col("y.e")).as("cos"))
+            .select(explode(array(configs.map(lit): _*)).as("cfg"), col("w"),
+              col("sx"), col("cos"))
+            .where(expr("sx & (shiftleft(1L, cfg) - 1) = 0"))
+            .select(col("cfg"), col("w"), (col("cos") >= threshold).as("verified")),
+          // exact truth: cap-bounded rep-level brute force (see scaladoc)
+          truth = () => {
+            val gy = groups.select(col("rep").as("ry"), col("m").as("my"),
+              col("e").as("ey"))
+            groups
+              .select(col("rep").as("rx"), col("m").as("mx"), col("e").as("ex"))
+              .crossJoin(broadcast(gy))
+              .where(col("rx") < col("ry") &&
+                rankCosine(col("ex"), col("ey")) >= threshold)
+              .agg(coalesce(sum(col("mx") * col("my")), lit(0L))).first().getLong(0)
+          })
+      })
+
+
   /** AUTO-TUNED embedding-cosine near-dup pairs —
-    * [[chooseCosinePlanes]] driving [[cosineDupPairs]], the
-    * [[Dedup.nearDupPairsAuto]] contract on the vector family: the
-    * chooser prices the plane grid on the hash-gated sample
-    * (cap-bounded exact truth), the cheapest floor-feasible plane
-    * count runs the corpus pass (carried out as the `n_planes`
-    * provenance column), and when NO config meets the floors the call
-    * REFUSES rather than silently running the corpus at a rejected
-    * operating point. ONE integer crosses the driver between phases.
+    * [[chooseCosinePlanes]] driving [[cosineDupPairs]] through the
+    * shared auto path ([[BandChooser.auto]]): ONE corpus representation
+    * pass (the q_d25 compute-once pattern on the vector family) —
+    * group + bucket the FULL corpus once at the grid's pMax, derive the
+    * chooser's sample groups off the cached rows (an array filter, zero
+    * corpus passes), and run the chosen config's corpus pass off the
+    * same cache (candidacy at p is a mask of the pMax bucket). The
+    * chosen plane count rides out as `n_planes`; when NO config meets
+    * the floors the call REFUSES rather than silently running the
+    * corpus at a rejected operating point.
+    *
+    * `gate`: a fixed mod keeps `truthRepCap` as the truth cap; a budget
+    * derives the mod from Σ m over the cached groups (never a second
+    * scan of a possibly-computed input view), caps the sample's
+    * distinct vectors at the budget (an over-budget sample REFUSES
+    * rather than paying an unbudgeted O(reps²·dim) truth pass), and the
+    * derived mod rides out as `sample_mod`.
     */
   def cosineDupPairsAuto(vecs: DataFrame, vecCol: String, idCol: String,
                          planeConfigs: Seq[Int], dim: Int, threshold: Double,
-                         sampleMod: Long,
+                         gate: SampleGate,
                          precisionFloorPpm: Long, recallFloorPpm: Long,
-                         truthRepCap: Int = 10000): DataFrame = {
-    require(planeConfigs.nonEmpty && planeConfigs.forall(p => p >= 1 && p <= 62),
-      s"plane counts must be in [1, 62] (the bucket is a sign-bit-packed " +
-        s"long), got $planeConfigs")
-    require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    // ONE corpus representation pass (the q_d25/q_d22-FromGroups
-    // pattern on the vector family): group + bucket the FULL corpus
-    // once at the grid's pMax, derive the chooser's sample groups off
-    // the cached rows (an array filter — zero corpus passes), and run
-    // the chosen config's corpus pass off the same cache (candidacy at
-    // p is a mask of the pMax bucket). The pre-r15 shape re-grouped
-    // and re-bucketed the corpus after the chooser's sample pass.
-    val grouped = vectorGroups(vecs, vecCol, idCol, planeConfigs.max, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grouped.count()
-    val choice =
-      try chooseCosinePlanesFromGroups(sampleVectorGroupsOf(grouped, sampleMod),
+                         truthRepCap: Long = 10000): DataFrame = {
+    requirePlanes(planeConfigs)
+    BandChooser.withPins { pin =>
+      val grouped = pin(vectorGroups(vecs, vecCol, idCol, planeConfigs.max, dim))
+      BandChooser.auto("cosineDupPairsAuto", "plane count", gate,
+          grouped.agg(coalesce(sum(col("m")), lit(0L))).first().getLong(0))(
+        (mod, cap) => chooseCosinePlanesFromGroups(sampleVectorGroupsOf(grouped, mod),
           planeConfigs, threshold, precisionFloorPpm, recallFloorPpm,
-          truthRepCap)
-        .filter(col("chosen")).select(col("n_planes")).collect()
-      catch { case e: Throwable => grouped.unpersist(); throw e }
-    if (choice.isEmpty) grouped.unpersist()
-    require(choice.nonEmpty,
-      "cosineDupPairsAuto: no plane count meets the precision/recall " +
-        "floors on the sample — loosen a floor or extend planeConfigs " +
-        "(a silent default would run the corpus at an operating point the " +
-        "floors just rejected)")
-    val p = choice.head.getInt(0)
-    val out = cosineDupPairsFromGroups(grouped, p, threshold)
-      .withColumn("n_planes", lit(p))
-    grouped.unpersist()
-    out
-  }
-
-  /** [[cosineDupPairsAuto]] with the sample SELF-SIZED to the truth
-    * budget — [[Dedup.chooseSampleMod]]'s contract on the vector
-    * family: one corpus count derives the cheapest `sampleMod` whose
-    * expected sample fits `budget`, and the chooser runs with
-    * `truthRepCap = budget` so an over-budget actual sample (hash
-    * skew) REFUSES rather than silently paying an unbudgeted
-    * O(reps²·dim) truth pass. Replaces the caller-guessed `sampleMod`
-    * knob: state the budget, the engine sizes the gate. The derived
-    * `sample_mod` rides out as provenance beside `n_planes`.
-    */
-  def cosineDupPairsAutoBudgeted(vecs: DataFrame, vecCol: String,
-                                 idCol: String, planeConfigs: Seq[Int],
-                                 dim: Int, threshold: Double, budget: Int,
-                                 precisionFloorPpm: Long,
-                                 recallFloorPpm: Long): DataFrame = {
-    require(planeConfigs.nonEmpty && planeConfigs.forall(p => p >= 1 && p <= 62),
-      s"plane counts must be in [1, 62] (the bucket is a sign-bit-packed " +
-        s"long), got $planeConfigs")
-    // one corpus pass, period (the nearDupPairsAutoBudgeted rule): the
-    // id count the derivation needs is Σ m over the cached group rows,
-    // never a second scan of a possibly-computed input view
-    val grouped = vectorGroups(vecs, vecCol, idCol, planeConfigs.max, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grouped.count()
-    val n = grouped.agg(coalesce(sum(col("m")), lit(0L))).first().getLong(0)
-    val sm = Dedup.chooseSampleMod(n, budget.toLong)
-    val choice =
-      try chooseCosinePlanesFromGroups(sampleVectorGroupsOf(grouped, sm),
-          planeConfigs, threshold, precisionFloorPpm, recallFloorPpm,
-          truthRepCap = budget)
-        .filter(col("chosen")).select(col("n_planes")).collect()
-      catch { case e: Throwable => grouped.unpersist(); throw e }
-    if (choice.isEmpty) grouped.unpersist()
-    require(choice.nonEmpty,
-      "cosineDupPairsAutoBudgeted: no plane count meets the precision/recall " +
-        "floors on the sample — loosen a floor or extend planeConfigs " +
-        "(a silent default would run the corpus at an operating point the " +
-        "floors just rejected)")
-    val p = choice.head.getInt(0)
-    val out = cosineDupPairsFromGroups(grouped, p, threshold)
-      .withColumn("n_planes", lit(p))
-      .withColumn("sample_mod", lit(sm))
-    grouped.unpersist()
-    out
+          cap.getOrElse(truthRepCap)))(
+        p => cosineDupPairsFromGroups(grouped, p, threshold))
+    }
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,

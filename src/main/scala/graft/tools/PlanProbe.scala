@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 /** Prints the physical plans of the collapse paths for the PLANS
   * plan-audit notes (exchanges, broadcasts, generator placement).
   * Usage: PlanProbe [sfDir]
-  *   [collapse|recall|keepbest|chooser|kbindex|kbstore|simchooser|
-  *    ivfstore|hamchooser|coschooser]
+  *   [collapse|keepbest|chooser|kbindex|kbstore|ivfstore]
+  * The chooser families' candidate and truth frames are audited in
+  * PLANS.md (r12 lshRecall, r13 chooser, simchooser, hamchooser,
+  * coschooser); the chooser cases that rebuilt those frames by hand
+  * are gone — the frames live once, in the families' choosers.
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
@@ -16,34 +19,13 @@ object PlanProbe {
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id").as("id"), col("text"))
     what match {
-      case "recall" =>
-        // lshRecall's internals collect per-config scalars, so the
-        // probe rebuilds its two data-bearing frames with the same
-        // code shape: the inverted-index TRUTH join and the tagged
-        // multi-config banding.
-        import graft.ops.Dedup
-        val sample = docs.filter(
-          pmod(graft.ops.TextOps.hash60(col("id").cast("string")), lit(2L)) === 0)
-        val groups = Dedup.contentGroups(sample, "id", "text", 3)
-        val repSh = groups.select(col("rep").as("id"), explode(col("hs")).as("h"))
-        val sizes = groups.select(col("rep").as("id"),
-          size(col("hs")).cast("long").as("n"))
-        val truth = repSh.select(col("h"), col("id").as("ia"))
-          .join(repSh.select(col("h"), col("id").as("ib")), Seq("h"))
-          .where(col("ia") < col("ib"))
-          .groupBy(col("ia"), col("ib")).agg(count(lit(1)).as("inter"))
-          .join(sizes.select(col("id").as("ia"), col("n").as("na")), Seq("ia"))
-          .join(sizes.select(col("id").as("ib"), col("n").as("nb")), Seq("ib"))
-          .where(col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter")) >= 0.5)
-        System.err.println("=== lshRecall TRUTH frame (inverted-index exact Jaccard) ===")
-        truth.explain("formatted")
       case "chooser" =>
         // chooseLshConfig's result frame is |configs| driver rows; the
         // plan of interest is the survivors path it would drive — probe
         // nearDupPairsAuto end to end (the chooser phase executes, the
         // pairs phase's plan prints).
         val auto = graft.ops.Dedup.nearDupPairsAuto(docs, "id", "text",
-          truthDfCap = None, sampleMod = 2)
+          truthDfCap = None, gate = graft.ops.SampleGate.Mod(2))
         System.err.println("=== nearDupPairsAuto pairs at the chosen config ===")
         auto.explain("formatted")
         System.err.println(s"pairs: ${auto.count()}")
@@ -77,33 +59,6 @@ object PlanProbe {
           System.err.println(s"survivors: ${surv.count()}")
           ()
         }
-      case "simchooser" =>
-        // chooseSimhashBands' result is |configs| driver rows; the
-        // data-bearing frames are the tagged multi-config banding
-        // (Hamming verified IN-bucket — no verify join) and the
-        // pigeonhole-complete truth banding. Rebuilt with the same
-        // code shape for the plan audit.
-        import graft.ops.Dedup
-        val groups = Dedup.simhash(docs, "id", "text")
-          .groupBy(col("simhash"))
-          .agg(count(lit(1)).cast("long").as("m"), min(col("id")).as("rep"))
-        val cand = groups
-          .withColumn("b", explode(sequence(lit(0), lit(3))))
-          .withColumn("chunk", expr("(simhash >> (15 * b)) & 32767"))
-          .groupBy(col("b"), col("chunk"))
-          .agg(collect_list(struct(col("rep"), col("m"), col("simhash"))).as("ms"))
-          .where(size(col("ms")) > 1)
-          .select(explode(col("ms")).as("x"), col("ms"))
-          .select(col("x"), explode(col("ms")).as("y"))
-          .where(col("x.rep") < col("y.rep"))
-          .select(col("x.rep").as("ia"), col("y.rep").as("ib"),
-            (col("x.m") * col("y.m")).as("w"),
-            expr("bit_count(x.simhash ^ y.simhash)").as("hamming"))
-          .distinct()
-        System.err.println("=== chooseSimhashBands candidate frame (in-bucket Hamming, " +
-          "one banding config shown) ===")
-        cand.explain("formatted")
-        System.err.println(s"cand rows: ${cand.count()}")
       case "ivfstore" =>
         // the store-backed IVF index: per-batch delta assignment, the
         // read-time shadowing view (b == latest(vid)), and the search
@@ -128,66 +83,6 @@ object PlanProbe {
           System.err.println(s"hits: ${res.count()}")
           ()
         }
-      case "hamchooser" =>
-        // chooseHammingBands' result is |configs| driver rows; the
-        // data-bearing frame is the tagged multi-config banding over
-        // the hi/lo halves (Hamming verified IN-bucket). Rebuilt with
-        // the same code shape for the plan audit.
-        val hashes = graft.ops.Multimodal.imageDHash(
-          graft.PipelineQueries.imageRecords(spark, sfDir)).toDF()
-        val groups = hashes
-          .groupBy(col("dh_hi"), col("dh_lo"))
-          .agg(count(lit(1)).cast("long").as("m"), min(col("media_id")).as("rep"))
-        val hcand = groups
-          .withColumn("b", explode(sequence(lit(0), lit(3))))
-          .withColumn("chunk", expr(
-            """CASE WHEN b < 2 THEN (dh_lo >> (16 * b)) & 65535
-              |     ELSE (dh_hi >> (16 * (b - 2))) & 65535 END""".stripMargin))
-          .groupBy(col("b"), col("chunk"))
-          .agg(collect_list(struct(col("rep"), col("m"),
-            col("dh_hi"), col("dh_lo"))).as("ms"))
-          .where(size(col("ms")) > 1)
-          .select(explode(col("ms")).as("x"), col("ms"))
-          .select(col("x"), explode(col("ms")).as("y"))
-          .where(col("x.rep") < col("y.rep"))
-          .select(col("x.rep").as("ia"), col("y.rep").as("ib"),
-            (col("x.m") * col("y.m")).as("w"),
-            (expr("bit_count(x.dh_hi ^ y.dh_hi)") +
-              expr("bit_count(x.dh_lo ^ y.dh_lo)")).as("hamming"))
-          .distinct()
-        System.err.println("=== chooseHammingBands candidate frame (in-bucket " +
-          "Hamming over the hi/lo halves, one banding config shown) ===")
-        hcand.explain("formatted")
-        System.err.println(s"cand rows: ${hcand.count()}")
-      case "coschooser" =>
-        // chooseCosinePlanes: ONE bucket pass at max(planes) serves all
-        // configs — pairs enumerate in the coarsest buckets, candidacy
-        // per config is a mask test on the signature XOR, cosine rides
-        // in the bucket. Plus the cap-bounded brute-force truth frame.
-        import graft.ops.Vectors
-        val vecs = graft.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id").as("vid"),
-            col("embedding").cast("array<double>").as("e"))
-        val groups = vecs
-          .groupBy(col("e"))
-          .agg(count(lit(1)).cast("long").as("m"), min(col("vid")).as("rep"))
-          .withColumn("bucket", Vectors.bucketExpr("e", 6, 64))
-        val paired = groups
-          .withColumn("bmin", col("bucket").bitwiseAND(lit(3L)))
-          .groupBy(col("bmin"))
-          .agg(collect_list(struct(col("rep"), col("m"), col("e"),
-            col("bucket"))).as("ms"))
-          .where(size(col("ms")) > 1)
-          .select(explode(col("ms")).as("x"), col("ms"))
-          .select(col("x"), explode(col("ms")).as("y"))
-          .where(col("x.rep") < col("y.rep"))
-          .select((col("x.m") * col("y.m")).as("w"),
-            col("x.bucket").bitwiseXOR(col("y.bucket")).as("sx"),
-            Vectors.rankCosine(col("x.e"), col("y.e")).as("cos"))
-        System.err.println("=== chooseCosinePlanes pair frame (one signature " +
-          "pass at max planes, coarsest-bucket enumeration, mask candidacy) ===")
-        paired.explain("formatted")
-        System.err.println(s"pair rows: ${paired.count()}")
       case "keepbest" =>
         val surv = graft.ops.Dedup.purgeKeepBest(docs, "id", "text",
           pmod(graft.ops.TextOps.hash60(col("id").cast("string")), lit(1000L)))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, SampleGate, TextOps}
 
 class DedupSpec extends SparkSpec {
 
@@ -302,7 +302,7 @@ class DedupSpec extends SparkSpec {
     "and throws instead of silently defaulting when no config is feasible") {
     import spark.implicits._
     val auto = Dedup.nearDupPairsAuto(dupHeavy, "id", "text",
-      truthDfCap = None, sampleMod = 2,
+      truthDfCap = None, gate = SampleGate.Mod(2),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     val rpbs = auto.select("rows_per_band").distinct().as[Int].collect()
     rpbs.length shouldBe 1 // one choice drove the whole relation
@@ -317,7 +317,7 @@ class DedupSpec extends SparkSpec {
     // floors nothing can clear: refuse, never fall back to a default
     val boom = intercept[IllegalArgumentException](
       Dedup.nearDupPairsAuto(dupHeavy, "id", "text", truthDfCap = None,
-        sampleMod = 2,
+        gate = SampleGate.Mod(2),
         precisionFloorPpm = 1000001L, recallFloorPpm = 1000001L))
     boom.getMessage should include("no banding configuration")
   }
@@ -385,18 +385,19 @@ class DedupSpec extends SparkSpec {
 
   test("nearDupPairsAutoBudgeted derives the mod from the corpus count, runs " +
     "the auto path at it, and carries sample_mod provenance") {
+    // the budgeted auto path: nearDupPairsAuto at a SampleGate.Budget
     import spark.implicits._
     val n = dupHeavy.count()
     val budget = 4 * n + 100 // slacked target >= n, so the derived mod is 1
     val expectMod = Dedup.chooseSampleMod(n, budget)
     expectMod shouldBe 1
-    val budgeted = Dedup.nearDupPairsAutoBudgeted(dupHeavy, "id", "text",
-      truthDfCap = None, budget = budget,
+    val budgeted = Dedup.nearDupPairsAuto(dupHeavy, "id", "text",
+      truthDfCap = None, gate = SampleGate.Budget(budget),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     budgeted.select("sample_mod").distinct().as[Long].collect() shouldBe
       Array(expectMod)
     val manual = Dedup.nearDupPairsAuto(dupHeavy, "id", "text",
-      truthDfCap = None, sampleMod = expectMod,
+      truthDfCap = None, gate = SampleGate.Mod(expectMod),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     budgeted.select("rows_per_band", "ia", "ib", "jac")
         .as[(Int, Long, Long, Double)].collect().toSet shouldBe
@@ -415,8 +416,8 @@ class DedupSpec extends SparkSpec {
     val b = Iterator.from(n.toInt).map(_.toLong)
       .find(bb => Dedup.sampleTargetOf(bb) == n).get
     val short = Seq((999L, "too short")).toDF("id", "text") // 2 tokens < 3
-    val out = Dedup.nearDupPairsAutoBudgeted(dupHeavy.unionByName(short),
-      "id", "text", truthDfCap = None, budget = b,
+    val out = Dedup.nearDupPairsAuto(dupHeavy.unionByName(short),
+      "id", "text", truthDfCap = None, gate = SampleGate.Budget(b),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     out.select("sample_mod").distinct().as[Long].collect() shouldBe Array(1L)
     out.filter($"ia" === 999L || $"ib" === 999L).count() shouldBe 0L
@@ -431,18 +432,19 @@ class DedupSpec extends SparkSpec {
 
   test("simhashPairsAutoBudgeted derives the mod from the signature count, " +
     "matches the explicit-mod auto path, and refuses on hash-skew overshoot") {
+    // the budgeted auto path: simhashPairsAuto at a SampleGate.Budget
     import spark.implicits._
     val n = dupHeavy.count()
     val budget = 4 * n + 100 // slacked target >= n -> derived mod 1
     val expectMod = Dedup.chooseSampleMod(n, budget)
     expectMod shouldBe 1
-    val budgeted = Dedup.simhashPairsAutoBudgeted(dupHeavy, "id", "text",
-      bandConfigs = Seq(2, 3, 4), maxDist = 8, budget = budget,
+    val budgeted = Dedup.simhashPairsAuto(dupHeavy, "id", "text",
+      bandConfigs = Seq(2, 3, 4), maxDist = 8, gate = SampleGate.Budget(budget),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     budgeted.select("sample_mod").distinct().as[Long].collect() shouldBe
       Array(expectMod)
     val manual = Dedup.simhashPairsAuto(dupHeavy, "id", "text",
-      Seq(2, 3, 4), maxDist = 8, sampleMod = expectMod,
+      Seq(2, 3, 4), maxDist = 8, gate = SampleGate.Mod(expectMod),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     budgeted.select("n_bands", "ia", "ib").as[(Int, Long, Long)]
         .collect().toSet shouldBe
@@ -459,8 +461,8 @@ class DedupSpec extends SparkSpec {
     val skew = gateIds.map(i => (i, s"doc number $i with some shared tokens"))
       .toDF("id", "text")
     val boom = intercept[IllegalArgumentException](
-      Dedup.simhashPairsAutoBudgeted(skew, "id", "text", Seq(2, 3), 8,
-        budget = 36L, precisionFloorPpm = 0L, recallFloorPpm = 0L))
+      Dedup.simhashPairsAuto(skew, "id", "text", Seq(2, 3), 8,
+        gate = SampleGate.Budget(36L), precisionFloorPpm = 0L, recallFloorPpm = 0L))
     boom.getMessage should include("above the stated budget")
   }
 
@@ -1059,7 +1061,7 @@ class DedupSpec extends SparkSpec {
     val (b1, b2) = halves(dupHeavy.withColumn("sc",
       pmod(TextOps.hash60(col("id").cast("string")), lit(1000L))))
     val tuned = new KeepBestIndex(spark, tuning = Some(KeepBestIndex.AutoTune(
-      Seq(2, 4, 8), sampleMod = 1, precisionFloorPpm = 0L,
+      Seq(2, 4, 8), gate = SampleGate.Mod(1), precisionFloorPpm = 0L,
       recallFloorPpm = 0L, truthDfCap = None)))
     tuned.chosenRowsPerBand shouldBe None // nothing certified yet
     tuned.ingest(b1, "id", "text", col("sc"))
@@ -1075,7 +1077,7 @@ class DedupSpec extends SparkSpec {
       fixed.survivors.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // floors nothing can clear: refuse at stream birth, zero state
     val refused = new KeepBestIndex(spark, tuning = Some(KeepBestIndex.AutoTune(
-      Seq(2, 4, 8), sampleMod = 1, precisionFloorPpm = 1000001L,
+      Seq(2, 4, 8), gate = SampleGate.Mod(1), precisionFloorPpm = 1000001L,
       recallFloorPpm = 1000001L, truthDfCap = None)))
     val boom = intercept[IllegalArgumentException](
       refused.ingest(b1, "id", "text", col("sc")))
@@ -1161,7 +1163,7 @@ class DedupSpec extends SparkSpec {
     "feasible") {
     import spark.implicits._
     val auto = Dedup.simhashPairsAuto(dupHeavy, "id", "text",
-      bandConfigs = Seq(2, 3, 4, 6), maxDist = 6, sampleMod = 2,
+      bandConfigs = Seq(2, 3, 4, 6), maxDist = 6, gate = SampleGate.Mod(2),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     val nbs = auto.select("n_bands").distinct().as[Int].collect()
     nbs.length shouldBe 1 // one choice drove the whole relation
@@ -1176,7 +1178,7 @@ class DedupSpec extends SparkSpec {
     // floors nothing can clear: refuse, never fall back to a default
     val boom = intercept[IllegalArgumentException](
       Dedup.simhashPairsAuto(dupHeavy, "id", "text", Seq(2, 3, 4, 6),
-        maxDist = 6, sampleMod = 2,
+        maxDist = 6, gate = SampleGate.Mod(2),
         precisionFloorPpm = 1000001L, recallFloorPpm = 1000001L))
     boom.getMessage should include("no band count")
     // the default 4-band split is bit-identical to the generalized path

@@ -118,7 +118,7 @@ class KeepBestStoreSpec extends SparkSpec {
     "firing tick rebands as q_st29") {
     TempFiles.withTempDir("kbstore-cadence") { root =>
       val vroot = new java.io.File(root, "live").getAbsolutePath
-      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 600000L, truthDfCap = None)
       KeepBestIndexStore.createLive(spark, vroot, tune)
       import spark.implicits._
@@ -150,7 +150,7 @@ class KeepBestStoreSpec extends SparkSpec {
     import spark.implicits._
     TempFiles.withTempDir("kbstore-tornrpb") { root =>
       val dir = new java.io.File(root, "s").getAbsolutePath
-      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 0L, truthDfCap = None)
       val st = KeepBestIndexStore.openAuto(spark, dir, tune)
       st.ingest(Seq((11L, T), (12L, T)).toDF("id", "text"), "id", "text",
@@ -173,7 +173,7 @@ class KeepBestStoreSpec extends SparkSpec {
     import spark.implicits._
     TempFiles.withTempDir("kbstore-vacuum") { root =>
       val vroot = new java.io.File(root, "live").getAbsolutePath
-      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = graft.ops.KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 600000L, truthDfCap = None)
       KeepBestIndexStore.createLive(spark, vroot, tune)
       val birth = Seq((11L, T), (12L, T)).toDF("id", "text")
@@ -230,7 +230,7 @@ class KeepBestStoreSpec extends SparkSpec {
         (100L + i, toks(i, mutate = false), 100L + i),
         (200L + i, toks(i, mutate = true), 200L + i)))
         .toDF("id", "text", "sc")
-      val tune = KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 600000L, truthDfCap = None)
       val st0 = KeepBestIndexStore.createLive(spark, vroot, tune)
       st0.ingest(birth, "id", "text", col("sc"))
@@ -400,7 +400,7 @@ class KeepBestStoreSpec extends SparkSpec {
       // floors nothing can meet: the first ingest must refuse with the
       // directory still empty (no _tuned_rpb, no fingerprint, no batch)
       val dirR = new java.io.File(root, "refuse").getAbsolutePath
-      val impossible = KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val impossible = KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 1000001L, recallFloorPpm = 1000001L,
         truthDfCap = None)
       val r = KeepBestIndexStore.openAuto(spark, dirR, impossible)
@@ -409,7 +409,7 @@ class KeepBestStoreSpec extends SparkSpec {
       boom.getMessage should include("floors")
       new java.io.File(dirR).listFiles().map(_.getName).toSet shouldBe Set.empty
       // a feasible tune: birth on the first batch, choice persisted
-      val tune = KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 0L, truthDfCap = None)
       val dir = new java.io.File(root, "s").getAbsolutePath
       val a = KeepBestIndexStore.openAuto(spark, dir, tune)
@@ -458,7 +458,7 @@ class KeepBestStoreSpec extends SparkSpec {
         .map { case (i, t) => (i, t, i * 10L) }.toDF("id", "text", "sc")
       val cap = 3 // boilerplate df = 5 > cap; informative shingles df <= 2
       def tuneOf(capOpt: Option[Int]) = KeepBestIndex.AutoTune(Seq(2, 4, 8),
-        sampleMod = 1, precisionFloorPpm = 0L, recallFloorPpm = 0L,
+        gate = graft.ops.SampleGate.Mod(1), precisionFloorPpm = 0L, recallFloorPpm = 0L,
         truthDfCap = capOpt)
       // uncapped: the boiler-only pair IS truth — birth certifies
       val dirU = new java.io.File(root, "uncapped").getAbsolutePath
@@ -486,7 +486,7 @@ class KeepBestStoreSpec extends SparkSpec {
           Seq(2, 4, 8), 0.5, sampleMod = 1, 0L, 0L, truthDfCap = Some(cap))
         .filter(col("chosen")).select("rows_per_band").as[Int].collect()
       c2.chosenRowsPerBand shouldBe expectedRpb.headOption
-      // a stated sampleBudget SELF-SIZES the birth gate: a budget whose
+      // a budget gate SELF-SIZES the birth gate: a budget whose
       // slacked target covers the batch derives mod 1, so the born
       // choice equals the explicit mod-1 run above — and the budget
       // rides as the armed rep cap (the Dedup.chooseSampleMod contract
@@ -494,9 +494,9 @@ class KeepBestStoreSpec extends SparkSpec {
       Dedup.chooseSampleMod(b2.count(), 200L) shouldBe 1
       val c3 = KeepBestIndexStore.openAuto(spark,
         new java.io.File(root, "capped3").getAbsolutePath,
-        KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 999,
+        KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Budget(200L),
           precisionFloorPpm = 0L, recallFloorPpm = 0L,
-          truthDfCap = Some(cap), sampleBudget = Some(200L)))
+          truthDfCap = Some(cap)))
       c3.ingest(b2, "id", "text", col("sc"))
       c3.chosenRowsPerBand shouldBe expectedRpb.headOption
     }
@@ -523,7 +523,7 @@ class KeepBestStoreSpec extends SparkSpec {
         (100L + i, toks(i, mutate = false), 100L + i),
         (200L + i, toks(i, mutate = true), 200L + i)))
         .toDF("id", "text", "sc")
-      val tune = KeepBestIndex.AutoTune(Seq(2, 4, 8), sampleMod = 1,
+      val tune = KeepBestIndex.AutoTune(Seq(2, 4, 8), gate = graft.ops.SampleGate.Mod(1),
         precisionFloorPpm = 0L, recallFloorPpm = 600000L, truthDfCap = None)
       val st0 = KeepBestIndexStore.createLive(spark, vroot, tune)
       st0.ingest(birth, "id", "text", col("sc"))

@@ -447,18 +447,19 @@ class MultimodalSpec extends SparkSpec {
   test("bandedHammingPairsAutoBudgeted derives the mod from the corpus count, " +
     "matches the explicit-mod auto path, and the armed sampleRepCap refuses " +
     "hash-skew overshoot") {
+    // the budgeted auto path: bandedHammingPairsAuto at a SampleGate.Budget
     import spark.implicits._
     val hashes = Seq((1L, 5L, 7L), (2L, 5L, 4L), (7L, 9L, 9L), (8L, 9L, 9L),
         (9L, 0xF0F0F0F0L, 0x0F0F0F0FL))
       .toDF("media_id", "dh_hi", "dh_lo")
-    val budgeted = Multimodal.bandedHammingPairsAutoBudgeted(hashes,
-      maxDist = 4, bandConfigs = Seq(2, 4), budget = 40L,
+    val budgeted = Multimodal.bandedHammingPairsAuto(hashes,
+      maxDist = 4, bandConfigs = Seq(2, 4), gate = graft.ops.SampleGate.Budget(40L),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     // slacked target 21 >= the 5-row corpus -> derived mod 1
     budgeted.select("sample_mod").distinct().collect()
       .map(_.getLong(0)).toSeq shouldBe Seq(1L)
     val manual = Multimodal.bandedHammingPairsAuto(hashes, maxDist = 4,
-      bandConfigs = Seq(2, 4), sampleMod = 1,
+      bandConfigs = Seq(2, 4), gate = graft.ops.SampleGate.Mod(1),
       precisionFloorPpm = 0L, recallFloorPpm = 0L)
     budgeted.select("n_bands", "ia", "ib").collect().map(_.toSeq).toSet shouldBe
       manual.select("n_bands", "ia", "ib").collect().map(_.toSeq).toSet
@@ -472,8 +473,8 @@ class MultimodalSpec extends SparkSpec {
     val skew = gateIds.map(i => (i, i * 17L, i * 31L))
       .toDF("media_id", "dh_hi", "dh_lo")
     val boom = intercept[IllegalArgumentException](
-      Multimodal.bandedHammingPairsAutoBudgeted(skew, maxDist = 4,
-        bandConfigs = Seq(2, 4), budget = 36L,
+      Multimodal.bandedHammingPairsAuto(skew, maxDist = 4,
+        bandConfigs = Seq(2, 4), gate = graft.ops.SampleGate.Budget(36L),
         precisionFloorPpm = 0L, recallFloorPpm = 0L))
     boom.getMessage should include("sampleRepCap")
   }
