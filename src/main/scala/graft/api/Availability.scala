@@ -3,7 +3,7 @@ package graft.api
 import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Exact, Rankings, Relational, Store, Validation, Windowed}
+import graft.ops.{Concurrent, Exact, Rankings, Relational, Store, Validation, Windowed}
 
 /** The 17-column fact row (reference: database/schema.py:68-95; probe
   * fields s3_vision.py:24-34; ADR-0007 volume columns nullable for the
@@ -263,10 +263,13 @@ object AvailabilityQueries {
 
   /** Incremental rankings refresh: compute the 13-column pipeline for
     * rows after the archive's max date and append with the overlap
-    * guard (generate_volume_rankings.py:346-379 + :259-293).
+    * guard (generate_volume_rankings.py:346-379 + :259-293). The archive
+    * is opened once: the cursor and the merge input share one read (and
+    * so one schema inference and one listing).
     */
   def refreshRankingsArchive(spark: SparkSession, df: DataFrame,
-                             archivePath: String): Unit = {
+                             archivePath: String): Unit =
+      Concurrent.labeled(spark, "rankings:refresh") {
     val daily = df.filter(col("available") && col("quote_volume_usdt").isNotNull)
       .select(col("date"), col("symbol"),
         col("quote_volume_usdt").as("volume"), col("trade_count"))
@@ -277,19 +280,15 @@ object AvailabilityQueries {
     val exists = hPath
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(hPath)
-    val fresh =
-      if (!exists) Rankings.pipeline(daily)
-      else {
-        val cursorRow = spark.read.parquet(archivePath)
-          .agg(max("date")).collect()(0)
-        // Empty archive (e.g. a first run over a no-volume slice) has a
-        // NULL cursor; date > NULL would filter out everything forever.
-        if (cursorRow.isNullAt(0)) Rankings.pipeline(daily)
-        else Rankings.pipeline(daily.filter(col("date") > lit(cursorRow.getDate(0))))
-      }
-    if (!exists) Store.exportParquet(fresh, archivePath)
+    if (!exists) Store.exportParquet(Rankings.pipeline(daily), archivePath)
     else {
       val existing = spark.read.parquet(archivePath)
+      val cursorRow = existing.agg(max("date")).collect()(0)
+      // Empty archive (e.g. a first run over a no-volume slice) has a
+      // NULL cursor; date > NULL would filter out everything forever.
+      val fresh =
+        if (cursorRow.isNullAt(0)) Rankings.pipeline(daily)
+        else Rankings.pipeline(daily.filter(col("date") > lit(cursorRow.getDate(0))))
       // Eager localCheckpoint materializes the merged rows and CUTS the
       // lineage to the files we are about to overwrite — the archive is
       // small by design (~20 MB in the reference), so this is cheap and

@@ -286,21 +286,32 @@ object Store {
 
   /** UPSERT a batch: merge with the existing rows of ONLY the touched
     * partitions, keep the newest row per key, and dynamically overwrite
-    * just those partitions. All other partitions are untouched on disk,
-    * so cost scales with the re-probe window, not the table.
+    * just those partitions. All other partitions are untouched on disk.
+    *
+    * The batch's distinct partition values are collected once and read
+    * back as a static partition predicate (`isin`, plus `IS NULL` when the
+    * batch carries a NULL value, Spark's `__HIVE_DEFAULT_PARTITION__`), so
+    * the scan lists and reads only the touched partitions: cost scales
+    * with the re-probe window, not the table, and a batch of brand-new
+    * partitions reads no existing file. The same values scope the
+    * manifest refresh.
     */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              partCol: String, keys: Seq[String], tsCol: String,
              tieBreak: String, statsCols: Seq[String] = Nil): Unit =
-      withLease(spark, path) {
+      withLease(spark, path) { Concurrent.labeled(spark, "store:upsert") {
     val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
     val savedMode = spark.conf.getOption(overwriteModeKey)
     spark.conf.set(overwriteModeKey, "dynamic")
     try {
       val existing = spark.read.parquet(path)
-      // Partition pruning: only read partitions present in the update batch.
-      val touched = updates.select(col(partCol)).distinct()
-      val affected = existing.join(broadcast(touched), Seq(partCol), "left_semi")
+      val touched = updates.select(col(partCol)).distinct().collect()
+        .map(r => if (r.isNullAt(0)) null else r.get(0)).toIndexedSeq
+      // Literals, not a semi-join with the batch: the join's build side
+      // has no selective filter, so dynamic partition pruning never fires
+      // and every partition would be scanned.
+      val affected = existing.filter(col(partCol).isin(touched.filter(_ != null): _*) ||
+        (if (touched.contains(null)) col(partCol).isNull else lit(false)))
       val merged = latestByKey(
         affected.unionByName(updates.select(existing.columns.toIndexedSeq.map(col): _*)),
         keys, tsCol, tieBreak)
@@ -316,16 +327,14 @@ object Store {
       // the touched partitions only (batch-proportional, like the
       // upsert itself).
       if (statsCols.nonEmpty)
-        refreshManifestIncremental(spark, path, partCol,
-          touched.collect().map(r => if (r.isNullAt(0)) null else r.get(0)).toIndexedSeq,
-          statsCols)
+        refreshManifestIncremental(spark, path, partCol, touched, statsCols)
     } finally {
       savedMode match {
         case Some(m) => spark.conf.set(overwriteModeKey, m)
         case None    => spark.conf.unset(overwriteModeKey)
       }
     }
-  } // withLease
+  }} // labeled, withLease
 
   /** PURGE keys (right-to-be-forgotten / takedown propagation): delete
     * every row whose key tuple appears in `purge`, rewriting ONLY the

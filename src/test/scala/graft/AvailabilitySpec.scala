@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.functions._
 import graft.api.{AvailabilityQueries => AQ, AvailabilityRecord}
+import graft.ops.Store
 
 /** Domain-API goldens over the reference's fixture grids
   * (tests/conftest.py:84-122; tests/test_queries/test_snapshots.py;
@@ -194,6 +195,26 @@ class AvailabilitySpec extends SparkSpec {
     val out = spark.read.parquet(path)
     out.count() shouldBe 3
     out.agg(max("date")).collect()(0).getDate(0).toString shouldBe "2024-01-16"
+  }
+
+  test("the daily tick's write path labels every job it runs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-tick-labels").toString
+    val (fact, archive) = (s"$dir/fact", s"$dir/rankings")
+    def day(d: String) = (for ((s, v) <- Seq("BTCUSDT" -> 1e9, "ETHUSDT" -> 5e8))
+      yield rec(d, s, vol = Some(v), trades = Some(1L))).toDF()
+    Store.writePartitioned(day("2024-01-15"), fact, "date")
+    AQ.refreshRankingsArchive(spark, spark.read.parquet(fact), archive)
+
+    val upsertJobs = jobDescriptions(Store.upsert(spark, fact, day("2024-01-16"), "date",
+      Seq("date", "symbol"), "probe_timestamp", "status_code"))
+    val df = spark.read.parquet(fact)
+    val refreshJobs = jobDescriptions(AQ.refreshRankingsArchive(spark, df, archive))
+    upsertJobs should not be empty
+    upsertJobs.distinct shouldBe Seq("store:upsert")
+    refreshJobs should not be empty
+    refreshJobs.distinct shouldBe Seq("rankings:refresh")
+    spark.read.parquet(archive).count() shouldBe 4
   }
 
   test("crossCheckSymbols tags only_db / only_api / both (cross_check.py:79-137)") {

@@ -24,4 +24,35 @@ object SparkSpec {
 
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** The description of every job `body` starts ("null" for none). The
+    * listener bus delivers in order, so a marker job run after `body` and
+    * seen by the listener proves every earlier job start was seen too; one
+    * run before `body` keeps earlier suites' jobs out.
+    */
+  def jobDescriptions(body: => Any): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(
+          Option(s.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
+    def mark(): Unit = {
+      val marker = s"marker:${java.util.UUID.randomUUID()}"
+      graft.ops.Concurrent.labeled(spark, marker)(
+        spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "listener bus did not deliver the marker job")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      mark()
+      seen.clear()
+      body
+      mark()
+      seen.toArray.toSeq.map(_.toString).filterNot(_.startsWith("marker:"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

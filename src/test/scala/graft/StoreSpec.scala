@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import graft.ops.Store
@@ -68,6 +69,129 @@ class StoreSpec extends SparkSpec {
     Store.upsert(spark, path, fresh, "date",
       Seq("date", "symbol"), "probe_timestamp", "file_size_bytes")
     spark.read.parquet(path).count() shouldBe 10
+  }
+
+  /** `n` consecutive days from 2024-01-01 + `from`, two symbols each. */
+  private def days(from: Int, n: Int, probeTs: String, size: Long) = {
+    import spark.implicits._
+    val ts = Timestamp.valueOf(probeTs)
+    val start = java.time.LocalDate.of(2024, 1, 1)
+    (for {
+      d <- from until from + n
+      s <- Seq("BTCUSDT", "ETHUSDT")
+    } yield (Date.valueOf(start.plusDays(d.toLong)), s, true, size + d, ts))
+      .toDF("date", "symbol", "available", "file_size_bytes", "probe_timestamp")
+  }
+
+  /** (rows, files) that the scans of the table at `path` read while `body`
+    * ran, summed from the executed plans' scan metrics.
+    */
+  private def scanned(path: String)(body: => Unit): (Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobDescriptions drains the listener bus, which also carries the
+    // end-of-execution events this listener hears
+    try jobDescriptions(body) finally spark.listenerManager.unregister(listener)
+    val root = new java.io.File(path).toURI.getPath.stripSuffix("/")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = plans.asScala.toSeq.flatMap(qe => helper.collect(qe.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == root) => s
+    })
+    scans should not be empty
+    (scans.map(_.metrics("numOutputRows").value).sum, scans.map(_.metrics("numFiles").value).sum)
+  }
+
+  private def rowsOf(df: DataFrame): Set[Row] =
+    df.select("date", "symbol", "available", "file_size_bytes", "probe_timestamp")
+      .collect().toSet
+
+  test("upsert scope: the existing side reads only the batch's partitions") {
+    val path = Files.createTempDirectory("graft-upsert-scope").toString + "/t"
+    // 40 dates: above Spark's default partition-discovery threshold (32)
+    Store.writePartitioned(days(0, 40, "2024-03-01 02:00:00", 8000000L), path, "date")
+    val upsert = (batch: DataFrame) => Store.upsert(spark, path, batch, "date",
+      Seq("date", "symbol"), "probe_timestamp", "file_size_bytes")
+
+    // re-probe BTCUSDT on day 7, add day 40
+    val batch = days(7, 1, "2024-03-02 02:00:00", 9000000L).filter(col("symbol") === "BTCUSDT")
+      .unionByName(days(40, 1, "2024-03-02 02:00:00", 8000000L))
+    val expected = rowsOf(Store.latestByKey(spark.read.parquet(path).unionByName(batch),
+      Seq("date", "symbol"), "probe_timestamp", "file_size_bytes"))
+    scanned(path)(upsert(batch)) shouldBe ((2L, 1L)) // day 7's two rows, one file
+    rowsOf(spark.read.parquet(path)) shouldBe expected
+    expected.size shouldBe 82
+
+    // a batch of brand-new dates reads no existing row or file
+    val fresh = days(41, 2, "2024-03-03 02:00:00", 8000000L)
+    scanned(path)(upsert(fresh)) shouldBe ((0L, 0L))
+    rowsOf(spark.read.parquet(path)) shouldBe expected ++ rowsOf(fresh)
+  }
+
+  test("upsert of a NULL partition value replaces its row under the default partition") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-upsert-null").toString + "/t"
+    val old = Timestamp.valueOf("2024-01-18 02:00:00")
+    val undated = Seq((Option.empty[Date], "BTCUSDT", true, 1L, old),
+        (Option.empty[Date], "ETHUSDT", true, 2L, old))
+      .toDF("date", "symbol", "available", "file_size_bytes", "probe_timestamp")
+    Store.writePartitioned(grid("2024-01-18 02:00:00", 8000000L).unionByName(undated),
+      path, "date")
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    val nullDir = s"date=$DEFAULT_PARTITION_NAME"
+    def dated(): Map[String, Long] = {
+      val root = new java.io.File(path)
+      root.listFiles().filter(d => d.isDirectory && d.getName != nullDir)
+        .flatMap(_.listFiles()).map(f => f.getPath -> f.lastModified()).toMap
+    }
+    val before = dated()
+    before should not be empty
+
+    val reprobe = Seq((Option.empty[Date], "BTCUSDT", true, 9L,
+        Timestamp.valueOf("2024-01-19 02:00:00")))
+      .toDF("date", "symbol", "available", "file_size_bytes", "probe_timestamp")
+    Store.upsert(spark, path, reprobe, "date",
+      Seq("date", "symbol"), "probe_timestamp", "file_size_bytes")
+
+    val after = spark.read.parquet(path)
+    after.count() shouldBe 11 // 9 dated + 2 undated: replaced, not duplicated
+    after.filter(col("date").isNull).select("symbol", "file_size_bytes")
+      .as[(String, Long)].collect().toSet shouldBe Set(("BTCUSDT", 9L), ("ETHUSDT", 2L))
+    new java.io.File(path, nullDir).isDirectory shouldBe true
+    dated() shouldBe before // untouched partitions: same files, same mtimes
+  }
+
+  test("driver-side listing: a 40-partition table opens with no listing job, same files") {
+    val path = Files.createTempDirectory("graft-listing").toString + "/t"
+    Store.writePartitioned(days(0, 40, "2024-03-01 02:00:00", 8000000L), path, "date")
+    def open(): (Seq[String], Seq[String]) = {
+      var files = Seq.empty[String]
+      val jobs = jobDescriptions { files = spark.read.parquet(path).inputFiles.toSeq.sorted }
+      (jobs.filter(_.startsWith("Listing leaf files")), files)
+    }
+    val (key, value) = Sessions.DriverListing
+    val saved = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val (defaultListing, defaultFiles) = open()
+      defaultListing should not be empty // Spark's default lists 40 dirs with a job
+      spark.conf.set(key, value)
+      val (driverListing, driverFiles) = open()
+      driverListing shouldBe empty
+      driverFiles shouldBe defaultFiles
+      driverFiles should have size 40
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("purgeKeys deletes only the doomed rows, drops fully-emptied partitions") {
