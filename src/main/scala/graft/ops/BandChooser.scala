@@ -225,10 +225,11 @@ object BandChooser {
   /** Distinct weighted rep pairs sharing at least one of `nb` band
     * chunks: (ia, ib, w = ma·mb, hamming) over groups carrying (rep, m,
     * sigCols). The one in-bucket enumeration of the Hamming-banded
-    * families: chained generators STREAM (a big bucket never
-    * materializes its m²/2 pair array in one row), and the exact
-    * Hamming distance rides out of the bucket — the signatures are in
-    * the bucket rows, so no config re-joins the corpus to verify.
+    * families — their choosers and their corpus passes
+    * (`Dedup.simhashPairs`, `Multimodal.bandedHammingPairs`): chained
+    * generators STREAM (see [[DupGroups]]), and the exact Hamming
+    * distance rides out of the bucket — the signatures are in the
+    * bucket rows, so nothing re-joins the corpus to verify.
     */
   def bucketPairs(groups: DataFrame, nb: Int, chunkOf: Int => Column,
                   sigCols: Seq[String]): DataFrame =

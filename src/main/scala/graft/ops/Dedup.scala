@@ -90,28 +90,6 @@ object Dedup {
       .agg(min(col("h")).as("fp_min"), max(col("h")).as("fp_max"),
         size(collect_set(col("h"))).cast("long").as("n_shingles"))
 
-  /** Windowed-LEAD formulation (built-ins only) — kept for the
-    * equivalence spec.
-    */
-  private[graft] def shingleSetWindowed(df: DataFrame, idCol: String,
-                                        textCol: String, n: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy("pos")
-    val toks = Partitioning.spread(df)
-      .select(col(idCol).as("id"),
-        posexplode(TextOps.tokens(col(textCol))).as(Seq("pos", "t")))
-    val withLeads = (1 until n).foldLeft(toks) { (acc, k) =>
-      acc.withColumn(s"t$k", lead(col("t"), k).over(w))
-    }
-    // n == 1 adds no lead columns; "t0" is the token itself.
-    val lastCol = if (n == 1) col("t") else col(s"t${n - 1}")
-    withLeads
-      .filter(lastCol.isNotNull)
-      .select(col("id"),
-        concat_ws(" ", (col("t") +: (1 until n).map(k => col(s"t$k"))): _*).as("sh"))
-      .distinct()
-  }
-
   /** Universal-hash family for minhash: h_j(x) = (a_j·h + b_j) mod 2^30
     * over the 30-bit base content hash. One md5 per shingle instead of
     * k; the per-seed constants derive from the same portable hash so
@@ -215,19 +193,6 @@ object Dedup {
     minhashFromHashes(
       shingles.select(col("id"), TextOps.hash60(col("sh")).as("h")), k)
 
-  /** Explode×groupBy formulation (built-ins only) — equivalence spec. */
-  private[graft] def minhashExploded(shingles: DataFrame, k: Int): DataFrame = {
-    val h30 = (TextOps.hash60(col("sh")).bitwiseAND(lit(MinhashMask))).as("h")
-    val perms = (0 until k).map { j =>
-      struct(lit(j).as("j"),
-        ((col("h") * minhashA(j) + minhashB(j)) % lit(MinhashMask + 1)).as("hv"))
-    }
-    shingles.select(col("id"), h30)
-      .select(col("id"), explode(array(perms: _*)).as("p"))
-      .groupBy(col("id"), col("p.j").as("j"))
-      .agg(min(col("p.hv")).as("m"))
-  }
-
   /** Oracle SQL for the same signatures (shared constants). Reads the
     * hashed-shingle CTE `sh(id, h)` — the 60-bit hash is computed once
     * there, mirroring `shingleHashSet`.
@@ -273,67 +238,17 @@ object Dedup {
     * explode, no (id, band) re-aggregation. One shuffle to bucket, one
     * to dedup pairs.
     *
-    * EXACT-DUPLICATE COLLAPSE (the r11 scale fix, mirroring
-    * [[Multimodal.bandedHammingPairs]]): byte-identical documents share
-    * the whole signature, so every copy of a duplicated page lands in
-    * the SAME bucket of EVERY band — in-bucket pair work is quadratic
-    * in bucket OCCUPANCY, amplified ×nBands and again by the pair
-    * `distinct`. A boilerplate page repeated 100 k× in a crawl would
-    * build 100 k-element bucket arrays and enumerate 10¹⁰ pairs per
-    * band; the sf1.0 decade run demonstrated the same shape OOM-ing
-    * the media path. Identical signatures are therefore collapsed to
-    * one REPRESENTATIVE (min id) before banding; buckets hold distinct
-    * signatures only, and the verified rep-level candidates are
-    * expanded back to member pairs — via chained explodes, which
-    * Spark's generators STREAM, never materializing a dup-group's
-    * m²/2 pair array in one row. The output relation is identical to
-    * naive enumeration (the DedupSpec equivalence test pins it against
-    * the exploded formulation); candidate-stage cost drops from
-    * O(nBands · Σ occupancy²) to O(Σ distinct²) + output size. Output
-    * IS still quadratic in exact-dup group size — that is the pair
-    * contract; run [[exactDedup]] upstream when pairs among exact
-    * copies are not wanted.
+    * Byte-identical documents share the whole signature, so identical
+    * signatures are collapsed to one representative before banding and
+    * the rep-level candidates expanded back to member pairs
+    * ([[DupGroups]]); the DedupSpec equivalence test pins the output
+    * against the exploded formulation ([[lshCandidates]]).
     */
-  def lshCandidatesFromSigs(sigs: DataFrame, rowsPerBand: Int, k: Int): DataFrame =
-    candidatesFromSigGroups(sigGroups(sigs), rowsPerBand, k)
-
-  /** The signature-collapse half of [[lshCandidatesFromSigs]]:
-    * one group row per DISTINCT signature value, members sorted, rep =
-    * min id. Config-independent — [[lshTuning]] computes it once and
-    * shares it across every (bands × rowsPerBand) configuration.
-    */
-  private[graft] def sigGroups(sigs: DataFrame): DataFrame =
-    sigs
-      .groupBy(col("sig"))
-      .agg(sort_array(collect_list(col("id"))).as("members"))
-      .withColumn("rep", element_at(col("members"), 1))
-
-  /** The banding + expansion half of [[lshCandidatesFromSigs]], over a
-    * pre-collapsed [[sigGroups]] frame.
-    */
-  private[graft] def candidatesFromSigGroups(groups: DataFrame, rowsPerBand: Int,
-                                             k: Int): DataFrame = {
+  def lshCandidatesFromSigs(sigs: DataFrame, rowsPerBand: Int, k: Int): DataFrame = {
+    val groups = DupGroups.collapse(sigs, Seq("sig"), "id")
     val repPairs = pairsWithinBuckets(
       bandsOf(groups.select(col("rep").as("id"), col("sig")), rowsPerBand, k))
-    // Exact copies: all-pairs within a signature group, streamed by two
-    // generators (members is sorted, so the filter keeps each pair once).
-    val withinGroup = groups
-      .where(size(col("members")) > 1)
-      .select(explode(col("members")).as("ia"), col("members").as("mb"))
-      .select(col("ia"), explode(col("mb")).as("ib"))
-      .where(col("ia") < col("ib"))
-    // Cross-group: every member pair inherits its reps' candidacy; reps
-    // don't bound members, so re-order per pair.
-    val ga = groups.select(col("rep").as("ra"), col("members").as("ma"))
-    val gb = groups.select(col("rep").as("rb"), col("members").as("mb"))
-    val crossGroup = repPairs
-      .select(col("ia").as("ra"), col("ib").as("rb"))
-      .join(ga, "ra").join(gb, "rb")
-      .select(explode(col("ma")).as("a"), col("mb"))
-      .select(col("a"), explode(col("mb")).as("b"))
-      .select(least(col("a"), col("b")).as("ia"),
-        greatest(col("a"), col("b")).as("ib"))
-    withinGroup.unionByName(crossGroup)
+    DupGroups.expand(groups, repPairs.select(col("ia").as("ra"), col("ib").as("rb")))
   }
 
   /** (id, band, sig-slice string) per signature band — the LSH bucket
@@ -447,13 +362,8 @@ object Dedup {
       .localCheckpoint(eager = true)
   }
 
-  /** Distinct (ia < ib) pairs of ids sharing a (band, sig) bucket.
-    *
-    * Enumeration is two chained generators + an i<j filter rather than
-    * a nested-transform flatten: generators STREAM their output, so a
-    * large bucket never materializes its m²/2 pair array inside a
-    * single row (the failure shape the sf1.0 decade run exposed on the
-    * media path).
+  /** Distinct (ia < ib) pairs of ids sharing a (band, sig) bucket,
+    * enumerated by streamed generators (see [[DupGroups]]).
     */
   private def pairsWithinBuckets(banded: DataFrame): DataFrame =
     banded
@@ -514,7 +424,7 @@ object Dedup {
     * member pairs at output — within-group pairs are Jaccard 1.0
     * exactly (identical sets), matching what the naive formulation
     * computes for them. The output RELATION is unchanged (pairs among
-    * exact copies included — run [[exactDedup]] upstream when those are
+    * exact copies included — run [[exactGroups]] upstream when those are
     * not wanted); per-distinct-content cost is what scales. Grouping is
     * by the full sorted hash array, not a derived digest, so distinct
     * contents can never merge.
@@ -563,30 +473,12 @@ object Dedup {
       size(col("hs")).cast(LongType).as("n"))
     val repVerified = jaccardVerifySized(cand, repSh, sizes, setCol = "h")
       .filter(col("jac") >= threshold)
-    // Exact copies: identical sets, Jaccard exactly 1.0; chained
-    // explodes stream the expansion (members is sorted — each pair once).
-    val withinGroup = grouped
-      .where(size(col("members")) > 1)
-      .where(lit(1.0) >= threshold)
-      .select(explode(col("members")).as("ia"), col("members").as("mm"))
-      .select(col("ia"), explode(col("mm")).as("ib"))
-      .where(col("ia") < col("ib"))
-      .withColumn("jac", lit(1.0))
-    // Cross-group: every member pair inherits its reps' verified jac;
-    // reps don't bound members, so re-order per pair.
-    val ga = grouped.select(col("rep").as("ra"), col("members").as("ma"))
-    val gb = grouped.select(col("rep").as("rb"), col("members").as("mb"))
-    val crossGroup = repVerified
       .select(col("ia").as("ra"), col("ib").as("rb"), col("jac"))
-      .join(ga, "ra").join(gb, "rb")
-      .select(explode(col("ma")).as("a"), col("mb"), col("jac"))
-      .select(col("a"), explode(col("mb")).as("b"), col("jac"))
-      .select(least(col("a"), col("b")).as("ia"),
-        greatest(col("a"), col("b")).as("ib"), col("jac"))
-    // The verified pair set is linear in candidates, not corpus:
-    // materialize it eagerly so the caller can release the groups
-    // cache — repeated invocations must not leak storage.
-    withinGroup.unionByName(crossGroup)
+    // Exact copies have identical sets: Jaccard exactly 1.0. The verified
+    // pair set is linear in candidates, not corpus: materialize it
+    // eagerly so the caller can release the groups cache — repeated
+    // invocations must not leak storage.
+    DupGroups.expand(grouped, repVerified, Seq(lit(1.0).as("jac")), lit(1.0 >= threshold))
       .localCheckpoint(eager = true)
   }
 
@@ -603,34 +495,17 @@ object Dedup {
     */
   private[graft] def contentGroups(df: DataFrame, idCol: String, textCol: String,
                                    shingleN: Int): DataFrame =
-    Partitioning.spread(df)
+    contentGroupsOf(Partitioning.spread(df)
       .select(col(idCol).as("id"),
         graft.functions.ShingleGenerator.shingles(col(textCol), shingleN).as("sh"))
-      .select(col("id"), TextOps.hash60(col("sh")).as("h"))
-      .groupBy(col("id"))
-      .agg(sort_array(collect_set(col("h"))).as("hs"))
-      .groupBy(col("hs"))
-      .agg(sort_array(collect_list(col("id"))).as("members"))
-      .withColumn("rep", element_at(col("members"), 1))
+      .select(col("id"), TextOps.hash60(col("sh")).as("h")))
 
-  /** The [[contentGroups]] of the deterministic hash-gated sample,
-    * DERIVED from the full corpus's groups instead of re-shingling:
-    * restricting the corpus to `hash60(id) mod sampleMod == 0` only
-    * shrinks each group's member list (the hs key is a pure function
-    * of the text, untouched by which ids survive the gate), so
-    * contentGroups(sample) ≡ filter each full group's sorted members
-    * by the gate, drop emptied groups, re-take rep = first member.
-    * Distinct contents can never merge or split under the restriction.
-    * This is what lets [[nearDupPairsAuto]] shingle the corpus ONCE —
-    * the derivation is an array filter over already-cached group rows,
-    * zero corpus passes. DedupSpec pins the equivalence.
+  /** [[contentGroups]] of (id, h) shingle-hash rows — also the keep-best
+    * store's groups, rebuilt from its stored hashes.
     */
-  private[graft] def sampleGroupsOf(groups: DataFrame, sampleMod: Long): DataFrame =
-    groups
-      .select(col("hs"),
-        filter(col("members"), SampleGate.admits(_, sampleMod)).as("members"))
-      .where(size(col("members")) > 0)
-      .withColumn("rep", element_at(col("members"), 1))
+  private[graft] def contentGroupsOf(idHashes: DataFrame): DataFrame =
+    DupGroups.collapse(idHashes.groupBy(col("id"))
+      .agg(sort_array(collect_set(col("h"))).as("hs")), Seq("hs"), "id")
 
   /** The rep-level shingle postings and set sizes of a (persisted)
     * [[contentGroups]] frame — both map-side off the cached group rows;
@@ -1267,16 +1142,13 @@ object Dedup {
     * verify runs on the bucket members' signatures carried alongside
     * the ids, so nothing re-joins against the corpus.
     *
-    * EXACT-DUPLICATE COLLAPSE (r11, same reasoning as
-    * [[lshCandidatesFromSigs]]): identical documents have identical
-    * SimHash, so each copy family lands whole in all four band
-    * buckets; enumeration is quadratic in bucket occupancy AND the
-    * naive flatten builds a family's m²/2 pair array inside a single
-    * row. Signatures collapse to one representative per value before
-    * banding; buckets enumerate distinct values only; verified rep
-    * pairs expand back through streamed generators (within-group pairs
-    * at Hamming 0 by construction). Output relation unchanged — the
-    * spec pins it against the naive shape on a dup-heavy corpus.
+    * Identical documents have identical SimHash, so signatures collapse
+    * to one representative per value before banding, the in-bucket
+    * enumeration is the Hamming-banded families' one
+    * [[BandChooser.bucketPairs]], and verified rep pairs expand back to
+    * member pairs at Hamming 0 within a group ([[DupGroups]]). Output
+    * relation unchanged — the spec pins it against the naive shape on a
+    * dup-heavy corpus.
     */
   def simhashPairs(sh: DataFrame, maxDist: Int, nBands: Int = 4): DataFrame = {
     // nBands generalizes the historical 4x15-bit split (the default
@@ -1290,47 +1162,17 @@ object Dedup {
     // and the group-by-signature exchange would otherwise re-execute
     // per reference. Materialized eagerly, released after the eager
     // output checkpoint below — same contract as [[nearDupPairs]].
-    val groups = sh
-      .groupBy(col("simhash"))
-      .agg(sort_array(collect_list(col("id"))).as("members"))
-      .withColumn("rep", element_at(col("members"), 1))
+    val groups = DupGroups.collapse(sh, Seq("simhash"), "id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     groups.count()
-    val repPairs = groups
-      .withColumn("b", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("chunk", simhashChunk(nBands))
-      .groupBy(col("b"), col("chunk"))
-      .agg(collect_list(struct(col("rep"), col("simhash"))).as("ms"))
-      .where(size(col("ms")) > 1)
-      // Chained generators, not a nested-transform flatten: generators
-      // STREAM, so a large bucket never materializes its m²/2 pair
-      // array inside a single row (reps are distinct, so x.rep < y.rep
-      // keeps each unordered pair exactly once).
-      .select(explode(col("ms")).as("x"), col("ms"))
-      .select(col("x"), explode(col("ms")).as("y"))
-      .where(col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("ra"), col("y.rep").as("rb"),
-        expr("bit_count(x.simhash ^ y.simhash)").cast(IntegerType).as("hamming"))
-      .distinct()
+    val repPairs = BandChooser.bucketPairs(
+        groups.withColumn("m", size(col("members")).cast(LongType)),
+        nBands, simhashChunk, Seq("simhash"))
       .filter(col("hamming") <= maxDist)
-    val withinGroup = groups
-      .where(size(col("members")) > 1)
-      .select(explode(col("members")).as("ia"), col("members").as("mm"))
-      .select(col("ia"), explode(col("mm")).as("ib"))
-      .where(col("ia") < col("ib"))
-      .withColumn("hamming", lit(0).cast(IntegerType))
-    val ga = groups.select(col("rep").as("ra"), col("members").as("ma"))
-    val gb = groups.select(col("rep").as("rb"), col("members").as("mb"))
-    val crossGroup = repPairs
-      .join(ga, "ra").join(gb, "rb")
-      .select(explode(col("ma")).as("a"), col("mb"), col("hamming"))
-      .select(col("a"), explode(col("mb")).as("b"), col("hamming"))
-      .select(least(col("a"), col("b")).as("ia"),
-        greatest(col("a"), col("b")).as("ib"), col("hamming"))
+      .select(col("ia").as("ra"), col("ib").as("rb"), col("hamming"))
     // The pair relation is linear in candidates, not corpus:
     // materialize eagerly, then release the cache this pipeline pinned.
-    val out = withinGroup.select(col("ia"), col("ib"), col("hamming"))
-      .unionByName(crossGroup)
+    val out = DupGroups.expand(groups, repPairs, Seq(lit(0).cast(IntegerType).as("hamming")))
       .localCheckpoint(eager = true)
     groups.unpersist()
     out
@@ -1522,7 +1364,7 @@ object Dedup {
 
   /** [[chooseLshConfig]] off an ALREADY-derived sample [[contentGroups]]
     * frame — the hash gating (and, in [[nearDupPairsAuto]], the
-    * [[sampleGroupsOf]] derivation off the full corpus's cached groups)
+    * [[DupGroups.sampleOf]] derivation off the full corpus's cached groups)
     * is the caller's, so the corpus is never re-shingled for the
     * chooser. `sampleRepCap`, when set, REFUSES if the sample holds
     * more distinct contents than the caller's rep budget (see
@@ -1626,7 +1468,7 @@ object Dedup {
     // ONE corpus representation pass (the q_d25 compute-once pattern,
     // applied to MinHash): shingle→hash→group the FULL corpus once,
     // derive the chooser's sample groups off the cached rows
-    // ([[sampleGroupsOf]] — an array filter, zero corpus passes), and
+    // ([[DupGroups.sampleOf]] — an array filter, zero corpus passes), and
     // band the same cached rows for the production pairs phase. A
     // budget's corpus count is Σ |members| over the same rows, never a
     // second scan of a possibly-computed input view.
@@ -1635,7 +1477,7 @@ object Dedup {
       BandChooser.auto("nearDupPairsAuto", "banding configuration", gate,
           grouped.agg(coalesce(sum(size(col("members")).cast(LongType)), lit(0L)))
             .first().getLong(0))(
-        (mod, cap) => chooseLshConfigFromGroups(sampleGroupsOf(grouped, mod), k,
+        (mod, cap) => chooseLshConfigFromGroups(DupGroups.sampleOf(grouped, mod), k,
           rowsPerBandConfigs, threshold, precisionFloorPpm, recallFloorPpm,
           truthDfCap, cap))(
         rpb => nearDupPairsFromGroups(grouped, k, rpb, threshold))
@@ -1808,23 +1650,15 @@ object Dedup {
   }
 
   /** EXACT duplicate pairs (ia < ib) from whole-text hash groups — the
-    * pair-shaped view of [[exactDupGroups]]'s group-shaped result, for
+    * pair-shaped view of [[exactGroups]]' group-shaped result, for
     * consumers that want edges (cluster closure, the cross-source
     * matrix below). One keyed shuffle on the md5; pairs enumerate
     * INSIDE each hash group's sorted id list, so the work is
     * Σ_group |group|², never corpus².
     */
   def exactPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(md5(col(textCol)).as("h"), col(idCol).as("id"))
-      .groupBy(col("h"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .where(size(col("ids")) > 1)
-      // Chained generators STREAM the enumeration — a mega-duplicated
-      // boilerplate page (100k-copy families are routine in crawls)
-      // must not materialize its m²/2 pair array inside a single row.
-      .select(explode(col("ids")).as("ia"), col("ids"))
-      .select(col("ia"), explode(col("ids")).as("ib"))
-      .where(col("ia") < col("ib"))
+    DupGroups.within(DupGroups.collapse(
+      docs.select(md5(col(textCol)).as("h"), col(idCol).as("id")), Seq("h"), "id"))
 
   /** CROSS-SOURCE duplication matrix — the corpus-provenance audit:
     * which sources copy which? Takes ANY duplicate-pair frame

@@ -487,7 +487,7 @@ object IvfIndexStore {
 
   // ---- Pointer-managed serving root (the retrain lifecycle) -----------
   // Protocol shared with [[KeepBestIndexStore]]'s reband lifecycle via
-  // [[StoreRoot]] (pointer read, temp+rename publish, version layout).
+  // [[StoreRoot]] (pointer read, marker-create publish, version layout).
 
   /** The live version number under a pointer-managed root, if any. */
   def liveVersion(spark: SparkSession, root: String): Option[Int] =
@@ -528,8 +528,8 @@ object IvfIndexStore {
     * effective vectors ([[Vectors.kmeansCentroids]] — deterministic
     * init, Lloyd iterations), build a FRESH fingerprinted store dir
     * under the next version number, bulk-assign the effective view
-    * into it as one batch, and atomically flip the root's `_latest`
-    * pointer (the [[Versioned]] temp+rename publish). Below the
+    * into it as one batch, and atomically flip the root's pointer
+    * (one `_latest.v=N` marker create, [[StoreRoot.flipPointer]]). Below the
     * threshold this is a no-op returning None.
     *
     * Crash-safety: everything before the flip is invisible to readers

@@ -342,15 +342,11 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     * gone — at 100 TB you re-certify an index from the index).
     */
   private[graft] def effectiveGroups: DataFrame =
-    effective("sh", shSchema)
-      .groupBy(col("id")).agg(sort_array(collect_set(col("h"))).as("hs"))
-      .groupBy(col("hs"))
-      .agg(sort_array(collect_list(col("id"))).as("members"))
-      .withColumn("rep", element_at(col("members"), 1))
+    Dedup.contentGroupsOf(effective("sh", shSchema))
 
   /** [[effectiveGroups]] of the hash-gated SAMPLE, with the gate
     * applied to the id BEFORE every shuffle in the assembly — the
-    * [[Dedup.sampleGroupsOf]] equivalence run in the cheap direction
+    * [[DupGroups.sampleOf]] equivalence run in the cheap direction
     * (restricting ids can never merge or split content groups — the hs
     * key is a pure function of the content — so gate-then-group ≡
     * group-then-filter-members; KeepBestStoreSpec pins it on stored
@@ -370,13 +366,9 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
       df.filter(SampleGate.admits(col("id"), sampleMod))
     val latest = gated(readFrame("ids", idsSchema))
       .groupBy(col("id")).agg(max(col("b")).as("lb"))
-    gated(readFrame("sh", shSchema))
+    Dedup.contentGroupsOf(gated(readFrame("sh", shSchema))
       .join(latest, Seq("id"))
-      .filter(col("b") === col("lb")).drop("b", "lb")
-      .groupBy(col("id")).agg(sort_array(collect_set(col("h"))).as("hs"))
-      .groupBy(col("hs"))
-      .agg(sort_array(collect_list(col("id"))).as("members"))
-      .withColumn("rep", element_at(col("members"), 1))
+      .filter(col("b") === col("lb")).drop("b", "lb"))
   }
 
   /** RE-CERTIFY the banding on the CURRENT state — the birth chooser's
@@ -760,8 +752,9 @@ object KeepBestIndexStore {
     * only the hash-gated sample ([[effectiveSampleGroups]] — the state
     * is scanned map-side, never re-grouped in full) and whose truth is
     * budget-bounded when the tune's gate is a budget; and — only
-    * on a fired tick — the signature re-banding + one copy of the
-    * effective frames. Never a corpus re-scan, never text.
+    * on a fired tick — the signature re-banding, whose new version
+    * writes only its pairs (the per-id frames are `_refs` manifest
+    * references). Never a corpus re-scan, never text.
     */
   def maintainedIngest(spark: SparkSession, root: String,
                        tune: KeepBestIndex.AutoTune,

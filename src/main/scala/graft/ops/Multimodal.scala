@@ -409,29 +409,22 @@ object Multimodal {
   /** Near-duplicate pairs over any 64-bit perceptual hash stored as
     * (media_id, dh_hi, dh_lo) halves: band into 4×16-bit chunks, bucket
     * on (band, chunk), enumerate pairs INSIDE the bucket aggregation
-    * (the `Dedup.simhashPairs` shape — one keyed shuffle, each hash
-    * travels once, quadratic only within a bucket), then verify by
-    * exact Hamming distance ≤ maxDist over both halves. A pair sharing
-    * several bands is deduped AFTER the cheap in-bucket enumeration
-    * (`distinct` on ids+hamming, a few-column frame). Shared by the
-    * image (dHash) and audio (energy fingerprint) dedup members — the
-    * banding algebra is modality-blind.
+    * ([[BandChooser.bucketPairs]], shared with `Dedup.simhashPairs` and
+    * the choosers — one keyed shuffle, each hash travels once,
+    * quadratic only within a bucket), then verify by exact Hamming
+    * distance ≤ maxDist over both halves. Shared by the image (dHash)
+    * and audio (energy fingerprint) dedup members — the banding algebra
+    * is modality-blind.
     *
-    * EXACT-DUPLICATE COLLAPSE (the r11 scale-decade fix): real media
-    * corpora are exact-dup-heavy, and every re-encode family shares all
-    * four bands, so raw in-bucket enumeration is quadratic in bucket
-    * OCCUPANCY — at 10× the gate corpus one skewed (band, chunk)
-    * bucket's pair explosion OOM-ed a 12 g executor. Identical hashes
-    * are therefore collapsed to one REPRESENTATIVE (min id) before
-    * banding; candidates are enumerated between representatives —
-    * quadratic in DISTINCT hash values per bucket, invariant to how
-    * many exact copies each value has — and the verified rep-level
-    * pairs are expanded back to the member cross-products, plus the
-    * within-group all-pairs (hamming 0 by construction). The output
-    * RELATION is bit-identical to the naive enumeration (same pairs,
-    * same hamming), which the unchanged q_m5/m7/m9/m11/m13 oracles
-    * prove; only candidate-generation cost changes, from O(Σ bucket²)
-    * to O(Σ distinct²) + output size.
+    * Real media corpora are exact-dup-heavy (every re-encode family
+    * shares all four bands; at 10× the gate corpus one skewed bucket's
+    * pair explosion OOM-ed a 12 g executor), so identical hashes
+    * collapse to one representative before banding and verified rep
+    * pairs expand back to member pairs, Hamming 0 within a group
+    * ([[DupGroups]]). The output RELATION is bit-identical to the naive
+    * enumeration (same pairs, same hamming): MultimodalSpec pins it on a
+    * dup-heavy hash set and the q_m5/m7/m9/m11/m13 oracles on the gate
+    * corpus.
     */
   def bandedHammingPairs(hashes: DataFrame, maxDist: Int,
                          nBands: Int = 4): DataFrame = {
@@ -443,54 +436,13 @@ object Multimodal {
     // the grid and [[bandedHammingPairsAuto]] wires it in.
     require(nBands >= 2 && nBands % 2 == 0 && 64 % nBands == 0,
       s"nBands must be even and divide 64, got $nBands")
-    // 1. collapse exact hash duplicates: one representative per value,
-    //    members kept for the expansion
-    val groups = hashes
-      .groupBy(col("dh_hi"), col("dh_lo"))
-      .agg(sort_array(collect_list(col("media_id"))).as("members"))
-      .withColumn("rep", element_at(col("members"), 1))
-    // 2. banded candidates + exact-Hamming verify BETWEEN representatives
-    val repPairs = groups
-      .select(col("rep"), col("dh_hi"), col("dh_lo"))
-      .withColumn("b", explode(sequence(lit(0), lit(nBands - 1))))
-      .withColumn("chunk", hammingChunk(nBands))
-      .groupBy(col("b"), col("chunk"))
-      .agg(sort_array(collect_list(
-        struct(col("rep"), col("dh_hi"), col("dh_lo")))).as("ms"))
-      .where(size(col("ms")) > 1)
-      // Chained generators, not a nested-transform flatten: generators
-      // STREAM, so a large bucket never materializes its m²/2 pair
-      // array inside a single row (reps are distinct, so x.rep < y.rep
-      // keeps each unordered pair exactly once).
-      .select(explode(col("ms")).as("x"), col("ms"))
-      .select(col("x"), explode(col("ms")).as("y"))
-      .where(col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("ra"), col("y.rep").as("rb"),
-        (expr("bit_count(x.dh_lo ^ y.dh_lo)") +
-          expr("bit_count(x.dh_hi ^ y.dh_hi)")).cast("int").as("hamming"))
-      .distinct()
+    val groups = DupGroups.collapse(hashes, Seq("dh_hi", "dh_lo"), "media_id")
+    val repPairs = BandChooser.bucketPairs(
+        groups.withColumn("m", size(col("members")).cast("long")),
+        nBands, hammingChunk, Seq("dh_hi", "dh_lo"))
       .filter(col("hamming") <= maxDist)
-    // 3a. within-group pairs: exact copies, distance 0, ordered i < j —
-    //     streamed the same way (members is sorted and duplicate-free)
-    val withinGroup = groups
-      .where(size(col("members")) > 1)
-      .select(explode(col("members")).as("ia"), col("members").as("mm"))
-      .select(col("ia"), explode(col("mm")).as("ib"))
-      .where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"), lit(0).cast("int").as("hamming"))
-    // 3b. cross-group expansion: every member pair inherits the
-    //     rep-level verdict; two streamed generators (a 100k-copy
-    //     family must not become one 10¹⁰-element row here either);
-    //     re-order ids since reps don't bound members
-    val ga = groups.select(col("rep").as("ra"), col("members").as("ma"))
-    val gb = groups.select(col("rep").as("rb"), col("members").as("mb"))
-    val crossGroup = repPairs
-      .join(ga, "ra").join(gb, "rb")
-      .select(explode(col("ma")).as("a"), col("mb"), col("hamming"))
-      .select(col("a"), explode(col("mb")).as("b"), col("hamming"))
-      .select(least(col("a"), col("b")).as("ia"),
-        greatest(col("a"), col("b")).as("ib"), col("hamming"))
-    withinGroup.unionByName(crossGroup)
+      .select(col("ia").as("ra"), col("ib").as("rb"), col("hamming"))
+    DupGroups.expand(groups, repPairs, Seq(lit(0).cast("int").as("hamming")))
   }
 
   /** Image member of the banded-Hamming dedup family (see

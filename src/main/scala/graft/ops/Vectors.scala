@@ -221,30 +221,6 @@ object Vectors {
       .limit(k)
   }
 
-  /** Embedding-cosine near-duplicate pairs — the vector-space member of
-    * the dedup family (exact / MinHash / SimHash / cosine): candidates
-    * are vectors sharing a hyperplane-LSH bucket, verified by exact
-    * cosine ≥ threshold.
-    *
-    * Scale shape: bucket assignment is map-side (constant planes, no
-    * explode), the self-join shuffles on the bucket key, so pairwise
-    * work is quadratic only WITHIN a bucket — never all-pairs. More
-    * planes → smaller buckets → cheaper join at lower recall; callers
-    * tune nPlanes to corpus size.
-    *
-    * EXACT-DUPLICATE COLLAPSE (r11, same reasoning as
-    * `Dedup.lshCandidatesFromSigs`): duplicated documents re-embed to
-    * the IDENTICAL vector, and identical vectors always share a
-    * bucket — in-bucket enumeration is quadratic in copy-family size,
-    * and the naive flatten builds a family's m²/2 pair array (each
-    * element carrying TWO embedding copies) inside one row. Vectors
-    * collapse to one representative per distinct embedding before
-    * bucketing; buckets enumerate distinct embeddings; rep verdicts
-    * expand back through streamed generators. A within-group pair's
-    * cos_sim is `rankCosine(e, e)` — the very expression the naive
-    * shape evaluates for an identical-vector pair, so the output
-    * relation is bit-identical.
-    */
   private def planeMask(p: Int): Long = (1L << p) - 1
 
   /** Distinct-vector groups with the bucket at `nPlanes` — the ONE
@@ -258,30 +234,28 @@ object Vectors {
   private[graft] def vectorGroups(vecs: DataFrame, vecCol: String,
                                   idCol: String, nPlanes: Int,
                                   dim: Int): DataFrame =
-    Partitioning.spread(vecs)
-      .select(col(idCol).as("vid"), col(vecCol).as("e"))
-      .groupBy(col("e"))
-      .agg(sort_array(collect_list(col("vid"))).as("members"))
-      .withColumn("rep", element_at(col("members"), 1))
+    DupGroups.collapse(Partitioning.spread(vecs)
+        .select(col(idCol).as("vid"), col(vecCol).as("e")), Seq("e"), "vid")
       .withColumn("m", size(col("members")).cast("long"))
       .withColumn("bucket", bucketExpr("e", nPlanes, dim))
 
-  /** The [[vectorGroups]] of the deterministic hash-gated sample,
-    * DERIVED from the full corpus's groups — the value key (the vector
-    * itself) is untouched by which vids survive the gate, so
-    * restriction filters each sorted member list and drops emptied
-    * groups; buckets carry over verbatim. Zero corpus passes.
-    * VectorsSpec pins the equivalence.
+  /** Embedding-cosine near-duplicate pairs — the vector-space member of
+    * the dedup family (exact / MinHash / SimHash / cosine): candidates
+    * are vectors sharing a hyperplane-LSH bucket, verified by exact
+    * cosine ≥ threshold.
+    *
+    * Scale shape: bucket assignment is map-side (constant planes, no
+    * explode), the self-join shuffles on the bucket key, so pairwise
+    * work is quadratic only WITHIN a bucket — never all-pairs. More
+    * planes → smaller buckets → cheaper join at lower recall; callers
+    * tune nPlanes to corpus size.
+    *
+    * Duplicated documents re-embed to the IDENTICAL vector, and
+    * identical vectors always share a bucket, so vectors collapse to one
+    * representative per distinct embedding before bucketing and rep
+    * verdicts expand back to member pairs ([[DupGroups]]); the output
+    * relation is bit-identical to the naive shape.
     */
-  private[graft] def sampleVectorGroupsOf(groups: DataFrame,
-                                          sampleMod: Long): DataFrame =
-    groups
-      .select(col("e"), col("bucket"),
-        filter(col("members"), SampleGate.admits(_, sampleMod)).as("members"))
-      .where(size(col("members")) > 0)
-      .withColumn("rep", element_at(col("members"), 1))
-      .withColumn("m", size(col("members")).cast("long"))
-
   def cosineDupPairs(vecs: DataFrame, vecCol: String, idCol: String,
                      nPlanes: Int, dim: Int, threshold: Double): DataFrame = {
     val grouped = vectorGroups(vecs, vecCol, idCol, nPlanes, dim)
@@ -317,43 +291,26 @@ object Vectors {
     // distinct vector once. Each vector sits in exactly one bucket, so
     // the i<j enumeration over the id-sorted members needs no pair
     // distinct. The exact-cosine verify runs on the member vectors
-    // carried alongside the ids.
+    // carried alongside the ids; the enumeration streams ([[DupGroups]]).
     val repPairs = groups
       .select(col("rep").as("vid"), col("e"), col("bucket"))
       .groupBy(col("bucket"))
       .agg(collect_list(struct(col("vid"), col("e"))).as("ms"))
       .where(size(col("ms")) > 1)
-      // Chained generators, not a nested-transform flatten: generators
-      // STREAM, so a big bucket never materializes its m²/2 pair array
-      // — each element carrying TWO dim-wide embeddings — inside a
-      // single row (vids are distinct, so x.vid < y.vid keeps each
-      // unordered pair exactly once).
       .select(col("bucket"), explode(col("ms")).as("x"), col("ms"))
       .select(col("bucket"), col("x"), explode(col("ms")).as("y"))
       .where(col("x.vid") < col("y.vid"))
       .withColumn("cos_sim", rankCosine(col("x.e"), col("y.e")))
       .filter(col("cos_sim") >= threshold)
       .select(col("x.vid").as("ra"), col("y.vid").as("rb"), col("bucket"), col("cos_sim"))
-    val withinGroup = groups
-      .where(size(col("members")) > 1)
-      .withColumn("cos_sim", rankCosine(col("e"), col("e")))
-      .filter(col("cos_sim") >= threshold)
-      .select(explode(col("members")).as("ia"), col("members").as("mm"),
-        col("bucket"), col("cos_sim"))
-      .select(col("ia"), explode(col("mm")).as("ib"), col("bucket"), col("cos_sim"))
-      .where(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"), col("bucket"), col("cos_sim"))
-    val ga = groups.select(col("rep").as("ra"), col("members").as("ma"))
-    val gb = groups.select(col("rep").as("rb"), col("members").as("mb"))
-    val crossGroup = repPairs
-      .join(ga, "ra").join(gb, "rb")
-      .select(explode(col("ma")).as("a"), col("mb"), col("bucket"), col("cos_sim"))
-      .select(col("a"), explode(col("mb")).as("b"), col("bucket"), col("cos_sim"))
-      .select(least(col("a"), col("b")).as("ia"),
-        greatest(col("a"), col("b")).as("ib"), col("bucket"), col("cos_sim"))
+    // A within-group pair's cos_sim is rankCosine(e, e) — the very
+    // expression the naive shape evaluates for an identical-vector pair.
     // Verified pairs are linear in candidates, not corpus: materialize
     // eagerly so the caller can release the groups cache.
-    withinGroup.unionByName(crossGroup).localCheckpoint(eager = true)
+    DupGroups.expand(groups, repPairs,
+        Seq(col("bucket"), rankCosine(col("e"), col("e")).as("cos_sim")),
+        col("cos_sim") >= threshold)
+      .localCheckpoint(eager = true)
   }
 
   /** COSINE-LSH PLANE-COUNT CHOOSER — the cosine family of the one
@@ -417,7 +374,7 @@ object Vectors {
   /** [[chooseCosinePlanes]] off an ALREADY-derived sample
     * [[vectorGroups]] frame (bucketed at ≥ max(planeConfigs)) — the
     * hash gating (and, in [[cosineDupPairsAuto]], the
-    * [[sampleVectorGroupsOf]] derivation off the full corpus's cached
+    * [[DupGroups.sampleOf]] derivation off the full corpus's cached
     * groups) is the caller's, so the corpus is never re-grouped or
     * re-bucketed for the chooser.
     */
@@ -509,7 +466,7 @@ object Vectors {
       val grouped = pin(vectorGroups(vecs, vecCol, idCol, planeConfigs.max, dim))
       BandChooser.auto("cosineDupPairsAuto", "plane count", gate,
           grouped.agg(coalesce(sum(col("m")), lit(0L))).first().getLong(0))(
-        (mod, cap) => chooseCosinePlanesFromGroups(sampleVectorGroupsOf(grouped, mod),
+        (mod, cap) => chooseCosinePlanesFromGroups(DupGroups.sampleOf(grouped, mod),
           planeConfigs, threshold, precisionFloorPpm, recallFloorPpm,
           cap.getOrElse(truthRepCap)))(
         p => cosineDupPairsFromGroups(grouped, p, threshold))

@@ -38,15 +38,33 @@ object Versioned {
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The published version. A reader landing between
+    * [[writePointer]]'s delete and rename finds only `_latest.tmp`; it
+    * adopts it on [[recover]]'s rule ([[pendingPublish]]), then looks
+    * at `_latest` once more in case the rename landed meanwhile.
+    */
   private def readPointer(spark: SparkSession, root: String): Option[Long] = {
     val f = fs(spark, root)
-    val p = new Path(root, Pointer)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
+    def live: Option[Long] = try {
+      val in = f.open(new Path(root, Pointer))
       try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
       finally in.close()
-    }
+    } catch { case _: java.io.FileNotFoundException => None }
+    live.orElse(pendingPublish(spark, root)).orElse(live)
+  }
+
+  /** The version `_latest.tmp` names when it parses and that `v=N`
+    * exists: the data commit finished before the temp was written, so
+    * the publish only lacks its rename.
+    */
+  private def pendingPublish(spark: SparkSession, root: String): Option[Long] = {
+    val f = fs(spark, root)
+    val parsed = try {
+      val in = f.open(new Path(root, s"$Pointer.tmp"))
+      try new String(in.readAllBytes(), "UTF-8").trim.toLongOption
+      finally in.close()
+    } catch { case _: Exception => None }
+    parsed.filter(versions(spark, root).contains)
   }
 
   private def writePointer(spark: SparkSession, root: String, v: Long): Unit = {
@@ -130,13 +148,8 @@ object Versioned {
     if (!f.exists(tmp)) Seq.empty
     else {
       val dst = new Path(root, Pointer)
-      val parsed: Option[Long] = try {
-        val in = f.open(tmp)
-        try new String(in.readAllBytes(), "UTF-8").trim.toLongOption
-        finally in.close()
-      } catch { case _: Exception => None }
-      parsed match {
-        case Some(v) if !f.exists(dst) && versions(spark, root).contains(v) =>
+      pendingPublish(spark, root) match {
+        case Some(v) if !f.exists(dst) =>
           if (!f.rename(tmp, dst))
             sys.error(s"versioned recover: cannot complete pointer publish under $root")
           Seq(s"completed interrupted pointer publish to v=$v")

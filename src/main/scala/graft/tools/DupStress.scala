@@ -3,9 +3,10 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 /** Reproduction behind the r11 exact-duplicate collapse in the dedup
-  * family (`Dedup.lshCandidatesFromSigs` / `nearDupPairs` /
-  * `simhashPairs`, `Vectors.cosineDupPairs`, and the
-  * `Multimodal.bandedHammingPairs` fix the sf1.0 decade run forced):
+  * family — one kernel, `ops/DupGroups.scala`, that
+  * `Dedup.lshCandidatesFromSigs` / `nearDupPairs` / `simhashPairs`,
+  * `Vectors.cosineDupPairs` and `Multimodal.bandedHammingPairs` (the
+  * fix the sf1.0 decade run forced) all call:
   * real crawls are exact-dup-heavy, and identical content shares EVERY
   * LSH band bucket, so naive in-bucket all-pairs enumeration is
   * quadratic in copy-family occupancy — amplified ×nBands, again by
@@ -16,8 +17,9 @@ import org.apache.spark.sql.functions._
   * Builds an exact-dup-heavy corpus by unioning K byte-identical
   * copies of the sf documents table (disjoint id universes), then
   * times the production `nearDupPairs` against the naive formulation
-  * it replaced — exploded banding + per-member-pair shingle-join
-  * verify, both still in-tree as the DedupSpec equivalence reference.
+  * it replaced — exploded banding (`Dedup.lshCandidates`, kept in
+  * `src/main` as this baseline and the DedupSpec equivalence reference)
+  * + per-member-pair shingle-join verify.
   * Both paths produce the identical pair relation (the row counts are
   * printed and compared); only the execution shape differs. Findings
   * land in PLANS.md; this main stays as the reproduction.

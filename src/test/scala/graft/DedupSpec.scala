@@ -334,7 +334,7 @@ class DedupSpec extends SparkSpec {
       val direct = Dedup.contentGroups(
         dupHeavy.filter(pmod(TextOps.hash60(col("id").cast("string")),
           lit(m.toLong)) === 0), "id", "text", 3)
-      key(Dedup.sampleGroupsOf(full, m)) shouldBe key(direct)
+      key(graft.ops.DupGroups.sampleOf(full, m)) shouldBe key(direct)
     }
   }
 
@@ -616,7 +616,7 @@ class DedupSpec extends SparkSpec {
   test("ShingleGenerator matches the windowed-LEAD formulation exactly") {
     val a = Dedup.shingleSet(docs, "id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val b = Dedup.shingleSetWindowed(docs, "id", "text", 3)
+    val b = DedupReference.shingleSetWindowed(docs, "id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     a shouldBe b
     a.map(_._1) should not contain 5L // "short text": fewer tokens than n
@@ -873,7 +873,7 @@ class DedupSpec extends SparkSpec {
     val sh = Dedup.shingleSet(docs, "id", "text", 3)
     val a = Dedup.minhash(sh, 16)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val b = Dedup.minhashExploded(sh, 16)
+    val b = DedupReference.minhashExploded(sh, 16)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     a shouldBe b
   }

@@ -79,7 +79,7 @@ class KeepBestStoreSpec extends SparkSpec {
           .as[(Long, Seq[Long])].collect().toSet
       for (m <- Seq(1L, 2L, 3L)) {
         rows(idx.effectiveSampleGroups(m)) shouldBe
-          rows(graft.ops.Dedup.sampleGroupsOf(idx.effectiveGroups, m))
+          rows(graft.ops.DupGroups.sampleOf(idx.effectiveGroups, m))
       }
     }
   }

@@ -479,6 +479,55 @@ class MultimodalSpec extends SparkSpec {
     boom.getMessage should include("sampleRepCap")
   }
 
+  test("bandedHammingPairs exact-dup collapse preserves the pair relation on " +
+    "a hash set with large exact-copy families") {
+    import spark.implicits._
+    // A/A2 at Hamming 2; B shares A's hi chunks but sits far (a candidate
+    // the verify must drop); C/D at Hamming 1; E unrelated. Families of
+    // 30/25/20/15 exact copies, D and E singletons.
+    val bases = Seq(
+      (1L, 0x12345678L, 0x0000FFFFL, 30), (2L, 0x12345678L, 0x0000FFFCL, 25),
+      (3L, 0x12345678L, 0xABCD0000L, 20), (4L, 0x0F0F0F0FL, 0x70F0F0F0L, 15),
+      (5L, 0x0F0F0F0FL, 0x70F0F0F1L, 1), (6L, 0x55555555L, 0x2AAAAAAAL, 1))
+    val hashes = (for {
+      (b, hi, lo, n) <- bases
+      copy <- 0 until n
+    } yield (b * 1000L + copy, hi, lo)).toDF("media_id", "dh_hi", "dh_lo")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2))
+    for (nb <- Seq(4, 8)) {
+      val fixed = pairs(Multimodal.bandedHammingPairs(hashes, maxDist = 4, nBands = nb))
+      // naive reference: band EVERY row (no collapse), all pairs inside
+      // each (band, chunk) bucket, distinct, Hamming filter
+      val w = 64 / nb
+      val naive = pairs(hashes
+        .withColumn("b", explode(sequence(lit(0), lit(nb - 1))))
+        .withColumn("chunk", expr(
+          s"""CASE WHEN b < ${nb / 2} THEN (dh_lo >> ($w * b)) & ${(1L << w) - 1}
+             |ELSE (dh_hi >> ($w * (b - ${nb / 2}))) & ${(1L << w) - 1} END""".stripMargin))
+        .groupBy(col("b"), col("chunk"))
+        .agg(sort_array(collect_list(struct(col("media_id"), col("dh_hi"),
+          col("dh_lo")))).as("ms"))
+        .select(explode(expr(
+          """flatten(transform(ms,
+            |  (x, i) -> transform(slice(ms, i + 2, size(ms)),
+            |            y -> named_struct('ia', x.media_id, 'ib', y.media_id,
+            |                              'hamming', bit_count(x.dh_hi ^ y.dh_hi) +
+            |                                         bit_count(x.dh_lo ^ y.dh_lo)))))"""
+            .stripMargin)).as("p"))
+        .select(col("p.ia"), col("p.ib"), col("p.hamming").cast("int").as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= 4))
+      withClue(s"nBands=$nb: ") {
+        fixed.length shouldBe fixed.toSet.size               // no duplicate pairs
+        fixed.toMap shouldBe naive.toMap
+        // every exact-copy family's all-pairs at Hamming 0
+        fixed.count { case ((a, b), h) => a / 1000L == b / 1000L && h == 0 } shouldBe
+          Seq(30, 25, 20, 15).map(n => n * (n - 1) / 2).sum
+      }
+    }
+  }
+
   test("chooseHammingBands is modality-blind via column-name parameters: " +
     "the audio fp_hi/fp_lo schema tunes without a rename, bit-identical " +
     "to the renamed default-schema call") {

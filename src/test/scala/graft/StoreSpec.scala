@@ -617,6 +617,28 @@ class StoreSpec extends SparkSpec {
     Versioned.recover(spark, root) shouldBe empty
   }
 
+  test("versioned readers mid-publish: with _latest deleted and the rename " +
+    "not yet done, readLatest adopts a temp naming an existing version") {
+    import spark.implicits._
+    import graft.ops.Versioned
+    val root = Files.createTempDirectory("graft-vmid").toString
+    Versioned.write(spark, root, Seq(1, 2).toDF("v"))       // v=0 published
+    val latest = new java.io.File(root, "_latest")
+    val tmp = new java.io.File(root, "_latest.tmp")
+    // writePointer's window: v=1 committed, temp written, old pointer
+    // deleted, rename pending — no recover has run
+    Seq(1, 2, 3).toDF("v").write.parquet(s"$root/v=1")
+    java.nio.file.Files.writeString(tmp.toPath, "1")
+    latest.delete() shouldBe true
+    Versioned.latestVersion(spark, root) shouldBe Some(1L)
+    Versioned.readLatest(spark, root).count() shouldBe 3
+    tmp.exists() shouldBe true                               // readers never repair
+    // a temp naming a version that does not exist is not a publish
+    java.nio.file.Files.writeString(tmp.toPath, "7")
+    Versioned.latestVersion(spark, root) shouldBe None
+    intercept[RuntimeException](Versioned.readLatest(spark, root))
+  }
+
   // ---- single-writer lease -------------------------------------------
 
   test("lease: a second writer is refused while a live lease is held; " +

@@ -335,7 +335,7 @@ class VectorsSpec extends SparkSpec {
         vecs.filter(org.apache.spark.sql.functions.pmod(
           graft.ops.TextOps.hash60(col("vec_id").cast("string")),
           lit(sm.toLong)) === 0), "emb", "vec_id", nPlanes = 6, dim = 4)
-      key(Vectors.sampleVectorGroupsOf(full, sm)) shouldBe key(direct)
+      key(graft.ops.DupGroups.sampleOf(full, sm)) shouldBe key(direct)
     }
     val cached = full.cache(); cached.count()
     for (p <- Seq(2, 3, 6)) {
