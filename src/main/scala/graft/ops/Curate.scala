@@ -164,7 +164,7 @@ object Curate {
     * run's provenance record) after consuming the survivors.
     *
     * CONFIGURATION FINGERPRINT: the run dir records a hash of the stage
-    * parameters (`_params.sha256`, written before stage 0); resuming
+    * parameters ([[StoreRoot.pinParams]], written before stage 0); resuming
     * with a DIFFERENT configuration fails fast instead of silently
     * reusing stages computed under the old one — `_SUCCESS` alone
     * proves a stage completed, not that it completed for *these*
@@ -182,7 +182,7 @@ object Curate {
       : (DataFrame, DataFrame) = {
     import org.apache.hadoop.fs.Path
     val spark = docs.sparkSession
-    val fs = new Path(runDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreRoot.fsOf(spark, new Path(runDir))
     val fp = {
       // nbLabel enters as its canonical SQL rendering, NOT Column
       // .toString: a RESOLVED column (df("lang")) embeds per-session
@@ -208,22 +208,13 @@ object Curate {
         nbFeatures.toString,
         mixRates.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(";"),
         mixDefault.toString, stops.mkString("|")).mkString("\u0000")
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(repr.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      StoreRoot.sha256Hex(repr)
     }
-    val fpPath = new Path(runDir, "_params.sha256")
-    if (fs.exists(fpPath)) {
-      val in = fs.open(fpPath)
-      val prev = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      require(prev == fp,
-        s"pipelineStaged: run dir $runDir holds stages computed under a DIFFERENT " +
-          "configuration (params fingerprint mismatch) — resuming would silently mix " +
-          "configurations; pass a fresh runDir (or delete this one) to run with the " +
-          "new parameters")
-    } else {
-      val out = fs.create(fpPath, true)
-      try out.write(fp.getBytes("UTF-8")) finally out.close()
-    }
+    StoreRoot.pinParams(fs, new Path(runDir), fp,
+      s"pipelineStaged: run dir $runDir holds stages computed under a DIFFERENT " +
+        "configuration (params fingerprint mismatch) — resuming would silently mix " +
+        "configurations; pass a fresh runDir (or delete this one) to run with the " +
+        "new parameters")
     val fns = stages(evalSet, lexicon, blockThreshold, nbLabel, nbFeatures,
       mixRates, mixDefault, stops)
     val all: Seq[(String, DataFrame => DataFrame)] =

@@ -14,13 +14,14 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * Here every batch persists ONLY its own coarse assignment
   * (`Vectors.ivfAssign` over the delta — one map-side broadcast pass,
   * the q_e13 incremental contract: base vectors are never re-scored)
-  * as parquet under `b=N/`, committed atomically by a trailing
-  * `_COMMIT` marker; the accumulated index is a read-time view over
-  * the committed deltas. A killed stream resumes by reopening the
-  * directory — state is whatever was committed, the next batch folds
-  * in as if the crash never happened (q_st20 gates kill-between-
-  * streams + a planted poisoned mid-batch partial; IvfStoreSpec runs
-  * the kill-at-each-boundary sim).
+  * as one batch of the version's [[StoreRoot.BatchLog]] (its commit
+  * order, pinned committed-set snapshot and fold live there); the
+  * accumulated index is a read-time view over the committed deltas. A
+  * killed stream resumes by reopening the directory — state is
+  * whatever was committed, the next batch folds in as if the crash
+  * never happened (q_st20 gates kill-between-streams + a planted
+  * poisoned mid-batch partial; IvfStoreSpec runs the
+  * kill-at-each-boundary sim).
   *
   * RE-DELIVERY (at-least-once) is the keyed-upsert rule, LOGICAL over
   * append-only storage: the view keeps an assignment row written at
@@ -35,8 +36,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   *
   * CENTROIDS ARE STATE ALGEBRA, NOT CONFIG-PER-CALL: every stored cid
   * was an argmax against one specific centroid set, so the set itself
-  * is fingerprinted (canonical sorted serialization under
-  * `_params.sha256`, the `Curate.pipelineStaged` rule) — reopening
+  * is fingerprinted (canonical sorted serialization, pinned by
+  * [[StoreRoot.pinParams]] like `Curate.pipelineStaged`) — reopening
   * the directory with different centroids (or a different algebra
   * version) is refused rather than silently mixing two layouts.
   * Centroid sets are bounded by the family's own contract (they
@@ -47,74 +48,29 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * [[KeepBestIndexStore]] (the reference's one-scheduled-updater
   * rule, update-database.yml:282-397).
   */
-final class IvfIndexStore private (spark: SparkSession, dir: String,
-                                   centroids: DataFrame,
-                                   compactEvery: Option[Int]) {
+final class IvfIndexStore private (spark: SparkSession, log: StoreRoot.BatchLog,
+                                   centroids: DataFrame) {
   import IvfIndexStore._
 
-  private val root = new Path(dir)
-  private def fs: FileSystem =
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs: FileSystem = log.fs
 
-  private def empty(st: StructType): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), st)
+  log.refresh() // pin the at-open snapshot: a pure reader LISTs once
 
-  /** Committed-set SNAPSHOT, pinned at open and maintained by this
-    * instance's own mutations (the single-writer contract makes the
-    * writer's view authoritative): every read serves the at-open
-    * state — snapshot isolation at version granularity, the same
-    * promise the pointer-root gives across versions — and a long-lived
-    * PURE READER pays exactly ONE object-store LIST at open, not one
-    * per view assembly (the pre-r16 reader re-listed every call).
-    * [[refresh]] re-pins explicitly when a reader wants to observe the
-    * single writer's later commits. Mutations still list fresh at the
-    * start of their tick — a pinned snapshot can never make the writer
-    * stale.
+  /** Re-pin the committed-set snapshot ([[StoreRoot.BatchLog.refresh]])
+    * to observe the single writer's later commits. One LIST.
     */
-  private var committedCache: Option[Seq[Int]] = None
+  def refresh(): Unit = log.refresh()
 
-  /** Re-pin the committed-set snapshot to the store's CURRENT on-disk
-    * state — the reader's explicit "observe the writer's new commits"
-    * hook. One LIST.
-    */
-  def refresh(): Unit = committedCache = Some(listCommitted)
-
-  /** Committed batch numbers, ascending — a batch exists iff its
-    * `_COMMIT` marker does.
-    */
-  private def committed: Seq[Int] = committedCache.getOrElse(listCommitted)
-
-  /** The latest committed batch number (None on an empty store) — the
-    * store's logical version, and the maintenance tick's durable
-    * cadence counter (derived from state, so a kill/resume never
-    * resets it).
-    */
-  private[ops] def lastCommittedBatch: Option[Int] = committed.lastOption
-
-  /** LIST calls actually paid — observability for the one-LIST-per-
-    * reader-open contract (IvfStoreSpec counts them).
-    */
-  private[graft] var listCalls: Long = 0L
-
-  /** One glob listing collects every marker — a single namenode/LIST
-    * round trip, never a per-directory `exists` cascade.
-    */
-  private def listCommitted: Seq[Int] = {
-    listCalls += 1
-    if (!fs.exists(root)) return Seq.empty
-    Option(fs.globStatus(new Path(root, "b=*/_COMMIT"))).toSeq.flatten
-      .map(_.getPath.getParent.getName)
-      .collect { case BatchDir(n) => n.toInt }
-      .sorted
-  }
+  private[graft] def listCalls: Long = log.listCalls
 
   /** The stored assignment across committed batches (explicit paths,
     * never a glob — uncommitted partials are simply invisible).
     */
   private def readAssigned: DataFrame = {
-    val bs = committed
-    if (bs.isEmpty) empty(assignedSchema)
-    else spark.read.parquet(bs.map(n => s"$dir/b=$n/assigned"): _*)
+    val paths = log.paths("assigned")
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), assignedSchema)
+    else spark.read.parquet(paths: _*)
   }
 
   /** Current index view: each vid's row from the batch that last
@@ -133,7 +89,7 @@ final class IvfIndexStore private (spark: SparkSession, dir: String,
     * batch have no defined winner — the keyed-upsert contract), assign
     * the DELTA against the fingerprinted centroids (one map-side
     * broadcast pass — batch-bounded, the base is never re-scored),
-    * write under the next batch directory, commit with the marker.
+    * and append it as the log's next batch.
     */
   def ingest(batch: DataFrame): Unit = {
     val dup = batch.groupBy(col("vid")).agg(count(lit(1)).as("c"))
@@ -142,19 +98,12 @@ final class IvfIndexStore private (spark: SparkSession, dir: String,
       s"IvfIndexStore.ingest: vid ${dup.headOption.map(_.get(0)).orNull} " +
         "appears more than once WITHIN the batch — the keyed-upsert contract " +
         "requires within-batch-unique vids")
-    // one listing per tick — the writer owns the committed set after it
-    val before = listCommitted
-    committedCache = Some(before)
-    val n = before.lastOption.fold(0)(_ + 1)
-    val bdir = new Path(root, s"b=$n")
-    StoreRoot.claimBatchDir(fs, bdir)
-    Vectors.ivfAssign(batch.select(col("vid"), col("e")), centroids)
-      .withColumn("b", lit(n))
-      .write.parquet(new Path(bdir, "assigned").toString)
-    StoreRoot.commitBatch(fs, bdir)
-    committedCache = Some(before :+ n)
+    log.append() { b =>
+      b.put("assigned",
+        Vectors.ivfAssign(batch.select(col("vid"), col("e")), centroids))
+    }
     invalidateCert() // the version moved; any certified width is stale
-    compactEvery.foreach(c => if (committed.size >= c) compact())
+    if (log.foldDue) compact()
   }
 
   /** IVF search over the committed view — the one
@@ -205,8 +154,7 @@ final class IvfIndexStore private (spark: SparkSession, dir: String,
         tuneQuery.select(col("e").cast(ArrayType(DoubleType))).collect()
           .map(_.getSeq[Double](0).mkString(",")).sorted.toIndexedSeq)
         .mkString("\n")
-      val fp = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(repr.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val fp = StoreRoot.sha256Hex(repr)
       anchorFps.put(tuneQuery, fp)
       fp
     }
@@ -223,14 +171,14 @@ final class IvfIndexStore private (spark: SparkSession, dir: String,
     * sweeps the old-version files.
     */
   private def certPath(version: Int, anchorFp: String, configFp: String): Path =
-    new Path(root, s"_certified/v=$version,a=${anchorFp.take(16)}," +
+    new Path(log.root, s"_certified/v=$version,a=${anchorFp.take(16)}," +
       s"c=$configFp")
 
   private def readCertified(version: Int, anchorFp: String, configFp: String,
                             nprobes: Seq[Int]): Option[Int] = {
     val p = certPath(version, anchorFp, configFp)
     if (!fs.exists(p)) None
-    else scala.util.Try(KeepBestIndexStore.readText(fs, p).trim.toInt)
+    else scala.util.Try(StoreRoot.readText(fs, p).trim.toInt)
       .toOption // an unparseable file re-certifies and overwrites
       // belt over the atomic-write braces: only a width the CURRENT
       // grid contains is trusted — a '1' torn from '12' (or a file
@@ -275,7 +223,7 @@ final class IvfIndexStore private (spark: SparkSession, dir: String,
   def searchAuto(tuneQuery: DataFrame, serveQuery: DataFrame,
                  k: Int, nprobes: Seq[Int],
                  recallFloorPpm: Long): DataFrame = {
-    val version = committed.lastOption.getOrElse(-1)
+    val version = log.last.getOrElse(-1)
     val aFp = anchorFpOf(tuneQuery)
     val cFp = s"k${k}_np${nprobes.mkString("-")}_f$recallFloorPpm"
     val hit = cert.filter(c => c.version == version && c.anchorFp == aFp &&
@@ -298,7 +246,7 @@ final class IvfIndexStore private (spark: SparkSession, dir: String,
             "the floor (a silent default would serve traffic at a recall the " +
             "floor just rejected)")
         certifications += 1
-        KeepBestIndexStore.writeTextAtomic(fs, certPath(version, aFp, cFp),
+        StoreRoot.writeTextAtomic(fs, certPath(version, aFp, cFp),
           choice.get.toString)
         choice.get
       }
@@ -336,34 +284,21 @@ final class IvfIndexStore private (spark: SparkSession, dir: String,
   }
 
   /** Fold the committed view into one fresh batch and drop the
-    * shadowed history — space reclamation, not semantics. Crash-safe:
-    * once the compacted batch's `_COMMIT` lands every older row is
-    * shadowed (all vids re-delivered at the compaction batch), so a
-    * crash during the trailing deletes leaves a larger-but-correct
-    * store for a later compact() to reclaim.
+    * shadowed history ([[StoreRoot.BatchLog.fold]]) — space
+    * reclamation, not semantics.
     */
   def compact(): Unit = {
-    val bs = committed
-    if (bs.size <= 1) return
-    val n = bs.last + 1
-    val bdir = new Path(root, s"b=$n")
-    StoreRoot.claimBatchDir(fs, bdir)
-    assigned.withColumn("b", lit(n))
-      .write.parquet(new Path(bdir, "assigned").toString)
-    StoreRoot.commitBatch(fs, bdir)
-    bs.foreach(o => fs.delete(new Path(root, s"b=$o"), true))
-    // every persisted certification references a version < n (versions
-    // are monotone and n was just created) — reclaim them all with the
+    if (log.committed.size <= 1) return
+    log.fold(_.put("assigned", assigned))
+    // every persisted certification references a version below the
+    // fold's (versions are monotone) — reclaim them all with the
     // shadowed batches
-    fs.delete(new Path(root, "_certified"), true)
-    committedCache = Some(Seq(n))
+    fs.delete(new Path(log.root, "_certified"), true)
     invalidateCert() // compaction moves the version too
   }
 }
 
 object IvfIndexStore {
-
-  private val BatchDir = "b=(\\d+)".r
 
   /** `max_cell × k × 1e4 / total` through a BigInt product: the naive
     * Long product overflows once the hot cell and the centroid count
@@ -387,11 +322,9 @@ object IvfIndexStore {
     * contract.
     */
   private def centroidFingerprint(rows: Seq[(Long, Seq[Double])]): String = {
-    val repr = ("ivf-alg=1" +:
+    StoreRoot.sha256Hex(("ivf-alg=1" +:
       rows.sortBy(_._1).map { case (cid, ce) => s"$cid:${ce.mkString(",")}" })
-      .mkString("\n")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(repr.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      .mkString("\n"))
   }
 
   /** Open (or create) a store at `dir` for one centroid layout. The
@@ -410,13 +343,7 @@ object IvfIndexStore {
     */
   def open(spark: SparkSession, dir: String, centroids: DataFrame,
            compactEvery: Option[Int] = None): IvfIndexStore = {
-    require(compactEvery.forall(_ >= 2),
-      s"compactEvery must be >= 2 (a 1-cadence would fold after every " +
-        s"batch — the O(batches × state) shape this store exists to avoid), " +
-        s"got $compactEvery")
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) fs.mkdirs(root)
+    val log = StoreRoot.openLog(spark, dir, compactEvery)
     // pin the layout the whole instance lifetime: the fingerprint and
     // every later assign/search must see the SAME rows. The collect is
     // k-bounded (the broadcast contract), and rebuilding the frame
@@ -432,32 +359,22 @@ object IvfIndexStore {
     import spark.implicits._
     val pinned = rows.map { case (cid, ce) => (cid, ce) }
       .toDF("cid", "ce")
-    val fpPath = new Path(root, "_params.sha256")
-    if (fs.exists(fpPath)) {
-      val in = fs.open(fpPath)
-      val prev = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      require(prev == fp,
-        s"IvfIndexStore: $dir holds assignments computed against a DIFFERENT " +
-          "centroid layout or algebra version (params fingerprint mismatch) — " +
-          "resuming would silently mix two indexes; pass a fresh dir (or " +
-          "delete this one) to rebuild under the new layout")
-    } else {
-      // persist the layout itself beside its fingerprint (canonical
-      // text, exact double round-trip), so [[openPinned]] can resume
-      // the store without the caller re-supplying the centroid set —
-      // the retrain lifecycle's pointer-following readers need that.
-      // Layout FIRST, fingerprint second: a crash between the two
-      // leaves a healable dir (reopening recomputes the fingerprint
-      // from the stored layout), never a fingerprint whose layout is
-      // unrecoverable from its hash.
-      KeepBestIndexStore.writeTextAtomic(fs, new Path(root, "_centroids"),
-        rows.map { case (cid, ce) => s"$cid:${ce.mkString(",")}" }
-          .mkString("\n"))
-      KeepBestIndexStore.writeTextAtomic(fs, fpPath, fp)
-    }
-    val st = new IvfIndexStore(spark, dir, pinned, compactEvery)
-    st.refresh() // pin the at-open snapshot: a pure reader LISTs once
-    st
+    // a fresh store persists the layout itself beside its fingerprint
+    // (canonical text, exact double round-trip), so [[openPinned]] can
+    // resume the store without the caller re-supplying the centroid set
+    // — the retrain lifecycle's pointer-following readers need that.
+    // Layout FIRST, fingerprint second: a crash between the two leaves
+    // a healable dir (reopening recomputes the fingerprint from the
+    // stored layout).
+    StoreRoot.pinParams(log.fs, log.root, fp,
+      s"IvfIndexStore: $dir holds assignments computed against a DIFFERENT " +
+        "centroid layout or algebra version (params fingerprint mismatch) — " +
+        "resuming would silently mix two indexes; pass a fresh dir (or " +
+        "delete this one) to rebuild under the new layout",
+      beforeCreate = () => StoreRoot.writeTextAtomic(log.fs,
+        new Path(log.root, "_centroids"),
+        rows.map { case (cid, ce) => s"$cid:${ce.mkString(",")}" }.mkString("\n")))
+    new IvfIndexStore(spark, log, pinned)
   }
 
   /** Open a store from its OWN persisted centroid layout (`_centroids`,
@@ -469,13 +386,13 @@ object IvfIndexStore {
   def openPinned(spark: SparkSession, dir: String,
                  compactEvery: Option[Int] = None): IvfIndexStore = {
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreRoot.fsOf(spark, root)
     val cPath = new Path(root, "_centroids")
     require(fs.exists(cPath),
       s"IvfIndexStore.openPinned: $dir has no persisted centroid layout " +
         "(_centroids) — it predates the layout-persisting algebra or was " +
         "never created; reopen it with open() and the original centroids")
-    val rows = KeepBestIndexStore.readText(fs, cPath).split("\n").toIndexedSeq
+    val rows = StoreRoot.readText(fs, cPath).split("\n").toIndexedSeq
       .filter(_.nonEmpty)
       .map { line =>
         val Array(cid, ce) = line.split(":", 2)
@@ -497,30 +414,18 @@ object IvfIndexStore {
     * fingerprinted store under `<root>/v=0`, published by `_latest`.
     */
   def createLive(spark: SparkSession, root: String, centroids: DataFrame,
-                 compactEvery: Option[Int] = None): IvfIndexStore = {
-    val r = new Path(root)
-    val fs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(r)) fs.mkdirs(r)
-    StoreRoot.requireCreatable(fs, r, "IvfIndexStore.createLive")
-    val st = open(spark, new Path(r, "v=0").toString, centroids, compactEvery)
-    StoreRoot.flipPointer(fs, r, 0)
-    st
-  }
+                 compactEvery: Option[Int] = None): IvfIndexStore =
+    StoreRoot.createLive(spark, root, "IvfIndexStore.createLive")(
+      open(spark, _, centroids, compactEvery))
 
-  /** Open whatever version the pointer currently names — snapshot
-    * isolation at directory granularity: a reader that resolved v=N
-    * keeps reading a consistent, untouched index while the retrainer
-    * publishes v=N+1 (old versions are never deleted here; they stay
-    * readable until an explicit cleanup).
+  /** Open whatever version the pointer currently names
+    * ([[StoreRoot.openLive]]): a reader that resolved v=N keeps reading
+    * a consistent, untouched index while the retrainer publishes v=N+1.
     */
   def openLive(spark: SparkSession, root: String,
-               compactEvery: Option[Int] = None): IvfIndexStore = {
-    val v = liveVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"IvfIndexStore.openLive: $root has no published version — " +
-          "createLive it first"))
-    openPinned(spark, new Path(new Path(root), s"v=$v").toString, compactEvery)
-  }
+               compactEvery: Option[Int] = None): IvfIndexStore =
+    StoreRoot.openLive(spark, root, "IvfIndexStore.openLive")(
+      openPinned(spark, _, compactEvery))
 
   /** THE RETRAIN LIFECYCLE STEP — closes the loop the q_e14 health
     * metric opens: when the live index's cell imbalance exceeds
@@ -603,10 +508,8 @@ object IvfIndexStore {
                              eff: DataFrame, cents: DataFrame,
                              compactEvery: Option[Int]): IvfIndexStore = {
     val r = new Path(root)
-    val fs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = StoreRoot.nextVersion(fs, r)
-    val dir = StoreRoot.versionDir(r, next)
-    StoreRoot.claimVersionDir(fs, dir)
+    val fs = StoreRoot.fsOf(spark, r)
+    val (next, dir) = StoreRoot.claimNextVersion(fs, r)
     val st = open(spark, dir.toString, cents, compactEvery)
     st.ingest(eff)
     StoreRoot.flipPointer(fs, r, next)

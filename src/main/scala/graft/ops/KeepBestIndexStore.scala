@@ -12,12 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   * mid-stream and the index is gone), re-materialized IN FULL every
   * batch — O(batches × state) total work, the wrong cost shape for a
   * long-lived 100 TB ingest guard. Here every batch persists ONLY its
-  * delta as parquet under a run directory, commits it atomically with
-  * a trailing `_COMMIT` marker (the `Curate.pipelineStaged` /
-  * `_SUCCESS` pattern — a marker-less directory is a mid-write crash,
-  * invisible to every read and reclaimed when the writer next claims
-  * its batch number), and the ACCUMULATED state is a
-  * read-time view over the committed deltas. A killed stream resumes
+  * delta as one batch of the version's [[StoreRoot.BatchLog]] (its
+  * commit order, pinned committed-set snapshot and fold live there),
+  * and the ACCUMULATED state is a read-time view over the committed
+  * deltas. A killed stream resumes
   * by reopening the directory: state is whatever was committed, the
   * next batch folds in exactly as if the crash never happened
   * (q_st18 gates kill-between-batches + a planted mid-batch partial;
@@ -50,17 +48,18 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   * workflow instance); readers are safe any time — they only see
   * committed batches.
   */
-final class KeepBestIndexStore private (spark: SparkSession, dir: String,
+final class KeepBestIndexStore private (spark: SparkSession,
+                                        log: StoreRoot.BatchLog,
                                         shingleN: Int, k: Int,
                                         initialRpb: Option[Int],
                                         threshold: Double,
-                                        compactEvery: Option[Int],
                                         tuning: Option[KeepBestIndex.AutoTune]) {
   import KeepBestIndexStore._
 
-  private val root = new Path(dir)
-  private def fs: FileSystem =
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val root = log.root
+  private def fs: FileSystem = log.fs
+
+  log.refresh() // pin the at-open snapshot: a pure reader LISTs once
 
   private var tunedRpb: Option[Int] = initialRpb
 
@@ -78,28 +77,15 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
   private def empty(st: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), st)
 
-  /** Committed-set SNAPSHOT, pinned at open and maintained by this
-    * instance's own mutations (the single-writer contract makes the
-    * writer's view authoritative — nothing else appends or compacts):
-    * every read serves the at-open state, and a long-lived PURE READER
-    * pays exactly ONE object-store LIST at open instead of one per
-    * view assembly (the pre-r16 reader re-listed every call).
-    * [[refresh]] re-pins explicitly when a reader wants to observe the
-    * single writer's later commits. [[ingest]] still lists fresh at
-    * the start of its tick — a pinned snapshot can never make the
-    * writer stale — and maintains the set itself afterwards (O(1)
-    * round-trips per tick in history length).
-    */
-  private var committedCache: Option[Seq[Int]] = None
-
-  /** Re-pin the committed-set snapshot to the store's CURRENT on-disk
-    * state — the reader's explicit "observe the writer's new commits"
-    * hook. One LIST.
+  /** Re-pin the committed-set snapshot ([[StoreRoot.BatchLog.refresh]])
+    * to observe the single writer's later commits. One LIST.
     */
   def refresh(): Unit = {
-    committedCache = Some(listCommitted)
+    log.refresh()
     refsCache = None
   }
+
+  private[graft] def listCalls: Long = log.listCalls
 
   /** REFERENCED batch directories from PRIOR lifecycle versions — the
     * reband manifest (`_refs`, one `v=K/b=N` line per referenced dir,
@@ -115,42 +101,9 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     */
   private var refsCache: Option[Seq[Path]] = None
   private def refs: Seq[Path] = refsCache.getOrElse {
-    val p = new Path(root, RefsFile)
-    val r =
-      if (!fs.exists(p)) Seq.empty
-      else readText(fs, p).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        .map(line => new Path(root.getParent, line))
+    val r = StoreRoot.refLines(fs, root).map(line => new Path(root.getParent, line))
     refsCache = Some(r)
     r
-  }
-
-  /** Committed batch numbers, ascending — a batch exists iff its
-    * `_COMMIT` marker does (the write order makes the marker the
-    * commit point).
-    */
-  private def committed: Seq[Int] = committedCache.getOrElse(listCommitted)
-
-  /** The latest committed batch number (None on an empty store) — the
-    * maintenance tick's durable cadence counter (derived from state,
-    * so a kill/resume never resets it).
-    */
-  private[ops] def lastCommittedBatch: Option[Int] = committed.lastOption
-
-  /** LIST calls actually paid — observability for the one-LIST-per-
-    * reader-open contract (KeepBestStoreSpec counts them).
-    */
-  private[graft] var listCalls: Long = 0L
-
-  /** One glob listing collects every marker — a single namenode/LIST
-    * round trip, never a per-directory `exists` cascade.
-    */
-  private def listCommitted: Seq[Int] = {
-    listCalls += 1
-    if (!fs.exists(root)) return Seq.empty
-    Option(fs.globStatus(new Path(root, "b=*/_COMMIT"))).toSeq.flatten
-      .map(_.getPath.getParent.getName)
-      .collect { case BatchDir(n) => n.toInt }
-      .sorted
   }
 
   /** One stored frame across the committed batches (each row carries
@@ -163,7 +116,7 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     * which an inference pass cannot type.
     */
   private def readFrame(name: String, schema: StructType): DataFrame = {
-    val own = committed.map(n => s"$dir/b=$n/$name")
+    val own = log.paths(name)
     val paths =
       if (name == "pairs") own
       else refs.map(r => new Path(r, name).toString) ++ own
@@ -215,12 +168,10 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     * ids (the [[KeepBestIndex.ingest]] contract), probe the delta
     * against the committed view (delta-only shingling — the q_st14
     * incremental contract; re-delivered ids' stale base rows are
-    * dropped inside the probe and shadowed in the store), write the
-    * six delta frames under the next batch directory, then commit
-    * with the trailing marker. A crash anywhere before the marker
-    * leaves a partial directory that stays invisible (reads use
-    * explicit committed paths) until the next ingest claims the same
-    * batch number and reclaims it; the batch re-ingests cleanly.
+    * dropped inside the probe and shadowed in the store), and append
+    * the six delta frames as the log's next batch. A crash anywhere
+    * before its commit leaves a partial the next ingest reclaims; the
+    * batch re-ingests cleanly.
     */
   def ingest(batch: DataFrame, idCol: String, textCol: String,
              score: Column): Unit = {
@@ -233,12 +184,7 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
         "requires within-batch-unique ids")
     // Tune at BIRTH, before anything is written: an infeasible first
     // batch refuses with the directory still empty (the KeepBestIndex
-    // refuse-before-state rule, store-backed). The choice is persisted
-    // as `_tuned_rpb` FIRST, then the standard params fingerprint —
-    // that order makes a crash between the two writes recoverable
-    // (openAuto heals a missing fingerprint from the stored choice;
-    // the reverse order would strand a fingerprint whose rpb is
-    // unrecoverable from its hash).
+    // refuse-before-state rule, store-backed).
     tuning.foreach { t =>
       if (tunedRpb.isEmpty) {
         val rpb = BandChooser.chosenOrRefuse(
@@ -249,78 +195,60 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
             "anything is written (a silent default banding would run the " +
             "store at an operating point the floors just rejected); loosen a " +
             "floor or extend rowsPerBandConfigs")
-        writeTextAtomic(fs, new Path(root, "_tuned_rpb"), rpb.toString)
-        writeTextAtomic(fs, new Path(root, "_params.sha256"),
-          fingerprint(shingleN, k, rpb, threshold))
+        persistChoice(fs, root, rpb, shingleN, k, threshold)
         tunedRpb = Some(rpb)
       }
     }
-    // ONE listing per tick: the writer owns the committed set for the
-    // rest of this ingest (and beyond — single-writer contract), so the
-    // probe's view assembly and the cadence check below re-read the
-    // cache, not the object store.
-    val before = listCommitted
-    committedCache = Some(before)
-    val n = before.lastOption.fold(0)(_ + 1)
-    val bdir = new Path(root, s"b=$n")
-    StoreRoot.claimBatchDir(fs, bdir)
-    val dSh = Concurrent.labeled(spark, "kbs:ingest delta shingles")(
-      Dedup.shingleHashSet(batch, idCol, textCol, shingleN)
-        .select(col("id").cast(LongType).as("id"), col("h"))
-        .localCheckpoint(eager = true))
-    def put(name: String, df: DataFrame): Unit =
-      df.withColumn("b", lit(n))
-        .write.parquet(new Path(bdir, name).toString)
-    // The six delta-frame jobs are INDEPENDENT once dSh is
-    // materialized: five are map/one-exchange derivations of the
-    // checkpointed delta (or of the batch itself), the sixth — the
-    // incremental probe — reads only the COMMITTED view (the new batch
-    // dir is not in `committed`, so the concurrent writes are invisible
-    // to it). Overlap them (guide §2.6): sequentially each job's stage
-    // tail idled most cores; concurrently the delta writes back-fill
-    // the probe's tails. A failure in any job leaves a marker-less
-    // partial — the same crash shape as the sequential code — because
-    // runAll rethrows before the `_COMMIT` below.
-    // The delta's signature / sizes / ids frames feed BOTH their own
-    // frame writes and the probe — materialize each ONCE (the probe
-    // used to re-run the signature groupBy and sizes aggregation the
-    // writes had just paid), then overlap the six independent writes.
-    var dSigs: DataFrame = null
-    var dSizes: DataFrame = null
-    var dIds: DataFrame = null
-    Concurrent.runLabeled(spark, Seq(
-      "kbs:ingest delta sigs" -> (() =>
-        dSigs = Dedup.minhashSigs(dSh, k).localCheckpoint(eager = true)),
-      "kbs:ingest delta sizes" -> (() =>
-        dSizes = dSh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-          .localCheckpoint(eager = true)),
-      "kbs:ingest delta ids" -> (() =>
-        dIds = dSh.select(col("id")).distinct()
-          .localCheckpoint(eager = true))))
-    Concurrent.runLabeled(spark, Seq(
-      "kbs:ingest probe+pairs" -> (() =>
-        put("pairs", Dedup.incrementalNearDupPairsFromSets(
-            effective("sh", shSchema), effective("sigs", sigsSchema), dSh,
-            k, effectiveRpb, threshold,
-            baseSizes = Some(effective("sizes", sizesSchema)),
-            dSigs = Some(dSigs), dSizes = Some(dSizes), dIds = Some(dIds))
-          .select(col("ia"), col("ib")))),
-      "kbs:ingest write sh" -> (() => put("sh", dSh)),
-      "kbs:ingest write sigs" -> (() => put("sigs", dSigs)),
-      "kbs:ingest write sizes" -> (() => put("sizes", dSizes)),
-      "kbs:ingest write scored" -> (() =>
-        put("scored", batch.select(col(idCol).cast(LongType).as("id"),
-          score.cast(LongType).as("score")))),
-      "kbs:ingest write ids" -> (() => put("ids", dIds))))
-    StoreRoot.commitBatch(fs, bdir)
-    committedCache = Some(before :+ n)
-    // the amortization cadence: fold every C committed batches, so the
-    // shadowed history is bounded at C deltas and total maintenance
-    // work is O(batches × delta + state · batches/C), never
-    // O(batches × state). The compaction itself is crash-safe (see
-    // [[compact]]) — a kill between the ingest commit above and this
-    // fold just defers the fold to a later tick.
-    compactEvery.foreach(c => if (committed.size >= c) compact())
+    log.append() { b =>
+      val dSh = Concurrent.labeled(spark, "kbs:ingest delta shingles")(
+        Dedup.shingleHashSet(batch, idCol, textCol, shingleN)
+          .select(col("id").cast(LongType).as("id"), col("h"))
+          .localCheckpoint(eager = true))
+      // The six delta-frame jobs are INDEPENDENT once dSh is
+      // materialized: five are map/one-exchange derivations of the
+      // checkpointed delta (or of the batch itself), the sixth — the
+      // incremental probe — reads only the COMMITTED view (the batch
+      // being appended is not in it, so the concurrent writes are
+      // invisible to it). Overlap them (guide §2.6): sequentially each
+      // job's stage tail idled most cores; concurrently the delta writes
+      // back-fill the probe's tails. A failure in any job leaves a marker-less
+      // partial — the same crash shape as the sequential code — because
+      // runAll rethrows before the append commits.
+      // The delta's signature / sizes / ids frames feed BOTH their own
+      // frame writes and the probe — materialize each ONCE (the probe
+      // used to re-run the signature groupBy and sizes aggregation the
+      // writes had just paid), then overlap the six independent writes.
+      var dSigs: DataFrame = null
+      var dSizes: DataFrame = null
+      var dIds: DataFrame = null
+      Concurrent.runLabeled(spark, Seq(
+        "kbs:ingest delta sigs" -> (() =>
+          dSigs = Dedup.minhashSigs(dSh, k).localCheckpoint(eager = true)),
+        "kbs:ingest delta sizes" -> (() =>
+          dSizes = dSh.groupBy(col("id")).agg(count(lit(1)).as("n"))
+            .localCheckpoint(eager = true)),
+        "kbs:ingest delta ids" -> (() =>
+          dIds = dSh.select(col("id")).distinct()
+            .localCheckpoint(eager = true))))
+      Concurrent.runLabeled(spark, Seq(
+        "kbs:ingest probe+pairs" -> (() =>
+          b.put("pairs", Dedup.incrementalNearDupPairsFromSets(
+              effective("sh", shSchema), effective("sigs", sigsSchema), dSh,
+              k, effectiveRpb, threshold,
+              baseSizes = Some(effective("sizes", sizesSchema)),
+              dSigs = Some(dSigs), dSizes = Some(dSizes), dIds = Some(dIds))
+            .select(col("ia"), col("ib")))),
+        "kbs:ingest write sh" -> (() => b.put("sh", dSh)),
+        "kbs:ingest write sigs" -> (() => b.put("sigs", dSigs)),
+        "kbs:ingest write sizes" -> (() => b.put("sizes", dSizes)),
+        "kbs:ingest write scored" -> (() =>
+          b.put("scored", batch.select(col(idCol).cast(LongType).as("id"),
+            score.cast(LongType).as("score")))),
+        "kbs:ingest write ids" -> (() => b.put("ids", dIds))))
+    }
+    // a kill between the append's commit and this fold just defers the
+    // fold to a later tick
+    if (log.foldDue) compact()
   }
 
   /** The CURRENT surviving (id, score) rows off the committed view —
@@ -385,7 +313,7 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
       tune.table(idsLatest.count(), effectiveSampleGroups, k, threshold))
   }
 
-  /** Build the reband payload for a NEW version at `newDir` — BY
+  /** Build the reband payload into a NEW version's log — BY
     * REFERENCE, not by copy (guide §6: don't rewrite data you didn't
     * change). The per-id frames (sh/sigs/sizes/scored/ids) are
     * banding-INDEPENDENT (k minhashes; `rowsPerBand` only slices
@@ -401,108 +329,82 @@ final class KeepBestIndexStore private (spark: SparkSession, dir: String,
     *
     * The pairs write is ONE action, so the three shadowing-pivot
     * subtrees inside it share their exchange (ReuseExchange) without
-    * any persist. Its batch number continues this store's sequence
+    * any persist. It is appended numbered after this store's last batch
     * (own committed batches are always numbered ABOVE every referenced
     * batch, so the read-time shadowing rule — `latest(id) <= pair.b`
     * for still-current pairs — holds across the version boundary), and
-    * the new batch's per-id frames are written EMPTY to keep the
-    * uniform per-batch layout ([[readFrame]] declares schemas, so an
-    * empty directory reads as zero rows).
-    *
-    * Returns the batch dir for the caller to commit — everything
-    * before that marker is invisible; a crash leaves an orphaned
-    * version dir the lifecycle never adopts.
+    * its per-id frames are written EMPTY to keep the uniform per-batch
+    * layout ([[readFrame]] declares schemas, so an empty directory
+    * reads as zero rows). Everything stays invisible until the caller
+    * flips the pointer; a crash leaves an orphaned version dir the
+    * lifecycle never adopts.
     */
-  private[graft] def writeRebandInto(rpb: Int, newDir: Path): Path = {
-    val sources = refs ++ committed.map(n => new Path(root, s"b=$n"))
-    writeTextAtomic(fs, new Path(newDir, RefsFile),
+  private[graft] def writeRebandInto(rpb: Int, target: StoreRoot.BatchLog): Unit = {
+    val sources = refs ++ log.committed.map(log.dir)
+    StoreRoot.writeTextAtomic(fs, new Path(target.root, StoreRoot.RefsFile),
       sources.map(p => s"${p.getParent.getName}/${p.getName}").mkString("\n"))
-    val n = lastCommittedBatch.fold(0)(_ + 1)
-    val bdir = new Path(newDir, s"b=$n")
-    StoreRoot.claimBatchDir(fs, bdir)
-    def put(name: String, df: DataFrame): Unit =
-      df.withColumn("b", lit(n))
-        .write.parquet(new Path(bdir, name).toString)
-    val latest = idsLatest
-    val cand = Dedup.lshCandidatesFromSigs(
-      effectiveFrom(latest, "sigs", sigsSchema), rpb, k)
-    val pairs = Dedup.jaccardVerifySized(cand,
-        effectiveFrom(latest, "sh", shSchema),
-        effectiveFrom(latest, "sizes", sizesSchema), setCol = "h")
-      .filter(col("jac") >= threshold)
-      .select(col("ia"), col("ib"))
-    Concurrent.labeled(spark, "kbs:reband pairs")(put("pairs", pairs))
-    Seq("sh" -> shSchema, "sigs" -> sigsSchema, "sizes" -> sizesSchema,
-      "scored" -> scoredSchema, "ids" -> idsSchema).foreach {
-      case (name, st) =>
-        // repartition(1): one footer-bearing (empty) part file, so the
-        // directory stays schema-readable even without a declared schema
-        put(name, empty(StructType(st.filterNot(_.name == "b")))
-          .repartition(1))
+    target.append(after = log.last) { b =>
+      val latest = idsLatest
+      val cand = Dedup.lshCandidatesFromSigs(
+        effectiveFrom(latest, "sigs", sigsSchema), rpb, k)
+      val pairs = Dedup.jaccardVerifySized(cand,
+          effectiveFrom(latest, "sh", shSchema),
+          effectiveFrom(latest, "sizes", sizesSchema), setCol = "h")
+        .filter(col("jac") >= threshold)
+        .select(col("ia"), col("ib"))
+      Concurrent.labeled(spark, "kbs:reband pairs")(b.put("pairs", pairs))
+      Seq("sh" -> shSchema, "sigs" -> sigsSchema, "sizes" -> sizesSchema,
+        "scored" -> scoredSchema, "ids" -> idsSchema).foreach {
+        case (name, st) =>
+          // repartition(1): one footer-bearing (empty) part file, so the
+          // directory stays schema-readable even without a declared schema
+          b.put(name, empty(StructType(st.filterNot(_.name == "b")))
+            .repartition(1))
+      }
     }
-    bdir
   }
 
   /** Fold the committed view into one fresh batch and drop the
-    * shadowed history — space reclamation, not semantics: the view
-    * before and after is identical. Crash-safe at every point: once
-    * the compacted batch's `_COMMIT` lands, every older row is
-    * shadowed by the read-time rule (all ids re-delivered at the
-    * compaction batch), so a crash during the trailing deletes leaves
-    * a larger-but-correct store and the next compact() reclaims it.
+    * shadowed history ([[StoreRoot.BatchLog.fold]]) — space
+    * reclamation, not semantics: the view before and after is
+    * identical.
     */
   def compact(): Unit = {
-    val bs = committed
     // a 1-batch store with a reband manifest still folds: the fold is
     // what makes the version self-contained (references retired), so
     // the referenced prior version becomes reclaimable by [[vacuum]]
-    if (bs.size <= 1 && refs.isEmpty) return
-    val n = bs.last + 1
-    val bdir = new Path(root, s"b=$n")
-    StoreRoot.claimBatchDir(fs, bdir)
-    def put(name: String, df: DataFrame): Unit =
-      df.withColumn("b", lit(n))
-        .write.parquet(new Path(bdir, name).toString)
-    // Six write ACTIONS over the effective view: persist the shadowing
-    // pivot once (each action re-derived idsLatest — six scans + six
-    // pivot shuffles for one tiny relation), materialize it, then
-    // overlap the independent writes (guide §2.6). MEMORY_AND_DISK, not
-    // localCheckpoint: an executor loss recomputes the pivot from the
-    // committed parquet instead of failing the fold.
-    val latest = idsLatest
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    latest.count()
-    try Concurrent.runAll(Seq(
-      () => put("sh", effectiveFrom(latest, "sh", shSchema)),
-      () => put("sigs", effectiveFrom(latest, "sigs", sigsSchema)),
-      () => put("sizes", effectiveFrom(latest, "sizes", sizesSchema)),
-      () => put("scored", effectiveFrom(latest, "scored", scoredSchema)),
-      () => put("ids", readFrame("ids", idsSchema).select(col("id")).distinct()),
-      () => put("pairs", effectivePairsFrom(latest))))
-    finally latest.unpersist()
-    StoreRoot.commitBatch(fs, bdir)
-    bs.foreach(o => fs.delete(new Path(root, s"b=$o"), true))
-    // the fold re-delivered every id at batch n, so every referenced
+    if (log.committed.size <= 1 && refs.isEmpty) return
+    log.fold { b =>
+      // Six write ACTIONS over the effective view: persist the shadowing
+      // pivot once (each action re-derived idsLatest — six scans + six
+      // pivot shuffles for one tiny relation), materialize it, then
+      // overlap the independent writes (guide §2.6). MEMORY_AND_DISK, not
+      // localCheckpoint: an executor loss recomputes the pivot from the
+      // committed parquet instead of failing the fold.
+      val latest = idsLatest
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      latest.count()
+      try Concurrent.runAll(Seq(
+        () => b.put("sh", effectiveFrom(latest, "sh", shSchema)),
+        () => b.put("sigs", effectiveFrom(latest, "sigs", sigsSchema)),
+        () => b.put("sizes", effectiveFrom(latest, "sizes", sizesSchema)),
+        () => b.put("scored", effectiveFrom(latest, "scored", scoredSchema)),
+        () => b.put("ids", readFrame("ids", idsSchema).select(col("id")).distinct()),
+        () => b.put("pairs", effectivePairsFrom(latest))))
+      finally latest.unpersist()
+    }
+    // the fold re-delivered every id in its own batch, so every referenced
     // row is shadowed — retire the manifest (referenced dirs belong to
     // the PRIOR version and are vacuum's business, never deleted here).
     // A crash between the commit above and this delete leaves a stale
     // manifest over fully-shadowed rows: correct, just unreclaimed
     // until the next fold.
-    fs.delete(new Path(root, RefsFile), false)
+    fs.delete(new Path(root, StoreRoot.RefsFile), false)
     refsCache = Some(Seq.empty)
-    committedCache = Some(Seq(n))
   }
 }
 
 object KeepBestIndexStore {
-
-  private val BatchDir = "b=(\\d+)".r
-
-  /** The reband manifest's file name — the name is owned by
-    * [[StoreRoot]] (its GC must honor references); the CONTENT (which
-    * frames are reference-safe) is this store's algebra.
-    */
-  private[ops] val RefsFile: String = StoreRoot.RefsFile
 
   private val idsSchema = StructType(Seq(
     StructField("id", LongType), StructField("b", IntegerType)))
@@ -523,7 +425,7 @@ object KeepBestIndexStore {
     StructField("b", IntegerType)))
 
   /** Open (or create) a store at `dir`. The parameters are FINGERPRINTED
-    * (`_params.sha256`, the `Curate.pipelineStaged` rule): reopening an
+    * ([[StoreRoot.pinParams]], as in `Curate.pipelineStaged`): reopening an
     * existing store under different shingling/banding/threshold — or
     * under a different state ALGEBRA version — is refused, because the
     * stored deltas were computed under the old configuration and
@@ -543,21 +445,15 @@ object KeepBestIndexStore {
   def open(spark: SparkSession, dir: String, shingleN: Int = 3, k: Int = 16,
            rowsPerBand: Int = 4, threshold: Double = 0.5,
            compactEvery: Option[Int] = None): KeepBestIndexStore = {
-    requireCadence(compactEvery)
-    val (root, fs) = rootFs(spark, dir)
-    val fp = fingerprint(shingleN, k, rowsPerBand, threshold)
-    val fpPath = new Path(root, "_params.sha256")
-    if (fs.exists(fpPath)) {
-      require(readText(fs, fpPath) == fp,
-        s"KeepBestIndexStore: $dir holds state computed under a DIFFERENT " +
-          "configuration or algebra version (params fingerprint mismatch) — " +
-          "resuming would silently mix two indexes; pass a fresh dir (or " +
-          "delete this one) to run with the new parameters")
-    } else writeTextAtomic(fs, fpPath, fp)
-    val st = new KeepBestIndexStore(spark, dir, shingleN, k, Some(rowsPerBand),
-      threshold, compactEvery, tuning = None)
-    st.refresh() // pin the at-open snapshot: a pure reader LISTs once
-    st
+    val log = StoreRoot.openLog(spark, dir, compactEvery)
+    StoreRoot.pinParams(log.fs, log.root,
+      fingerprint(shingleN, k, rowsPerBand, threshold),
+      s"KeepBestIndexStore: $dir holds state computed under a DIFFERENT " +
+        "configuration or algebra version (params fingerprint mismatch) — " +
+        "resuming would silently mix two indexes; pass a fresh dir (or " +
+        "delete this one) to run with the new parameters")
+    new KeepBestIndexStore(spark, log, shingleN, k, Some(rowsPerBand),
+      threshold, tuning = None)
   }
 
   /** Open a store whose banding is CHOSEN AT BIRTH — the
@@ -577,13 +473,12 @@ object KeepBestIndexStore {
                tune: KeepBestIndex.AutoTune,
                shingleN: Int = 3, k: Int = 16, threshold: Double = 0.5,
                compactEvery: Option[Int] = None): KeepBestIndexStore = {
-    requireCadence(compactEvery)
-    val (root, fs) = rootFs(spark, dir)
-    val rpbPath = new Path(root, "_tuned_rpb")
-    val fpPath = new Path(root, "_params.sha256")
+    val log = StoreRoot.openLog(spark, dir, compactEvery)
+    val (root, fs) = (log.root, log.fs)
+    val rpbPath = new Path(root, TunedRpbFile)
     val stored: Option[Int] =
       if (fs.exists(rpbPath)) {
-        val rpb = readText(fs, rpbPath).trim.toInt
+        val rpb = StoreRoot.readText(fs, rpbPath).trim.toInt
         // the stored choice must be a member of the grid that could
         // have certified it — the cheap tripwire against a torn write
         // that parses (a '1' torn from '12') or a hand-edited file:
@@ -594,26 +489,18 @@ object KeepBestIndexStore {
             s"not in the tuning grid ${tune.rowsPerBandConfigs} — the file " +
             "is torn or the grid changed; restore _tuned_rpb (or rebuild) " +
             "rather than serving at an uncertified operating point")
-        val fp = fingerprint(shingleN, k, rpb, threshold)
-        if (fs.exists(fpPath)) {
-          require(readText(fs, fpPath) == fp,
-            s"KeepBestIndexStore: $dir was tuned under DIFFERENT non-banding " +
-              "parameters or algebra version (params fingerprint mismatch) — " +
-              "resuming would silently mix two indexes")
-        } else writeTextAtomic(fs, fpPath, fp) // heal a crash between the two
+        pinChoice(fs, root, rpb, shingleN, k, threshold) // heals a crash after the choice
         Some(rpb)
       } else {
-        require(!fs.exists(fpPath),
+        require(!fs.exists(StoreRoot.paramsPath(root)),
           s"KeepBestIndexStore: $dir holds a FIXED-banding store (params " +
             "fingerprint present, no _tuned_rpb) — its rowsPerBand is not " +
             "recoverable from the hash; reopen it with open() and the " +
             "original banding instead of openAuto")
         None
       }
-    val st = new KeepBestIndexStore(spark, dir, shingleN, k, stored, threshold,
-      compactEvery, tuning = Some(tune))
-    st.refresh() // pin the at-open snapshot: a pure reader LISTs once
-    st
+    new KeepBestIndexStore(spark, log, shingleN, k, stored, threshold,
+      tuning = Some(tune))
   }
 
   // ---- Pointer-managed serving root (the reband lifecycle) ------------
@@ -630,32 +517,19 @@ object KeepBestIndexStore {
   def createLive(spark: SparkSession, root: String,
                  tune: KeepBestIndex.AutoTune,
                  shingleN: Int = 3, k: Int = 16, threshold: Double = 0.5,
-                 compactEvery: Option[Int] = None): KeepBestIndexStore = {
-    val r = new Path(root)
-    val fs = StoreRoot.fsOf(spark, r)
-    if (!fs.exists(r)) fs.mkdirs(r)
-    StoreRoot.requireCreatable(fs, r, "KeepBestIndexStore.createLive")
-    val st = openAuto(spark, StoreRoot.versionDir(r, 0).toString, tune,
-      shingleN, k, threshold, compactEvery)
-    StoreRoot.flipPointer(fs, r, 0)
-    st
-  }
+                 compactEvery: Option[Int] = None): KeepBestIndexStore =
+    StoreRoot.createLive(spark, root, "KeepBestIndexStore.createLive")(
+      openAuto(spark, _, tune, shingleN, k, threshold, compactEvery))
 
-  /** Open whatever version the pointer currently names — snapshot
-    * isolation at directory granularity, exactly the
-    * [[IvfIndexStore.openLive]] contract.
+  /** Open whatever version the pointer currently names
+    * ([[StoreRoot.openLive]]).
     */
   def openLive(spark: SparkSession, root: String,
                tune: KeepBestIndex.AutoTune,
                shingleN: Int = 3, k: Int = 16, threshold: Double = 0.5,
-               compactEvery: Option[Int] = None): KeepBestIndexStore = {
-    val v = liveVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"KeepBestIndexStore.openLive: $root has no published version — " +
-          "createLive it first"))
-    openAuto(spark, StoreRoot.versionDir(new Path(root), v).toString, tune,
-      shingleN, k, threshold, compactEvery)
-  }
+               compactEvery: Option[Int] = None): KeepBestIndexStore =
+    StoreRoot.openLive(spark, root, "KeepBestIndexStore.openLive")(
+      openAuto(spark, _, tune, shingleN, k, threshold, compactEvery))
 
   /** THE REBAND LIFECYCLE STEP — [[IvfIndexStore.retrainIfImbalanced]]'s
     * analogue on the banding axis: the birth choice is STATE ALGEBRA
@@ -706,17 +580,9 @@ object KeepBestIndexStore {
       val rpbNew = choice.get
       val r = new Path(root)
       val fs = StoreRoot.fsOf(spark, r)
-      val next = StoreRoot.nextVersion(fs, r)
-      val dir = StoreRoot.versionDir(r, next)
-      StoreRoot.claimVersionDir(fs, dir)
-      fs.mkdirs(dir)
-      // the birth persistence order (choice first, fingerprint second —
-      // a crash between the two heals on reopen)
-      writeTextAtomic(fs, new Path(dir, "_tuned_rpb"), rpbNew.toString)
-      writeTextAtomic(fs, new Path(dir, "_params.sha256"),
-        fingerprint(shingleN, k, rpbNew, threshold))
-      val bdir = cur.writeRebandInto(rpbNew, dir)
-      StoreRoot.commitBatch(fs, bdir)
+      val (next, dir) = StoreRoot.claimNextVersion(fs, r)
+      persistChoice(fs, dir, rpbNew, shingleN, k, threshold)
+      cur.writeRebandInto(rpbNew, StoreRoot.openLog(spark, dir.toString, None))
       StoreRoot.flipPointer(fs, r, next)
       Some(openAuto(spark, dir.toString, tune, shingleN, k, threshold,
         compactEvery))
@@ -791,53 +657,31 @@ object KeepBestIndexStore {
     StoreRoot.gcSuperseded(StoreRoot.fsOf(spark, r), r, keepSuperseded)
   }
 
-  private def requireCadence(compactEvery: Option[Int]): Unit =
-    require(compactEvery.forall(_ >= 2),
-      s"compactEvery must be >= 2 (a 1-cadence would fold after every " +
-        s"batch — the O(batches × state) shape this store exists to avoid), " +
-        s"got $compactEvery")
-
-  private def rootFs(spark: SparkSession, dir: String): (Path, FileSystem) = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) fs.mkdirs(root)
-    (root, fs)
-  }
-
   private[ops] def fingerprint(shingleN: Int, k: Int, rowsPerBand: Int,
-                               threshold: Double): String = {
-    val repr = Seq("kbi-alg=1", shingleN.toString, k.toString,
-      rowsPerBand.toString, threshold.toString).mkString(" ")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(repr.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+                               threshold: Double): String =
+    StoreRoot.sha256Hex(Seq("kbi-alg=1", shingleN.toString, k.toString,
+      rowsPerBand.toString, threshold.toString).mkString(" "))
 
-  private[ops] def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
+  private val TunedRpbFile = "_tuned_rpb"
 
-  private[ops] def writeText(fs: FileSystem, p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Temp-write + rename for the tiny metadata files whose CONTENT is
-    * a decision (`_tuned_rpb`, the `_certified` files,
-    * `_params.sha256`): a
-    * plain create can tear mid-write, and a torn NUMERIC prefix (a
-    * lone '1' torn from '12') parses fine — a restarted process would
-    * then run at a banding/width the floors never certified, silently.
-    * The rename makes the content all-or-nothing; the brief
-    * delete-before-rename gap only ever loses the FILE, which every
-    * reader treats as "decide again" (safe), never as a wrong value.
+  /** Pin the params fingerprint of a store whose banding `rpb` was
+    * chosen by the tuner.
     */
-  private[ops] def writeTextAtomic(fs: FileSystem, p: Path, s: String): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    writeText(fs, tmp, s)
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      sys.error(s"KeepBestIndexStore: atomic metadata publish failed for $p")
-  }
+  private def pinChoice(fs: FileSystem, dir: Path, rpb: Int, shingleN: Int,
+                        k: Int, threshold: Double): Unit =
+    StoreRoot.pinParams(fs, dir, fingerprint(shingleN, k, rpb, threshold),
+      s"KeepBestIndexStore: $dir was tuned under DIFFERENT non-banding " +
+        "parameters or algebra version (params fingerprint mismatch) — " +
+        "resuming would silently mix two indexes")
 
+  /** Persist a banding choice: `_tuned_rpb` FIRST, then the params
+    * fingerprint — a crash between the two heals on reopen ([[openAuto]]
+    * re-pins from the stored choice); the reverse order would strand a
+    * fingerprint whose rpb is unrecoverable from its hash.
+    */
+  private def persistChoice(fs: FileSystem, dir: Path, rpb: Int, shingleN: Int,
+                            k: Int, threshold: Double): Unit = {
+    StoreRoot.writeTextAtomic(fs, new Path(dir, TunedRpbFile), rpb.toString)
+    pinChoice(fs, dir, rpb, shingleN, k, threshold)
+  }
 }

@@ -390,7 +390,8 @@ object Store {
         def pv(r: org.apache.spark.sql.Row): String =
           if (r.isNullAt(0)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
           else r.get(0).toString
-        val touched = touchedParts.collect().map(pv).toSet
+        val touchedRows = touchedParts.collect()
+        val touched = touchedRows.map(pv).toSet
         val keptParts = kept.select(col(partCol)).distinct()
           .collect().map(pv).toSet
         assertLeaseOwner(spark, path) // fence: zombie writers stop BEFORE the overwrite
@@ -416,6 +417,12 @@ object Store {
               ExternalCatalogUtils.unescapePathName(name.stripPrefix(s"$partCol="))))
             fs.delete(st.getPath, true)
         }
+        // the data-skipping manifest follows the rewrite (data first, as
+        // in [[expireBefore]]): stale rows would name deleted files
+        if (fs.exists(new org.apache.hadoop.fs.Path(manifestPath(path))))
+          refreshManifestIncremental(spark, path, partCol,
+            touchedRows.map(r => if (r.isNullAt(0)) null else r.get(0)).toIndexedSeq,
+            manifestStatsCols(spark, path))
         if (verify) {
           // Retention guarantee re-check (a purge that silently leaves
           // rows is worse than one that fails loudly): key-columns-only
@@ -576,6 +583,14 @@ object Store {
       .filter(!col("on_disk") || !col("in_manifest"))
   }
 
+  /** The stats columns an existing manifest was built over, read off
+    * its own `min_*` schema — so a rewrite keeps the skipping the table
+    * already had.
+    */
+  private def manifestStatsCols(spark: SparkSession, path: String): Seq[String] =
+    spark.read.parquet(manifestPath(path)).schema.fieldNames.toIndexedSeq
+      .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+
   /** Full manifest rebuild over every live file. */
   def refreshManifest(spark: SparkSession, path: String,
                       statsCols: Seq[String]): Unit =
@@ -583,8 +598,9 @@ object Store {
       .localCheckpoint(eager = true) // never read-and-overwrite the same dir
       .write.mode(SaveMode.Overwrite).parquet(manifestPath(path))
 
-  /** Incremental refresh after an upsert: recompute stats ONLY for the
-    * files under the touched partition dirs (a partition-pruned read),
+  /** Incremental refresh after an upsert or purge: recompute stats ONLY
+    * for the files under the touched partition dirs (a partition-pruned
+    * read; a touched dir that no longer exists contributes no rows),
     * keep every other manifest row — per-batch cost tracks the batch.
     * Falls back to a full rebuild when no manifest exists yet (a
     * partial manifest would silently unprune the rest of the table).
@@ -597,14 +613,14 @@ object Store {
     if (!fs.exists(mPath)) { refreshManifest(spark, path, statsCols); return }
     val dirs = touchedVals.map(v => s"$path/${partDirName(partCol, v)}")
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    val fresh = statsOf(
-      spark.read.option("basePath", path).parquet(dirs: _*), statsCols)
     // Old rows for touched partitions drop out by on-disk dir fragment —
     // the same escaped names the writer produced.
     val frags = touchedVals.map(v => "/" + partDirName(partCol, v) + "/")
     val keep = spark.read.parquet(mPath.toString)
       .filter(!frags.map(f => col("file").contains(f)).reduce(_ || _))
-    keep.unionByName(fresh)
+    (if (dirs.isEmpty) keep
+     else keep.unionByName(statsOf(
+       spark.read.option("basePath", path).parquet(dirs: _*), statsCols)))
       .localCheckpoint(eager = true)
       .write.mode(SaveMode.Overwrite).parquet(mPath.toString)
   }
@@ -770,8 +786,13 @@ object Store {
     val perPartBytes = before.groupBy(_.getPath.getParent.getName)
       .view.mapValues(_.map(_.getLen).sum).toMap
     val widths = perPartBytes.map { case (dir, bytes) =>
-      // dir names carry Spark's %-escaping of special chars
-      val value = java.net.URLDecoder.decode(dir.stripPrefix(s"$partCol="), "UTF-8")
+      // dir names carry Spark's partition-path escaping (not URL encoding:
+      // a literal '+' stays '+'); the default-partition name is NULL
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      val raw = dir.stripPrefix(s"$partCol=")
+      val value =
+        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+        else ExternalCatalogUtils.unescapePathName(raw)
       value -> math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     }
     val totalWidth = widths.values.map(_.toLong).sum.toInt
@@ -783,7 +804,7 @@ object Store {
     // partition's own width (never monotonically_increasing_id — task
     // retries must re-derive the same bucket).
     val salted = df
-      .join(broadcast(widthDf), df(partCol).cast("string") === col("__pv"))
+      .join(broadcast(widthDf), df(partCol).cast("string") <=> col("__pv"))
       .withColumn("__salt", pmod(hash(df.columns.toIndexedSeq.map(df(_)): _*), col("__n")))
     val tmp = new Path(path + ".compacting")
     fs.delete(tmp, true)
@@ -809,8 +830,7 @@ object Store {
     // sibling of the table dir and parquet leaf paths never repeat it).
     val liveManifest = new Path(manifestPath(path))
     if (fs.exists(liveManifest)) {
-      val statsCols = spark.read.parquet(liveManifest.toString).schema.fieldNames
-        .toIndexedSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+      val statsCols = manifestStatsCols(spark, path)
       val tmpSeg = "/" + tmp.getName + "/"
       val liveSeg = "/" + hPath.getName + "/"
       statsOf(spark.read.parquet(tmp.toString), statsCols)

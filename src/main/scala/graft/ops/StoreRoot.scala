@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 /** The pointer-managed versioned-root protocol SHARED by the durable
   * index stores ([[IvfIndexStore]]'s retrain lifecycle,
@@ -48,19 +49,217 @@ private[graft] object StoreRoot {
   private[ops] val RefsFile = "_refs"
   private val RefLine = "v=(\\d+)/b=\\d+".r
 
-  /** The versions `v`'s manifest references (empty when it has none —
-    * every pre-manifest store, and every compacted version).
+  /** The `v=K/b=M` lines of a store directory's reference manifest
+    * (empty when it has none — every pre-manifest store, and every
+    * compacted version).
     */
-  private[ops] def referencedVersions(fs: FileSystem, root: Path,
-                                      v: Int): Set[Int] = {
-    val p = new Path(versionDir(root, v), RefsFile)
-    if (!fs.exists(p)) Set.empty
-    else KeepBestIndexStore.readText(fs, p).split("\n").toSeq.map(_.trim)
-      .collect { case RefLine(k) => k.toInt }.toSet
+  private[ops] def refLines(fs: FileSystem, dir: Path): Seq[String] = {
+    val p = new Path(dir, RefsFile)
+    if (!fs.exists(p)) Seq.empty
+    else readText(fs, p).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
   }
+
+  /** The versions `v`'s manifest references. */
+  private[ops] def referencedVersions(fs: FileSystem, root: Path,
+                                      v: Int): Set[Int] =
+    refLines(fs, versionDir(root, v)).collect { case RefLine(k) => k.toInt }.toSet
 
   def fsOf(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private[ops] def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** Temp-write + rename for the tiny metadata files whose CONTENT is
+    * a decision (`_tuned_rpb`, the `_certified` files, the params
+    * fingerprint, `_refs`): a plain create can tear mid-write, and a
+    * torn NUMERIC prefix (a lone '1' torn from '12') parses fine — a
+    * restarted process would then run at a banding/width the floors
+    * never certified, silently. The rename makes the content
+    * all-or-nothing; the brief delete-before-rename gap only ever loses
+    * the FILE, which every reader treats as "decide again" (safe),
+    * never as a wrong value.
+    */
+  private[ops] def writeTextAtomic(fs: FileSystem, p: Path, s: String): Unit = {
+    val tmp = new Path(p.getParent, p.getName + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(s.getBytes("UTF-8")) finally out.close()
+    fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      sys.error(s"StoreRoot: atomic metadata publish failed for $p")
+  }
+
+  /** Hex SHA-256 of a canonical configuration rendering — the content
+    * of a [[pinParams]] fingerprint.
+    */
+  private[graft] def sha256Hex(repr: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(repr.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** Where a directory's configuration fingerprint lives. */
+  private[ops] def paramsPath(dir: Path): Path = new Path(dir, "_params.sha256")
+
+  /** THE CONFIGURATION PIN of a durable directory (a store version, a
+    * staged pipeline run): its state was computed under one
+    * configuration and algebra version, fingerprinted as `fp`. A
+    * directory that already carries a fingerprint must match it —
+    * resuming under another configuration would silently mix two
+    * states — else the pin is written atomically ([[writeTextAtomic]]).
+    * `beforeCreate` runs only on the writing branch, for state that
+    * must land BEFORE the fingerprint (a crash between the two then
+    * leaves a healable directory, never a fingerprint whose inputs are
+    * unrecoverable from its hash).
+    */
+  private[graft] def pinParams(fs: FileSystem, dir: Path, fp: String,
+                               refusal: => String,
+                               beforeCreate: () => Unit = () => ()): Unit = {
+    val p = paramsPath(dir)
+    if (fs.exists(p)) require(readText(fs, p) == fp, refusal)
+    else {
+      beforeCreate()
+      writeTextAtomic(fs, p, fp)
+    }
+  }
+
+  // ---- The batch log: one store version's commit model ---------------
+
+  private val BatchDir = "b=(\\d+)".r
+
+  /** Open a store version directory's [[BatchLog]]: refuse a 1-cadence
+    * fold, create the directory, return the (not yet pinned) log.
+    */
+  def openLog(spark: SparkSession, dir: String,
+              compactEvery: Option[Int]): BatchLog = {
+    require(compactEvery.forall(_ >= 2),
+      s"compactEvery must be >= 2 (a 1-cadence would fold after every " +
+        s"batch — the O(batches × state) shape this store exists to avoid), " +
+        s"got $compactEvery")
+    val log = new BatchLog(spark, new Path(dir), compactEvery)
+    if (!log.fs.exists(log.root)) log.fs.mkdirs(log.root)
+    log
+  }
+
+  /** One claimed, not yet committed batch directory `b=n`: the per-batch
+    * frame writer. Every row a frame stores carries the batch number
+    * `b` it was written in — the read-time shadowing rules of both
+    * stores pivot on it.
+    */
+  final class Batch private[StoreRoot] (dir: Path, n: Int) {
+    def put(name: String, df: DataFrame): Unit =
+      df.withColumn("b", lit(n)).write.parquet(new Path(dir, name).toString)
+  }
+
+  /** THE BATCH LOG — the commit model beneath each version directory of
+    * both durable index stores. A store version is a sequence of batch
+    * directories `b=N`, each committed by a trailing `_COMMIT` marker
+    * (the `_SUCCESS` pattern): a batch exists iff its marker does, so a
+    * marker-less directory is a mid-write crash — invisible to every
+    * read (frames are read by explicit committed paths, never a glob)
+    * and reclaimed when the single writer next claims its number
+    * ([[claimBatchDir]]; a reader never deletes). Writes go in one
+    * order: claim `b=n`, write the frames, exclusive-create `_COMMIT`
+    * ([[commitBatch]]).
+    *
+    * The committed set is a SNAPSHOT, pinned by [[refresh]] (the
+    * stores pin it at open) and maintained by this instance's own
+    * mutations — the single-writer contract makes the writer's view
+    * authoritative. Every read serves the pinned state (snapshot
+    * isolation at batch granularity, the promise the pointer root gives
+    * across versions), and a long-lived PURE READER pays exactly ONE
+    * LIST at open, not one per view assembly. Mutations list fresh at
+    * the start of their tick, so a pinned snapshot never makes the
+    * writer stale.
+    */
+  final class BatchLog private[StoreRoot] (spark: SparkSession, val root: Path,
+                                           compactEvery: Option[Int]) {
+    def fs: FileSystem = fsOf(spark, root)
+
+    private var pinned: Option[Seq[Int]] = None
+
+    /** LIST calls actually paid — observability for the one-LIST-per-
+      * reader-open contract (the store specs count them).
+      */
+    private[graft] var listCalls: Long = 0L
+
+    /** Re-pin the snapshot to the CURRENT on-disk state — a reader's
+      * explicit "observe the writer's new commits" hook. One LIST.
+      */
+    def refresh(): Unit = pinned = Some(list())
+
+    /** Committed batch numbers, ascending. */
+    def committed: Seq[Int] = pinned.getOrElse(list())
+
+    /** The latest committed batch number (None on an empty log) — the
+      * store's logical version: append and fold both move it.
+      */
+    def last: Option[Int] = committed.lastOption
+
+    def dir(n: Int): Path = new Path(root, s"b=$n")
+
+    /** One stored frame's path in every committed batch. */
+    def paths(name: String): Seq[String] =
+      committed.map(n => new Path(dir(n), name).toString)
+
+    /** The amortization cadence: a fold is due once `compactEvery`
+      * committed batches have accumulated, so the shadowed history is
+      * bounded at C deltas and total maintenance work is
+      * O(batches × delta + state · batches/C), never O(batches × state).
+      */
+    def foldDue: Boolean = compactEvery.exists(committed.size >= _)
+
+    /** One glob listing collects every marker — a single namenode/LIST
+      * round trip, never a per-directory `exists` cascade.
+      */
+    private def list(): Seq[Int] = {
+      listCalls += 1
+      if (!fs.exists(root)) return Seq.empty
+      Option(fs.globStatus(new Path(root, "b=*/_COMMIT"))).toSeq.flatten
+        .map(_.getPath.getParent.getName)
+        .collect { case BatchDir(n) => n.toInt }
+        .sorted
+    }
+
+    private def commitNew(n: Int)(write: Batch => Unit): Unit = {
+      val d = dir(n)
+      claimBatchDir(fs, d)
+      write(new Batch(d, n))
+      commitBatch(fs, d)
+    }
+
+    /** APPEND one batch: ONE listing per tick pins `before`, the batch
+      * claims the next number (above `after` too, when given — a
+      * version that continues a prior version's numbering), `write`
+      * fills it, the marker commits it, and the pin becomes
+      * `before :+ n`. While `write` runs, reads still serve `before`:
+      * the new batch is not in the committed set, so a frame derived
+      * from the committed view never sees the batch being written.
+      */
+    def append(after: Option[Int] = None)(write: Batch => Unit): Unit = {
+      val before = list()
+      pinned = Some(before)
+      val n = (before.lastOption ++ after).foldLeft(-1)(math.max) + 1
+      commitNew(n)(write)
+      pinned = Some(before :+ n)
+    }
+
+    /** FOLD the committed view into one fresh batch `b=last+1` and drop
+      * the older batches — space reclamation, not semantics. `write`
+      * runs against the pinned committed set; once the fold's marker
+      * lands every older row is shadowed by the read-time rule (every
+      * key was re-delivered at the fold batch), so a crash during the
+      * trailing deletes leaves a larger-but-correct store that a later
+      * fold reclaims. The caller runs its own tail step after.
+      */
+    def fold(write: Batch => Unit): Unit = {
+      val bs = committed
+      val n = bs.last + 1
+      commitNew(n)(write)
+      bs.foreach(o => fs.delete(dir(o), true))
+      pinned = Some(Seq(n))
+    }
+  }
 
   /** The pre-marker protocol's single `_latest` FILE (content = the
     * version number) — readable forever: a root last published by the
@@ -72,8 +271,7 @@ private[graft] object StoreRoot {
   private def legacyPointer(fs: FileSystem, root: Path): Option[Int] = {
     val legacy = new Path(root, "_latest")
     if (!fs.exists(legacy) || !fs.getFileStatus(legacy).isFile) None
-    else scala.util.Try(
-      KeepBestIndexStore.readText(fs, legacy).trim.toInt).toOption
+    else scala.util.Try(readText(fs, legacy).trim.toInt).toOption
   }
 
   /** The live version: max over the pointer markers, one glob listing;
@@ -388,4 +586,45 @@ private[graft] object StoreRoot {
           "here is another maintainer's rebuild; the lifecycle is " +
           "single-maintainer by contract — stop one of the jobs sharing " +
           "this root")
+
+  /** Claim the next lifecycle version by creating its directory —
+    * [[nextVersion]] then [[claimVersionDir]]. Everything built in it
+    * stays invisible until [[flipPointer]] publishes the number.
+    */
+  def claimNextVersion(fs: FileSystem, root: Path): (Int, Path) = {
+    val v = nextVersion(fs, root)
+    val dir = versionDir(root, v)
+    claimVersionDir(fs, dir)
+    fs.mkdirs(dir)
+    (v, dir)
+  }
+
+  /** Create version 0 of a pointer root: `open` builds the store in
+    * `v=0` (after the [[requireCreatable]] guard), then the pointer
+    * flips to it.
+    */
+  def createLive[S](spark: SparkSession, root: String, who: String)(
+                    open: String => S): S = {
+    val r = new Path(root)
+    val fs = fsOf(spark, r)
+    if (!fs.exists(r)) fs.mkdirs(r)
+    requireCreatable(fs, r, who)
+    val st = open(versionDir(r, 0).toString)
+    flipPointer(fs, r, 0)
+    st
+  }
+
+  /** Open whatever version the pointer currently names — snapshot
+    * isolation at directory granularity: a reader that resolved `v=N`
+    * keeps reading a consistent, untouched store while a maintainer
+    * publishes `v=N+1` (old versions are never deleted here; they stay
+    * readable until a retention sweep).
+    */
+  def openLive[S](spark: SparkSession, root: String, who: String)(
+                  open: String => S): S = {
+    val v = liveVersion(spark, root).getOrElse(
+      throw new IllegalArgumentException(
+        s"$who: $root has no published version — createLive it first"))
+    open(versionDir(new Path(root), v).toString)
+  }
 }

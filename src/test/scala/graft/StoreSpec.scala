@@ -225,6 +225,30 @@ class StoreSpec extends SparkSpec {
     spark.read.parquet(path).count() shouldBe 5
   }
 
+  test("purgeKeys refreshes the data-skipping manifest: the audit stays clean " +
+    "and pruned scans return the survivors") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-purge-manifest").toString + "/t"
+    Store.writePartitioned(grid("2024-01-18 02:00:00", 8000000L), path, "date")
+    Store.refreshManifest(spark, path, Seq("file_size_bytes"))
+    def scanned(): Seq[Row] =
+      Store.scanPruned(spark, path, "file_size_bytes", 0L, Long.MaxValue)
+        .df.orderBy("date", "symbol").collect().toSeq
+    // one key (its partition is rewritten), then a whole partition (its
+    // directory is deleted)
+    Store.purgeKeys(spark, path, Seq((Date.valueOf("2024-01-15"), "BTCUSDT"))
+      .toDF("date", "symbol"), "date", Seq("date", "symbol")) shouldBe 1L
+    Store.manifestAudit(spark, path).count() shouldBe 0L
+    scanned() shouldBe spark.read.parquet(path).orderBy("date", "symbol").collect().toSeq
+    scanned().size shouldBe 8
+    Store.purgeKeys(spark, path, Seq("BTCUSDT", "ETHUSDT", "SOLUSDT")
+      .map(s => (Date.valueOf("2024-01-16"), s)).toDF("date", "symbol"),
+      "date", Seq("date", "symbol")) shouldBe 3L
+    Store.manifestAudit(spark, path).count() shouldBe 0L
+    scanned() shouldBe spark.read.parquet(path).orderBy("date", "symbol").collect().toSeq
+    scanned().size shouldBe 5
+  }
+
   test("expireBefore drops whole partitions by TTL and filters their manifest rows") {
     val path = Files.createTempDirectory("graft-expire").toString + "/t"
     // grid() writes dates 2024-01-15..17, 3 symbols each.
@@ -319,11 +343,14 @@ class StoreSpec extends SparkSpec {
   test("compact widths scale with partition bytes, and special chars in values survive") {
     import spark.implicits._
     val path = Files.createTempDirectory("graft-compact2").toString + "/t"
-    // one big partition (skewed), one tiny, one with a char Spark %-escapes;
-    // payload must not compress away or the byte-based widths stay at 1
+    // one big partition (skewed), one tiny, one with a char Spark %-escapes,
+    // one with a '+' (which URL decoding would turn into a space) and the
+    // NULL default partition; payload must not compress away or the
+    // byte-based widths stay at 1
     def blob(i: Int) = (1 to 8).map(k => (i * 2654435761L + k * 40503L).toHexString).mkString(":")
     val big = (1 to 4000).map(i => ("big", i.toLong, blob(i)))
-    val rest = Seq(("tiny", 9000L, "y"), ("a b:c", 9001L, "z"))
+    val rest = Seq(("tiny", 9000L, "y"), ("a b:c", 9001L, "z"), ("c++", 9002L, "w"),
+      (null: String, 9003L, "v"))
     (big ++ rest).toDF("part", "id", "payload")
       .repartition(4).write.partitionBy("part").parquet(path)
     val before = spark.read.parquet(path).orderBy("id").collect()
