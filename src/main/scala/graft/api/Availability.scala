@@ -1,8 +1,17 @@
 package graft.api
 
 import java.sql.{Date, Timestamp}
+import java.time.LocalDate
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.ops.{Concurrent, Exact, Rankings, Relational, Store, Validation, Windowed}
 
 /** The 17-column fact row (reference: database/schema.py:68-95; probe
@@ -261,11 +270,37 @@ object AvailabilityQueries {
 
   // ---- rankings archive (§3.3) ----------------------------------------
 
+  /** An archive holding more data files than this is folded by the next
+    * refresh: rewritten in one pass instead of appended to, so the file
+    * count the cursor reads and every archive reader lists stays bounded.
+    */
+  val ArchiveFoldFiles = 16
+
   /** Incremental rankings refresh: compute the 13-column pipeline for
     * rows after the archive's max date and append with the overlap
-    * guard (generate_volume_rankings.py:346-379 + :259-293). The archive
-    * is opened once: the cursor and the merge input share one read (and
-    * so one schema inference and one listing).
+    * guard (generate_volume_rankings.py:346-379 + :259-293).
+    *
+    * A tick costs O(day), not O(archive):
+    *  - the cursor is the max of the `date` statistics in the archive's
+    *    parquet footers, read on the driver (no archive scan; a scan only
+    *    when some row group carries no `date` statistics);
+    *  - the slice is `Rankings.pipeline` over the days after the cursor,
+    *    on ONE partition (`coalesce(1)` of the date-pruned input), so its
+    *    windows and final sort need no exchange. The slice is ranked
+    *    alone, as the reference ranks its filtered slice;
+    *  - the slice is checked against the archive's schema (from the same
+    *    footers) and its dates against the cursor, then appended as one
+    *    file. Job commit renames that one file into place, so a
+    *    `spark.read.parquet(archive)` reader sees the whole day or none
+    *    of it, and a reader opened before keeps its own listing. A slice
+    *    with no rows writes nothing.
+    *
+    * The first build writes the whole history with the parallel plan.
+    * An empty archive (NULL cursor) or one with more than
+    * [[ArchiveFoldFiles]] data files is FOLDED: read, merged with the
+    * slice behind the full overlap guard, materialized and overwritten
+    * in one pass, as at most `min(cores, ArchiveFoldFiles / 2)` files
+    * written in parallel.
     */
   def refreshRankingsArchive(spark: SparkSession, df: DataFrame,
                              archivePath: String): Unit =
@@ -276,30 +311,96 @@ object AvailabilityQueries {
     // Hadoop FS, not java.io.File: the archive may live on hdfs://
     // or s3a://, where a driver-local File.exists() is always false and
     // would silently overwrite the accumulated archive.
-    val hPath = new org.apache.hadoop.fs.Path(archivePath)
-    val exists = hPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(hPath)
-    if (!exists) Store.exportParquet(Rankings.pipeline(daily), archivePath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(archivePath)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) Store.exportParquet(Rankings.pipeline(daily), archivePath)
     else {
-      val existing = spark.read.parquet(archivePath)
-      val cursorRow = existing.agg(max("date")).collect()(0)
+      val files = fs.listStatus(root).toSeq.filter { st =>
+        val name = st.getPath.getName
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+      val footers = files.map(st => readFooter(conf, st))
+      val cursor = footerCursor(footers).getOrElse {
+        val r = spark.read.parquet(archivePath).agg(max("date")).head()
+        if (r.isNullAt(0)) None else Some(r.getDate(0).toLocalDate)
+      }
       // Empty archive (e.g. a first run over a no-volume slice) has a
       // NULL cursor; date > NULL would filter out everything forever.
-      val fresh =
-        if (cursorRow.isNullAt(0)) Rankings.pipeline(daily)
-        else Rankings.pipeline(daily.filter(col("date") > lit(cursorRow.getDate(0))))
-      // Eager localCheckpoint materializes the merged rows and CUTS the
-      // lineage to the files we are about to overwrite — the archive is
-      // small by design (~20 MB in the reference), so this is cheap and
-      // avoids a tmp-dir swap that stales Spark's file-listing caches.
-      val merged = Store.appendWithOverlapCheck(existing, fresh, "date")
-        .localCheckpoint(true)
-      Store.exportParquet(merged, archivePath)
-      // Evict stale file listings under both the raw and the
-      // filesystem-qualified key.
-      spark.catalog.refreshByPath(archivePath)
-      spark.catalog.refreshByPath("file:" + archivePath)
+      val slice = cursor.fold(Rankings.pipeline(daily))(c =>
+        Rankings.pipeline(daily.filter(col("date") > lit(c)).coalesce(1)))
+      requireArchiveSchema(slice.schema, footers)
+      cursor match {
+        case Some(c) if files.size <= ArchiveFoldFiles =>
+          val staged = slice.localCheckpoint(eager = true)
+          // Overlap guard on the materialized one-partition slice: one
+          // single-task job (the coalesce keeps the aggregate from adding
+          // an exchange) gives its row count and its first date at or
+          // before the cursor.
+          val g = staged.coalesce(1).agg(count(lit(1)),
+            min(when(col("date") <= lit(c), col("date")))).head()
+          if (!g.isNullAt(1))
+            throw new IllegalArgumentException(
+              s"duplicate date values in append batch: ${g.getDate(1)} (archive ends at $c)")
+          if (g.getLong(0) > 0)
+            staged.write.mode("append").option("compression", "snappy").parquet(archivePath)
+        case _ =>
+          // Eager localCheckpoint materializes the merged rows and CUTS the
+          // lineage to the files we are about to overwrite.
+          val merged = Store.appendWithOverlapCheck(
+            spark.read.parquet(archivePath), slice, "date").localCheckpoint(eager = true)
+          Store.exportParquet(merged.coalesce(
+            math.min(spark.sparkContext.defaultParallelism, ArchiveFoldFiles / 2)), archivePath)
+      }
+    }
+    // Evict stale file listings under both the raw and the
+    // filesystem-qualified key.
+    spark.catalog.refreshByPath(archivePath)
+    spark.catalog.refreshByPath("file:" + archivePath)
+  }
+
+  private def readFooter(conf: org.apache.hadoop.conf.Configuration,
+                         st: org.apache.hadoop.fs.FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try r.getFooter finally r.close()
+  }
+
+  /** The archive's max `date` from its footers' row-group statistics:
+    * `Some(None)` when the archive holds no row, `None` when a row group
+    * carries no usable `date` statistics (the caller scans instead).
+    */
+  private def footerCursor(footers: Seq[ParquetMetadata]): Option[Option[LocalDate]] = {
+    import scala.jdk.CollectionConverters._
+    val maxPerGroup = footers.flatMap(_.getBlocks.asScala).filter(_.getRowCount > 0).map { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == "date").flatMap { c =>
+        val st = c.getStatistics
+        val isDate = c.getPrimitiveType.getLogicalTypeAnnotation
+          .isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
+        if (isDate && st != null && st.hasNonNullValue)
+          Some(st.genericGetMax.asInstanceOf[Integer].longValue)
+        else None
+      }
+    }
+    if (maxPerGroup.exists(_.isEmpty)) None
+    else Some(maxPerGroup.flatten.reduceOption(_ max _).map(LocalDate.ofEpochDay))
+  }
+
+  /** Refuse a slice whose columns differ from the archive's (the
+    * reference's pre-write schema check, generate_volume_rankings.py:196-227):
+    * `spark.read.parquet(archive)` reads every file with one footer's
+    * schema, so an appended file of another shape would be misread.
+    */
+  private def requireArchiveSchema(slice: StructType, footers: Seq[ParquetMetadata]): Unit = {
+    def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    footers.map { m =>
+      val fm = m.getFileMetaData
+      Option(fm.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(new SQLConf).convert(fm.getSchema))
+    }.distinct.find(s => shape(s) != shape(slice)).foreach { s =>
+      throw new IllegalArgumentException(
+        s"rankings slice schema ${slice.simpleString} does not match the archive's " +
+          s"${s.simpleString}")
     }
   }
 

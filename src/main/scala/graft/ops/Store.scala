@@ -288,39 +288,50 @@ object Store {
     * partitions, keep the newest row per key, and dynamically overwrite
     * just those partitions. All other partitions are untouched on disk.
     *
-    * The batch's distinct partition values are collected once and read
-    * back as a static partition predicate (`isin`, plus `IS NULL` when the
-    * batch carries a NULL value, Spark's `__HIVE_DEFAULT_PARTITION__`), so
-    * the scan lists and reads only the touched partitions: cost scales
-    * with the re-probe window, not the table, and a batch of brand-new
-    * partitions reads no existing file. The same values scope the
-    * manifest refresh.
+    * The batch is evaluated exactly once: it is checkpointed eagerly (a
+    * probe batch is a lazy `mapPartitions` over the prober, and every
+    * re-evaluation would probe every cell again), and its distinct
+    * partition values are taken from the checkpoint in one job. They are
+    * read back as a static partition predicate (`isin`, plus `IS NULL`
+    * when the batch carries a NULL value, Spark's
+    * `__HIVE_DEFAULT_PARTITION__`), so the scan lists and reads only the
+    * touched partitions: cost scales with the re-probe window, not the
+    * table, and a batch of brand-new partitions reads no existing file.
+    * The same values scope the manifest refresh.
     */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              partCol: String, keys: Seq[String], tsCol: String,
              tieBreak: String, statsCols: Seq[String] = Nil): Unit =
       withLease(spark, path) { Concurrent.labeled(spark, "store:upsert") {
+    import org.apache.hadoop.fs.Path
     val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
     val savedMode = spark.conf.getOption(overwriteModeKey)
     spark.conf.set(overwriteModeKey, "dynamic")
     try {
       val existing = spark.read.parquet(path)
-      val touched = updates.select(col(partCol)).distinct().collect()
-        .map(r => if (r.isNullAt(0)) null else r.get(0)).toIndexedSeq
+      val batch = updates.select(existing.columns.toIndexedSeq.map(col): _*)
+        .localCheckpoint(eager = true)
+      val touched = batch.select(col(partCol)).rdd
+        .mapPartitions(_.map(r => if (r.isNullAt(0)) null else r.get(0)).toSet.iterator)
+        .collect().distinct.toIndexedSeq
       // Literals, not a semi-join with the batch: the join's build side
       // has no selective filter, so dynamic partition pruning never fires
       // and every partition would be scanned.
       val affected = existing.filter(col(partCol).isin(touched.filter(_ != null): _*) ||
         (if (touched.contains(null)) col(partCol).isNull else lit(false)))
-      val merged = latestByKey(
-        affected.unionByName(updates.select(existing.columns.toIndexedSeq.map(col): _*)),
-        keys, tsCol, tieBreak)
-      // Lineage cut BEFORE the overwrite: without it the write job both
-      // reads and deletes the same partitions, and a mid-commit failure
-      // destroys the only copy of the touched data. The merged batch is
-      // bounded by the re-probe window, so materializing it is cheap
-      // relative to the archive. (Same pattern as refreshRankingsArchive.)
-      val staged = merged.localCheckpoint(eager = true)
+      val merged = latestByKey(affected.unionByName(batch), keys, tsCol, tieBreak)
+      // Lineage cut BEFORE the overwrite when a touched partition exists:
+      // without it the write job both reads and deletes the same
+      // partitions, and a mid-commit failure destroys the only copy of
+      // the touched data. The merged batch is bounded by the re-probe
+      // window, so materializing it is cheap relative to the table. A
+      // batch of brand-new partitions reads nothing on disk, so it needs
+      // no cut (the lease keeps other writers from creating them).
+      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val staged =
+        if (touched.exists(v => fs.exists(new Path(path, partDirName(partCol, v)))))
+          merged.localCheckpoint(eager = true)
+        else merged
       assertLeaseOwner(spark, path) // fence: zombie writers stop BEFORE the overwrite
       staged.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
       // Data-skipping manifest rides the upsert: stats recomputed for
@@ -603,7 +614,8 @@ object Store {
     * read; a touched dir that no longer exists contributes no rows),
     * keep every other manifest row — per-batch cost tracks the batch.
     * Falls back to a full rebuild when no manifest exists yet (a
-    * partial manifest would silently unprune the rest of the table).
+    * partial manifest would silently unprune the rest of the table); an
+    * empty touched set leaves an existing manifest as it is.
     */
   def refreshManifestIncremental(spark: SparkSession, path: String,
                                  partCol: String, touchedVals: Seq[Any],
@@ -611,6 +623,7 @@ object Store {
     val mPath = new org.apache.hadoop.fs.Path(manifestPath(path))
     val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(mPath)) { refreshManifest(spark, path, statsCols); return }
+    if (touchedVals.isEmpty) return // an empty batch leaves every manifest row as it is
     val dirs = touchedVals.map(v => s"$path/${partDirName(partCol, v)}")
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
     // Old rows for touched partitions drop out by on-disk dir fragment —

@@ -12,28 +12,39 @@ object Validation {
     * Reference: validation/continuity.py:74-87 —
     * `unnest(generate_series(start, end, INTERVAL 1 day)) ... NOT IN observed`.
     *
-    * The generated series lives in a single tiny in-memory relation
-    * (`sequence` + `explode` of one row) and the observed side is reduced
-    * to distinct dates before the anti-join, so the join input is bounded
-    * by the calendar span, not the fact-table size.
+    * One shuffle: the expected dates (tag 0, a `sequence` + `explode` of
+    * one row) are unioned with the observed dates (tag 1) and grouped by
+    * date; a date is a gap when its max tag is 0. The observed scan stays
+    * parallel and pre-aggregates map-side, and the grouped output is
+    * bounded by the number of dates, so it finishes and sorts on one
+    * partition with no further exchange.
     */
   def continuityGaps(spark: SparkSession, observed: DataFrame, dateCol: String,
                      start: String, end: String): DataFrame = {
     val expected = spark.range(1).select(
       explode(sequence(
         to_date(lit(start)), to_date(lit(end)), expr("interval 1 day")
-      )).as(dateCol))
+      )).as(dateCol), lit(0).as("__seen"))
     expected
-      .join(observed.select(col(dateCol)).distinct(), Seq(dateCol), "left_anti")
+      .unionByName(observed.select(col(dateCol), lit(1).as("__seen")))
+      .groupBy(dateCol).agg(max("__seen").as("__seen"))
+      .filter(col("__seen") === 0)
+      .select(dateCol)
+      .coalesce(1)
       .orderBy(dateCol)
   }
 
   /** Completeness: group + HAVING count below expectation (A3).
     * Reference: validation/completeness.py:79-89.
+    *
+    * For low-cardinality keys (dates): the filtered groups are sorted
+    * after `coalesce(1)`, above the aggregate's exchange, so the sort
+    * needs no second one.
     */
   def incompleteKeys(df: DataFrame, keyCol: String, minCount: Long): DataFrame =
     df.groupBy(keyCol).agg(count(lit(1)).as("n"))
       .filter(col("n") < minCount)
+      .coalesce(1)
       .orderBy(keyCol)
 
   /** Cross-check: set difference / intersection of two key sets (J6).

@@ -217,6 +217,148 @@ class AvailabilitySpec extends SparkSpec {
     spark.read.parquet(archive).count() shouldBe 4
   }
 
+  // ---- rankings refresh: append + fold ---------------------------------
+
+  /** One day of three symbols whose volumes reshuffle the ranks day to
+    * day; `vol = false` probes the day with no volume at all.
+    */
+  private def volDay(d: java.time.LocalDate, vol: Boolean = true, scale: Double = 1.0) = {
+    import spark.implicits._
+    val k = d.getDayOfYear
+    Seq("BTCUSDT", "ETHUSDT", "SOLUSDT").zipWithIndex.map { case (s, i) =>
+      rec(d.toString, s, vol = if (vol) Some(scale * 1e6 * (1 + (k * (i + 2)) % 7)) else None,
+        trades = Some(k.toLong))
+    }.toDF()
+  }
+
+  /** What the refresh ranks: the rankings pipeline over `df`'s rows. */
+  private def ranked(df: org.apache.spark.sql.DataFrame, stamp: Option[Timestamp] = None) =
+    graft.ops.Rankings.pipeline(
+      df.filter(col("available") && col("quote_volume_usdt").isNotNull)
+        .select(col("date"), col("symbol"), col("quote_volume_usdt").as("volume"),
+          col("trade_count")), stamp)
+
+  private def archiveRows(archive: String): Seq[org.apache.spark.sql.Row] = {
+    val cols = ranked(volDay(java.time.LocalDate.parse("2024-01-01"))).columns.map(col)
+    spark.read.parquet(archive).select(cols.toIndexedSeq: _*).collect().toSeq
+  }
+
+  private def archiveFiles(archive: String): Seq[String] =
+    new java.io.File(archive).listFiles().toSeq.map(_.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith(".")).sorted
+
+  test("rankings refresh: new day, no-volume day, re-probe, fold — the archive is " +
+    "the union of the per-slice pipelines") {
+    import java.time.LocalDate
+    val dir = Files.createTempDirectory("graft-archive-slices").toString
+    val (fact, archive) = (s"$dir/fact", s"$dir/rankings")
+    val d0 = LocalDate.parse("2024-01-01")
+    def upsert(b: org.apache.spark.sql.DataFrame): Unit = Store.upsert(spark, fact, b, "date",
+      Seq("date", "symbol"), "probe_timestamp", "status_code")
+    Store.writePartitioned((0 until 3).map(i => volDay(d0.plusDays(i))).reduce(_ unionByName _),
+      fact, "date")
+    AQ.refreshRankingsArchive(spark, spark.read.parquet(fact), archive) // first build
+    var expected = ranked(spark.read.parquet(fact)).collect().toSeq
+    /** Refresh, and expect the slice of the days after `cursor` appended. */
+    def tick(cursor: LocalDate): Unit = {
+      val slice = ranked(spark.read.parquet(fact).filter(col("date") > lit(Date.valueOf(cursor))))
+        .collect().toSeq
+      AQ.refreshRankingsArchive(spark, spark.read.parquet(fact), archive)
+      expected = expected ++ slice
+      archiveRows(archive) should contain theSameElementsAs expected
+    }
+
+    upsert(volDay(d0.plusDays(3))) // a new day
+    tick(d0.plusDays(2))
+    val files = archiveFiles(archive)
+    upsert(volDay(d0.plusDays(4), vol = false)) // a day with no volume: no file
+    tick(d0.plusDays(3))
+    archiveFiles(archive) shouldBe files
+    // a re-probe of an archived day rides along with the next new day: the
+    // archived day keeps its ranks, the slice is the days after the cursor
+    upsert(volDay(d0.plusDays(2), scale = 3.0)
+      .withColumn("probe_timestamp", lit(Timestamp.valueOf("2024-02-01 02:00:00")))
+      .unionByName(volDay(d0.plusDays(5))))
+    tick(d0.plusDays(3))
+    // new days until the archive folds
+    var day = 6
+    while (archiveFiles(archive).size <= AQ.ArchiveFoldFiles) {
+      volDay(d0.plusDays(day)).write.mode("append").partitionBy("date").parquet(fact)
+      tick(d0.plusDays(day - 1))
+      day += 1
+    }
+    volDay(d0.plusDays(day)).write.mode("append").partitionBy("date").parquet(fact)
+    tick(d0.plusDays(day - 1)) // the fold tick
+    archiveFiles(archive).size should be < AQ.ArchiveFoldFiles
+  }
+
+  test("rankings refresh: the fold keeps the file count bounded and the rows unchanged") {
+    import java.time.LocalDate
+    val archive = Files.createTempDirectory("graft-archive-fold").toString + "/rankings"
+    val d0 = LocalDate.parse("2024-03-01")
+    var df = volDay(d0)
+    AQ.refreshRankingsArchive(spark, df, archive)
+    var folds = 0
+    for (i <- 1 to AQ.ArchiveFoldFiles + 2) {
+      val before = archiveRows(archive)
+      val filesBefore = archiveFiles(archive)
+      df = df.unionByName(volDay(d0.plusDays(i)))
+      AQ.refreshRankingsArchive(spark, df, archive)
+      val after = archiveRows(archive)
+      after should contain theSameElementsAs
+        (before ++ ranked(volDay(d0.plusDays(i))).collect())
+      val files = archiveFiles(archive)
+      files.size should be <= AQ.ArchiveFoldFiles + 1
+      if (filesBefore.size > AQ.ArchiveFoldFiles) {
+        folds += 1
+        files.intersect(filesBefore) shouldBe empty // rewritten in one pass
+      } else files.diff(filesBefore).size shouldBe 1 // one appended file
+    }
+    folds shouldBe 1
+  }
+
+  test("rankings refresh: a reader opened before an append keeps counting its old rows") {
+    import java.time.LocalDate
+    val archive = Files.createTempDirectory("graft-archive-reader").toString + "/rankings"
+    val d0 = LocalDate.parse("2024-04-01")
+    AQ.refreshRankingsArchive(spark, volDay(d0), archive)
+    val reader = spark.read.parquet(archive)
+    val n = reader.count()
+    AQ.refreshRankingsArchive(spark, volDay(d0).unionByName(volDay(d0.plusDays(1))), archive)
+    reader.count() shouldBe n
+    spark.read.parquet(archive).count() shouldBe n + 3
+  }
+
+  test("rankings refresh: a one-day refresh runs at most 4 jobs, all labelled") {
+    import java.time.LocalDate
+    val dir = Files.createTempDirectory("graft-archive-jobs").toString
+    val (fact, archive) = (s"$dir/fact", s"$dir/rankings")
+    val d0 = LocalDate.parse("2024-05-01")
+    Store.writePartitioned(volDay(d0).unionByName(volDay(d0.plusDays(1))), fact, "date")
+    AQ.refreshRankingsArchive(spark, spark.read.parquet(fact), archive)
+    volDay(d0.plusDays(2)).write.mode("append").partitionBy("date").parquet(fact)
+    val df = spark.read.parquet(fact)
+    val jobs = jobDescriptions(AQ.refreshRankingsArchive(spark, df, archive))
+    jobs should not be empty
+    jobs.size should be <= 4
+    jobs.distinct shouldBe Seq("rankings:refresh")
+    spark.read.parquet(archive).count() shouldBe 9
+  }
+
+  test("rankings refresh: a slice whose schema differs from the archive's is refused " +
+    "before any file is written") {
+    import java.time.LocalDate
+    val archive = Files.createTempDirectory("graft-archive-schema").toString + "/rankings"
+    val d0 = LocalDate.parse("2024-06-01")
+    Store.exportParquet(ranked(volDay(d0), Some(Timestamp.valueOf("2024-06-02 00:00:00"))),
+      archive)
+    val files = archiveFiles(archive)
+    val e = intercept[IllegalArgumentException](AQ.refreshRankingsArchive(spark,
+      volDay(d0).unionByName(volDay(d0.plusDays(1))), archive))
+    e.getMessage should include ("generation_timestamp")
+    archiveFiles(archive) shouldBe files
+  }
+
   test("crossCheckSymbols tags only_db / only_api / both (cross_check.py:79-137)") {
     import spark.implicits._
     val api = Seq("BTCUSDT", "ETHUSDT", "FRESHUSDT").toDF("symbol")

@@ -169,6 +169,39 @@ class StoreSpec extends SparkSpec {
     dated() shouldBe before // untouched partitions: same files, same mtimes
   }
 
+  test("upsert evaluates its batch once: a probed batch probes every cell once") {
+    import java.time.LocalDate
+    import graft.ingest.Ingest
+    val path = Files.createTempDirectory("graft-upsert-once").toString + "/t"
+    val symbols = Seq("BTCUSDT", "ETHUSDT", "SOLUSDT")
+    Store.writePartitioned(Ingest.probeDomain(spark, Seq(LocalDate.parse("2024-01-14")),
+      symbols, parallelism = 2)(IntegrationSpec.prober).toDF(), path, "date")
+    val calls = spark.sparkContext.longAccumulator("probe-calls")
+    // a re-probe of the stored day plus two new days: 9 cells
+    val dates = (14 to 16).map(LocalDate.of(2024, 1, _))
+    val batch = Ingest.probeDomain(spark, dates, symbols, parallelism = 2)(
+      StoreSpec.counting(calls)).toDF()
+    Store.upsert(spark, path, batch, "date",
+      Seq("date", "symbol"), "probe_timestamp", "status_code")
+    calls.value shouldBe 9L
+    spark.read.parquet(path).count() shouldBe 9
+  }
+
+  test("upsert of an empty batch leaves the table and its manifest as they are") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-upsert-empty").toString + "/t"
+    val stats = Seq("file_size_bytes")
+    Store.writePartitioned(grid("2024-01-18 02:00:00", 8000000L), path, "date")
+    Store.refreshManifest(spark, path, stats)
+    def manifest() = spark.read.parquet(Store.manifestPath(path))
+      .as[(String, Long, Long, Long)].collect().toSet
+    val (rows, entries) = (rowsOf(spark.read.parquet(path)), manifest())
+    Store.upsert(spark, path, grid("2024-01-19 02:00:00", 9000000L).filter(lit(false)),
+      "date", Seq("date", "symbol"), "probe_timestamp", "file_size_bytes", statsCols = stats)
+    rowsOf(spark.read.parquet(path)) shouldBe rows
+    manifest() shouldBe entries
+  }
+
   test("driver-side listing: a 40-partition table opens with no listing job, same files") {
     val path = Files.createTempDirectory("graft-listing").toString + "/t"
     Store.writePartitioned(days(0, 40, "2024-03-01 02:00:00", 8000000L), path, "date")
@@ -814,4 +847,11 @@ class StoreSpec extends SparkSpec {
     new java.io.File(path).getParentFile.listFiles()
       .count(_.getName.contains(".lease.breaking")) shouldBe 0
   }
+}
+
+object StoreSpec {
+  /** The fixture prober, counting its calls (no spec-instance capture). */
+  def counting(calls: org.apache.spark.util.LongAccumulator)
+      : (String, java.time.LocalDate) => graft.ingest.ProbeResult =
+    (s, d) => { calls.add(1); IntegrationSpec.prober(s, d) }
 }
