@@ -8,9 +8,7 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.ops.{Concurrent, Exact, Rankings, Relational, Store, Validation, Windowed}
 
@@ -288,16 +286,17 @@ object AvailabilityQueries {
     *    on ONE partition (`coalesce(1)` of the date-pruned input), so its
     *    windows and final sort need no exchange. The slice is ranked
     *    alone, as the reference ranks its filtered slice;
-    *  - the slice is checked against the archive's schema (from the same
-    *    footers) and its dates against the cursor, then appended as one
+    *  - the slice is checked against the archive's schema (Spark's row
+    *    metadata in the same footers) and its dates against the cursor, then appended as one
     *    file. Job commit renames that one file into place, so a
     *    `spark.read.parquet(archive)` reader sees the whole day or none
     *    of it, and a reader opened before keeps its own listing. A slice
     *    with no rows writes nothing.
     *
     * The first build writes the whole history with the parallel plan.
-    * An empty archive (NULL cursor) or one with more than
-    * [[ArchiveFoldFiles]] data files is FOLDED: read, merged with the
+    * An empty archive (NULL cursor), one with more than
+    * [[ArchiveFoldFiles]] data files, or one with a file whose footer
+    * carries no Spark schema is FOLDED: read, merged with the
     * slice behind the full overlap guard, materialized and overwritten
     * in one pass, as at most `min(cores, ArchiveFoldFiles / 2)` files
     * written in parallel.
@@ -329,9 +328,15 @@ object AvailabilityQueries {
       // NULL cursor; date > NULL would filter out everything forever.
       val slice = cursor.fold(Rankings.pipeline(daily))(c =>
         Rankings.pipeline(daily.filter(col("date") > lit(c)).coalesce(1)))
-      requireArchiveSchema(slice.schema, footers)
+      // Spark's schema of each file, from its footer. A file written
+      // without it (not by this refresh) cannot be checked here, so such
+      // an archive folds, whose `unionByName` checks the columns instead.
+      val schemas = footers.map(m => Option(m.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
+      requireArchiveSchema(slice.schema, schemas.flatten)
       cursor match {
-        case Some(c) if files.size <= ArchiveFoldFiles =>
+        case Some(c) if files.size <= ArchiveFoldFiles && schemas.forall(_.isDefined) =>
           val staged = slice.localCheckpoint(eager = true)
           // Overlap guard on the materialized one-partition slice: one
           // single-task job (the coalesce keeps the aggregate from adding
@@ -390,14 +395,9 @@ object AvailabilityQueries {
     * `spark.read.parquet(archive)` reads every file with one footer's
     * schema, so an appended file of another shape would be misread.
     */
-  private def requireArchiveSchema(slice: StructType, footers: Seq[ParquetMetadata]): Unit = {
+  private def requireArchiveSchema(slice: StructType, archive: Seq[StructType]): Unit = {
     def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
-    footers.map { m =>
-      val fm = m.getFileMetaData
-      Option(fm.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(new SQLConf).convert(fm.getSchema))
-    }.distinct.find(s => shape(s) != shape(slice)).foreach { s =>
+    archive.distinct.find(s => shape(s) != shape(slice)).foreach { s =>
       throw new IllegalArgumentException(
         s"rankings slice schema ${slice.simpleString} does not match the archive's " +
           s"${s.simpleString}")

@@ -303,7 +303,6 @@ object Store {
              partCol: String, keys: Seq[String], tsCol: String,
              tieBreak: String, statsCols: Seq[String] = Nil): Unit =
       withLease(spark, path) { Concurrent.labeled(spark, "store:upsert") {
-    import org.apache.hadoop.fs.Path
     val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
     val savedMode = spark.conf.getOption(overwriteModeKey)
     spark.conf.set(overwriteModeKey, "dynamic")
@@ -320,18 +319,12 @@ object Store {
       val affected = existing.filter(col(partCol).isin(touched.filter(_ != null): _*) ||
         (if (touched.contains(null)) col(partCol).isNull else lit(false)))
       val merged = latestByKey(affected.unionByName(batch), keys, tsCol, tieBreak)
-      // Lineage cut BEFORE the overwrite when a touched partition exists:
-      // without it the write job both reads and deletes the same
-      // partitions, and a mid-commit failure destroys the only copy of
-      // the touched data. The merged batch is bounded by the re-probe
-      // window, so materializing it is cheap relative to the table. A
-      // batch of brand-new partitions reads nothing on disk, so it needs
-      // no cut (the lease keeps other writers from creating them).
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val staged =
-        if (touched.exists(v => fs.exists(new Path(path, partDirName(partCol, v)))))
-          merged.localCheckpoint(eager = true)
-        else merged
+      // Lineage cut BEFORE the overwrite: without it the write job both
+      // reads and deletes the same partitions, and a mid-commit failure
+      // destroys the only copy of the touched data. The merged batch is
+      // bounded by the re-probe window, so materializing it is cheap
+      // relative to the archive. (Same pattern as refreshRankingsArchive.)
+      val staged = merged.localCheckpoint(eager = true)
       assertLeaseOwner(spark, path) // fence: zombie writers stop BEFORE the overwrite
       staged.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
       // Data-skipping manifest rides the upsert: stats recomputed for
