@@ -359,6 +359,49 @@ class AvailabilitySpec extends SparkSpec {
     archiveFiles(archive) shouldBe files
   }
 
+  test("rankings refresh: an archive file without Spark's schema in its footer is " +
+    "folded, not appended to") {
+    import java.time.LocalDate
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.types._
+    val archive = Files.createTempDirectory("graft-archive-foreign").toString + "/rankings"
+    val d0 = LocalDate.parse("2024-07-01")
+    AQ.refreshRankingsArchive(spark, volDay(d0), archive)
+    // Rewrite the archive with parquet's example writer, which stores no
+    // Spark row metadata.
+    val schema = spark.read.parquet(archive).schema
+    val rows = spark.read.parquet(archive).collect()
+    archiveFiles(archive).foreach(n => new java.io.File(s"$archive/$n").delete())
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pschema = new SparkToParquetSchemaConverter(new SQLConf).convert(schema)
+    val groups = new SimpleGroupFactory(pschema)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$archive/part-0.parquet"))
+      .withConf(conf).withType(pschema).build()
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      schema.fields.zipWithIndex.filter { case (_, i) => !r.isNullAt(i) }.foreach {
+        case (f, i) => f.dataType match {
+          case DateType => g.add(f.name, r.getDate(i).toLocalDate.toEpochDay.toInt)
+          case StringType => g.add(f.name, r.getString(i))
+          case DoubleType => g.add(f.name, r.getDouble(i))
+          case FloatType => g.add(f.name, r.getFloat(i))
+          case LongType => g.add(f.name, r.getLong(i))
+          case ShortType => g.add(f.name, r.getShort(i).toInt)
+          case ByteType => g.add(f.name, r.getByte(i).toInt)
+        }
+      }
+      w.write(g)
+    } finally w.close()
+    val before = archiveRows(archive)
+    AQ.refreshRankingsArchive(spark, volDay(d0).unionByName(volDay(d0.plusDays(1))), archive)
+    archiveFiles(archive) should not contain "part-0.parquet" // rewritten in one pass
+    archiveRows(archive) should contain theSameElementsAs
+      (before ++ ranked(volDay(d0.plusDays(1))).collect())
+  }
+
   test("crossCheckSymbols tags only_db / only_api / both (cross_check.py:79-137)") {
     import spark.implicits._
     val api = Seq("BTCUSDT", "ETHUSDT", "FRESHUSDT").toDF("symbol")
