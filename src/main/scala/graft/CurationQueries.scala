@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.ops.{Dedup, Graph, Maintain, Sampling, Skew, TextOps, Vectors}
+import graft.ops.{Concurrent, Dedup, Graph, Maintain, Sampling, Skew, TextOps, Vectors}
 import graft.ops.TextOps.seededHash60Sql
 
 /** Round-8 third-session additions — the curation/maintenance frontier:
@@ -519,10 +519,14 @@ object CurationQueries {
     * r ∈ {2, 4, 8}. The oracle replays all three bandings off the
     * shared signature CTE.
     */
-  val d17LshTuning: Q = (s, d) =>
-    Dedup.lshTuning(PipelineQueries.corpus(s, d), "id", "text",
+  val d17LshTuning: Q = (s, d) => {
+    // the corpus open infers the table's schema in a job of its own
+    val c = Concurrent.labeled(s, "dedup:lsh_tuning:open")(
+      PipelineQueries.corpus(s, d))
+    Dedup.lshTuning(c, "id", "text",
         shingleN = 3, k = 16, rowsPerBandConfigs = Seq(2, 4, 8), threshold = 0.5)
       .orderBy("rows_per_band")
+  }
   private def d17Block(r: Int): String = {
     val b = 16 / r
     s"""bands$r AS (

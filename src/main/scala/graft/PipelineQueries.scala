@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Dedup, Sketches, TextOps, Vectors}
+import graft.ops.{Concurrent, Dedup, Sketches, TextOps, Vectors}
 
 /** Training-data pipeline queries: deduplication (exact / MinHash-LSH /
   * SimHash), embedding similarity search (brute-force + LSH-bucketed),
@@ -2484,29 +2484,32 @@ object PipelineQueries {
     * whole minhash family rests on; this row keeps the estimator and
     * the ground truth in one oracled result so drift in either breaks
     * the gate. Same persist-then-release pattern as nearDupPairs.
+    *
+    * One persisted (id, hs, sig) frame feeds everything: the signature
+    * is computed map-side off the document's hash array
+    * (`Dedup.sigFromHashSet`, bit-equal to `minhashSigs`), and the
+    * verify reads both sides' hash arrays and signatures in the same two
+    * joins (`Dedup.jaccardVerifyArrays`), so the signature agreement
+    * needs no joins of its own.
     */
   val d10MinhashEst: Q = (s, d) => {
     import s.implicits._
-    val sh = Dedup.shingleHashSet(corpus(s, d), "id", "text", 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count()
-    val sigs = Dedup.minhashSigs(sh, 16)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    val cand = Dedup.lshCandidatesFromSigs(sigs, 4, 16)
-    val agree = cand
-      .join(sigs.select($"id".as("ia"), $"sig".as("sa")), "ia")
-      .join(sigs.select($"id".as("ib"), $"sig".as("sb")), "ib")
-      .withColumn("sig_matches", expr(
-        "aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1L, 0L)), 0L, (acc, v) -> acc + v)"))
-      .select($"ia", $"ib", $"sig_matches")
-    val out = Dedup.jaccardVerify(cand, sh, setCol = "h")
-      .join(agree, Seq("ia", "ib"))
-      .select($"ia", $"ib", $"sig_matches", $"jac")
+    def step[A](name: String)(body: => A): A =
+      Concurrent.labeled(s, s"dedup:minhash:$name")(body)
+    val docs = step("sets") {
+      val hs = Dedup.shingleHashArrays(corpus(s, d), "id", "text", 3)
+        .select($"id", $"hs", Dedup.sigFromHashSet($"hs", 16).as("sig"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      hs.count()
+      hs
+    }
+    val cand = Dedup.lshCandidatesFromSigs(docs.select($"id", $"sig"), 4, 16)
+    val out = step("verify")(Dedup.jaccardVerifyArrays(cand, docs)
+      .select($"ia", $"ib", expr("aggregate(zip_with(sig_a, sig_b, " +
+        "(x, y) -> IF(x = y, 1L, 0L)), 0L, (acc, v) -> acc + v)").as("sig_matches"), $"jac")
       .orderBy("ia", "ib")
-      .localCheckpoint(eager = true)
-    sigs.unpersist()
-    sh.unpersist()
+      .localCheckpoint(eager = true))
+    docs.unpersist()
     out
   }
   val d10MinhashEstSql: String =

@@ -7,7 +7,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.ops.{Concurrent, Exact, Rankings, Relational, Store, Validation, Windowed}
@@ -41,6 +41,26 @@ case class AvailabilityRecord(
   * returns a DataFrame whose plan pushes filters into the scan.
   */
 object AvailabilityQueries {
+
+  // ---- the fact table -------------------------------------------------
+
+  /** The fact table's declared schema: [[AvailabilityRecord]]'s columns
+    * with `date`, the partition column, last and every field nullable —
+    * the schema `spark.read.parquet` infers from a footer and the
+    * partition directories of a table written from these records.
+    */
+  private lazy val FactSchema: StructType = {
+    val fields = Encoders.product[AvailabilityRecord].schema.fields.map(_.copy(nullable = true))
+    StructType(fields.filterNot(_.name == "date") :+ fields.find(_.name == "date").get)
+  }
+
+  /** Open the date-partitioned fact table at `path` with [[FactSchema]].
+    * The rows and columns are those of `spark.read.parquet(path)`, but no
+    * job reads a footer to infer the schema: partition discovery is the
+    * open's only work.
+    */
+  def open(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FactSchema).parquet(path)
 
   // ---- snapshots (queries/snapshots.py) -------------------------------
 

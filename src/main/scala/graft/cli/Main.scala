@@ -73,22 +73,22 @@ object Main {
 
     case "snapshot" :: path :: date :: rest =>
       withSession(spark => emit(AvailabilityQueries.availableSymbolsOnDate(
-        spark.read.parquet(path), java.sql.Date.valueOf(date)), rest))
+        AvailabilityQueries.open(spark, path), java.sql.Date.valueOf(date)), rest))
 
     case "timeline" :: path :: symbol :: rest =>
       withSession(spark =>
-        emit(AvailabilityQueries.symbolTimeline(spark.read.parquet(path), symbol), rest))
+        emit(AvailabilityQueries.symbolTimeline(AvailabilityQueries.open(spark, path), symbol), rest))
 
     case "analytics" :: path :: rest =>
       withSession(spark =>
-        emit(AvailabilityQueries.dailyAvailabilityCounts(spark.read.parquet(path)), rest))
+        emit(AvailabilityQueries.dailyAvailabilityCounts(AvailabilityQueries.open(spark, path)), rest))
 
     case "volume" :: path :: date :: rest =>
       val n = rest.sliding(2).collectFirst {
         case Seq("--top", v) => v.toInt
       }.getOrElse(10)
       withSession(spark => emit(AvailabilityQueries.topSymbolsByVolume(
-        spark.read.parquet(path), java.sql.Date.valueOf(date), n), rest))
+        AvailabilityQueries.open(spark, path), java.sql.Date.valueOf(date), n), rest))
 
     // reference `query range <start> <end>` (cli/query.py:70-89,182):
     // distinct symbols available in the range; --counts switches to the
@@ -97,10 +97,10 @@ object Main {
       withSession { spark =>
         val df =
           if (rest.contains("--counts"))
-            AvailabilityQueries.symbolCountByDateRange(spark.read.parquet(path),
+            AvailabilityQueries.symbolCountByDateRange(AvailabilityQueries.open(spark, path),
               java.sql.Date.valueOf(start), java.sql.Date.valueOf(end))
           else
-            AvailabilityQueries.symbolsInRange(spark.read.parquet(path),
+            AvailabilityQueries.symbolsInRange(AvailabilityQueries.open(spark, path),
               java.sql.Date.valueOf(start), java.sql.Date.valueOf(end))
         emit(df, rest)
       }
@@ -108,7 +108,7 @@ object Main {
     // reference `query volume percentile <symbol> <date>` (volume.py:96-146)
     case "percentile" :: path :: symbol :: date :: rest =>
       withSession(spark => emit(AvailabilityQueries.volumePercentile(
-        spark.read.parquet(path), symbol, java.sql.Date.valueOf(date)), rest))
+        AvailabilityQueries.open(spark, path), symbol, java.sql.Date.valueOf(date)), rest))
 
     // sketch-tier extensions of the reference's volume math: per-symbol
     // volume quantiles from the mergeable bottom-k sample, and
@@ -118,7 +118,7 @@ object Main {
         case Seq("--k", v) => v.toInt
       }.getOrElse(256)
       withSession(spark => emit(AvailabilityQueries.volumeQuantileSketch(
-        spark.read.parquet(path), java.sql.Date.valueOf(start),
+        AvailabilityQueries.open(spark, path), java.sql.Date.valueOf(start),
         java.sql.Date.valueOf(end), k), rest))
 
     case "mostavailable" :: path :: rest =>
@@ -126,14 +126,14 @@ object Main {
         case Seq("--top", v) => v.toInt
       }.getOrElse(20)
       withSession(spark => emit(AvailabilityQueries.mostAvailableSymbols(
-        spark.read.parquet(path), topK = n), rest))
+        AvailabilityQueries.open(spark, path), topK = n), rest))
 
     case "sampledays" :: path :: rest =>
       val k = rest.sliding(2).collectFirst {
         case Seq("--k", v) => v.toInt
       }.getOrElse(10)
       withSession(spark => emit(AvailabilityQueries.sampleDays(
-        spark.read.parquet(path), k), rest))
+        AvailabilityQueries.open(spark, path), k), rest))
 
     // ---- extension tier: the LLM-pipeline operators, reference-style
     // ergonomics (cli/query.py:135-189 exposes analytics the same way).
@@ -259,7 +259,7 @@ object Main {
           java.nio.file.Paths.get(jsonPath)), "UTF-8")
         val api = graft.ingest.Ingest.parseExchangeInfo(spark, body)
         emit(AvailabilityQueries.crossCheckSymbols(
-          spark.read.parquet(path), api, java.sql.Date.valueOf(date)), rest)
+          AvailabilityQueries.open(spark, path), api, java.sql.Date.valueOf(date)), rest)
       }
 
     // the composed curation pipeline over the documents table: emits the

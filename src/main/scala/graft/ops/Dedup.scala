@@ -60,11 +60,26 @@ object Dedup {
     * comparison is exact either way.
     */
   def shingleHashSet(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    shingleHashes(df, idCol, textCol, n).distinct()
+
+  /** The same sets as [[shingleHashSet]], one row per document: (id,
+    * hs — the sorted distinct hash array). `collect_set` takes the
+    * distinct's place in the one exchange; a document with no shingle
+    * has no row. The form [[jaccardVerifyArrays]] reads.
+    */
+  private[graft] def shingleHashArrays(df: DataFrame, idCol: String, textCol: String,
+                                       n: Int): DataFrame =
+    hashArraysOf(shingleHashes(df, idCol, textCol, n))
+
+  /** (id, h) per shingle occurrence — not yet distinct. */
+  private def shingleHashes(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     Partitioning.spread(df)
       .select(col(idCol).as("id"),
         graft.functions.ShingleGenerator.shingles(col(textCol), n).as("sh"))
       .select(col("id"), TextOps.hash60(col("sh")).as("h"))
-      .distinct()
+
+  private def hashArraysOf(idHashes: DataFrame): DataFrame =
+    idHashes.groupBy(col("id")).agg(sort_array(collect_set(col("h"))).as("hs"))
 
   /** Per-document shingle-hash fingerprint (min/max hash + distinct
     * shingle count) in ONE exchange. The naive formulation —
@@ -376,9 +391,18 @@ object Dedup {
       .distinct()
 
   /** Exact n-gram Jaccard for candidate pairs, against the shingle sets
-    * (string `sh` column or hashed `h` column — pass `setCol`).
-    * inter/union computed from set sizes: |A∩B| via equi-join on shingle,
-    * |A∪B| = |A|+|B|−|A∩B|.
+    * stored as ROWS (string `sh` column or hashed `h` column — pass
+    * `setCol`). inter/union computed from set sizes: |A∩B| via equi-join
+    * on shingle, |A∪B| = |A|+|B|−|A∩B|.
+    *
+    * This form is for callers whose sets live as (id, shingle) rows and
+    * are never folded into one row per document: the keep-best store's
+    * stored hashes ([[KeepBestIndexStore]]), the incremental probe
+    * ([[incrementalNearDupPairsFromSets]]), `tools.DupStress` and the
+    * specs. A caller that holds (or builds in its existing shuffle) one
+    * hash array per document verifies with [[jaccardVerifyArrays]]
+    * instead: the join + group-by here moves Σ|A| shingle rows per
+    * candidate pair, the array form moves two rows.
     */
   def jaccardVerify(cand: DataFrame, shingles: DataFrame,
                     setCol: String = "sh"): DataFrame =
@@ -407,6 +431,35 @@ object Dedup {
       .join(sizes.select(col("id").as("ib"), col("n").as("nb")), Seq("ib"))
       .withColumn("jac",
         col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter")))
+  }
+
+  /** Exact Jaccard for candidate pairs (ia, ib, extra…) against one
+    * sorted hashed-shingle array per document: `sets` holds (id, hs,
+    * side…). Each side joins `sets` once, and the pair's intersection is
+    * `size(array_intersect(ha, hb))` within the row, so no shingle row
+    * is exploded or shuffled. The arithmetic is [[jaccardVerify]]'s —
+    * `inter`, `na` and `nb` as Long, `jac = inter * 1.0 / (na + nb -
+    * inter)` — so the doubles are bit-identical, and pairs sharing no
+    * shingle are dropped as the shingle join drops them (DedupSpec pins
+    * the two forms equal).
+    *
+    * Output: the candidate's columns, each extra `sets` column c of
+    * both sides as `c_a`/`c_b`, then inter, na, nb and jac. Used by
+    * every MinHash caller that holds per-document (or per-group) arrays:
+    * `q_d10_minhash_est`, [[lshTuning]] and [[nearDupPairsFromGroups]].
+    */
+  private[graft] def jaccardVerifyArrays(cand: DataFrame, sets: DataFrame): DataFrame = {
+    val side = sets.columns.toSeq.filterNot(Set("id", "hs"))
+    def of(s: String) = sets.select(col("id").as(s"i$s") +: col("hs").as(s"h$s") +:
+      side.map(c => col(c).as(s"${c}_$s")): _*)
+    cand.join(of("a"), "ia").join(of("b"), "ib")
+      .withColumn("inter", size(array_intersect(col("ha"), col("hb"))).cast(LongType))
+      .where(col("inter") > 0)
+      .withColumn("na", size(col("ha")).cast(LongType))
+      .withColumn("nb", size(col("hb")).cast(LongType))
+      .withColumn("jac",
+        col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter")))
+      .drop("ha", "hb")
   }
 
   /** Full near-dup pipeline: shingle → minhash(k) → LSH(bands) →
@@ -438,7 +491,7 @@ object Dedup {
     // of racing to fill it.
     val grouped = contentGroups(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grouped.count()
+    Concurrent.labeled(df.sparkSession, "dedup:near_dup:groups")(grouped.count())
     val out = nearDupPairsFromGroups(grouped, k, rowsPerBand, threshold)
     grouped.unpersist()
     out
@@ -456,30 +509,26 @@ object Dedup {
     */
   def nearDupPairsFromGroups(grouped: DataFrame, k: Int, rowsPerBand: Int,
                              threshold: Double): DataFrame = {
-    // Rep-level hashed shingle sets for the verifier: an explode over
-    // cached rows, not a second materialization.
-    val repSh = grouped.select(col("rep").as("id"), explode(col("hs")).as("h"))
     // Signatures come map-side off the cached hs arrays (sigFromHashSet
     // — bit-equal to minhashSigs, zero movement), and banding is plain
     // pairsWithinBuckets, NOT the sig-collapsing lshCandidatesFromSigs:
     // contents are already collapsed here, so residual bucket occupancy
     // is the distinct-content near-dup family size — output-bounded —
     // and the sig-collapse would only add its exchange + expansion
-    // joins for nothing. Set sizes come off the grouped frame map-side.
-    val repSigs = grouped.select(col("rep").as("id"),
-      sigFromHashSet(col("hs"), k).as("sig"))
+    // joins for nothing. The verify reads the same cached arrays.
+    val reps = grouped.select(col("rep").as("id"), col("hs"))
+    val repSigs = reps.select(col("id"), sigFromHashSet(col("hs"), k).as("sig"))
     val cand = pairsWithinBuckets(bandsOf(repSigs, rowsPerBand, k))
-    val sizes = grouped.select(col("rep").as("id"),
-      size(col("hs")).cast(LongType).as("n"))
-    val repVerified = jaccardVerifySized(cand, repSh, sizes, setCol = "h")
+    val repVerified = jaccardVerifyArrays(cand, reps)
       .filter(col("jac") >= threshold)
       .select(col("ia").as("ra"), col("ib").as("rb"), col("jac"))
     // Exact copies have identical sets: Jaccard exactly 1.0. The verified
     // pair set is linear in candidates, not corpus: materialize it
     // eagerly so the caller can release the groups cache — repeated
     // invocations must not leak storage.
-    DupGroups.expand(grouped, repVerified, Seq(lit(1.0).as("jac")), lit(1.0 >= threshold))
-      .localCheckpoint(eager = true)
+    Concurrent.labeled(grouped.sparkSession, "dedup:near_dup:pairs")(
+      DupGroups.expand(grouped, repVerified, Seq(lit(1.0).as("jac")), lit(1.0 >= threshold))
+        .localCheckpoint(eager = true))
   }
 
   /** One group row per DISTINCT hashed shingle SET: (hs — the sorted
@@ -495,27 +544,13 @@ object Dedup {
     */
   private[graft] def contentGroups(df: DataFrame, idCol: String, textCol: String,
                                    shingleN: Int): DataFrame =
-    contentGroupsOf(Partitioning.spread(df)
-      .select(col(idCol).as("id"),
-        graft.functions.ShingleGenerator.shingles(col(textCol), shingleN).as("sh"))
-      .select(col("id"), TextOps.hash60(col("sh")).as("h")))
+    contentGroupsOf(shingleHashes(df, idCol, textCol, shingleN))
 
   /** [[contentGroups]] of (id, h) shingle-hash rows — also the keep-best
     * store's groups, rebuilt from its stored hashes.
     */
   private[graft] def contentGroupsOf(idHashes: DataFrame): DataFrame =
-    DupGroups.collapse(idHashes.groupBy(col("id"))
-      .agg(sort_array(collect_set(col("h"))).as("hs")), Seq("hs"), "id")
-
-  /** The rep-level shingle postings and set sizes of a (persisted)
-    * [[contentGroups]] frame — both map-side off the cached group rows;
-    * shared by [[lshTuning]] and the LSH chooser so their arithmetic
-    * stays in lockstep (both oracles and the DupStress K-replication
-    * identity depend on identical group semantics).
-    */
-  private def repPostings(groups: DataFrame): (DataFrame, DataFrame) =
-    (groups.select(col("rep").as("id"), explode(col("hs")).as("h")),
-      groups.select(col("rep").as("id"), size(col("hs")).cast(LongType).as("n")))
+    DupGroups.collapse(hashArraysOf(idHashes), Seq("hs"), "id")
 
   /** The within-group member-pair weight Σ C(m, 2) over a
     * [[contentGroups]] frame — one driver scalar.
@@ -1214,9 +1249,10 @@ object Dedup {
     // under every config — so they surface as rep-level candidates in
     // every configuration and are verified EXACTLY like any other
     // candidate pair.
+    def step[A](s: String)(body: => A): A =
+      Concurrent.labeled(spark, s"dedup:lsh_tuning:$s")(body)
     val groups = contentGroups(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    groups.count()
     // COUNT AT REPRESENTATIVE LEVEL — member pairs are never
     // enumerated. Every member pair maps to exactly one (group, group)
     // pair (an id belongs to one content group), so over the expanded
@@ -1228,8 +1264,9 @@ object Dedup {
     // On a dup-heavy corpus the tuning table therefore costs
     // O(distinct²-in-bucket), not O(output) — the measurement stays
     // cheap even when the relation it measures explodes.
-    val nWithin = withinPairs(groups)
-    val (repSh, sizes) = repPostings(groups)
+    // The within-pair sum is the first action over the groups: it fills
+    // the cache every later step reads.
+    val nWithin = step("groups")(withinPairs(groups))
     val withinVerified = if (1.0 >= threshold) nWithin else 0L
     // Signatures come map-side off the cached hs arrays (sigFromHashSet
     // — bit-equal to minhashSigs, zero movement). The member count
@@ -1240,23 +1277,24 @@ object Dedup {
     // tag into a single bucket aggregation, the per-config weighted
     // counts are one groupBy, and — since the exact-Jaccard of a pair
     // does not depend on which banding surfaced it — each DISTINCT
-    // pair is verified ONCE and every config reuses the verdict
-    // through one candidate-bounded join.
-    val repCandAll = weightedRepCandAll(groups, rowsPerBandConfigs, k)
-    val candByCfg = repCandAll.groupBy(col("rpb"))
-      .agg(coalesce(sum(col("w")), lit(0L)).as("nc"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val verified = jaccardVerifySized(
-        repCandAll.select(col("ia"), col("ib")).distinct(), repSh, sizes, "h")
+    // pair is verified ONCE, against the cached groups' hs arrays, and
+    // every config reuses the verdict through one candidate-bounded left
+    // join that sums both counts in one aggregate.
+    val repCandAll = step("candidates")(weightedRepCandAll(groups, rowsPerBandConfigs, k))
+    val verified = jaccardVerifyArrays(
+        repCandAll.select(col("ia"), col("ib")).distinct(),
+        groups.select(col("rep").as("id"), col("hs")))
       .filter(col("jac") >= threshold)
-      .select(col("ia"), col("ib"))
-    val verByCfg = repCandAll.join(verified, Seq("ia", "ib"))
+      .select(col("ia"), col("ib"), lit(true).as("v"))
+    val byCfg = step("verify")(repCandAll.join(verified, Seq("ia", "ib"), "left")
       .groupBy(col("rpb"))
-      .agg(coalesce(sum(col("w")), lit(0L)).as("nv"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      .agg(coalesce(sum(col("w")), lit(0L)).as("nc"),
+        coalesce(sum(when(col("v"), col("w"))), lit(0L)).as("nv"))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
     val rows = rowsPerBandConfigs.map { r =>
-      val nCand = nWithin + candByCfg.getOrElse(r, 0L)
-      val nVer = withinVerified + verByCfg.getOrElse(r, 0L)
+      val (nc, nv) = byCfg.getOrElse(r, (0L, 0L))
+      val nCand = nWithin + nc
+      val nVer = withinVerified + nv
       (r, k / r, nCand, nVer,
         if (nCand == 0) None else Some(nVer * 1000000L / nCand))
     }
@@ -1396,7 +1434,11 @@ object Dedup {
     BandChooser.Family("lsh",
       Seq("rows_per_band" -> identity, "n_bands" -> (k / _)),
       preferLarger = true, "sampleRepCap", (groups, configs, pin) => {
-        val (repSh, fullSizes) = repPostings(groups)
+        // Rep-level shingle postings and set sizes, map-side off the
+        // cached group rows: the truth side's inverted index.
+        val repSh = groups.select(col("rep").as("id"), explode(col("hs")).as("h"))
+        val fullSizes = groups.select(col("rep").as("id"),
+          size(col("hs")).cast(LongType).as("n"))
         // Informative-universe gate for the truth side only (candidates
         // band over the FULL sets — that is what production LSH sees).
         val (postings, sizes) = truthDfCap.fold((repSh, fullSizes)) { cap =>

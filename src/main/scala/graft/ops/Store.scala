@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StringType}
 
 /** Partitioned-Parquet storage with UPSERT semantics (SURVEY.md §1.3,
   * §2.1 S2–S4) — the reference's `INSERT OR REPLACE` keyed on
@@ -506,14 +506,6 @@ object Store {
     */
   def manifestPath(path: String): String = s"$path/_manifest"
 
-  private def partDirName(partCol: String, v: Any): String = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val s =
-      if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      else ExternalCatalogUtils.escapePathName(v.toString)
-    s"$partCol=$s"
-  }
-
   /** Per-file stats frame: (file, nrows, min_c/max_c per stats col). */
   private def statsOf(df: DataFrame, statsCols: Seq[String]): DataFrame =
     df.groupBy(input_file_name().as("file"))
@@ -557,9 +549,11 @@ object Store {
     *
     * The tree walk runs on the driver — bounded by FILE COUNT, not
     * data, the same scale class as the manifest itself (swap in a
-    * distributed listing past ~10^6 files). Paths are normalized on
-    * both sides ('file:///x' vs 'file:/x' scheme spellings differ
-    * between `input_file_name` and the Hadoop listing).
+    * distributed listing past ~10^6 files). Listed paths are compared in
+    * their URI form, the form `input_file_name` records (an escaped
+    * partition value such as `02%3A00` is `02%253A00` there), and the
+    * scheme is normalized on both sides ('file:///x' vs 'file:/x'
+    * spellings differ between `input_file_name` and the Hadoop listing).
     */
   def manifestAudit(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -571,7 +565,7 @@ object Store {
         val name = st.getPath.getName
         if (name.startsWith("_") || name.startsWith(".")) Nil
         else if (st.isDirectory) walk(st.getPath)
-        else if (name.endsWith(".parquet")) Seq(st.getPath.toString)
+        else if (name.endsWith(".parquet")) Seq(st.getPath.toUri.toString)
         else Nil
       }
     def norm(c: org.apache.spark.sql.Column) =
@@ -605,28 +599,48 @@ object Store {
   /** Incremental refresh after an upsert or purge: recompute stats ONLY
     * for the files under the touched partition dirs (a partition-pruned
     * read; a touched dir that no longer exists contributes no rows),
-    * keep every other manifest row — per-batch cost tracks the batch.
-    * Falls back to a full rebuild when no manifest exists yet (a
-    * partial manifest would silently unprune the rest of the table); an
-    * empty touched set leaves an existing manifest as it is.
+    * keep the rows of every other partition dir on disk — per-batch cost
+    * tracks the batch. Falls back to a full rebuild when no manifest
+    * exists yet (a partial manifest would silently unprune the rest of
+    * the table); an empty touched set leaves an existing manifest as it
+    * is.
+    *
+    * Touched partitions are matched by VALUE, as [[compact]] matches
+    * them: each listed dir name is decoded (`unescapePathName`, the
+    * default-partition name as NULL) and compared with the value's
+    * string form as Spark casts it when it names the dir. Names are
+    * never rebuilt from `toString`, which misses timestamps
+    * (`02:00:00.0` against a dir `02%3A00%3A00`). Manifest rows are
+    * kept by their parent dir as `input_file_name` spells it (the URI
+    * form of the listed path).
     */
   def refreshManifestIncremental(spark: SparkSession, path: String,
                                  partCol: String, touchedVals: Seq[Any],
                                  statsCols: Seq[String]): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val mPath = new org.apache.hadoop.fs.Path(manifestPath(path))
     val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(mPath)) { refreshManifest(spark, path, statsCols); return }
     if (touchedVals.isEmpty) return // an empty batch leaves every manifest row as it is
-    val dirs = touchedVals.map(v => s"$path/${partDirName(partCol, v)}")
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    // Old rows for touched partitions drop out by on-disk dir fragment —
-    // the same escaped names the writer produced.
-    val frags = touchedVals.map(v => "/" + partDirName(partCol, v) + "/")
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val touched = touchedVals.map(v =>
+      if (v == null) null
+      else String.valueOf(Cast(Literal.create(v), StringType, tz).eval())).toSet
+    val (touchedDirs, keptDirs) = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
+      .partition { st =>
+        val raw = st.getPath.getName.stripPrefix(s"$partCol=")
+        touched.contains(
+          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+          else ExternalCatalogUtils.unescapePathName(raw))
+      }
+    val keptNames = keptDirs.map(_.getPath.toUri.getRawPath.split('/').last)
     val keep = spark.read.parquet(mPath.toString)
-      .filter(!frags.map(f => col("file").contains(f)).reduce(_ || _))
-    (if (dirs.isEmpty) keep
-     else keep.unionByName(statsOf(
-       spark.read.option("basePath", path).parquet(dirs: _*), statsCols)))
+      .filter(regexp_extract(col("file"), "/([^/]+)/[^/]+$", 1).isin(keptNames: _*))
+    (if (touchedDirs.isEmpty) keep
+     else keep.unionByName(statsOf(spark.read.option("basePath", path)
+       .parquet(touchedDirs.map(_.getPath.toString): _*), statsCols)))
       .localCheckpoint(eager = true)
       .write.mode(SaveMode.Overwrite).parquet(mPath.toString)
   }

@@ -36,6 +36,20 @@ class AvailabilitySpec extends SparkSpec {
     AQ.availableSymbolsOnDate(grid, Date.valueOf("2030-01-01")).count() shouldBe 0
   }
 
+  test("open reads the fact table with its declared schema: no job, the rows and " +
+    "schema of spark.read.parquet") {
+    val path = Files.createTempDirectory("graft-open").toString + "/fact"
+    Store.writePartitioned(grid.unionByName(spark.createDataFrame(Seq(
+      rec("2024-01-18", "BTCUSDT", vol = Some(1.5), trades = Some(3L)),
+      rec("2024-01-18", "XRPUSDT", avail = false)))), path, "date")
+    var opened: org.apache.spark.sql.DataFrame = null
+    jobDescriptions { opened = AQ.open(spark, path) } shouldBe empty
+    val inferred = spark.read.parquet(path)
+    opened.schema shouldBe inferred.schema
+    opened.collect().toSet shouldBe inferred.collect().toSet
+    opened.count() shouldBe 11
+  }
+
   test("range: distinct symbols over the span") {
     AQ.symbolsInRange(grid, Date.valueOf("2024-01-15"), Date.valueOf("2024-01-17"))
       .collect().map(_.getString(0)).toSeq shouldBe Seq("BTCUSDT", "ETHUSDT", "SOLUSDT")

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, SampleGate, TextOps}
 
@@ -1185,5 +1186,52 @@ class DedupSpec extends SparkSpec {
     val sh = Dedup.simhash(dupHeavy, "id", "text")
     Dedup.simhashPairs(sh, 6).collect().toSet shouldBe
       Dedup.simhashPairs(sh, 6, nBands = 4).collect().toSet
+  }
+
+  test("jaccardVerifyArrays equals the shingle-level jaccardVerify on exact copies, " +
+    "near copies, single-shingle docs and docs with no shingles") {
+    import spark.implicits._
+    val edge = Seq((9001L, "one two three"), (9002L, "one two three"),
+      (9003L, "two three four"), (9004L, "tiny"), (9005L, "")).toDF("id", "text")
+    val all = docs.union(dupHeavy.filter($"id" % 1000 >= 22)).union(edge)
+    val ids = all.select($"id")
+    // every pair, including ones sharing no shingle and ones with a
+    // shingle-less side: the kernel must drop exactly what the join drops
+    val cand = ids.as("a").crossJoin(ids.as("b"))
+      .where($"a.id" < $"b.id").select($"a.id".as("ia"), $"b.id".as("ib"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("ia", "ib", "inter", "na", "nb", "jac")
+        .as[(Long, Long, Long, Long, Long, Double)].collect().toSet
+    val byRows = rows(Dedup.jaccardVerify(cand,
+      Dedup.shingleHashSet(all, "id", "text", 3), setCol = "h"))
+    val byArrays = rows(Dedup.jaccardVerifyArrays(cand,
+      Dedup.shingleHashArrays(all, "id", "text", 3)))
+    byArrays shouldBe byRows
+    byRows.map(r => (r._1, r._2)) should contain((9001L, 9002L)) // exact single-shingle copies
+    byRows.find(r => (r._1, r._2) == (9001L, 9002L)).get._6 shouldBe 1.0
+    byRows.exists(r => r._1 >= 9004L || r._2 >= 9004L) shouldBe false // no shingles
+    byRows.exists(r => r._6 < 1.0) shouldBe true // near copies
+  }
+
+  test("the dedup steps label every job: dedup:minhash, dedup:lsh_tuning, dedup:near_dup") {
+    val dir = Files.createTempDirectory("graft-d10").toString
+    dupHeavy.select(col("id").as("doc_id"), col("text"))
+      .write.parquet(s"$dir/documents.parquet")
+    val d10 = jobDescriptions(PipelineQueries.d10MinhashEst(spark, dir))
+    val tuning = jobDescriptions(Dedup.lshTuning(dupHeavy, "id", "text", 3, 16, Seq(2, 4), 0.5))
+    val near = jobDescriptions(Dedup.nearDupPairs(dupHeavy, "id", "text"))
+    for ((jobs, prefix) <- Seq(d10 -> "dedup:minhash:", tuning -> "dedup:lsh_tuning:",
+        near -> "dedup:near_dup:")) {
+      jobs should not be empty
+      jobs.filterNot(_.startsWith(prefix)) shouldBe empty
+    }
+  }
+
+  test("one q_d10_minhash_est call runs at most 24 jobs") {
+    val dir = Files.createTempDirectory("graft-d10-jobs").toString
+    dupHeavy.select(col("id").as("doc_id"), col("text"))
+      .write.parquet(s"$dir/documents.parquet")
+    PipelineQueries.d10MinhashEst(spark, dir) // warm: first-use class loading
+    jobDescriptions(PipelineQueries.d10MinhashEst(spark, dir)).size should be <= 24
   }
 }

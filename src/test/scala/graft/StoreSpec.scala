@@ -202,6 +202,28 @@ class StoreSpec extends SparkSpec {
     manifest() shouldBe entries
   }
 
+  test("upsert of an existing hour on a timestamp-partitioned table keeps the manifest " +
+    "in step with the disk") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-upsert-hour").toString + "/t"
+    val probe = Timestamp.valueOf("2024-01-14 05:00:00")
+    def hours(hs: Seq[String], v: Long, at: Timestamp) =
+      (for (h <- hs; k <- Seq("a", "b")) yield (Timestamp.valueOf(h), k, v, at))
+        .toDF("hour", "key", "v", "probe_timestamp")
+    Store.writePartitioned(
+      hours(Seq("2024-01-14 02:00:00", "2024-01-14 03:30:00.5"), 1L, probe), path, "hour")
+    Store.refreshManifest(spark, path, Seq("v"))
+    Store.manifestAudit(spark, path).count() shouldBe 0L
+    Store.upsert(spark, path,
+      hours(Seq("2024-01-14 02:00:00"), 7L, Timestamp.valueOf("2024-01-14 06:00:00")),
+      "hour", Seq("hour", "key"), "probe_timestamp", "v", statsCols = Seq("v"))
+    Store.manifestAudit(spark, path).count() shouldBe 0L
+    val m = spark.read.parquet(Store.manifestPath(path))
+    m.agg(sum("nrows")).head().getLong(0) shouldBe 4L
+    m.agg(max("max_v")).head().getLong(0) shouldBe 7L
+    spark.read.parquet(path).filter($"v" === 7L).count() shouldBe 2L
+  }
+
   test("driver-side listing: a 40-partition table opens with no listing job, same files") {
     val path = Files.createTempDirectory("graft-listing").toString + "/t"
     Store.writePartitioned(days(0, 40, "2024-03-01 02:00:00", 8000000L), path, "date")
