@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.ops.{Concurrent, Dedup, Graph, Maintain, Sampling, Skew, TextOps, Vectors}
@@ -18,7 +18,7 @@ import graft.ops.TextOps.seededHash60Sql
   * DuckDB aggregate, portable md5-based hash60).
   */
 object CurationQueries {
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   private def cosSql(x: String, y: String): String = {
     val c = s"list_dot_product($x, $y) / (sqrt(list_dot_product($x, $x)) * sqrt(list_dot_product($y, $y)))"
@@ -525,7 +525,7 @@ object CurationQueries {
       PipelineQueries.corpus(s, d))
     Dedup.lshTuning(c, "id", "text",
         shingleN = 3, k = 16, rowsPerBandConfigs = Seq(2, 4, 8), threshold = 0.5)
-      .orderBy("rows_per_band")
+      .coalesce(1).sortWithinPartitions("rows_per_band") // 3 local rows: one task, no range sort
   }
   private def d17Block(r: Int): String = {
     val b = 16 / r
@@ -570,7 +570,7 @@ object CurationQueries {
     Dedup.lshRecall(PipelineQueries.corpus(s, d), "id", "text",
         shingleN = 3, k = 16, rowsPerBandConfigs = Seq(2, 4, 8),
         threshold = 0.5, sampleMod = 2)
-      .orderBy("rows_per_band")
+      .coalesce(1).sortWithinPartitions("rows_per_band") // 3 local rows: one task, no range sort
   private def d19Block(r: Int): String = {
     val b = 16 / r
     s"""bands$r AS (
@@ -1325,71 +1325,37 @@ object CurationQueries {
 
   // ---- registry --------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_s9_incr_join_view" -> s9IncrJoinView,
-    "q_e17_label_noise" -> e17LabelNoise,
-    "q_e18_separation" -> e18Separation,
-    "q_t27_bm25" -> t27Bm25,
-    "q_d16_cross_source" -> d16CrossSource,
-    "q_p13_curriculum" -> p13Curriculum,
-    "q_v7_skew_report" -> v7SkewReport,
-    "q_g12_jaccard_neighbors" -> g12JaccardNeighbors,
-    "q_t28_fertility" -> t28Fertility,
-    "q_e19_ood" -> e19Ood,
-    "q_st12_stream_upsert" -> st12StreamUpsert,
-    "q_s10_incr_join_agg" -> s10IncrJoinAgg,
-    "q_t29_source_divergence" -> t29SourceDivergence,
-    "q_d17_lsh_tuning" -> d17LshTuning,
-    "q_k12_decayed_counts" -> k12DecayedCounts,
-    "q_e20_ivf_tuning" -> e20IvfTuning,
-    "q_e21_dim_truncation" -> e21DimTruncation,
-    "q_t30_hybrid_rrf" -> t30HybridRrf,
-    "q_g13_communities" -> g13Communities,
-    "q_v8_theilsen" -> v8TheilSen,
-    "q_p15_interleave" -> p15Interleave,
-    "q_v9_cusum" -> v9Cusum,
-    "q_t31_retrieval_eval" -> t31RetrievalEval,
-    "q_st13_stream_cdc" -> st13StreamCdc,
-    "q_t32_blocklist_gate" -> t32BlocklistGate,
-    "q_d18_contamination_report" -> d18ContaminationReport,
-    "q_s11_partition_evolution" -> s11PartitionEvolution,
-    "q_c20_url_canon" -> c20UrlCanon,
-    "q_d19_lsh_recall" -> d19LshRecall,
-    "q_d20_purge_best" -> d20PurgeBest,
-    "q_s12_retention" -> s12Retention
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_s9_incr_join_view" -> s9IncrJoinViewSql,
-    "q_e17_label_noise" -> e17LabelNoiseSql,
-    "q_e18_separation" -> e18SeparationSql,
-    "q_t27_bm25" -> t27Bm25Sql,
-    "q_d16_cross_source" -> d16CrossSourceSql,
-    "q_p13_curriculum" -> p13CurriculumSql,
-    "q_v7_skew_report" -> v7SkewReportSql,
-    "q_g12_jaccard_neighbors" -> g12JaccardNeighborsSql,
-    "q_t28_fertility" -> t28FertilitySql,
-    "q_e19_ood" -> e19OodSql,
-    "q_st12_stream_upsert" -> st12StreamUpsertSql,
-    "q_s10_incr_join_agg" -> s10IncrJoinAggSql,
-    "q_t29_source_divergence" -> t29SourceDivergenceSql,
-    "q_d17_lsh_tuning" -> d17LshTuningSql,
-    "q_k12_decayed_counts" -> k12DecayedCountsSql,
-    "q_e20_ivf_tuning" -> e20IvfTuningSql,
-    "q_e21_dim_truncation" -> e21DimTruncationSql,
-    "q_t30_hybrid_rrf" -> t30HybridRrfSql,
-    "q_g13_communities" -> g13CommunitiesSql,
-    "q_v8_theilsen" -> v8TheilSenSql,
-    "q_p15_interleave" -> p15InterleaveSql,
-    "q_v9_cusum" -> v9CusumSql,
-    "q_t31_retrieval_eval" -> t31RetrievalEvalSql,
-    "q_st13_stream_cdc" -> st13StreamCdcSql,
-    "q_t32_blocklist_gate" -> t32BlocklistGateSql,
-    "q_d18_contamination_report" -> d18ContaminationReportSql,
-    "q_s11_partition_evolution" -> s11PartitionEvolutionSql,
-    "q_c20_url_canon" -> c20UrlCanonSql,
-    "q_d19_lsh_recall" -> d19LshRecallSql,
-    "q_d20_purge_best" -> d20PurgeBestSql,
-    "q_s12_retention" -> s12RetentionSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_s9_incr_join_view", s9IncrJoinView, s9IncrJoinViewSql),
+    QuerySpec("q_e17_label_noise", e17LabelNoise, e17LabelNoiseSql),
+    QuerySpec("q_e18_separation", e18Separation, e18SeparationSql),
+    QuerySpec("q_t27_bm25", t27Bm25, t27Bm25Sql),
+    QuerySpec("q_d16_cross_source", d16CrossSource, d16CrossSourceSql),
+    QuerySpec("q_p13_curriculum", p13Curriculum, p13CurriculumSql),
+    QuerySpec("q_v7_skew_report", v7SkewReport, v7SkewReportSql),
+    QuerySpec("q_g12_jaccard_neighbors", g12JaccardNeighbors, g12JaccardNeighborsSql),
+    QuerySpec("q_t28_fertility", t28Fertility, t28FertilitySql),
+    QuerySpec("q_e19_ood", e19Ood, e19OodSql),
+    QuerySpec("q_st12_stream_upsert", st12StreamUpsert, st12StreamUpsertSql),
+    QuerySpec("q_s10_incr_join_agg", s10IncrJoinAgg, s10IncrJoinAggSql),
+    QuerySpec("q_t29_source_divergence", t29SourceDivergence, t29SourceDivergenceSql),
+    QuerySpec("q_d17_lsh_tuning", d17LshTuning, d17LshTuningSql),
+    QuerySpec("q_k12_decayed_counts", k12DecayedCounts, k12DecayedCountsSql),
+    QuerySpec("q_e20_ivf_tuning", e20IvfTuning, e20IvfTuningSql),
+    QuerySpec("q_e21_dim_truncation", e21DimTruncation, e21DimTruncationSql),
+    QuerySpec("q_t30_hybrid_rrf", t30HybridRrf, t30HybridRrfSql),
+    QuerySpec("q_g13_communities", g13Communities, g13CommunitiesSql),
+    QuerySpec("q_v8_theilsen", v8TheilSen, v8TheilSenSql),
+    QuerySpec("q_p15_interleave", p15Interleave, p15InterleaveSql),
+    QuerySpec("q_v9_cusum", v9Cusum, v9CusumSql),
+    QuerySpec("q_t31_retrieval_eval", t31RetrievalEval, t31RetrievalEvalSql),
+    QuerySpec("q_st13_stream_cdc", st13StreamCdc, st13StreamCdcSql),
+    QuerySpec("q_t32_blocklist_gate", t32BlocklistGate, t32BlocklistGateSql),
+    QuerySpec("q_d18_contamination_report", d18ContaminationReport, d18ContaminationReportSql),
+    QuerySpec("q_s11_partition_evolution", s11PartitionEvolution, s11PartitionEvolutionSql),
+    QuerySpec("q_c20_url_canon", c20UrlCanon, c20UrlCanonSql),
+    QuerySpec("q_d19_lsh_recall", d19LshRecall, d19LshRecallSql),
+    QuerySpec("q_d20_purge_best", d20PurgeBest, d20PurgeBestSql),
+    QuerySpec("q_s12_retention", s12Retention, s12RetentionSql)
   )
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Maintain
 
@@ -10,7 +10,7 @@ import graft.ops.Maintain
   * incremental / collapsed answer is bit-identical to it.
   */
 object MaintainQueries {
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   // ---- S2: incremental aggregate maintenance ---------------------------
 
@@ -208,17 +208,11 @@ object MaintainQueries {
 
   // ---- registry --------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_s2_incr_agg" -> s2IncrAgg,
-    "q_s4_golden" -> s4Golden,
-    "q_s6_cdc_apply" -> s6CdcApply,
-    "q_s7_cdc_extract" -> s7CdcExtract,
-    "q_s8_schema_merge" -> s8SchemaMerge)
-
-  val oracles: Map[String, String] = Map(
-    "q_s2_incr_agg" -> s2IncrAggSql,
-    "q_s4_golden" -> s4GoldenSql,
-    "q_s6_cdc_apply" -> s6CdcApplySql,
-    "q_s7_cdc_extract" -> s7CdcExtractSql,
-    "q_s8_schema_merge" -> s8SchemaMergeSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_s2_incr_agg", s2IncrAgg, s2IncrAggSql),
+    QuerySpec("q_s4_golden", s4Golden, s4GoldenSql),
+    QuerySpec("q_s6_cdc_apply", s6CdcApply, s6CdcApplySql),
+    QuerySpec("q_s7_cdc_extract", s7CdcExtract, s7CdcExtractSql),
+    QuerySpec("q_s8_schema_merge", s8SchemaMerge, s8SchemaMergeSql)
+  )
 }

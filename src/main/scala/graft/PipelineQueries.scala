@@ -18,7 +18,7 @@ import graft.ops.{Concurrent, Dedup, Sketches, TextOps, Vectors}
   * recall observable and oracle-checkable.
   */
 object PipelineQueries {
-  import Queries.Q
+  import QuerySpec.Q
   import TextOps.{hash60Sql, seededHash60Sql}
 
   /** Guarded cosine for the oracle SQL — mirrors `Vectors.rankCosine`:
@@ -3911,190 +3911,99 @@ object PipelineQueries {
 
   // ---- registry -------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_t13_inverted" -> t13Inverted,
-    "q_t14_bigram_lm" -> t14BigramLm,
-    "q_t15_lm_score" -> t15LmScore,
-    "q_t16_bpe_merges" -> t16BpeMerges,
-    "q_t17_bpe_encode" -> t17BpeEncode,
-    "q_t18_collocations" -> t18Collocations,
-    "q_e10_rerank" -> e10Rerank,
-    "q_e11_semdedup" -> e11SemDedup,
-    "q_e12_recall" -> e12Recall,
-    "q_d11_containment" -> d11Containment,
-    "q_d12_incr_lsh" -> d12IncrLsh,
-    "q_d13_weighted_jaccard" -> d13WeightedJaccard,
-    "q_p7_cluster_sample" -> p7ClusterSample,
-    "q_m3_frames" -> m3Frames,
-    "q_c18_urlcap" -> c18UrlCap,
-    "q_d10_minhash_est" -> d10MinhashEst,
-    "q_e7_pq" -> e7Pq,
-    "q_e9_pq_search" -> e9PqSearch,
-    "q_v4_reconcile" -> v4Reconcile,
-    "q_d1_exact_dedup" -> d1Exact,
-    "q_d2_minhash_lsh" -> d2MinHashLsh,
-    "q_d2b_dup_clusters" -> d2bDupClusters,
-    "q_d2c_dup_clusters_star" -> d2cDupClustersStar,
-    "q_d5_jaccard_ngram" -> d5NgramJaccard,
-    "q_d6_decontaminate" -> d6Decontaminate,
-    "q_d7_spans" -> d7Spans,
-    "q_d3_simhash" -> d3SimHash,
-    "q_d4_simhash_pairs" -> d4SimHashPairs,
-    "q_e1_knn_brute" -> e1KnnBrute,
-    "q_e2_ann_lsh" -> e2AnnLsh,
-    "q_e3_ann_ivf" -> e3AnnIvf,
-    "q_e4_cosine_dedup" -> e4CosineDedup,
-    "q_e5_ann_multiprobe" -> e5AnnMultiprobe,
-    "q_e6_knn_join" -> e6KnnJoin,
-    "q_d8_fuzzy" -> d8Fuzzy,
-    "q_t1_langid" -> t1LangId,
-    "q_t2_quality" -> t2Quality,
-    "q_t3_tokens" -> t3Tokens,
-    "q_t4_fingerprint" -> t4Fingerprint,
-    "q_t5_repetition" -> t5Repetition,
-    "q_t6_redact" -> t6Redact,
-    "q_t7_curation" -> t7Curation,
-    "q_t8_normalize" -> t8Normalize,
-    "q_t9_topterms" -> t9TopTerms,
-    "q_t11_term_weights" -> t11TermWeights,
-    "q_t10_chunks" -> t10Chunks,
-    "q_p1_stratified" -> p1Stratified,
-    "q_p2_mixture" -> p2Mixture,
-    "q_p3_pack" -> p3Pack,
-    "q_p9_pack_slices" -> p9PackSlices,
-    "q_p4_shards" -> p4Shards,
-    "q_p5_split" -> p5Split,
-    "q_p8_cluster_split" -> p8ClusterSplit,
-    "q_p6_temperature" -> p6Temperature,
-    "q_p10_group_sample" -> p10GroupSample,
-    "q_r1_linkage" -> r1Linkage,
-    "q_d14_semantic_decontaminate" -> d14SemanticDecontaminate,
-    "q_d9_neardup_purge" -> d9NearDupPurge,
-    "q_e8_quantize" -> e8Quantize,
-    "q_t12_gopher_gate" -> t12GopherGate,
-    "q_m1_binary_meta" -> m1BinaryMeta,
-    "q_u1_set_ops" -> u1SetOps,
-    "q_m2_decode" -> m2Decode,
-    "q_m2a_meta" -> m2aMeta,
-    "q_m4_phash" -> m4ImageDhash,
-    "q_m5_image_neardup" -> m5ImageNeardup,
-    "q_m6_audio_fp" -> m6AudioFp,
-    "q_m7_audio_neardup" -> m7AudioNeardup,
-    "q_m8_video_frames" -> m8VideoFrames,
-    "q_m9_video_neardup" -> m9VideoNeardup,
-    "q_t19_nb_train" -> t19NbTrain,
-    "q_t20_nb_score" -> t20NbScore,
-    "q_t21_auc" -> t21Auc,
-    "q_t22_calibration" -> t22Calibration,
-    "q_m10_dct_phash" -> m10DctPhash,
-    "q_m11_image_clusters" -> m11ImageClusters,
-    "q_m12_quarantine" -> m12Quarantine,
-    "q_p11_tokenize_pack" -> p11TokenizePack,
-    "q_p12_mixture_plan" -> p12MixturePlan,
-    "q_e14_ivf_stats" -> e14IvfStats,
-    "q_e15_mmr" -> e15Mmr,
-    "q_e16_semi_hard" -> e16SemiHard,
-    "q_t25_dataset_card" -> t25DatasetCard,
-    "q_t26_cover_select" -> t26CoverSelect,
-    "q_t24_novelty" -> t24Novelty,
-    "q_t23_grep" -> t23Grep,
-    "q_e13_incr_ivf" -> e13IncrIvf,
-    "q_d15_max_spans" -> d15MaxSpans
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_d1_exact_dedup" -> d1ExactSql,
-    "q_d2_minhash_lsh" -> d2MinHashLshSql,
-    "q_d2b_dup_clusters" -> d2bDupClustersSql,
-    "q_d2c_dup_clusters_star" -> d2cDupClustersStarSql,
-    "q_d5_jaccard_ngram" -> d5NgramJaccardSql,
-    "q_d6_decontaminate" -> d6DecontaminateSql,
-    "q_d7_spans" -> d7SpansSql,
-    "q_d3_simhash" -> d3SimHashSql,
-    "q_d4_simhash_pairs" -> d4SimHashPairsSql,
-    "q_e1_knn_brute" -> e1KnnBruteSql,
-    "q_e2_ann_lsh" -> e2AnnLshSql,
-    "q_e3_ann_ivf" -> e3AnnIvfSql,
-    "q_e4_cosine_dedup" -> e4CosineDedupSql,
-    "q_e5_ann_multiprobe" -> e5AnnMultiprobeSql,
-    "q_e6_knn_join" -> e6KnnJoinSql,
-    "q_d8_fuzzy" -> d8FuzzySql,
-    "q_t1_langid" -> t1LangIdSql,
-    "q_t2_quality" -> t2QualitySql,
-    "q_t3_tokens" -> t3TokensSql,
-    "q_t4_fingerprint" -> t4FingerprintSql,
-    "q_t5_repetition" -> t5RepetitionSql,
-    "q_t6_redact" -> t6RedactSql,
-    "q_t7_curation" -> t7CurationSql,
-    "q_t8_normalize" -> t8NormalizeSql,
-    "q_t9_topterms" -> t9TopTermsSql,
-    "q_t11_term_weights" -> t11TermWeightsSql,
-    "q_t13_inverted" -> t13InvertedSql,
-    "q_t14_bigram_lm" -> t14BigramLmSql,
-    "q_t15_lm_score" -> t15LmScoreSql,
-    "q_t16_bpe_merges" -> t16BpeMergesSql,
-    "q_t17_bpe_encode" -> t17BpeEncodeSql,
-    "q_t18_collocations" -> t18CollocationsSql,
-    "q_e10_rerank" -> e10RerankSql,
-    "q_e11_semdedup" -> e11SemDedupSql,
-    "q_e12_recall" -> e12RecallSql,
-    "q_d11_containment" -> d11ContainmentSql,
-    "q_d12_incr_lsh" -> d12IncrLshSql,
-    "q_d13_weighted_jaccard" -> d13WeightedJaccardSql,
-    "q_p7_cluster_sample" -> p7ClusterSampleSql,
-    "q_m3_frames" -> m3FramesSql,
-    "q_c18_urlcap" -> c18UrlCapSql,
-    "q_d10_minhash_est" -> d10MinhashEstSql,
-    "q_e7_pq" -> e7PqSql,
-    "q_e9_pq_search" -> e9PqSearchSql,
-    "q_v4_reconcile" -> v4ReconcileSql,
-    "q_t10_chunks" -> t10ChunksSql,
-    "q_p1_stratified" -> p1StratifiedSql,
-    "q_p2_mixture" -> p2MixtureSql,
-    "q_p3_pack" -> p3PackSql,
-    "q_p9_pack_slices" -> p9PackSlicesSql,
-    "q_p4_shards" -> p4ShardsSql,
-    "q_p5_split" -> p5SplitSql,
-    "q_p8_cluster_split" -> p8ClusterSplitSql,
-    "q_p6_temperature" -> p6TemperatureSql,
-    "q_p10_group_sample" -> p10GroupSampleSql,
-    "q_r1_linkage" -> r1LinkageSql,
-    "q_d14_semantic_decontaminate" -> d14SemanticDecontaminateSql,
-    "q_d9_neardup_purge" -> d9NearDupPurgeSql,
-    "q_e8_quantize" -> e8QuantizeSql,
-    "q_t12_gopher_gate" -> t12GopherGateSql,
-    "q_m1_binary_meta" -> m1BinaryMetaSql,
-    "q_u1_set_ops" -> u1SetOpsSql,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_t13_inverted", t13Inverted, t13InvertedSql),
+    QuerySpec("q_t14_bigram_lm", t14BigramLm, t14BigramLmSql),
+    QuerySpec("q_t15_lm_score", t15LmScore, t15LmScoreSql),
+    QuerySpec("q_t16_bpe_merges", t16BpeMerges, t16BpeMergesSql),
+    QuerySpec("q_t17_bpe_encode", t17BpeEncode, t17BpeEncodeSql),
+    QuerySpec("q_t18_collocations", t18Collocations, t18CollocationsSql),
+    QuerySpec("q_e10_rerank", e10Rerank, e10RerankSql),
+    QuerySpec("q_e11_semdedup", e11SemDedup, e11SemDedupSql),
+    QuerySpec("q_e12_recall", e12Recall, e12RecallSql),
+    QuerySpec("q_d11_containment", d11Containment, d11ContainmentSql),
+    QuerySpec("q_d12_incr_lsh", d12IncrLsh, d12IncrLshSql),
+    QuerySpec("q_d13_weighted_jaccard", d13WeightedJaccard, d13WeightedJaccardSql),
+    QuerySpec("q_p7_cluster_sample", p7ClusterSample, p7ClusterSampleSql),
+    QuerySpec("q_m3_frames", m3Frames, m3FramesSql),
+    QuerySpec("q_c18_urlcap", c18UrlCap, c18UrlCapSql),
+    QuerySpec("q_d10_minhash_est", d10MinhashEst, d10MinhashEstSql),
+    QuerySpec("q_e7_pq", e7Pq, e7PqSql),
+    QuerySpec("q_e9_pq_search", e9PqSearch, e9PqSearchSql),
+    QuerySpec("q_v4_reconcile", v4Reconcile, v4ReconcileSql),
+    QuerySpec("q_d1_exact_dedup", d1Exact, d1ExactSql),
+    QuerySpec("q_d2_minhash_lsh", d2MinHashLsh, d2MinHashLshSql),
+    QuerySpec("q_d2b_dup_clusters", d2bDupClusters, d2bDupClustersSql),
+    QuerySpec("q_d2c_dup_clusters_star", d2cDupClustersStar, d2cDupClustersStarSql),
+    QuerySpec("q_d5_jaccard_ngram", d5NgramJaccard, d5NgramJaccardSql),
+    QuerySpec("q_d6_decontaminate", d6Decontaminate, d6DecontaminateSql),
+    QuerySpec("q_d7_spans", d7Spans, d7SpansSql),
+    QuerySpec("q_d3_simhash", d3SimHash, d3SimHashSql),
+    QuerySpec("q_d4_simhash_pairs", d4SimHashPairs, d4SimHashPairsSql),
+    QuerySpec("q_e1_knn_brute", e1KnnBrute, e1KnnBruteSql),
+    QuerySpec("q_e2_ann_lsh", e2AnnLsh, e2AnnLshSql),
+    QuerySpec("q_e3_ann_ivf", e3AnnIvf, e3AnnIvfSql),
+    QuerySpec("q_e4_cosine_dedup", e4CosineDedup, e4CosineDedupSql),
+    QuerySpec("q_e5_ann_multiprobe", e5AnnMultiprobe, e5AnnMultiprobeSql),
+    QuerySpec("q_e6_knn_join", e6KnnJoin, e6KnnJoinSql),
+    QuerySpec("q_d8_fuzzy", d8Fuzzy, d8FuzzySql),
+    QuerySpec("q_t1_langid", t1LangId, t1LangIdSql),
+    QuerySpec("q_t2_quality", t2Quality, t2QualitySql),
+    QuerySpec("q_t3_tokens", t3Tokens, t3TokensSql),
+    QuerySpec("q_t4_fingerprint", t4Fingerprint, t4FingerprintSql),
+    QuerySpec("q_t5_repetition", t5Repetition, t5RepetitionSql),
+    QuerySpec("q_t6_redact", t6Redact, t6RedactSql),
+    QuerySpec("q_t7_curation", t7Curation, t7CurationSql),
+    QuerySpec("q_t8_normalize", t8Normalize, t8NormalizeSql),
+    QuerySpec("q_t9_topterms", t9TopTerms, t9TopTermsSql),
+    QuerySpec("q_t11_term_weights", t11TermWeights, t11TermWeightsSql),
+    QuerySpec("q_t10_chunks", t10Chunks, t10ChunksSql),
+    QuerySpec("q_p1_stratified", p1Stratified, p1StratifiedSql),
+    QuerySpec("q_p2_mixture", p2Mixture, p2MixtureSql),
+    QuerySpec("q_p3_pack", p3Pack, p3PackSql),
+    QuerySpec("q_p9_pack_slices", p9PackSlices, p9PackSlicesSql),
+    QuerySpec("q_p4_shards", p4Shards, p4ShardsSql),
+    QuerySpec("q_p5_split", p5Split, p5SplitSql),
+    QuerySpec("q_p8_cluster_split", p8ClusterSplit, p8ClusterSplitSql),
+    QuerySpec("q_p6_temperature", p6Temperature, p6TemperatureSql),
+    QuerySpec("q_p10_group_sample", p10GroupSample, p10GroupSampleSql),
+    QuerySpec("q_r1_linkage", r1Linkage, r1LinkageSql),
+    QuerySpec("q_d14_semantic_decontaminate", d14SemanticDecontaminate, d14SemanticDecontaminateSql),
+    QuerySpec("q_d9_neardup_purge", d9NearDupPurge, d9NearDupPurgeSql),
+    QuerySpec("q_e8_quantize", e8Quantize, e8QuantizeSql),
+    QuerySpec("q_t12_gopher_gate", t12GopherGate, t12GopherGateSql),
+    QuerySpec("q_m1_binary_meta", m1BinaryMeta, m1BinaryMetaSql),
+    QuerySpec("q_u1_set_ops", u1SetOps, u1SetOpsSql),
     // q_m2_decode: the stub's hash-derived features ARE SQL-expressible
     // (HUGEINT replay of the Java byte fold) — full oracle since r5.
-    "q_m2_decode" -> m2DecodeSql,
-    "q_m2a_meta" -> m2aMetaSql,
+    QuerySpec("q_m2_decode", m2Decode, m2DecodeSql),
+    QuerySpec("q_m2a_meta", m2aMeta, m2aMetaSql),
     // q_m4/q_m5: deterministic pixel math replayed in SQL; the Spark side
     // goes through REAL ImageIO PNG encode+decode (lossless), so a hash
     // match proves the codec round-trip.
-    "q_m4_phash" -> m4ImageDhashSql,
-    "q_m5_image_neardup" -> m5ImageNeardupSql,
-    "q_m6_audio_fp" -> m6AudioFpSql,
-    "q_m7_audio_neardup" -> m7AudioNeardupSql,
-    "q_m8_video_frames" -> m8VideoFramesSql,
-    "q_m9_video_neardup" -> m9VideoNeardupSql,
-    "q_t19_nb_train" -> t19NbTrainSql,
-    "q_t20_nb_score" -> t20NbScoreSql,
-    "q_t21_auc" -> t21AucSql,
-    "q_t22_calibration" -> t22CalibrationSql,
-    "q_m10_dct_phash" -> m10DctPhashSql,
-    "q_m11_image_clusters" -> m11ImageClustersSql,
-    "q_m12_quarantine" -> m12QuarantineSql,
-    "q_p11_tokenize_pack" -> p11TokenizePackSql,
-    "q_p12_mixture_plan" -> p12MixturePlanSql,
-    "q_e14_ivf_stats" -> e14IvfStatsSql,
-    "q_e15_mmr" -> e15MmrSql,
-    "q_e16_semi_hard" -> e16SemiHardSql,
-    "q_t25_dataset_card" -> t25DatasetCardSql,
-    "q_t26_cover_select" -> t26CoverSelectSql,
-    "q_t24_novelty" -> t24NoveltySql,
-    "q_t23_grep" -> t23GrepSql,
-    "q_e13_incr_ivf" -> e13IncrIvfSql,
-    "q_d15_max_spans" -> d15MaxSpansSql
+    QuerySpec("q_m4_phash", m4ImageDhash, m4ImageDhashSql),
+    QuerySpec("q_m5_image_neardup", m5ImageNeardup, m5ImageNeardupSql),
+    QuerySpec("q_m6_audio_fp", m6AudioFp, m6AudioFpSql),
+    QuerySpec("q_m7_audio_neardup", m7AudioNeardup, m7AudioNeardupSql),
+    QuerySpec("q_m8_video_frames", m8VideoFrames, m8VideoFramesSql),
+    QuerySpec("q_m9_video_neardup", m9VideoNeardup, m9VideoNeardupSql),
+    QuerySpec("q_t19_nb_train", t19NbTrain, t19NbTrainSql),
+    QuerySpec("q_t20_nb_score", t20NbScore, t20NbScoreSql),
+    QuerySpec("q_t21_auc", t21Auc, t21AucSql),
+    QuerySpec("q_t22_calibration", t22Calibration, t22CalibrationSql),
+    QuerySpec("q_m10_dct_phash", m10DctPhash, m10DctPhashSql),
+    QuerySpec("q_m11_image_clusters", m11ImageClusters, m11ImageClustersSql),
+    QuerySpec("q_m12_quarantine", m12Quarantine, m12QuarantineSql),
+    QuerySpec("q_p11_tokenize_pack", p11TokenizePack, p11TokenizePackSql),
+    QuerySpec("q_p12_mixture_plan", p12MixturePlan, p12MixturePlanSql),
+    QuerySpec("q_e14_ivf_stats", e14IvfStats, e14IvfStatsSql),
+    QuerySpec("q_e15_mmr", e15Mmr, e15MmrSql),
+    QuerySpec("q_e16_semi_hard", e16SemiHard, e16SemiHardSql),
+    QuerySpec("q_t25_dataset_card", t25DatasetCard, t25DatasetCardSql),
+    QuerySpec("q_t26_cover_select", t26CoverSelect, t26CoverSelectSql),
+    QuerySpec("q_t24_novelty", t24Novelty, t24NoveltySql),
+    QuerySpec("q_t23_grep", t23Grep, t23GrepSql),
+    QuerySpec("q_e13_incr_ivf", e13IncrIvf, e13IncrIvfSql),
+    QuerySpec("q_d15_max_spans", d15MaxSpans, d15MaxSpansSql)
   )
 }

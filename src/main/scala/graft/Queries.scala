@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops._
 
 /** Registry of driver-checkable queries (SparkEntry.queries) with their
-  * DuckDB oracle SQL. Each entry exercises one operator family from
-  * SURVEY.md §2 on the driver's testdata tables.
+  * DuckDB oracle SQL, one [[QuerySpec]] per query. Each entry exercises
+  * one operator family from SURVEY.md §2 on the testdata tables.
   *
   * Conventions for oracle hash-parity:
   *  - every computed column is aliased identically in Spark and SQL;
@@ -20,7 +19,7 @@ import graft.ops._
   *    mismatch). Filters still use native date types for pushdown.
   */
 object Queries {
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   /** Presentation-edge date formatting (see class doc). */
   private[graft] def dstr(c: org.apache.spark.sql.Column) = date_format(c, "yyyy-MM-dd")
@@ -1234,107 +1233,58 @@ object Queries {
 
   // ---- registry -----------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_f1_snapshot" -> f1Snapshot,
-    "q_f2_range" -> f2Range,
-    "q_f5_inlist" -> f5InList,
-    "q_f6_threshold" -> f6Threshold,
-    "q_f8_incremental" -> f8Incremental,
-    "q_a1_count_by_day" -> a1CountByDay,
-    "q_a2_range_count" -> a2RangeCount,
-    "q_a3_having" -> a3Having,
-    "q_a4_minmax" -> a4MinMax,
-    "q_a5_multiagg" -> a5MultiAgg,
-    "q_a6_summary" -> a6Summary,
-    "q_a7_distinct_counts" -> a7DistinctCounts,
-    "q_a8_conditional" -> a8Conditional,
-    "q_a9_distinct" -> a9Distinct,
-    "q_a10_top_avg" -> a10TopAvg,
-    "q_a12_rollup" -> a12Rollup,
-    "q_a13_pivot" -> a13Pivot,
-    "q_a14_percentiles" -> a14Percentiles,
-    "q_a15_cube" -> a15Cube,
-    "q_a16_histogram" -> a16Histogram,
-    "q_a17_grouping_sets" -> a17GroupingSets,
-    "q_a18_cov" -> a18Cov,
-    "q_j19_star5" -> j19StarFive,
-    "q_a19_winsorize" -> a19Winsorize,
-    "q_a20_eqdepth" -> a20EqDepth,
-    "q_c17_dateparts" -> c17DateParts,
-    "q_j1_inner_join" -> j1InnerJoin,
-    "q_j2_left_join" -> j2LeftJoin,
-    "q_j3_anti" -> j3Anti,
-    "q_j4_delta" -> j4Delta,
-    "q_j5_continuity" -> j5Continuity,
-    "q_j6_set_ops" -> j6SetOps,
-    "q_j7_overlap" -> j7Overlap,
-    "q_j8_full_outer_diff" -> j8FullOuterDiff,
-    "q_j9_salted" -> j9Salted,
-    "q_j12_bloom" -> j12Bloom,
-    "q_j13_star_join" -> j13StarJoin,
-    "q_j14_semi" -> j14Semi,
-    "q_j15_nullsafe" -> j15NullSafe,
-    "q_v1_profile" -> v1Profile,
-    "q_v2_constraints" -> v2Constraints,
-    "q_v3_drift" -> v3Drift,
-    "q_v5_freshness" -> v5Freshness,
-    "q_v6_seasonal" -> v6Seasonal,
-    "q_a21_mad" -> a21Mad,
-    "q_a23_outliers" -> a23Outliers,
-    "q_c19_edit_distance" -> c19EditDistance
-  ) ++ WindowQueries.all ++ PipelineQueries.all ++ ScalarQueries.all ++
-    TemporalQueries.all ++ SketchQueries.all ++ MaintainQueries.all ++
-    StreamQueries.all ++ CurationQueries.all ++ RoundNineQueries.all ++ Round13Queries.all ++ Round14Queries.all ++ Round15Queries.all ++ Round16Queries.all
-
-  val oracles: Map[String, String] = Map(
-    "q_f1_snapshot" -> f1SnapshotSql,
-    "q_f2_range" -> f2RangeSql,
-    "q_f5_inlist" -> f5InListSql,
-    "q_f6_threshold" -> f6ThresholdSql,
-    "q_f8_incremental" -> f8IncrementalSql,
-    "q_a1_count_by_day" -> a1CountByDaySql,
-    "q_a2_range_count" -> a2RangeCountSql,
-    "q_a3_having" -> a3HavingSql,
-    "q_a4_minmax" -> a4MinMaxSql,
-    "q_a5_multiagg" -> a5MultiAggSql,
-    "q_a6_summary" -> a6SummarySql,
-    "q_a7_distinct_counts" -> a7DistinctCountsSql,
-    "q_a8_conditional" -> a8ConditionalSql,
-    "q_a9_distinct" -> a9DistinctSql,
-    "q_a10_top_avg" -> a10TopAvgSql,
-    "q_a12_rollup" -> a12RollupSql,
-    "q_a13_pivot" -> a13PivotSql,
-    "q_a14_percentiles" -> a14PercentilesSql,
-    "q_a15_cube" -> a15CubeSql,
-    "q_a16_histogram" -> a16HistogramSql,
-    "q_a17_grouping_sets" -> a17GroupingSetsSql,
-    "q_a18_cov" -> a18CovSql,
-    "q_j19_star5" -> j19StarFiveSql,
-    "q_a19_winsorize" -> a19WinsorizeSql,
-    "q_a20_eqdepth" -> a20EqDepthSql,
-    "q_c17_dateparts" -> c17DatePartsSql,
-    "q_j1_inner_join" -> j1InnerJoinSql,
-    "q_j2_left_join" -> j2LeftJoinSql,
-    "q_j3_anti" -> j3AntiSql,
-    "q_j4_delta" -> j4DeltaSql,
-    "q_j5_continuity" -> j5ContinuitySql,
-    "q_j6_set_ops" -> j6SetOpsSql,
-    "q_j7_overlap" -> j7OverlapSql,
-    "q_j8_full_outer_diff" -> j8FullOuterDiffSql,
-    "q_j9_salted" -> j9SaltedSql,
-    "q_j12_bloom" -> j12BloomSql,
-    "q_j13_star_join" -> j13StarJoinSql,
-    "q_j14_semi" -> j14SemiSql,
-    "q_j15_nullsafe" -> j15NullSafeSql,
-    "q_v1_profile" -> v1ProfileSql,
-    "q_v2_constraints" -> v2ConstraintsSql,
-    "q_v3_drift" -> v3DriftSql,
-    "q_v5_freshness" -> v5FreshnessSql,
-    "q_v6_seasonal" -> v6SeasonalSql,
-    "q_a21_mad" -> a21MadSql,
-    "q_a23_outliers" -> a23OutliersSql,
-    "q_c19_edit_distance" -> c19EditDistanceSql
-  ) ++ WindowQueries.oracles ++ PipelineQueries.oracles ++ ScalarQueries.oracles ++
-    TemporalQueries.oracles ++ SketchQueries.oracles ++ MaintainQueries.oracles ++
-    StreamQueries.oracles ++ CurationQueries.oracles ++ RoundNineQueries.oracles ++ Round13Queries.oracles ++ Round14Queries.oracles ++ Round15Queries.oracles ++ Round16Queries.oracles
+  /** The whole registry: this object's queries, then every family
+    * object's `specs`. Names are unique (SmokeSpec checks it). */
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_f1_snapshot", f1Snapshot, f1SnapshotSql),
+    QuerySpec("q_f2_range", f2Range, f2RangeSql),
+    QuerySpec("q_f5_inlist", f5InList, f5InListSql),
+    QuerySpec("q_f6_threshold", f6Threshold, f6ThresholdSql),
+    QuerySpec("q_f8_incremental", f8Incremental, f8IncrementalSql),
+    QuerySpec("q_a1_count_by_day", a1CountByDay, a1CountByDaySql),
+    QuerySpec("q_a2_range_count", a2RangeCount, a2RangeCountSql),
+    QuerySpec("q_a3_having", a3Having, a3HavingSql),
+    QuerySpec("q_a4_minmax", a4MinMax, a4MinMaxSql),
+    QuerySpec("q_a5_multiagg", a5MultiAgg, a5MultiAggSql),
+    QuerySpec("q_a6_summary", a6Summary, a6SummarySql),
+    QuerySpec("q_a7_distinct_counts", a7DistinctCounts, a7DistinctCountsSql),
+    QuerySpec("q_a8_conditional", a8Conditional, a8ConditionalSql),
+    QuerySpec("q_a9_distinct", a9Distinct, a9DistinctSql),
+    QuerySpec("q_a10_top_avg", a10TopAvg, a10TopAvgSql),
+    QuerySpec("q_a12_rollup", a12Rollup, a12RollupSql),
+    QuerySpec("q_a13_pivot", a13Pivot, a13PivotSql),
+    QuerySpec("q_a14_percentiles", a14Percentiles, a14PercentilesSql),
+    QuerySpec("q_a15_cube", a15Cube, a15CubeSql),
+    QuerySpec("q_a16_histogram", a16Histogram, a16HistogramSql),
+    QuerySpec("q_a17_grouping_sets", a17GroupingSets, a17GroupingSetsSql),
+    QuerySpec("q_a18_cov", a18Cov, a18CovSql),
+    QuerySpec("q_j19_star5", j19StarFive, j19StarFiveSql),
+    QuerySpec("q_a19_winsorize", a19Winsorize, a19WinsorizeSql),
+    QuerySpec("q_a20_eqdepth", a20EqDepth, a20EqDepthSql),
+    QuerySpec("q_c17_dateparts", c17DateParts, c17DatePartsSql),
+    QuerySpec("q_j1_inner_join", j1InnerJoin, j1InnerJoinSql),
+    QuerySpec("q_j2_left_join", j2LeftJoin, j2LeftJoinSql),
+    QuerySpec("q_j3_anti", j3Anti, j3AntiSql),
+    QuerySpec("q_j4_delta", j4Delta, j4DeltaSql),
+    QuerySpec("q_j5_continuity", j5Continuity, j5ContinuitySql),
+    QuerySpec("q_j6_set_ops", j6SetOps, j6SetOpsSql),
+    QuerySpec("q_j7_overlap", j7Overlap, j7OverlapSql),
+    QuerySpec("q_j8_full_outer_diff", j8FullOuterDiff, j8FullOuterDiffSql),
+    QuerySpec("q_j9_salted", j9Salted, j9SaltedSql),
+    QuerySpec("q_j12_bloom", j12Bloom, j12BloomSql),
+    QuerySpec("q_j13_star_join", j13StarJoin, j13StarJoinSql),
+    QuerySpec("q_j14_semi", j14Semi, j14SemiSql),
+    QuerySpec("q_j15_nullsafe", j15NullSafe, j15NullSafeSql),
+    QuerySpec("q_v1_profile", v1Profile, v1ProfileSql),
+    QuerySpec("q_v2_constraints", v2Constraints, v2ConstraintsSql),
+    QuerySpec("q_v3_drift", v3Drift, v3DriftSql),
+    QuerySpec("q_v5_freshness", v5Freshness, v5FreshnessSql),
+    QuerySpec("q_v6_seasonal", v6Seasonal, v6SeasonalSql),
+    QuerySpec("q_a21_mad", a21Mad, a21MadSql),
+    QuerySpec("q_a23_outliers", a23Outliers, a23OutliersSql),
+    QuerySpec("q_c19_edit_distance", c19EditDistance, c19EditDistanceSql)
+  ) ++ WindowQueries.specs ++ PipelineQueries.specs ++ ScalarQueries.specs ++
+    TemporalQueries.specs ++ SketchQueries.specs ++ MaintainQueries.specs ++
+    StreamQueries.specs ++ CurationQueries.specs ++ RoundNineQueries.specs ++
+    Round13Queries.specs ++ Round14Queries.specs ++ Round15Queries.specs ++ Round16Queries.specs
 }

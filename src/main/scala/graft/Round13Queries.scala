@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, TextOps}
 
@@ -13,7 +12,7 @@ import graft.ops.{Dedup, TextOps}
   */
 object Round13Queries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   // ---- D21: LSH operating-point chooser --------------------------------
 
@@ -47,7 +46,7 @@ object Round13Queries {
         threshold = 0.5, sampleMod = 2,
         precisionFloorPpm = d21PrecisionFloorPpm,
         recallFloorPpm = d21RecallFloorPpm)
-      .orderBy("rows_per_band")
+      .coalesce(1).sortWithinPartitions("rows_per_band") // 3 local rows: one task, no range sort
 
   private def d21Block(r: Int): String = {
     val b = 16 / r
@@ -284,15 +283,9 @@ object Round13Queries {
   /** The batch keep-best purge IS the oracle (see scaladoc). */
   val st17StreamKeepBestSql: String = CurationQueries.d20PurgeBestSql
 
-  val all: Map[String, Q] = Map(
-    "q_d21_lsh_choose" -> d21LshChoose,
-    "q_d22_auto_dedup" -> d22AutoDedup,
-    "q_st17_stream_keepbest" -> st17StreamKeepBest
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_d21_lsh_choose" -> d21LshChooseSql,
-    "q_d22_auto_dedup" -> d22AutoDedupSql,
-    "q_st17_stream_keepbest" -> st17StreamKeepBestSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_d21_lsh_choose", d21LshChoose, d21LshChooseSql),
+    QuerySpec("q_d22_auto_dedup", d22AutoDedup, d22AutoDedupSql),
+    QuerySpec("q_st17_stream_keepbest", st17StreamKeepBest, st17StreamKeepBestSql)
   )
 }

@@ -27,7 +27,7 @@ import graft.ops.{Dedup, IvfIndexStore, KeepBestIndex, KeepBestIndexStore, TextO
   */
 object Round14Queries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   // ---- D23: LSH chooser under a BINDING truthDfCap ----------------------
 
@@ -1384,37 +1384,20 @@ object Round14Queries {
     */
   val st22StoreSearchAutoSql: String = e24AutoProbeSql
 
-  val all: Map[String, Q] = Map(
-    "q_d23_lsh_choose_capped" -> d23LshChooseCapped,
-    "q_d24_simhash_choose" -> d24SimhashChoose,
-    "q_st18_store_keepbest" -> st18StoreKeepBest,
-    "q_st19_stream_autotuned" -> st19StreamAutotuned,
-    "q_st20_store_ivf" -> st20StoreIvf,
-    "q_m16_hamming_choose" -> m16HammingChoose,
-    "q_e22_cosine_choose" -> e22CosineChoose,
-    "q_m17_auto_hamming" -> m17AutoHamming,
-    "q_e23_auto_cosine" -> e23AutoCosine,
-    "q_e24_auto_probe" -> e24AutoProbe,
-    "q_st21_store_autotuned" -> st21StoreAutotuned,
-    "q_st22_store_search_auto" -> st22StoreSearchAuto,
-    "q_st23_store_compacted" -> st23StoreCompacted,
-    "q_d25_auto_simhash" -> d25AutoSimhash
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_d23_lsh_choose_capped" -> d23LshChooseCappedSql,
-    "q_d24_simhash_choose" -> d24SimhashChooseSql,
-    "q_st18_store_keepbest" -> st18StoreKeepBestSql,
-    "q_st19_stream_autotuned" -> st19StreamAutotunedSql,
-    "q_st20_store_ivf" -> st20StoreIvfSql,
-    "q_m16_hamming_choose" -> m16HammingChooseSql,
-    "q_e22_cosine_choose" -> e22CosineChooseSql,
-    "q_m17_auto_hamming" -> m17AutoHammingSql,
-    "q_e23_auto_cosine" -> e23AutoCosineSql,
-    "q_e24_auto_probe" -> e24AutoProbeSql,
-    "q_st21_store_autotuned" -> st21StoreAutotunedSql,
-    "q_st22_store_search_auto" -> st22StoreSearchAutoSql,
-    "q_st23_store_compacted" -> st23StoreCompactedSql,
-    "q_d25_auto_simhash" -> d25AutoSimhashSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_d23_lsh_choose_capped", d23LshChooseCapped, d23LshChooseCappedSql),
+    QuerySpec("q_d24_simhash_choose", d24SimhashChoose, d24SimhashChooseSql),
+    QuerySpec("q_st18_store_keepbest", st18StoreKeepBest, st18StoreKeepBestSql),
+    QuerySpec("q_st19_stream_autotuned", st19StreamAutotuned, st19StreamAutotunedSql),
+    QuerySpec("q_st20_store_ivf", st20StoreIvf, st20StoreIvfSql),
+    QuerySpec("q_m16_hamming_choose", m16HammingChoose, m16HammingChooseSql),
+    QuerySpec("q_e22_cosine_choose", e22CosineChoose, e22CosineChooseSql),
+    QuerySpec("q_m17_auto_hamming", m17AutoHamming, m17AutoHammingSql),
+    QuerySpec("q_e23_auto_cosine", e23AutoCosine, e23AutoCosineSql),
+    QuerySpec("q_e24_auto_probe", e24AutoProbe, e24AutoProbeSql),
+    QuerySpec("q_st21_store_autotuned", st21StoreAutotuned, st21StoreAutotunedSql),
+    QuerySpec("q_st22_store_search_auto", st22StoreSearchAuto, st22StoreSearchAutoSql),
+    QuerySpec("q_st23_store_compacted", st23StoreCompacted, st23StoreCompactedSql),
+    QuerySpec("q_d25_auto_simhash", d25AutoSimhash, d25AutoSimhashSql)
   )
 }

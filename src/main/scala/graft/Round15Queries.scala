@@ -22,7 +22,7 @@ import graft.ops.{Dedup, IvfIndexStore, TextOps, Vectors}
   */
 object Round15Queries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   // ---- D26: budget-sized auto near-dup (MinHash family) -----------------
 
@@ -693,19 +693,11 @@ object Round15Queries {
        |WHERE c.id NOT IN (SELECT r.id FROM ranked r WHERE r.rk > 1)
        |ORDER BY c.id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q_d26_auto_dedup_budgeted" -> d26AutoDedupBudgeted,
-    "q_e25_auto_cosine_budgeted" -> e25AutoCosineBudgeted,
-    "q_st24_store_serve_memo" -> st24StoreServeMemo,
-    "q_st25_store_retrain" -> st25StoreRetrain,
-    "q_st26_store_reband" -> st26StoreReband
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_d26_auto_dedup_budgeted" -> d26AutoDedupBudgetedSql,
-    "q_e25_auto_cosine_budgeted" -> e25AutoCosineBudgetedSql,
-    "q_st24_store_serve_memo" -> st24StoreServeMemoSql,
-    "q_st25_store_retrain" -> st25StoreRetrainSql,
-    "q_st26_store_reband" -> st26StoreRebandSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_d26_auto_dedup_budgeted", d26AutoDedupBudgeted, d26AutoDedupBudgetedSql),
+    QuerySpec("q_e25_auto_cosine_budgeted", e25AutoCosineBudgeted, e25AutoCosineBudgetedSql),
+    QuerySpec("q_st24_store_serve_memo", st24StoreServeMemo, st24StoreServeMemoSql),
+    QuerySpec("q_st25_store_retrain", st25StoreRetrain, st25StoreRetrainSql),
+    QuerySpec("q_st26_store_reband", st26StoreReband, st26StoreRebandSql)
   )
 }

@@ -19,7 +19,7 @@ import graft.ops.IvfIndexStore
   */
 object Round16Queries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   // ---- ST27: the persisted certification survives a process restart -----
 
@@ -655,17 +655,10 @@ object Round16Queries {
        |  SELECT 2, vid, cs FROM serve2)
        |ORDER BY serve_id, cos_sim DESC, vec_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q_st27_store_cert_persist" -> st27StoreCertPersist,
-    "q_st28_maintained_stream" -> st28MaintainedStream,
-    "q_st29_maintained_keepbest" -> st29MaintainedKeepBest,
-    "q_st30_store_vacuum" -> st30StoreVacuum
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_st27_store_cert_persist" -> st27StoreCertPersistSql,
-    "q_st28_maintained_stream" -> st28MaintainedStreamSql,
-    "q_st29_maintained_keepbest" -> st29MaintainedKeepBestSql,
-    "q_st30_store_vacuum" -> st30StoreVacuumSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_st27_store_cert_persist", st27StoreCertPersist, st27StoreCertPersistSql),
+    QuerySpec("q_st28_maintained_stream", st28MaintainedStream, st28MaintainedStreamSql),
+    QuerySpec("q_st29_maintained_keepbest", st29MaintainedKeepBest, st29MaintainedKeepBestSql),
+    QuerySpec("q_st30_store_vacuum", st30StoreVacuum, st30StoreVacuumSql)
   )
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Multimodal, Partitioning}
 
@@ -14,7 +14,7 @@ import graft.ops.{Multimodal, Partitioning}
   */
 object RoundNineQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   // ---- M14: sniff-dispatched decode over a mixed-modality corpus ------
 
@@ -498,19 +498,11 @@ object RoundNineQueries {
        |  FROM p WHERE pg > 0)
        |ORDER BY source, lang""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q_m14_dispatch" -> m14Dispatch,
-    "q_m13_cross_codec" -> m13CrossCodec,
-    "q_t33_pipeline" -> t33Pipeline,
-    "q_v10_kanon" -> v10Kanon,
-    "q_v11_card_kanon" -> v11CardKanon
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_m14_dispatch" -> m14DispatchSql,
-    "q_m13_cross_codec" -> m13CrossCodecSql,
-    "q_t33_pipeline" -> t33PipelineSql,
-    "q_v10_kanon" -> v10KanonSql,
-    "q_v11_card_kanon" -> v11CardKanonSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_m14_dispatch", m14Dispatch, m14DispatchSql),
+    QuerySpec("q_m13_cross_codec", m13CrossCodec, m13CrossCodecSql),
+    QuerySpec("q_t33_pipeline", t33Pipeline, t33PipelineSql),
+    QuerySpec("q_v10_kanon", v10Kanon, v10KanonSql),
+    QuerySpec("q_v11_card_kanon", v11CardKanon, v11CardKanonSql)
   )
 }

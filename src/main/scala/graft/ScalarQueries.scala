@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Store
 
@@ -8,7 +7,8 @@ import graft.ops.Store
   * dedup-on-read view (S2-S4 upsert read side).
   */
 object ScalarQueries {
-  import Queries.{Q, dstr, dstrSql}
+  import QuerySpec.Q
+  import Queries.{dstr, dstrSql}
 
   /** S2/S4 read side: latest row per (user_id, event_type) — the
     * dedup-on-read that makes partition-overwrite upserts idempotent.
@@ -190,25 +190,14 @@ object ScalarQueries {
       |            FROM documents WHERE doc_id < 200))
       |GROUP BY 1, 2 ORDER BY doc_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q_sql1_shared" -> sql1Shared,
-    "q_sql2_functions" -> sql2Functions,
-    "q_s1_latest_by_key" -> s1LatestByKey,
-    "q_c1_date_arith" -> c1DateArith,
-    "q_c12_regex" -> c12Regex,
-    "q_c13_classify" -> c13Classify,
-    "q_c15_json" -> c15Json,
-    "q_z1_zorder" -> z1ZOrder
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_sql1_shared" -> sharedSql,
-    "q_sql2_functions" -> sql2FunctionsSql,
-    "q_s1_latest_by_key" -> s1LatestByKeySql,
-    "q_c1_date_arith" -> c1DateArithSql,
-    "q_c12_regex" -> c12RegexSql,
-    "q_c13_classify" -> c13ClassifySql,
-    "q_c15_json" -> c15JsonSql,
-    "q_z1_zorder" -> z1ZOrderSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_sql1_shared", sql1Shared, sharedSql),
+    QuerySpec("q_sql2_functions", sql2Functions, sql2FunctionsSql),
+    QuerySpec("q_s1_latest_by_key", s1LatestByKey, s1LatestByKeySql),
+    QuerySpec("q_c1_date_arith", c1DateArith, c1DateArithSql),
+    QuerySpec("q_c12_regex", c12Regex, c12RegexSql),
+    QuerySpec("q_c13_classify", c13Classify, c13ClassifySql),
+    QuerySpec("q_c15_json", c15Json, c15JsonSql),
+    QuerySpec("q_z1_zorder", z1ZOrder, z1ZOrderSql)
   )
 }

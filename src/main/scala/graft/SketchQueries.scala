@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Sketches, TextOps}
 
@@ -11,7 +10,7 @@ import graft.ops.{Sketches, TextOps}
   * the determinism a reproducible 100 TB pipeline needs.
   */
 object SketchQueries {
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   // ---- K1: KMV distinct sketch ----------------------------------------
 
@@ -673,29 +672,17 @@ object SketchQueries {
        |FROM st""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q_k11_join_size" -> k11JoinSize,
-    "q_k1_kmv" -> k1Kmv,
-    "q_k2_cms" -> k2Cms,
-    "q_k5_cms_merge" -> k5CmsMerge,
-    "q_k3_kmv_union" -> k3KmvUnion,
-    "q_k4_hll" -> k4Hll,
-    "q_k6_quantile_sketch" -> k6Quantile,
-    "q_k7_heavy_hitters" -> k7HeavyHitters,
-    "q_k8_sketch_rollup" -> k8SketchRollup,
-    "q_k9_hll_window" -> k9HllWindow,
-    "q_k10_quantile_window" -> k10QuantileWindow)
-
-  val oracles: Map[String, String] = Map(
-    "q_k11_join_size" -> k11JoinSizeSql,
-    "q_k1_kmv" -> k1KmvSql,
-    "q_k2_cms" -> k2CmsSql,
-    "q_k5_cms_merge" -> k5CmsMergeSql,
-    "q_k3_kmv_union" -> k3KmvUnionSql,
-    "q_k4_hll" -> k4HllSql,
-    "q_k6_quantile_sketch" -> k6QuantileSql,
-    "q_k7_heavy_hitters" -> k7HeavyHittersSql,
-    "q_k8_sketch_rollup" -> k8SketchRollupSql,
-    "q_k9_hll_window" -> k9HllWindowSql,
-    "q_k10_quantile_window" -> k10QuantileWindowSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_k11_join_size", k11JoinSize, k11JoinSizeSql),
+    QuerySpec("q_k1_kmv", k1Kmv, k1KmvSql),
+    QuerySpec("q_k2_cms", k2Cms, k2CmsSql),
+    QuerySpec("q_k5_cms_merge", k5CmsMerge, k5CmsMergeSql),
+    QuerySpec("q_k3_kmv_union", k3KmvUnion, k3KmvUnionSql),
+    QuerySpec("q_k4_hll", k4Hll, k4HllSql),
+    QuerySpec("q_k6_quantile_sketch", k6Quantile, k6QuantileSql),
+    QuerySpec("q_k7_heavy_hitters", k7HeavyHitters, k7HeavyHittersSql),
+    QuerySpec("q_k8_sketch_rollup", k8SketchRollup, k8SketchRollupSql),
+    QuerySpec("q_k9_hll_window", k9HllWindow, k9HllWindowSql),
+    QuerySpec("q_k10_quantile_window", k10QuantileWindow, k10QuantileWindowSql)
+  )
 }

@@ -7,10 +7,11 @@ object SparkEntry {
     * centerpiece (SURVEY §3.3).
     */
   def entry(spark: SparkSession): DataFrame =
-    Queries.all("q_rankings_pipeline")(spark, "/root/testdata/sf0.001")
+    queries("q_rankings_pipeline")(spark, "/root/testdata/sf0.001")
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Queries.specs.map(q => q.name -> q.run).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = Queries.specs.map(q => q.name -> q.oracle).toMap
 }

@@ -15,7 +15,7 @@ import graft.ops.Exact
   * only deterministic-final-state shapes belong in the gate.
   */
 object StreamQueries {
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   /** Materialize a memory-sink-derived result and DROP the sink table.
     * Memory-sink tables are session-global; a long-lived host JVM that
@@ -790,34 +790,20 @@ object StreamQueries {
 
   // ---- registry --------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_st10_stream_media" -> st10StreamMediaDedup,
-    "q_st11_stream_quality" -> st11StreamQuality,
-    "q_st1_stream_agg" -> st1StreamAgg,
-    "q_st2_stream_enrich" -> st2StreamEnrich,
-    "q_st3_stream_dedup" -> st3StreamDedup,
-    "q_st4_stream_window" -> st4StreamWindow,
-    "q_st5_stream_sessions" -> st5StreamSessions,
-    "q_st6_stream_sketch" -> st6StreamSketch,
-    "q_st7_stream_join" -> st7StreamJoin,
-    "q_st8_stream_outer_join" -> st8StreamOuterJoin,
-    "q_st9_stream_full_outer" -> st9StreamFullOuterJoin,
-    "q_st14_stream_neardup" -> st14StreamNearDup,
-    "q_st15_stream_ivf" -> st15StreamIvf,
-    "q_st16_stream_contamination" -> st16StreamContamination)
-  val oracles: Map[String, String] = Map(
-    "q_st1_stream_agg" -> st1StreamAggSql,
-    "q_st2_stream_enrich" -> st2StreamEnrichSql,
-    "q_st3_stream_dedup" -> st3StreamDedupSql,
-    "q_st4_stream_window" -> st4StreamWindowSql,
-    "q_st5_stream_sessions" -> st5StreamSessionsSql,
-    "q_st6_stream_sketch" -> st6StreamSketchSql,
-    "q_st7_stream_join" -> st7StreamJoinSql,
-    "q_st8_stream_outer_join" -> st8StreamOuterJoinSql,
-    "q_st9_stream_full_outer" -> st9StreamFullOuterJoinSql,
-    "q_st10_stream_media" -> st10StreamMediaDedupSql,
-    "q_st11_stream_quality" -> st11StreamQualitySql,
-    "q_st14_stream_neardup" -> st14StreamNearDupSql,
-    "q_st15_stream_ivf" -> st15StreamIvfSql,
-    "q_st16_stream_contamination" -> st16StreamContaminationSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_st10_stream_media", st10StreamMediaDedup, st10StreamMediaDedupSql),
+    QuerySpec("q_st11_stream_quality", st11StreamQuality, st11StreamQualitySql),
+    QuerySpec("q_st1_stream_agg", st1StreamAgg, st1StreamAggSql),
+    QuerySpec("q_st2_stream_enrich", st2StreamEnrich, st2StreamEnrichSql),
+    QuerySpec("q_st3_stream_dedup", st3StreamDedup, st3StreamDedupSql),
+    QuerySpec("q_st4_stream_window", st4StreamWindow, st4StreamWindowSql),
+    QuerySpec("q_st5_stream_sessions", st5StreamSessions, st5StreamSessionsSql),
+    QuerySpec("q_st6_stream_sketch", st6StreamSketch, st6StreamSketchSql),
+    QuerySpec("q_st7_stream_join", st7StreamJoin, st7StreamJoinSql),
+    QuerySpec("q_st8_stream_outer_join", st8StreamOuterJoin, st8StreamOuterJoinSql),
+    QuerySpec("q_st9_stream_full_outer", st9StreamFullOuterJoin, st9StreamFullOuterJoinSql),
+    QuerySpec("q_st14_stream_neardup", st14StreamNearDup, st14StreamNearDupSql),
+    QuerySpec("q_st15_stream_ivf", st15StreamIvf, st15StreamIvfSql),
+    QuerySpec("q_st16_stream_contamination", st16StreamContamination, st16StreamContaminationSql)
+  )
 }

@@ -12,7 +12,7 @@ import graft.ops.Temporal
   * the O(n·m)-per-key formulation the Spark operators exist to avoid.
   */
 object TemporalQueries {
-  type Q = (SparkSession, String) => DataFrame
+  import QuerySpec.Q
 
   /** Epoch-us view of events shared by the three queries. */
   private def eventsUs(s: SparkSession, d: String): DataFrame =
@@ -657,45 +657,25 @@ object TemporalQueries {
 
   // ---- registry --------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_j22_asof_nearest" -> j22AsOfNearest,
-    "q_j10_asof" -> j10AsOf,
-    "q_j11_range" -> j11Range,
-    "q_j16_asof_fwd" -> j16AsOfFwd,
-    "q_j20_asof_tol" -> j20AsOfTol,
-    "q_g1_sessions" -> g1Sessions,
-    "q_g2_bars" -> g2Bars,
-    "q_g3_ffill" -> g3Ffill,
-    "q_g4_funnel" -> g4Funnel,
-    "q_g5_retention" -> g5Retention,
-    "q_s3_scd2" -> s3Scd2,
-    "q_s5_scd2_incr" -> s5Scd2Incr,
-    "q_g7_transitions" -> g7Transitions,
-    "q_j17_pit" -> j17Pit,
-    "q_j18_overlap" -> j18Overlap,
-    "q_g8_pagerank" -> g8PageRank,
-    "q_g9_ppr" -> g9Ppr,
-    "q_g10_triangles" -> g10Triangles,
-    "q_g11_kcore" -> g11KCore)
-
-  val oracles: Map[String, String] = Map(
-    "q_j22_asof_nearest" -> j22AsOfNearestSql,
-    "q_j10_asof" -> j10AsOfSql,
-    "q_j11_range" -> j11RangeSql,
-    "q_j16_asof_fwd" -> j16AsOfFwdSql,
-    "q_j20_asof_tol" -> j20AsOfTolSql,
-    "q_g1_sessions" -> g1SessionsSql,
-    "q_g2_bars" -> g2BarsSql,
-    "q_g3_ffill" -> g3FfillSql,
-    "q_g4_funnel" -> g4FunnelSql,
-    "q_g5_retention" -> g5RetentionSql,
-    "q_s3_scd2" -> s3Scd2Sql,
-    "q_s5_scd2_incr" -> s5Scd2IncrSql,
-    "q_g7_transitions" -> g7TransitionsSql,
-    "q_j17_pit" -> j17PitSql,
-    "q_j18_overlap" -> j18OverlapSql,
-    "q_g8_pagerank" -> g8PageRankSql,
-    "q_g9_ppr" -> g9PprSql,
-    "q_g10_triangles" -> g10TrianglesSql,
-    "q_g11_kcore" -> g11KCoreSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_j22_asof_nearest", j22AsOfNearest, j22AsOfNearestSql),
+    QuerySpec("q_j10_asof", j10AsOf, j10AsOfSql),
+    QuerySpec("q_j11_range", j11Range, j11RangeSql),
+    QuerySpec("q_j16_asof_fwd", j16AsOfFwd, j16AsOfFwdSql),
+    QuerySpec("q_j20_asof_tol", j20AsOfTol, j20AsOfTolSql),
+    QuerySpec("q_g1_sessions", g1Sessions, g1SessionsSql),
+    QuerySpec("q_g2_bars", g2Bars, g2BarsSql),
+    QuerySpec("q_g3_ffill", g3Ffill, g3FfillSql),
+    QuerySpec("q_g4_funnel", g4Funnel, g4FunnelSql),
+    QuerySpec("q_g5_retention", g5Retention, g5RetentionSql),
+    QuerySpec("q_s3_scd2", s3Scd2, s3Scd2Sql),
+    QuerySpec("q_s5_scd2_incr", s5Scd2Incr, s5Scd2IncrSql),
+    QuerySpec("q_g7_transitions", g7Transitions, g7TransitionsSql),
+    QuerySpec("q_j17_pit", j17Pit, j17PitSql),
+    QuerySpec("q_j18_overlap", j18Overlap, j18OverlapSql),
+    QuerySpec("q_g8_pagerank", g8PageRank, g8PageRankSql),
+    QuerySpec("q_g9_ppr", g9Ppr, g9PprSql),
+    QuerySpec("q_g10_triangles", g10Triangles, g10TrianglesSql),
+    QuerySpec("q_g11_kcore", g11KCore, g11KCoreSql)
+  )
 }

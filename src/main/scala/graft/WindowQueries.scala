@@ -19,7 +19,8 @@ import graft.ops.{Exact, Rankings, Windowed}
   * no single-partition OVER () on unbounded input anywhere.
   */
 object WindowQueries {
-  import Queries.{Q, dstr, dstrSql}
+  import QuerySpec.Q
+  import Queries.{dstr, dstrSql}
 
   /** Shared base: events → one row per (date, user_id) with exact volume.
     * Mirrors the reference's daily_availability grain (schema.py:68-95).
@@ -556,45 +557,24 @@ object WindowQueries {
       |FROM act a LEFT JOIN nw USING (date)
       |ORDER BY date""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q_w15_adoption" -> w15Adoption,
-    "q_w14_streaks" -> w14Streaks,
-    "q_w13_anomaly" -> w13Anomaly,
-    "q_w9_sliding_distinct" -> w9SlidingDistinct,
-    "q_w11_cum_distinct" -> w11CumDistinct,
-    "q_w12_drawdown" -> w12Drawdown,
-    "q_w1_rank_topn" -> w1RankTopN,
-    "q_w2w3_dense_pct" -> w2w3DensePct,
-    "q_w4_partition_total" -> w4PartitionTotal,
-    "q_w5_lag_ladder" -> w5LagLadder,
-    "q_w6_rolling" -> w6Rolling,
-    "q_w7_share" -> w7Share,
-    "q_rankings_pipeline" -> rankingsPipeline,
-    "q_o3_recency" -> o3Recency,
-    "q_w8_ntile" -> w8Ntile,
-    "q_w10_firstlast" -> w10FirstLast,
-    "q_o4_topk_group" -> o4TopKGroup,
-    "q_o5_page" -> o5Page
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_w14_streaks" -> w14StreaksSql,
-    "q_w15_adoption" -> w15AdoptionSql,
-    "q_w9_sliding_distinct" -> w9SlidingDistinctSql,
-    "q_w11_cum_distinct" -> w11CumDistinctSql,
-    "q_w12_drawdown" -> w12DrawdownSql,
-    "q_w13_anomaly" -> w13AnomalySql,
-    "q_w1_rank_topn" -> w1RankTopNSql,
-    "q_w2w3_dense_pct" -> w2w3DensePctSql,
-    "q_w4_partition_total" -> w4PartitionTotalSql,
-    "q_w5_lag_ladder" -> w5LagLadderSql,
-    "q_w6_rolling" -> w6RollingSql,
-    "q_w7_share" -> w7ShareSql,
-    "q_rankings_pipeline" -> rankingsPipelineSql,
-    "q_o3_recency" -> o3RecencySql,
-    "q_w8_ntile" -> w8NtileSql,
-    "q_w10_firstlast" -> w10FirstLastSql,
-    "q_o4_topk_group" -> o4TopKGroupSql,
-    "q_o5_page" -> o5PageSql
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_w15_adoption", w15Adoption, w15AdoptionSql),
+    QuerySpec("q_w14_streaks", w14Streaks, w14StreaksSql),
+    QuerySpec("q_w13_anomaly", w13Anomaly, w13AnomalySql),
+    QuerySpec("q_w9_sliding_distinct", w9SlidingDistinct, w9SlidingDistinctSql),
+    QuerySpec("q_w11_cum_distinct", w11CumDistinct, w11CumDistinctSql),
+    QuerySpec("q_w12_drawdown", w12Drawdown, w12DrawdownSql),
+    QuerySpec("q_w1_rank_topn", w1RankTopN, w1RankTopNSql),
+    QuerySpec("q_w2w3_dense_pct", w2w3DensePct, w2w3DensePctSql),
+    QuerySpec("q_w4_partition_total", w4PartitionTotal, w4PartitionTotalSql),
+    QuerySpec("q_w5_lag_ladder", w5LagLadder, w5LagLadderSql),
+    QuerySpec("q_w6_rolling", w6Rolling, w6RollingSql),
+    QuerySpec("q_w7_share", w7Share, w7ShareSql),
+    QuerySpec("q_rankings_pipeline", rankingsPipeline, rankingsPipelineSql),
+    QuerySpec("q_o3_recency", o3Recency, o3RecencySql),
+    QuerySpec("q_w8_ntile", w8Ntile, w8NtileSql),
+    QuerySpec("q_w10_firstlast", w10FirstLast, w10FirstLastSql),
+    QuerySpec("q_o4_topk_group", o4TopKGroup, o4TopKGroupSql),
+    QuerySpec("q_o5_page", o5Page, o5PageSql)
   )
 }

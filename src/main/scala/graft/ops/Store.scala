@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.net.URI
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -95,7 +97,6 @@ object Store {
     */
   def withLease[T](spark: SparkSession, path: String,
                    ttlMs: Long = DefaultLeaseTtlMs)(body: => T): T = {
-    import org.apache.hadoop.fs.Path
     val lease = new Path(path + ".lease")
     val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val owner = java.lang.ProcessHandle.current().pid().toString + "@" +
@@ -255,7 +256,6 @@ object Store {
     */
   def assertLeaseOwner(spark: SparkSession, path: String): Unit =
     heldLeases.get().get(path).foreach { owner =>
-      import org.apache.hadoop.fs.Path
       val lease = new Path(path + ".lease")
       val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val current =
@@ -557,7 +557,6 @@ object Store {
     */
   def manifestAudit(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def walk(p: Path): Seq[String] =
@@ -720,14 +719,8 @@ object Store {
       mf.filter(col("word") === w && (col("bits").bitwiseAND(m) === m))
         .select("file")
     }.reduce(_.intersect(_)) // every required word's mask fully present
-    val files = satisfied.collect().map(_.getString(0)).toIndexedSeq
-    val pred = col(keyCol) === lit(value)
-    val df =
-      if (files.isEmpty)
-        spark.read.option("basePath", path).parquet(path).filter(pred).limit(0)
-      else
-        spark.read.option("basePath", path).parquet(files: _*).filter(pred)
-    PrunedScan(df, files.length, total)
+    readListed(spark, path, satisfied.collect().map(_.getString(0)).toIndexedSeq, total,
+      col(keyCol) === lit(value))
   }
 
   /** Manifest-pruned range scan: read ONLY the files whose [min, max]
@@ -743,12 +736,19 @@ object Store {
     val files = mf
       .filter(col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi))
       .select("file").collect().map(_.getString(0)).toIndexedSeq
-    val pred = col(c) >= lit(lo) && col(c) <= lit(hi)
+    readListed(spark, path, files, total, col(c) >= lit(lo) && col(c) <= lit(hi))
+  }
+
+  /** Reads the manifest-listed `files` of the table at `path`, filtered by
+    * `pred`. The manifests record `input_file_name` URIs, whose escaped
+    * partition dirs (`hour=2024-01-14%2002%253A00%253A00`) name no path
+    * until decoded; an empty list reads no rows but keeps the schema. */
+  private def readListed(spark: SparkSession, path: String, files: IndexedSeq[String],
+                         total: Long, pred: Column): PrunedScan = {
+    val reader = spark.read.option("basePath", path)
     val df =
-      if (files.isEmpty)
-        spark.read.option("basePath", path).parquet(path).filter(pred).limit(0)
-      else
-        spark.read.option("basePath", path).parquet(files: _*).filter(pred)
+      if (files.isEmpty) reader.parquet(path).filter(pred).limit(0)
+      else reader.parquet(files.map(f => new Path(new URI(f)).toString): _*).filter(pred)
     PrunedScan(df, files.length, total)
   }
 
@@ -780,7 +780,6 @@ object Store {
   def compact(spark: SparkSession, path: String, partCol: String,
               targetBytes: Long = 128L << 20): (Long, Long) =
       withLease(spark, path) {
-    import org.apache.hadoop.fs.Path
     // self-heal first: a previous compact may have died inside its swap
     // window — without this, the read below finds no live table. No-op
     // on a healthy table. (Unlocked variant: this compact already holds
@@ -909,7 +908,6 @@ object Store {
     withLease(spark, path, ttlMs) { recoverUnlocked(spark, path) }
 
   private def recoverUnlocked(spark: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val live = new Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + ".compacting")

@@ -10,7 +10,7 @@ class AggSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("rollup is one pass: Expand before a partial aggregate, one agg exchange") {
-    val p = Queries.all("q_a12_rollup")(spark, sf)
+    val p = SparkEntry.queries("q_a12_rollup")(spark, sf)
       .queryExecution.executedPlan.toString
     p should include("Expand")
     p should include("partial_count")

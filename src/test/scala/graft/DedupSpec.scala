@@ -1234,4 +1234,14 @@ class DedupSpec extends SparkSpec {
     PipelineQueries.d10MinhashEst(spark, dir) // warm: first-use class loading
     jobDescriptions(PipelineQueries.d10MinhashEst(spark, dir)).size should be <= 24
   }
+
+  test("materializing q_d17_lsh_tuning runs at most one job outside its dedup: labels") {
+    val dir = Files.createTempDirectory("graft-d17-jobs").toString
+    dupHeavy.select(col("id").as("doc_id"), col("text"))
+      .write.parquet(s"$dir/documents.parquet")
+    val jobs = jobDescriptions(CurationQueries.d17LshTuning(spark, dir)
+      .write.format("noop").mode("overwrite").save())
+    jobs.filter(_.startsWith("dedup:lsh_tuning:")) should not be empty
+    jobs.filterNot(_.startsWith("dedup:")).size should be <= 1
+  }
 }

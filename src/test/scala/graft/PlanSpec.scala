@@ -13,7 +13,7 @@ class PlanSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    Queries.all(name)(spark, sf).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   test("q_f2_range pushes the date range into the parquet scan") {
     val p = plan("q_f2_range")
@@ -259,7 +259,7 @@ class PlanSpec extends SparkSpec {
   test("q_g10_triangles: wedges enumerate inside the out-list aggregation, " +
     "no cartesian anywhere in the closure") {
     // the registered query checkpoints its node-bounded rollup (so the
-    // plan visible through Queries.all is a post-checkpoint scan) —
+    // plan visible through SparkEntry.queries is a post-checkpoint scan) —
     // lock the operator's own pre-checkpoint plan on the same edges
     val li = Tables.lineitem(spark, sf)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()

@@ -9,6 +9,13 @@ class SmokeSpec extends SparkSpec {
     (q -- o) shouldBe empty
     q.size should be >= 148
   }
+
+  test("registry names are unique, so no QuerySpec is dropped from the name maps") {
+    val names = Queries.specs.map(_.name)
+    names.diff(names.distinct) shouldBe empty
+    names.size shouldBe SparkEntry.queries.size
+    names.size shouldBe SparkEntry.oracleSql.size
+  }
 }
 
 /** Pins `Tables.normalizeTs` on BOTH ts encodings the driver has shipped:

@@ -514,6 +514,23 @@ class StoreSpec extends SparkSpec {
       spark.read.parquet(path).filter($"o_orderkey".between(1L, 400L)).count()
   }
 
+  test("scanPruned reads a manifest over escaped partition dirs (timestamp partitions)") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-skipesc").toString + "/t"
+    // a timestamp partition value is written as `hour=2024-01-14 02%3A00%3A00`,
+    // which the manifest's input_file_name URIs escape once more
+    (1 to 30).map(i => (Timestamp.valueOf(s"2024-01-14 0${i / 10}:00:00"), i.toLong))
+      .toDF("hour", "id").coalesce(1).write.partitionBy("hour").parquet(path)
+    Store.refreshManifest(spark, path, Seq("id"))
+
+    val pruned = Store.scanPruned(spark, path, "id", 10L, 15L)
+    (pruned.filesRead, pruned.filesTotal) shouldBe ((1L, 4L))
+    val expected = spark.read.parquet(path).filter($"id".between(10L, 15L))
+      .orderBy("id").collect()
+    expected.length shouldBe 6
+    pruned.df.orderBy("id").collect() shouldBe expected
+  }
+
   test("upsert maintains the manifest incrementally for touched partitions only") {
     import spark.implicits._
     val path = Files.createTempDirectory("graft-skipup").toString + "/t"
