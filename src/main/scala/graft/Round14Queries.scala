@@ -101,7 +101,7 @@ object Round14Queries {
         precisionFloorPpm = d23PrecisionFloorPpm,
         recallFloorPpm = d23RecallFloorPpm,
         truthDfCap = Some(d23TruthDfCap))
-      .orderBy("rows_per_band")
+      .coalesce(1).sortWithinPartitions("rows_per_band") // 3 local rows: one task, no range sort
 
   private def d23Block(r: Int): String = {
     val b = 16 / r
@@ -204,7 +204,7 @@ object Round14Queries {
         bandConfigs = Seq(2, 3, 4, 6), maxDist = d24MaxDist, sampleMod = 2,
         precisionFloorPpm = d24PrecisionFloorPpm,
         recallFloorPpm = d24RecallFloorPpm)
-      .orderBy("n_bands")
+      .coalesce(1).sortWithinPartitions("n_bands") // 4 local rows: one task, no range sort
 
   private def d24Block(nb: Int): String = {
     val w = 60 / nb
@@ -670,7 +670,7 @@ object Round14Queries {
         bandConfigs = Seq(2, 4, 8), maxDist = m16MaxDist, sampleMod = 2,
         precisionFloorPpm = m16PrecisionFloorPpm,
         recallFloorPpm = m16RecallFloorPpm)
-      .orderBy("n_bands")
+      .coalesce(1).sortWithinPartitions("n_bands") // 3 local rows: one task, no range sort
   }
 
   private def m16Block(nb: Int): String = {
@@ -846,7 +846,7 @@ object Round14Queries {
         // ~20000); production raises sampleMod instead — the scaladoc's
         // contract. The cap still refuses a mis-sized call.
         truthRepCap = 25000)
-      .orderBy("n_planes")
+      .coalesce(1).sortWithinPartitions("n_planes") // 3 local rows: one task, no range sort
   }
 
   private def e22Block(p: Int): String = {

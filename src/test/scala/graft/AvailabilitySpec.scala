@@ -449,4 +449,134 @@ class AvailabilitySpec extends SparkSpec {
     again.map(r => (r.getAs[String]("symbol"), r.getAs[Date]("date").toString)).toSet shouldBe
       got.map(r => (r.getAs[String]("symbol"), r.getAs[Date]("date").toString)).toSet
   }
+
+  // ---- serve calls: small sorted results finish on one partition -------
+
+  private val serveD0 = java.time.LocalDate.parse("2024-01-01")
+  private def serveDay(i: Int): Date = Date.valueOf(serveD0.plusDays(i))
+  /** The serve fixture's day with no rows at all. */
+  private val ServeHole = 20
+  /** The serve fixture's re-probed day. */
+  private val ServeReprobed = 25
+
+  /** Symbol `s` of the serve fixture on day `d`: listed on day 2s, S05
+    * delisted from day 30, outages after listing, volume (with ties) only
+    * from day 8 on, as in the reference's NULL-volume gap.
+    */
+  private def serveRec(d: Int, s: Int): AvailabilityRecord = {
+    val avail = s * 2 <= d && !(s == 5 && d >= 30) && (s * 2 == d || (d * 7 + s) % 11 != 0)
+    rec(serveDay(d).toString, f"S$s%02dUSDT", avail,
+      vol = if (avail && d >= 8) Some(1000.0 * ((s * 13 + d) % 7 + 1)) else None,
+      trades = Some(d.toLong))
+  }
+
+  /** Symbol `s` of the serve fixture's re-probe of [[ServeReprobed]]:
+    * availability flipped for every third symbol, new volumes, a later probe.
+    */
+  private def serveReprobe(s: Int): AvailabilityRecord = {
+    val r = serveRec(ServeReprobed, s)
+    val avail = r.available ^ (s % 3 == 0)
+    r.copy(available = avail, probe_timestamp = Timestamp.valueOf("2024-03-01 02:00:00"),
+      file_size_bytes = if (avail) Some(1L) else None, status_code = if (avail) 200 else 404,
+      quote_volume_usdt = if (avail) Some(2000.0 * ((s * 5 + 1) % 7 + 1)) else None)
+  }
+
+  /** 40 days × 12 symbols, one file per date as daily upserts leave them,
+    * with no rows on [[ServeHole]] and [[ServeReprobed]] re-probed through
+    * `Store.upsert`.
+    */
+  private lazy val serveFact: String = {
+    val path = Files.createTempDirectory("graft-serve").toString + "/fact"
+    val rows = for (d <- 0 until 40 if d != ServeHole; s <- 0 until 12) yield serveRec(d, s)
+    Store.writePartitioned(spark.createDataFrame(rows).repartition(col("date")), path, "date")
+    Store.upsert(spark, path, spark.createDataFrame((0 until 12).map(serveReprobe)), "date",
+      Seq("date", "symbol"), "probe_timestamp", "status_code")
+    path
+  }
+
+  test("serve calls finish their small sorted results on one partition: one job on a " +
+    "one-day cohort, at most two over history") {
+    val df = AQ.open(spark, serveFact)
+    val d = serveDay(22)
+    def jobs(q: org.apache.spark.sql.DataFrame): Int = {
+      var n = 0
+      val js = jobDescriptions { n = q.collect().length }
+      withClue("the call returns rows: ")(n should be > 0)
+      js.size
+    }
+    val oneDay = Seq(
+      "availableSymbolsOnDate" -> jobs(AQ.availableSymbolsOnDate(df, d)),
+      "topSymbolsByVolume" -> jobs(AQ.topSymbolsByVolume(df, d, 5)),
+      "volumePercentile" -> jobs(AQ.volumePercentile(df, "S03USDT", d)))
+    val history = Seq(
+      "symbolTimeline" -> jobs(AQ.symbolTimeline(df, "S03USDT")),
+      "dailyAvailabilityCounts" -> jobs(AQ.dailyAvailabilityCounts(df)),
+      "symbolCountByDateRange" -> jobs(AQ.symbolCountByDateRange(df, serveDay(5), d)),
+      "newListings" -> jobs(AQ.newListings(df, d)),
+      "delistings" -> jobs(AQ.delistings(df, d)))
+    withClue(s"jobs per call ${(oneDay ++ history).mkString(", ")}: ") {
+      oneDay.map(_._2).distinct shouldBe Seq(1)
+      all(history.map(_._2)) should be <= 2
+    }
+  }
+
+  test("serve calls return the same rows in the same order under any shuffle partition " +
+    "count, with AQE on or off: a gap day, a day with no rows, a re-probed day") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import spark.implicits._
+    val df = AQ.open(spark, serveFact)
+    val api = Seq("S01USDT", "S03USDT", "ZZZUSDT").toDF("symbol")
+    def by[K: Ordering](f: Row => K): Seq[Row] => Boolean = rs => rs.map(f) == rs.map(f).sorted
+    val bySymbol = by(_.getString(0))
+    val days = Seq("gap" -> 3, "hole" -> ServeHole, "reprobed" -> ServeReprobed, "day" -> 22)
+    val calls: Seq[(String, () => DataFrame, Seq[Row] => Boolean)] = days.flatMap {
+      case (tag, i) =>
+        val d = serveDay(i)
+        Seq[(String, () => DataFrame, Seq[Row] => Boolean)](
+          (s"availableSymbolsOnDate($tag)", () => AQ.availableSymbolsOnDate(df, d), bySymbol),
+          (s"newListings($tag)", () => AQ.newListings(df, d), bySymbol),
+          (s"delistings($tag)", () => AQ.delistings(df, d), bySymbol),
+          (s"topSymbolsByVolume($tag)", () => AQ.topSymbolsByVolume(df, d, 8),
+            by(r => (BigDecimal(-r.getDouble(1)), r.getString(0)))),
+          (s"volumePercentile($tag)", () => AQ.volumePercentile(df, "S03USDT", d), bySymbol),
+          (s"crossCheckSymbols($tag)", () => AQ.crossCheckSymbols(df, api, d),
+            by(r => (r.getString(1), r.getString(0)))))
+    } ++ Seq((serveDay(0), serveDay(26)), (serveDay(ServeHole), serveDay(ServeHole))).flatMap {
+      case (a, b) => Seq[(String, () => DataFrame, Seq[Row] => Boolean)](
+        (s"symbolsInRange($a..$b)", () => AQ.symbolsInRange(df, a, b), bySymbol),
+        (s"symbolCountByDateRange($a..$b)", () => AQ.symbolCountByDateRange(df, a, b),
+          by(_.getDate(0).toString)),
+        (s"volumeQuantileSketch($a..$b)", () => AQ.volumeQuantileSketch(df, a, b), bySymbol))
+    } ++ Seq[(String, () => DataFrame, Seq[Row] => Boolean)](
+      ("recentSymbolCounts", () => AQ.recentSymbolCounts(df, 7, lit(serveDay(27))),
+        by(r => -r.getDate(0).toLocalDate.toEpochDay)),
+      ("symbolTimeline(S03)", () => AQ.symbolTimeline(df, "S03USDT"), by(_.getDate(0).toString)),
+      ("symbolTimeline(S05)", () => AQ.symbolTimeline(df, "S05USDT"), by(_.getDate(0).toString)),
+      ("dailyAvailabilityCounts", () => AQ.dailyAvailabilityCounts(df), by(_.getDate(0).toString)))
+    def answer(): Map[String, Seq[Row]] = calls.map { case (n, q, _) => n -> q().collect().toSeq }.toMap
+
+    val expected = answer()
+    calls.foreach { case (n, _, ordered) => withClue(s"$n is sorted: ")(ordered(expected(n)) shouldBe true) }
+    def symbols(n: String) = expected(n).map(_.getString(0))
+    Seq("availableSymbolsOnDate", "topSymbolsByVolume", "volumePercentile")
+      .foreach(n => withClue(s"$n(hole): ")(expected(s"$n(hole)") shouldBe empty))
+    expected(s"symbolCountByDateRange(${serveDay(ServeHole)}..${serveDay(ServeHole)})") shouldBe empty
+    expected("dailyAvailabilityCounts").map(_.getDate(0)) should not contain serveDay(ServeHole)
+    expected("dailyAvailabilityCounts").size shouldBe 39
+    symbols("availableSymbolsOnDate(gap)") should not be empty
+    expected("topSymbolsByVolume(gap)") shouldBe empty // no volume in the gap
+    symbols("availableSymbolsOnDate(reprobed)") shouldBe
+      (0 until 12).map(serveReprobe).filter(_.available).map(_.symbol)
+    symbols("newListings(day)") shouldBe Seq("S11USDT")
+    symbols("delistings(day)") shouldBe Seq("S00USDT")
+
+    val default = spark.conf.get("spark.sql.shuffle.partitions")
+    for (aqe <- Seq("true", "false"); parts <- Seq("1", "7", default))
+      withConf("spark.sql.adaptive.enabled" -> aqe, "spark.sql.shuffle.partitions" -> parts) {
+        val got = answer()
+        calls.foreach { case (n, _, _) =>
+          withClue(s"AQE $aqe, $parts shuffle partitions, $n: ")(got(n) shouldBe expected(n))
+        }
+      }
+  }
 }

@@ -25,6 +25,16 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.spark
 
+  /** Run `body` with the session settings `kv`, then restore the old ones. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** The description of every job `body` starts ("null" for none). The
     * listener bus delivers in order, so a marker job run after `body` and
     * seen by the listener proves every earlier job start was seen too; one

@@ -56,14 +56,6 @@ class ValidationSpec extends SparkSpec {
     def incomplete() = Validation.incompleteKeys(keyed, "k", 3L)
     def answer() = (gaps().collect().map(_.getDate(0).toString).toSeq,
       incomplete().collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
-    def withConf[A](kv: (String, String)*)(body: => A): A = {
-      val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-      kv.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
     val expected = answer()
     expected._1 shouldBe Seq("2023-12-30", "2023-12-31", "2024-01-04", "2024-01-05",
       "2024-01-17", "2024-01-30", "2024-01-31")
