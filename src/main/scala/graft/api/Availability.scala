@@ -55,14 +55,11 @@ case class AvailabilityRecord(
   *    one task);
   *  - a one-day cohort ranking coalesces its date-pruned input, so the
   *    global windows above it need no exchange.
-  * On the perfbench availability workload (about 105 dates × 1000
-  * symbols, `local[4]` on a 4-vCPU VM) a serve session of 24 calls runs
-  * 39 jobs instead of 73. Over ten alternating runs a side, the
-  * geometric mean of the call kinds' median latencies fell from 181 to
-  * 142 ms, and that of the slower half of the kinds from 242 to 185 ms
-  * (`bench/ab_serve_tails.json`). A range scan that ends in an
-  * ungrouped aggregate (`averageVolume`) has no sort and keeps its
-  * parallel plan: coalescing would read its range in one task.
+  * Each tail was timed against the plain `orderBy` at the benchmark's
+  * 104 dates and at 2,000 dates (`bench/ab_serve_tails.json`). A range
+  * scan that ends in an ungrouped aggregate (`averageVolume`) has no sort
+  * and keeps its parallel plan: coalescing would read its range in one
+  * task.
   */
 object AvailabilityQueries {
 
@@ -88,26 +85,23 @@ object AvailabilityQueries {
 
   // ---- snapshots (queries/snapshots.py) -------------------------------
 
-  /** Symbols available on one date, sorted (snapshots.py:56-64). One
-    * date's rows are sorted in one task, with no exchange.
+  /** Symbols available on one date, sorted (snapshots.py:56-64). Inline
+    * rather than `Relational.snapshot`, whose plan the registry's
+    * `q_f1_snapshot` shares.
     */
   def availableSymbolsOnDate(df: DataFrame, d: Date): DataFrame =
     df.filter(col("date") === lit(d) && col("available"))
       .select("symbol", "file_size_bytes", "last_modified")
       .coalesce(1).orderBy("symbol")
 
-  /** Distinct symbols seen available in a date range (snapshots.py:100-108),
-    * sorted in one task above the distinct's exchange.
-    */
+  /** Distinct symbols seen available in a date range (snapshots.py:100-108). */
   def symbolsInRange(df: DataFrame, start: Date, end: Date): DataFrame =
     df.filter(col("date").between(lit(start), lit(end)) && col("available"))
       .select("symbol").distinct().coalesce(1).orderBy("symbol")
 
   // ---- timelines (queries/timelines.py) -------------------------------
 
-  /** Full availability timeline for one symbol (timelines.py:54-62). The
-    * scan stays parallel; one single-partition shuffle feeds the sort.
-    */
+  /** Full availability timeline for one symbol (timelines.py:54-62). */
   def symbolTimeline(df: DataFrame, symbol: String): DataFrame =
     df.filter(col("symbol") === symbol)
       .select("date", "available", "file_size_bytes")
@@ -125,9 +119,7 @@ object AvailabilityQueries {
 
   // ---- analytics (queries/analytics.py) -------------------------------
 
-  /** Per-day available-symbol counts (analytics.py:52-60), sorted in one
-    * task above the aggregate's exchange.
-    */
+  /** Per-day available-symbol counts (analytics.py:52-60). */
   def dailyAvailabilityCounts(df: DataFrame): DataFrame =
     df.filter(col("available"))
       .groupBy("date").agg(count(lit(1)).as("symbol_count"))
@@ -143,8 +135,7 @@ object AvailabilityQueries {
     * `java.time.Clock`-derived literal instead: the expression tree is
     * IDENTICAL either way — only the `today` leaf differs — so the
     * frozen spec pins the relative-date arithmetic of the live shape
-    * (AvailabilitySpec "C3 live shape"). Sorted in one task above the
-    * aggregate's exchange.
+    * (AvailabilitySpec "C3 live shape").
     */
   def recentSymbolCounts(df: DataFrame, days: Int = 7,
                          today: org.apache.spark.sql.Column = current_date()): DataFrame =
@@ -156,8 +147,7 @@ object AvailabilityQueries {
   /** A2: per-day available-symbol counts restricted to a date range
     * (analytics.py:160-204). Same single-shuffle shape as
     * `dailyAvailabilityCounts`, with the range predicate pushed into the
-    * scan (partition pruning when the table is date-partitioned), and
-    * the same one-task sort.
+    * scan (partition pruning when the table is date-partitioned).
     */
   def symbolCountByDateRange(df: DataFrame, start: Date, end: Date): DataFrame =
     df.filter(col("date").between(lit(start), lit(end)) && col("available"))
@@ -165,8 +155,7 @@ object AvailabilityQueries {
       .coalesce(1).orderBy("date")
 
   /** Symbols first available on `d` — never available before
-    * (analytics.py:94-108, NOT IN → left_anti), sorted in one task above
-    * the join.
+    * (analytics.py:94-108, NOT IN → left_anti).
     */
   def newListings(df: DataFrame, d: Date): DataFrame = {
     val today = df.filter(col("date") === lit(d) && col("available")).select("symbol")
@@ -174,9 +163,7 @@ object AvailabilityQueries {
     Relational.antiJoin(today, before, Seq("symbol")).coalesce(1).orderBy("symbol")
   }
 
-  /** Symbols available on d−1 but not on d (analytics.py:142-156), sorted
-    * in one task above the join.
-    */
+  /** Symbols available on d−1 but not on d (analytics.py:142-156). */
   def delistings(df: DataFrame, d: Date): DataFrame = {
     val prev = df.filter(col("date") === date_sub(lit(d), 1) && col("available")).select("symbol")
     val today = df.filter(col("date") === lit(d) && col("available")).select("symbol")
@@ -186,8 +173,7 @@ object AvailabilityQueries {
   // ---- volume (queries/volume.py) -------------------------------------
 
   /** Top-N by quote volume on a date, with rank / market share /
-    * percentile over the day's cohort (volume.py:40-81; W1+W4+W7). The
-    * cohort is ranked on one partition, so its windows need no exchange.
+    * percentile over the day's cohort (volume.py:40-81; W1+W4+W7).
     */
   def topSymbolsByVolume(df: DataFrame, d: Date, n: Int,
                          minVolume: Option[Double] = None): DataFrame = {
@@ -216,8 +202,7 @@ object AvailabilityQueries {
     * (bounded by construction — same rationale as `Windowed.globalRank`);
     * the symbol filter applies AFTER ranking, since the rank needs the
     * whole cohort. Returns 0 rows when the symbol has no volume that day,
-    * mirroring the reference's `None`. The cohort is ranked on one
-    * partition, so its windows need no exchange.
+    * mirroring the reference's `None`.
     */
   def volumePercentile(df: DataFrame, symbol: String, d: Date): DataFrame =
     df.filter(col("date") === lit(d) && col("available") &&
@@ -266,7 +251,7 @@ object AvailabilityQueries {
     * the sample (ceil(p·m/100)), computed with pure array expressions
     * — no window, no second exchange. `n_days` rides along so callers
     * see when the sample is exact (n ≤ k ⇒ the sketch holds every
-    * row). Sorted in one task above the aggregate's exchange.
+    * row).
     */
   def volumeQuantileSketch(df: DataFrame, start: Date, end: Date,
                            k: Int = 256): DataFrame = {
@@ -469,8 +454,7 @@ object AvailabilityQueries {
   /** Cross-check: the DB's available symbols on a date against the
     * exchangeInfo API's current symbol set (cross_check.py:79-137) —
     * one row per symbol tagged `only_db` / `only_api` / `both`. Feed
-    * `apiSymbols` from `Ingest.parseExchangeInfo`. Sorted in one task
-    * above the joins.
+    * `apiSymbols` from `Ingest.parseExchangeInfo`.
     */
   def crossCheckSymbols(df: DataFrame, apiSymbols: DataFrame, d: Date): DataFrame = {
     val dbSyms = df.filter(col("date") === lit(d) && col("available")).select("symbol")
