@@ -167,9 +167,10 @@ object Round16Queries {
       .toDF("cid", "ce").localCheckpoint(eager = true)
   }
 
-  /** The q_st28 policy threshold, MEASURED (St28Probe, sf0.001/0.01/
-    * 0.1): tick-1 imbalance ~10060-10074 (the uniform batch under the
-    * axis layout — round-robin clusters, so ~1.0× at every scale),
+  /** The q_st28 policy threshold, MEASURED at sf0.001/0.01/0.1 (PLANS.md
+    * "The composed maintenance tick"): tick-1 imbalance ~10060-10074
+    * (the uniform batch under the axis layout — round-robin clusters,
+    * so ~1.0× at every scale),
     * tick-2 ~39879-40030 (the drifted batch concentrates ~87.5% of its
     * mass in cell 0), tick-3 ~17955-19289 (the same drift arriving on
     * the RETRAINED layout, which splits the hot blob). 25000 sits

@@ -43,7 +43,7 @@ object StreamQueries {
     * sf0.1, the interval-join gates spent ~5 of their flat ~8 s in the
     * 32-partition store cycle (provider-independent: RocksDB within
     * noise of HDFS-backed), and dropping to state shards of ~5k rows
-    * cut each gate to ~2.9 s (tools/StateFloor, PLANS round 11).
+    * cut each gate to ~2.9 s (PLANS.md "Streaming state floor").
     * A NEW stream's first run bakes this into its checkpoint; restarts
     * keep the checkpointed value, so the knob is per-pipeline, set at
     * birth — exactly how a production deployment sizes its stores.

@@ -226,25 +226,20 @@ object BandChooser {
     * chunks: (ia, ib, w = ma·mb, hamming) over groups carrying (rep, m,
     * sigCols). The one in-bucket enumeration of the Hamming-banded
     * families — their choosers and their corpus passes
-    * (`Dedup.simhashPairs`, `Multimodal.bandedHammingPairs`): chained
-    * generators STREAM (see [[DupGroups]]), and the exact Hamming
-    * distance rides out of the bucket — the signatures are in the
-    * bucket rows, so nothing re-joins the corpus to verify.
+    * (`Dedup.simhashPairs`, `Multimodal.bandedHammingPairs`), over
+    * [[DupGroups.inBucketPairs]]. The exact Hamming distance rides out
+    * of the bucket — the signatures are in the bucket rows, so nothing
+    * re-joins the corpus to verify.
     */
   def bucketPairs(groups: DataFrame, nb: Int, chunkOf: Int => Column,
                   sigCols: Seq[String]): DataFrame =
-    groups
-      .withColumn("b", explode(sequence(lit(0), lit(nb - 1))))
-      .withColumn("chunk", chunkOf(nb))
-      .groupBy(col("b"), col("chunk"))
-      .agg(collect_list(struct((Seq("rep", "m") ++ sigCols).map(col): _*)).as("ms"))
-      .where(size(col("ms")) > 1)
-      .select(explode(col("ms")).as("x"), col("ms"))
-      .select(col("x"), explode(col("ms")).as("y"))
-      .where(col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("ia"), col("y.rep").as("ib"),
-        (col("x.m") * col("y.m")).as("w"),
-        sigCols.map(c => expr(s"bit_count(x.$c ^ y.$c)")).reduce(_ + _)
+    DupGroups.inBucketPairs(
+        groups.withColumn("b", explode(sequence(lit(0), lit(nb - 1))))
+          .withColumn("chunk", chunkOf(nb)),
+        Seq("b", "chunk"), struct((Seq("rep", "m") ++ sigCols).map(col): _*), "rep")
+      .select(col("ia.rep").as("ia"), col("ib.rep").as("ib"),
+        (col("ia.m") * col("ib.m")).as("w"),
+        sigCols.map(c => expr(s"bit_count(ia.$c ^ ib.$c)")).reduce(_ + _)
           .cast(IntegerType).as("hamming"))
       .distinct()
 

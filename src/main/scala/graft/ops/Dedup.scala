@@ -227,26 +227,24 @@ object Dedup {
     * signature = comma-joined minhashes in seed order; candidate pairs
     * are ids sharing any (band, signature) bucket.
     *
-    * Pair generation happens INSIDE the (band, sig) aggregation: each
-    * bucket collects its sorted id list and emits the within-bucket
-    * pairs directly. Versus the banded self-join this drops two
-    * exchanges (the join re-shuffled the banded frame for both sides)
-    * and the persist + eager-count the shared join input forced — the
-    * whole candidate stage is one keyed shuffle plus the final pair
-    * distinct, with nothing cached. Work per bucket is O(m²) in bucket
-    * OCCUPANCY — unbounded on exact-dup-heavy corpora, since identical
-    * documents share every band. This exploded formulation is kept as
-    * the naive reference the DedupSpec equivalence test pins
-    * [[lshCandidatesFromSigs]] (the production path, which collapses
-    * identical signatures before banding) against.
+    * Pairs come from the (band, sig) aggregation itself
+    * ([[DupGroups.inBucketPairs]]), not a banded self-join: one keyed
+    * shuffle plus the final pair distinct, with nothing cached. Work per
+    * bucket is O(m²) in bucket OCCUPANCY — unbounded on exact-dup-heavy
+    * corpora, since identical documents share every band. This exploded
+    * formulation is kept as the naive reference the DedupSpec
+    * equivalence test pins [[lshCandidatesFromSigs]] (the production
+    * path, which collapses identical signatures before banding) against.
     */
   def lshCandidates(mh: DataFrame, rowsPerBand: Int): DataFrame =
-    pairsWithinBuckets(
-      mh.withColumn("band", (col("j") / rowsPerBand).cast(IntegerType))
-        .groupBy(col("id"), col("band"))
-        .agg(array_join(
-          transform(sort_array(collect_list(struct(col("j"), col("m")))),
-            x => x.getField("m").cast(StringType)), ",").as("sig")))
+    DupGroups.inBucketPairs(
+        mh.withColumn("band", (col("j") / rowsPerBand).cast(IntegerType))
+          .groupBy(col("id"), col("band"))
+          .agg(array_join(
+            transform(sort_array(collect_list(struct(col("j"), col("m")))),
+              x => x.getField("m").cast(StringType)), ",").as("sig")),
+        Seq("band", "sig"), col("id"))
+      .select(col("ia"), col("ib")).distinct()
 
   /** Candidate generation from PACKED signatures (`minhashSigs` output):
     * band signatures are sliced out of the k-long array map-side — no
@@ -261,9 +259,11 @@ object Dedup {
     */
   def lshCandidatesFromSigs(sigs: DataFrame, rowsPerBand: Int, k: Int): DataFrame = {
     val groups = DupGroups.collapse(sigs, Seq("sig"), "id")
-    val repPairs = pairsWithinBuckets(
-      bandsOf(groups.select(col("rep").as("id"), col("sig")), rowsPerBand, k))
-    DupGroups.expand(groups, repPairs.select(col("ia").as("ra"), col("ib").as("rb")))
+    val repPairs = DupGroups.inBucketPairs(
+        bandsOf(groups.select(col("rep").as("id"), col("sig")), rowsPerBand, k),
+        Seq("band", "sig"), col("id"))
+      .select(col("ia").as("ra"), col("ib").as("rb")).distinct()
+    DupGroups.expand(groups, repPairs)
   }
 
   /** (id, band, sig-slice string) per signature band — the LSH bucket
@@ -376,19 +376,6 @@ object Dedup {
       .select(col("ia"), col("ib"), col("jac"))
       .localCheckpoint(eager = true)
   }
-
-  /** Distinct (ia < ib) pairs of ids sharing a (band, sig) bucket,
-    * enumerated by streamed generators (see [[DupGroups]]).
-    */
-  private def pairsWithinBuckets(banded: DataFrame): DataFrame =
-    banded
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("ia"), col("ids"))
-      .select(col("ia"), explode(col("ids")).as("ib"))
-      .where(col("ia") < col("ib"))
-      .distinct()
 
   /** Exact n-gram Jaccard for candidate pairs, against the shingle sets
     * stored as ROWS (string `sh` column or hashed `h` column — pass
@@ -510,15 +497,17 @@ object Dedup {
   def nearDupPairsFromGroups(grouped: DataFrame, k: Int, rowsPerBand: Int,
                              threshold: Double): DataFrame = {
     // Signatures come map-side off the cached hs arrays (sigFromHashSet
-    // — bit-equal to minhashSigs, zero movement), and banding is plain
-    // pairsWithinBuckets, NOT the sig-collapsing lshCandidatesFromSigs:
+    // — bit-equal to minhashSigs, zero movement), and banding is the
+    // plain bucket kernel, NOT the sig-collapsing lshCandidatesFromSigs:
     // contents are already collapsed here, so residual bucket occupancy
     // is the distinct-content near-dup family size — output-bounded —
     // and the sig-collapse would only add its exchange + expansion
     // joins for nothing. The verify reads the same cached arrays.
     val reps = grouped.select(col("rep").as("id"), col("hs"))
     val repSigs = reps.select(col("id"), sigFromHashSet(col("hs"), k).as("sig"))
-    val cand = pairsWithinBuckets(bandsOf(repSigs, rowsPerBand, k))
+    val cand = DupGroups.inBucketPairs(bandsOf(repSigs, rowsPerBand, k),
+        Seq("band", "sig"), col("id"))
+      .select(col("ia"), col("ib")).distinct()
     val repVerified = jaccardVerifyArrays(cand, reps)
       .filter(col("jac") >= threshold)
       .select(col("ia").as("ra"), col("ib").as("rb"), col("jac"))
@@ -578,8 +567,7 @@ object Dedup {
     * their arithmetic in provable lockstep (DedupSpec pins the three
     * tables numerically equal on shared columns). Signatures come
     * map-side off the cached hs arrays; the member count rides through
-    * the banding as a struct id so the weighted count needs no join;
-    * chained generators stream the in-bucket enumeration.
+    * the banding as a struct id so the weighted count needs no join.
     */
   private def weightedRepCandAll(groups: DataFrame,
                                  rowsPerBandConfigs: Seq[Int],
@@ -587,13 +575,8 @@ object Dedup {
     val sigsW = groups.select(
       struct(col("rep").as("id"), size(col("members")).cast(LongType).as("m")).as("id"),
       sigFromHashSet(col("hs"), k).as("sig"))
-    taggedBands(sigsW, rowsPerBandConfigs, k)
-      .groupBy(col("rpb"), col("band"), col("sig"))
-      .agg(collect_list(col("id")).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(col("rpb"), explode(col("ids")).as("ia"), col("ids"))
-      .select(col("rpb"), col("ia"), explode(col("ids")).as("ib"))
-      .where(col("ia") < col("ib"))
+    DupGroups.inBucketPairs(taggedBands(sigsW, rowsPerBandConfigs, k),
+        Seq("rpb", "band", "sig"), col("id"), "id")
       .select(col("rpb"), col("ia.id").as("ia"), col("ib.id").as("ib"),
         (col("ia.m") * col("ib.m")).as("w"))
       .distinct()

@@ -33,11 +33,11 @@ import org.apache.spark.sql.types.LongType
   * run [[Dedup.exactGroups]] upstream when pairs among exact copies are
   * not wanted.
   *
-  * Every enumeration here (and every in-bucket enumeration —
-  * `Dedup.pairsWithinBuckets`, [[BandChooser.bucketPairs]]) is two
-  * CHAINED generators plus an order filter, never a nested-transform
-  * flatten: Spark's generators STREAM their output, so a big group
-  * never materializes its m²/2 pair array inside one row.
+  * [[inBucketPairs]] is the one in-bucket pair enumeration of every
+  * banded candidate generator, and [[within]] reuses its array-to-pairs
+  * step: two CHAINED generators plus an order filter, never a
+  * nested-transform flatten. Spark's generators STREAM their output, so
+  * a big group never materializes its m²/2 pair array inside one row.
   */
 object DupGroups {
 
@@ -68,18 +68,39 @@ object DupGroups {
 
   /** Within-group member pairs (ia < ib) of every multi-member group
     * where `keep` holds, each carrying `cols` — evaluated once per group
-    * over its columns; `keep` may read them by name. `members` is sorted
-    * and duplicate-free, so the order filter keeps each pair once.
+    * over its columns; `keep` may read them by name. `members` is
+    * duplicate-free, so the order filter keeps each pair once.
     */
   def within(groups: DataFrame, cols: Seq[Column] = Nil,
              keep: Column = lit(true)): DataFrame = {
     val g = groups.where(size(col("members")) > 1)
       .select(col("members") +: cols: _*)
       .where(keep)
-    val extra = g.columns.toSeq.tail.map(col)
-    g.select(explode(col("members")).as("ia") +: col("members").as("mb") +: extra: _*)
-      .select(col("ia") +: explode(col("mb")).as("ib") +: extra: _*)
-      .where(col("ia") < col("ib"))
+    arrayPairs(g, "members", g.columns.toSeq.tail, "")
+  }
+
+  /** The in-bucket pair kernel: (ia, ib, keys…) for every two items of
+    * one bucket of `df`, keyed by the `keys` columns, with ia before ib
+    * on the item's `id` field (on the item itself when `id` is empty).
+    * Buckets of one item make no pairs. No sort and no pair `distinct`:
+    * a caller whose item can share several buckets (multi-band MinHash,
+    * Hamming) deduplicates its own projection.
+    */
+  def inBucketPairs(df: DataFrame, keys: Seq[String], item: Column,
+                    id: String = ""): DataFrame =
+    arrayPairs(df.groupBy(keys.map(col): _*).agg(collect_list(item).as("items"))
+      .where(size(col("items")) > 1), "items", keys, id)
+
+  /** (ia, ib, carry…) for every two elements of array column `arr`,
+    * ia before ib on field `id` (on the element when `id` is empty).
+    */
+  private def arrayPairs(df: DataFrame, arr: String, carry: Seq[String],
+                         id: String): DataFrame = {
+    def key(c: String) = if (id.isEmpty) col(c) else col(c).getField(id)
+    val kept = carry.map(col)
+    df.select(explode(col(arr)).as("ia") +: col(arr) +: kept: _*)
+      .select(col("ia") +: explode(col(arr)).as("ib") +: kept: _*)
+      .where(key("ia") < key("ib"))
   }
 
   /** The member-pair relation (ia < ib, extra…) of verified rep pairs

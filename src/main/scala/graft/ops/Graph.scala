@@ -180,22 +180,13 @@ object Graph {
         when(col("da") <= col("db"), col("db")).otherwise(col("da")).as("dv"))
       // consumed twice (wedge source + closing-edge side) — same rule
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Out-neighbor pairs ordered by the SAME (deg, id) total order the
-    // orientation uses, so the closing edge can only exist as (x -> y).
-    // Chained generators, not a nested-transform flatten: generators
-    // STREAM, so a high-out-degree hub (out-degree reaches ~√m even
-    // under degree orientation) never materializes its m²/2 wedge
-    // array inside a single row. The (dv, v) struct comparison IS the
-    // orientation's total order, so x < y keeps each wedge exactly
-    // once, ordered the way the closing edge can exist.
-    val wedges = oriented
-      .groupBy(col("u"))
-      .agg(collect_list(struct(col("dv"), col("v"))).as("ns"))
-      .where(size(col("ns")) > 1)
-      .select(col("u"), explode(col("ns")).as("xs"), col("ns"))
-      .select(col("u"), col("xs"), explode(col("ns")).as("ys"))
-      .where(col("xs") < col("ys"))
-      .select(col("u"), col("xs.v").as("x"), col("ys.v").as("y"))
+    // Out-neighbor pairs of u from the in-bucket pair kernel, which
+    // streams them (a high-out-degree hub never materializes its m²/2
+    // wedge array in one row). The (dv, v) struct comparison IS the
+    // orientation's total order, so each wedge comes out once, ordered
+    // the way the closing edge can exist (x -> y).
+    val wedges = DupGroups.inBucketPairs(oriented, Seq("u"), struct(col("dv"), col("v")))
+      .select(col("u"), col("ia.v").as("x"), col("ib.v").as("y"))
     val closing = oriented.select(col("u").as("x"), col("v").as("y"))
     val candidates =
       if (!bloomGate) wedges

@@ -989,19 +989,6 @@ object Store {
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** Derived summary table (the reference's daily_symbol_counts
-    * materialized view): per-partition totals refreshed post-ingest.
-    */
-  def refreshSummary(df: DataFrame, partCol: String, cond: org.apache.spark.sql.Column,
-                     summaryPath: String): Unit =
-    df.groupBy(col(partCol))
-      .agg(
-        count(lit(1)).as("total"),
-        sum(when(cond, 1L).otherwise(0L)).as("matched"),
-        // total − matched, so null-condition rows still land in unmatched
-        (count(lit(1)) - sum(when(cond, 1L).otherwise(0L))).as("unmatched"))
-      .write.mode(SaveMode.Overwrite).parquet(summaryPath)
-
   /** Additive schema migration (schema.py:9-42 ADD COLUMN): nulls for
     * history, no rewrite of existing files needed when reading with
     * mergeSchema or an explicit target schema.
@@ -1012,11 +999,9 @@ object Store {
       else acc.withColumn(name, lit(null).cast(dt))
     }
 
-  /** S8: result export — CSV with header or snappy parquet
+  /** S8: result export as snappy parquet
     * (docs/guides/QUERY_EXAMPLES.md:259-271 COPY ... TO).
     */
-  def exportCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
   def exportParquet(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(path)
 

@@ -49,17 +49,18 @@ object Validation {
 
   /** Cross-check: set difference / intersection of two key sets (J6).
     * Reference: validation/cross_check.py:129-137 (Python set ops).
-    * Expressed as distinct-project + left_anti/left_semi so Catalyst can
-    * broadcast the smaller set; output is tagged by origin.
+    * One full outer join of the two distinct key sets, so each input is
+    * shuffled once, by its distinct; the side is the join side whose
+    * flag is missing. The flags, not the keys, tell the sides apart: a
+    * NULL key matches nothing and stays on its own side. The result is
+    * one row per key, sorted on one partition.
     */
-  def keySetDiff(a: DataFrame, b: DataFrame, key: String): DataFrame = {
-    val ka = a.select(col(key)).distinct()
-    val kb = b.select(col(key)).distinct()
-    val onlyA = ka.join(kb, Seq(key), "left_anti").withColumn("side", lit("only_a"))
-    val onlyB = kb.join(ka, Seq(key), "left_anti").withColumn("side", lit("only_b"))
-    val both = ka.join(kb, Seq(key), "left_semi").withColumn("side", lit("both"))
-    onlyA.unionByName(onlyB).unionByName(both).orderBy("side", key)
-  }
+  def keySetDiff(a: DataFrame, b: DataFrame, key: String): DataFrame =
+    a.select(col(key)).distinct().withColumn("in_a", lit(true))
+      .join(b.select(col(key)).distinct().withColumn("in_b", lit(true)), Seq(key), "full_outer")
+      .select(col(key), when(col("in_b").isNull, "only_a")
+        .when(col("in_a").isNull, "only_b").otherwise("both").as("side"))
+      .coalesce(1).orderBy("side", key)
 
   /** Consistency diff (J8): full outer join of two per-key measure frames,
     * keeping keys whose measures differ (or exist on one side only).

@@ -286,23 +286,16 @@ object Vectors {
     // Dedup.nearDupPairsFromGroups.
     val groups = grouped
       .withColumn("bucket", col("bucket").bitwiseAND(lit(planeMask(nPlanes))))
-    // Pairs are generated INSIDE the bucket aggregation (the same
-    // shape as Dedup.lshCandidates): one keyed shuffle carrying each
+    // Pairs come from the bucket aggregation itself
+    // ([[DupGroups.inBucketPairs]]): one keyed shuffle carrying each
     // distinct vector once. Each vector sits in exactly one bucket, so
-    // the i<j enumeration over the id-sorted members needs no pair
-    // distinct. The exact-cosine verify runs on the member vectors
-    // carried alongside the ids; the enumeration streams ([[DupGroups]]).
-    val repPairs = groups
-      .select(col("rep").as("vid"), col("e"), col("bucket"))
-      .groupBy(col("bucket"))
-      .agg(collect_list(struct(col("vid"), col("e"))).as("ms"))
-      .where(size(col("ms")) > 1)
-      .select(col("bucket"), explode(col("ms")).as("x"), col("ms"))
-      .select(col("bucket"), col("x"), explode(col("ms")).as("y"))
-      .where(col("x.vid") < col("y.vid"))
-      .withColumn("cos_sim", rankCosine(col("x.e"), col("y.e")))
+    // the pairs need no distinct. The exact-cosine verify runs on the
+    // vectors carried alongside the ids.
+    val repPairs = DupGroups.inBucketPairs(groups, Seq("bucket"),
+        struct(col("rep"), col("e")), "rep")
+      .withColumn("cos_sim", rankCosine(col("ia.e"), col("ib.e")))
       .filter(col("cos_sim") >= threshold)
-      .select(col("x.vid").as("ra"), col("y.vid").as("rb"), col("bucket"), col("cos_sim"))
+      .select(col("ia.rep").as("ra"), col("ib.rep").as("rb"), col("bucket"), col("cos_sim"))
     // A within-group pair's cos_sim is rankCosine(e, e) — the very
     // expression the naive shape evaluates for an identical-vector pair.
     // Verified pairs are linear in candidates, not corpus: materialize
@@ -407,18 +400,12 @@ object Vectors {
           },
           // pairs once, in the coarsest buckets; candidacy at p is a mask
           // test on the signature XOR carried out of the bucket
-          candidates = () => groups
-            .withColumn("bmin", col("bucket").bitwiseAND(lit(planeMask(configs.min))))
-            .groupBy(col("bmin"))
-            .agg(collect_list(struct(col("rep"), col("m"), col("e"),
-              col("bucket"))).as("ms"))
-            .where(size(col("ms")) > 1)
-            .select(explode(col("ms")).as("x"), col("ms"))
-            .select(col("x"), explode(col("ms")).as("y"))
-            .where(col("x.rep") < col("y.rep"))
-            .select((col("x.m") * col("y.m")).as("w"),
-              col("x.bucket").bitwiseXOR(col("y.bucket")).as("sx"),
-              rankCosine(col("x.e"), col("y.e")).as("cos"))
+          candidates = () => DupGroups.inBucketPairs(
+              groups.withColumn("bmin", col("bucket").bitwiseAND(lit(planeMask(configs.min)))),
+              Seq("bmin"), struct(col("rep"), col("m"), col("e"), col("bucket")), "rep")
+            .select((col("ia.m") * col("ib.m")).as("w"),
+              col("ia.bucket").bitwiseXOR(col("ib.bucket")).as("sx"),
+              rankCosine(col("ia.e"), col("ib.e")).as("cos"))
             .select(explode(array(configs.map(lit): _*)).as("cfg"), col("w"),
               col("sx"), col("cos"))
             .where(expr("sx & (shiftleft(1L, cfg) - 1) = 0"))

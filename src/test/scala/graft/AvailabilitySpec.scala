@@ -520,6 +520,26 @@ class AvailabilitySpec extends SparkSpec {
     }
   }
 
+  test("crossCheckSymbols joins the two key sets once: one shuffle per input, at most " +
+    "three jobs on a 40-date table") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = AQ.open(spark, serveFact)
+    val api = Seq("S01USDT", "S03USDT", "ZZZUSDT").toDF("symbol")
+    def call() = AQ.crossCheckSymbols(df, api, serveDay(22))
+    var rows = Seq.empty[(String, String)]
+    val jobs = jobDescriptions {
+      rows = call().collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    }
+    rows.map(_._2).distinct shouldBe Seq("both", "only_api", "only_db")
+    rows should contain(("ZZZUSDT", "only_api"))
+    withClue(s"jobs: $jobs: ")(jobs.size should be <= 3)
+    val exchanges = withConf("spark.sql.adaptive.enabled" -> "false") {
+      call().queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }.size
+    }
+    exchanges shouldBe 2
+  }
+
   test("serve calls return the same rows in the same order under any shuffle partition " +
     "count, with AQE on or off: a gap day, a day with no rows, a re-probed day") {
     import org.apache.spark.sql.{DataFrame, Row}
