@@ -110,8 +110,9 @@ final class KeepBestIndex(spark: SparkSession, shingleN: Int = 3, k: Int = 16,
     // semantics eliminate (two scored rows make the keep-best window
     // rank the id against itself and anti-join the document out even
     // as its cluster's best copy). One batch-bounded aggregation.
-    val dupId = batch.groupBy(col(idCol)).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).limit(1).collect()
+    val dupId = Concurrent.labeled(spark, "keepbest:ingest dup-check")(
+      batch.groupBy(col(idCol)).agg(count(lit(1)).as("c"))
+        .filter(col("c") > 1).limit(1).collect())
     require(dupId.isEmpty,
       s"KeepBestIndex.ingest: id ${dupId.headOption.map(_.get(0)).orNull} " +
         "appears more than once WITHIN the batch — the keyed-upsert contract " +
@@ -133,13 +134,15 @@ final class KeepBestIndex(spark: SparkSession, shingleN: Int = 3, k: Int = 16,
     // concurrently (guide §2.6), then derive the five state updates.
     var dSh: DataFrame = null
     var deltaIds: DataFrame = null
-    Concurrent.runAll(Seq(
-      () => dSh = Dedup.shingleHashSet(batch, idCol, textCol, shingleN)
-        .select(col("id").cast(LongType).as("id"), col("h"))
-        .localCheckpoint(eager = true),
-      () => deltaIds = batch.select(col(idCol).cast(LongType).as("id"))
-        .distinct()
-        .localCheckpoint(eager = true)))
+    Concurrent.runLabeled(spark, Seq(
+      "keepbest:ingest delta shingles" -> (() =>
+        dSh = Dedup.shingleHashSet(batch, idCol, textCol, shingleN)
+          .select(col("id").cast(LongType).as("id"), col("h"))
+          .localCheckpoint(eager = true)),
+      "keepbest:ingest delta ids" -> (() =>
+        deltaIds = batch.select(col(idCol).cast(LongType).as("id"))
+          .distinct()
+          .localCheckpoint(eager = true))))
     def dropDelta(df: DataFrame): DataFrame =
       df.join(broadcast(deltaIds), Seq("id"), "left_anti")
     val shKept = dropDelta(baseSh)
@@ -163,26 +166,31 @@ final class KeepBestIndex(spark: SparkSession, shingleN: Int = 3, k: Int = 16,
     // the signature groupBy / sizes aggregation the unions also pay).
     var dSigs: DataFrame = null
     var dSizes: DataFrame = null
-    Concurrent.runAll(Seq(
-      () => dSigs = Dedup.minhashSigs(dSh, k).localCheckpoint(eager = true),
-      () => dSizes = dSh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-        .localCheckpoint(eager = true)))
+    Concurrent.runLabeled(spark, Seq(
+      "keepbest:ingest delta sigs" -> (() =>
+        dSigs = Dedup.minhashSigs(dSh, k).localCheckpoint(eager = true)),
+      "keepbest:ingest delta sizes" -> (() =>
+        dSizes = dSh.groupBy(col("id")).agg(count(lit(1)).as("n"))
+          .localCheckpoint(eager = true))))
     var pairs2, sh2, sigs2, sizes2, scored2: DataFrame = null
-    Concurrent.runAll(Seq(
-      () => pairs2 = pairsKept.unionByName(
+    Concurrent.runLabeled(spark, Seq(
+      "keepbest:ingest pairs" -> (() => pairs2 = pairsKept.unionByName(
           Dedup.incrementalNearDupPairsFromSets(shKept, sigsKept, dSh,
               k, effectiveRpb, threshold, baseSizes = Some(sizesKept),
               dSigs = Some(dSigs), dSizes = Some(dSizes),
               dIds = Some(deltaIds))
             .select(col("ia"), col("ib")))
-        .localCheckpoint(eager = true),
-      () => sh2 = shKept.unionByName(dSh).localCheckpoint(eager = true),
-      () => sigs2 = sigsKept.unionByName(dSigs).localCheckpoint(eager = true),
-      () => sizes2 = sizesKept.unionByName(dSizes)
-        .localCheckpoint(eager = true),
-      () => scored2 = scoredKept.unionByName(batch.select(
-          col(idCol).cast(LongType).as("id"), score.cast(LongType).as("score")))
-        .localCheckpoint(eager = true)))
+        .localCheckpoint(eager = true)),
+      "keepbest:ingest sh" -> (() =>
+        sh2 = shKept.unionByName(dSh).localCheckpoint(eager = true)),
+      "keepbest:ingest sigs" -> (() =>
+        sigs2 = sigsKept.unionByName(dSigs).localCheckpoint(eager = true)),
+      "keepbest:ingest sizes" -> (() => sizes2 = sizesKept.unionByName(dSizes)
+        .localCheckpoint(eager = true)),
+      "keepbest:ingest scored" -> (() => scored2 = scoredKept.unionByName(
+          batch.select(col(idCol).cast(LongType).as("id"),
+            score.cast(LongType).as("score")))
+        .localCheckpoint(eager = true))))
     pairs = pairs2; baseSh = sh2; baseSigs = sigs2; baseSizes = sizes2
     scored = scored2
   }

@@ -383,14 +383,16 @@ final class KeepBestIndexStore private (spark: SparkSession,
       // committed parquet instead of failing the fold.
       val latest = idsLatest
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      latest.count()
-      try Concurrent.runAll(Seq(
-        () => b.put("sh", effectiveFrom(latest, "sh", shSchema)),
-        () => b.put("sigs", effectiveFrom(latest, "sigs", sigsSchema)),
-        () => b.put("sizes", effectiveFrom(latest, "sizes", sizesSchema)),
-        () => b.put("scored", effectiveFrom(latest, "scored", scoredSchema)),
-        () => b.put("ids", readFrame("ids", idsSchema).select(col("id")).distinct()),
-        () => b.put("pairs", effectivePairsFrom(latest))))
+      Concurrent.labeled(spark, "kbs:fold pivot")(latest.count())
+      try Concurrent.runLabeled(spark, Seq(
+        "sh" -> effectiveFrom(latest, "sh", shSchema),
+        "sigs" -> effectiveFrom(latest, "sigs", sigsSchema),
+        "sizes" -> effectiveFrom(latest, "sizes", sizesSchema),
+        "scored" -> effectiveFrom(latest, "scored", scoredSchema),
+        "ids" -> readFrame("ids", idsSchema).select(col("id")).distinct(),
+        "pairs" -> effectivePairsFrom(latest)).map { case (name, df) =>
+        s"kbs:fold write $name" -> (() => b.put(name, df))
+      })
       finally latest.unpersist()
     }
     // the fold re-delivered every id in its own batch, so every referenced

@@ -29,8 +29,10 @@ object Versioned {
     * [[Store.withLease]] guard applied to the snapshot root (lease file
     * `<root>/_writer.lease`; the `_` prefix keeps it invisible to both
     * `versions()` and parquet readers). Two concurrent `write`s would
-    * otherwise pick the same next version number, and a `recover`
-    * racing a live publish could adopt or drop the wrong pointer temp.
+    * otherwise pick the same next version number, a `recover` racing a
+    * live publish could adopt or drop the wrong pointer temp, and a
+    * `vacuum` could delete the unpublished `v=N` a `write` is filling or
+    * the target of a `rollback`.
     */
   private def withWriterLease[T](spark: SparkSession, root: String)(body: => T): T =
     Store.withLease(spark, new Path(root, "_writer").toString)(body)
@@ -163,12 +165,13 @@ object Versioned {
   /** Drop all versions except the live one and the `keep` most recent.
     * Never deletes the published version regardless of age.
     */
-  def vacuum(spark: SparkSession, root: String, keep: Int): Seq[Long] = {
-    val live = readPointer(spark, root)
-    val all = versions(spark, root)
-    val doomed = all.dropRight(keep).filterNot(live.contains)
-    val f = fs(spark, root)
-    doomed.foreach(v => f.delete(new Path(root, s"v=$v"), true))
-    doomed
-  }
+  def vacuum(spark: SparkSession, root: String, keep: Int): Seq[Long] =
+    withWriterLease(spark, root) {
+      val live = readPointer(spark, root)
+      val all = versions(spark, root)
+      val doomed = all.dropRight(keep).filterNot(live.contains)
+      val f = fs(spark, root)
+      doomed.foreach(v => f.delete(new Path(root, s"v=$v"), true))
+      doomed
+    }
 }

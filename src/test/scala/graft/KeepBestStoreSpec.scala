@@ -365,6 +365,20 @@ class KeepBestStoreSpec extends SparkSpec {
     }
   }
 
+  test("every job of an ingest and a compact carries a kbs: label") {
+    TempFiles.withTempDir("kbstore-labels") { root =>
+      val dir = new java.io.File(root, "s").getAbsolutePath
+      val idx = KeepBestIndexStore.open(spark, dir)
+      idx.ingest(batch(feed.head: _*), "id", "text", col("sc"))
+      val jobs = jobDescriptions {
+        idx.ingest(batch(feed(1): _*), "id", "text", col("sc"))
+        idx.compact()
+      }
+      jobs should not be empty
+      jobs.filterNot(_.startsWith("kbs:")) shouldBe empty
+    }
+  }
+
   test("compactEvery auto-folds on cadence: the shadowed history stays " +
     "bounded, the view never changes, and the cadence is maintenance — " +
     "not fingerprinted state") {

@@ -790,6 +790,7 @@ class StoreSpec extends SparkSpec {
     intercept[Store.LeaseHeld](Versioned.write(spark, root, Seq(2).toDF("v")))
     intercept[Store.LeaseHeld](Versioned.rollback(spark, root, 0L))
     intercept[Store.LeaseHeld](Versioned.recover(spark, root))
+    intercept[Store.LeaseHeld](Versioned.vacuum(spark, root, keep = 0))
     lease.delete() shouldBe true
     Versioned.write(spark, root, Seq(2).toDF("v")) shouldBe 1L
     lease.exists() shouldBe false
