@@ -301,7 +301,8 @@ object Main {
       }
 
     // writer-startup repair: complete or roll back any crash-stranded
-    // two-phase state (compaction swap dirs, versioned pointer temp).
+    // two-phase state (compaction swap dirs; under --versioned, the
+    // publish record of a snapshot flip killed before its marker).
     // SINGLE-WRITER: recover takes the table's writer lease, so it
     // refuses (LeaseHeld) rather than destroy a LIVE writer's in-flight
     // rewrite; a crashed writer's lease expires after the TTL, or pass

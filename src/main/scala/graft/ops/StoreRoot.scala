@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions.lit
 
 /** The pointer-managed versioned-root protocol SHARED by the durable
   * index stores ([[IvfIndexStore]]'s retrain lifecycle,
-  * [[KeepBestIndexStore]]'s reband lifecycle): immutable `v=N` store
+  * [[KeepBestIndexStore]]'s reband lifecycle) and the snapshot-versioned
+  * table [[Versioned]]: immutable `v=N` store
   * directories under one root, a tiny pointer MARKER naming the live
   * one, and a create-marker publish (the `_COMMIT` rule — a crash
   * mid-publish leaves the previous version live, an orphaned
@@ -26,9 +27,11 @@ import org.apache.spark.sql.functions.lit
   * window, and Hadoop's overwriting `FileContext.rename` is itself
   * delete-then-rename on local/checksum filesystems — renames cannot
   * carry this contract portably; atomic creates can, on HDFS and on
-  * object stores alike.) Older markers are swept best-effort AFTER the
-  * new one lands; lifecycle versions are monotone (`nextVersion` =
-  * max + 1), so max-wins is exact even when a crash leaves two.
+  * object stores alike.) Every other marker is swept best-effort AFTER
+  * the new one lands; lifecycle versions are monotone (`nextVersion` =
+  * max + 1), so max-wins is exact even when a crash leaves two. The one
+  * downward flip, `Versioned.rollback`, resolves the old live version
+  * until its sweep removes the higher marker, and a retry completes it.
   */
 private[graft] object StoreRoot {
 
@@ -274,40 +277,88 @@ private[graft] object StoreRoot {
     else scala.util.Try(readText(fs, legacy).trim.toInt).toOption
   }
 
+  private def markers(fs: FileSystem, root: Path): Seq[Int] =
+    Option(fs.globStatus(new Path(root, "_latest.v=*"))).toSeq.flatten
+      .map(_.getPath.getName)
+      .collect { case Marker(n) => n.toInt }
+
   /** The live version: max over the pointer markers, one glob listing;
     * a marker-less root falls back to the legacy single-file pointer.
     */
   def pointerOf(fs: FileSystem, root: Path): Option[Int] = {
-    val ms = Option(fs.globStatus(new Path(root, "_latest.v=*"))).toSeq.flatten
-      .map(_.getPath.getName)
-      .collect { case Marker(n) => n.toInt }
+    val ms = markers(fs, root)
     if (ms.nonEmpty) Some(ms.max) else legacyPointer(fs, root)
   }
 
+  /** Every `v=N` directory under `root` (published or orphaned),
+    * ascending; empty when the root does not exist.
+    */
+  private[ops] def versionDirs(fs: FileSystem, root: Path): Seq[Int] =
+    Option(fs.globStatus(new Path(root, "v=*"))).toSeq.flatten
+      .map(_.getPath.getName)
+      .collect { case VersionDir(n) => n.toInt }
+      .sorted
+
+  /** The permanent publish record of version `v`, `_published.v=N`. */
+  private def publishRecord(root: Path, v: Long): Path =
+    new Path(root, s"_published.v=$v")
+
+  private def publishedVersions(fs: FileSystem, root: Path): Set[Int] =
+    Option(fs.globStatus(new Path(root, "_published.v=*"))).toSeq.flatten
+      .map(_.getPath.getName)
+      .collect { case Published(n) => n.toInt }.toSet
+
+  /** Whether `v` may be published again (a rollback target): its
+    * directory exists and carries a publish record or, on a root still
+    * on the legacy single-file pointer, lies at or below the legacy live
+    * version (the versions [[flipPointer]]'s migration records). A
+    * directory a crashed write left half-written has neither.
+    */
+  private[ops] def wasPublished(fs: FileSystem, root: Path, v: Long): Boolean =
+    fs.exists(versionDir(root, v)) &&
+      (fs.exists(publishRecord(root, v)) || legacyPointer(fs, root).exists(v <= _))
+
+  /** HEAL CRASHED FLIPS — delete every publish record ABOVE the live
+    * pointer (except `publishing`, the version a flip is about to
+    * publish) and return the healed versions, ascending. Such a record
+    * is one of two things:
+    *
+    *  - a flip that crashed between its `_published` create and its
+    *    `_latest` create: that version never served, so letting the
+    *    record stand would make [[gcSuperseded]] count a never-live
+    *    orphan toward the retention budget, displacing a real snapshot
+    *    a reader could actually be pinned to (UNDER-retention);
+    *  - a version a downward flip (a `Versioned` rollback) moved the
+    *    pointer below: the rollback retired it, and it keeps its record
+    *    — so it stays a rollback target — only until this heal runs.
+    *
+    * An upward flip sweeps a marker only once a newer one exists, so
+    * without rollbacks live >= M for every M that ever had a marker and
+    * "record above live" is exactly the crashed flips; the stores never
+    * flip down. Runs first in every [[flipPointer]], and as
+    * `Versioned.recover`. Healed versions become orphans that
+    * [[gcSuperseded]] reclaims once live is above them.
+    */
+  private[ops] def healCrashedFlips(fs: FileSystem, root: Path,
+                                    publishing: Option[Int] = None): Seq[Int] = {
+    val live = pointerOf(fs, root).getOrElse(-1)
+    val healed = publishedVersions(fs, root).toSeq
+      .filter(n => n > live && !publishing.contains(n)).sorted
+    healed.foreach(n => fs.delete(publishRecord(root, n), false))
+    healed
+  }
+
   /** Atomic pointer publish — ONE marker create, then a best-effort
-    * sweep of the older markers (a crash mid-sweep leaves extras;
+    * sweep of every other marker (a crash mid-sweep leaves extras;
     * max-wins keeps the answer exact and the next publish re-sweeps).
+    * The same flip moves the pointer DOWN (a `Versioned` rollback):
+    * until the sweep deletes the higher marker the old live version
+    * stands, and a retried flip completes the move. The sweep goes in
+    * ascending order, so the old live marker — the max — goes last and
+    * no stale marker between `v` and it is ever resolved as live.
     */
   def flipPointer(fs: FileSystem, root: Path, v: Int): Unit = {
-    val liveBefore = pointerOf(fs, root)
-    // HEAL CRASHED FLIPS before adding our own records: a publish
-    // record ABOVE the current live pointer (and not the version being
-    // published now) is a flip that crashed between its `_published`
-    // create and its `_latest` create — that version never served, so
-    // letting the record stand would make [[gcSuperseded]] count a
-    // never-live orphan toward the retention budget, displacing a real
-    // snapshot a reader could actually be pinned to (UNDER-retention).
-    // Markers are only swept when a newer one exists, so live >= M for
-    // every M that ever had a marker — "record above live" is exact.
-    Option(fs.globStatus(new Path(root, "_published.v=*"))).toSeq.flatten
-      .map(_.getPath).foreach { p =>
-        p.getName match {
-          case Published(n)
-            if n.toInt > liveBefore.getOrElse(-1) && n.toInt != v =>
-            fs.delete(p, false)
-          case _ => ()
-        }
-      }
+    healCrashedFlips(fs, root, Some(v))
     // legacy-protocol versions were genuinely published but predate
     // the records — give every legacy dir at-or-below the legacy live
     // one before they go below the new live, or [[gcSuperseded]] would
@@ -316,28 +367,20 @@ private[graft] object StoreRoot {
     // post hoc; recording them all errs toward OVER-retention, the
     // protocol's stated failure direction.
     legacyPointer(fs, root).foreach { lv =>
-      fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .collect { case VersionDir(n) => n.toInt }
-        .filter(n => n <= lv && n != v)
-        .foreach(n =>
-          fs.create(new Path(root, s"_published.v=$n"), true).close())
+      versionDirs(fs, root).filter(n => n <= lv && n != v)
+        .foreach(n => fs.create(publishRecord(root, n), true).close())
     }
     // a PERMANENT publish record first (never swept while its dir
     // lives): [[gcSuperseded]] uses it to tell genuinely superseded
     // snapshots — the only dirs a reader can be pinned to — from crash
     // orphans, so orphans can never consume retention slots. Marker
     // before pointer: a crash between the two leaves a published-
-    // looking orphan which the NEXT flip's heal above deletes; the
-    // reverse order would under-retain a real snapshot.
-    fs.create(new Path(root, s"_published.v=$v"), true).close()
+    // looking orphan which the NEXT flip's heal deletes; the reverse
+    // order would under-retain a real snapshot.
+    fs.create(publishRecord(root, v), true).close()
     fs.create(new Path(root, s"_latest.v=$v"), true).close()
-    Option(fs.globStatus(new Path(root, "_latest.v=*"))).toSeq.flatten
-      .map(_.getPath).foreach { p =>
-        p.getName match {
-          case Marker(n) if n.toInt < v => fs.delete(p, false)
-          case _ => ()
-        }
-      }
+    markers(fs, root).filter(_ != v).sorted
+      .foreach(n => fs.delete(new Path(root, s"_latest.v=$n"), false))
     // retire the legacy single-file pointer AFTER the markers landed —
     // max-wins already ignores it, this is just migration hygiene
     fs.delete(new Path(root, "_latest"), false)
@@ -355,11 +398,9 @@ private[graft] object StoreRoot {
     * adopted as live.
     */
   def nextVersion(fs: FileSystem, root: Path): Int =
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .collect { case VersionDir(n) => n.toInt }
-      .foldLeft(-1)(math.max) + 1
+    versionDirs(fs, root).lastOption.getOrElse(-1) + 1
 
-  def versionDir(root: Path, v: Int): Path = new Path(root, s"v=$v")
+  def versionDir(root: Path, v: Long): Path = new Path(root, s"v=$v")
 
   /** Claim a batch directory for writing — the front half of the
     * batch protocol's concurrent-writer trip-wire. The stores are
@@ -437,13 +478,9 @@ private[graft] object StoreRoot {
     pointerOf(fs, root) match {
       case None => Seq.empty
       case Some(live) =>
-        val published = Option(fs.globStatus(new Path(root, "_published.v=*")))
-          .toSeq.flatten.map(_.getPath.getName)
-          .collect { case Published(n) => n.toInt }.toSet
-        val below = fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .collect { case VersionDir(n) => n.toInt }
-          .filter(_ < live).sorted
-        val (superseded, orphans) = below.partition(published)
+        val allDirs = versionDirs(fs, root)
+        val (superseded, orphans) =
+          allDirs.filter(_ < live).partition(publishedVersions(fs, root))
         var doomed = (orphans ++ superseded.dropRight(keepSuperseded)).toSet
         // MANIFEST-AWARE: a version referenced by any SURVIVING version
         // (live, above-live in-flight, retained — or itself rescued by
@@ -454,9 +491,7 @@ private[graft] object StoreRoot {
         // the protocol's stated failure direction). They become
         // reclaimable the moment the referencing version compacts
         // (folding retires its manifest) or is itself swept.
-        val allDirs = fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .collect { case VersionDir(n) => n.toInt }.toSet
-        var kept = allDirs -- doomed
+        var kept = allDirs.toSet -- doomed
         var rescued = kept.flatMap(referencedVersions(fs, root, _)) & doomed
         while (rescued.nonEmpty) {
           doomed --= rescued
@@ -466,7 +501,7 @@ private[graft] object StoreRoot {
         val order = doomed.toSeq.sorted
         order.foreach { v =>
           fs.delete(versionDir(root, v), true)
-          fs.delete(new Path(root, s"_published.v=$v"), false)
+          fs.delete(publishRecord(root, v), false)
         }
         order
     }
@@ -558,11 +593,10 @@ private[graft] object StoreRoot {
     require(pointerOf(fs, root).isEmpty,
       s"$who: $root already has a live version — open it with openLive " +
         "(or run its lifecycle) instead of re-creating")
-    val vs = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .collect { case VersionDir(n) => n.toInt }
+    val vs = versionDirs(fs, root)
     require(vs.forall(_ == 0),
       s"$who: $root holds version directories " +
-        s"(${vs.sorted.map(v => s"v=$v").mkString(", ")}) but NO resolvable " +
+        s"(${vs.map(v => s"v=$v").mkString(", ")}) but NO resolvable " +
         "pointer — re-creating would adopt v=0 and silently roll serving " +
         "back from whatever version the lost pointer named; restore the " +
         "pointer marker (or clear the root) instead")

@@ -96,18 +96,17 @@ class CliSpec extends SparkSpec {
     spark.read.parquet(out).columns should contain("text")
   }
 
-  test("recover --versioned completes an interrupted pointer publish") {
+  test("recover --versioned drops the publish record of a flip killed " +
+    "before its marker") {
     import spark.implicits._
     import graft.ops.Versioned
     val root = java.nio.file.Files.createTempDirectory("graft-clivrec").toString
     Versioned.write(spark, root, Seq(1).toDF("v"))
     Seq(1, 2).toDF("v").write.parquet(s"$root/v=1")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root, "_latest.tmp"), "1")
-    new java.io.File(root, "_latest").delete() shouldBe true
+    new java.io.File(root, "_published.v=1").createNewFile() shouldBe true
     captureOut(cli.Main.main(Array("recover", root, "--versioned"))) should
       include("v=1")
-    Versioned.readLatest(spark, root).count() shouldBe 2
+    Versioned.readLatest(spark, root).count() shouldBe 1
   }
 
   test("recover repairs a crash-stranded compaction swap and reports it") {

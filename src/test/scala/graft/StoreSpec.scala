@@ -687,55 +687,95 @@ class StoreSpec extends SparkSpec {
     assertHealthy(path, n)
   }
 
-  test("versioned recover: completes an interrupted pointer publish, " +
-    "drops a partial or superseded temp") {
+  test("versioned recover: a write killed between its publish record and " +
+    "its marker leaves v=0 live; recover drops the record and reports v=1") {
     import spark.implicits._
     import graft.ops.Versioned
     val root = Files.createTempDirectory("graft-vrec").toString
     Versioned.write(spark, root, Seq(1, 2).toDF("v"))       // v=0 published
-    val latest = new java.io.File(root, "_latest")
-    val tmp = new java.io.File(root, "_latest.tmp")
-    // state 1: second snapshot written, pointer delete done, rename lost
+    // the flip's window: v=1 committed, its publish record created, its
+    // _latest.v=1 marker never
     Seq(1, 2, 3).toDF("v").write.parquet(s"$root/v=1")
-    java.nio.file.Files.writeString(tmp.toPath, "1")
-    latest.delete() shouldBe true
+    val record = new java.io.File(root, "_published.v=1")
+    record.createNewFile() shouldBe true
     Versioned.recover(spark, root).head should include("v=1")
-    Versioned.readLatest(spark, root).count() shouldBe 3
-    // state 2: a temp left behind while a valid pointer exists — dropped
-    java.nio.file.Files.writeString(tmp.toPath, "0")
-    Versioned.recover(spark, root).head should include("stands")
-    tmp.exists() shouldBe false
-    Versioned.readLatest(spark, root).count() shouldBe 3
-    // state 3: garbage temp, no pointer — dropped, publish stays absent
-    latest.delete() shouldBe true
-    java.nio.file.Files.writeString(tmp.toPath, "not-a-version")
-    Versioned.recover(spark, root).head should include("stands")
-    Versioned.latestVersion(spark, root) shouldBe None
+    record.exists() shouldBe false
+    Versioned.readLatest(spark, root).count() shouldBe 2
     // idempotent on a clean root
-    java.nio.file.Files.writeString(latest.toPath, "1")
     Versioned.recover(spark, root) shouldBe empty
   }
 
-  test("versioned readers mid-publish: with _latest deleted and the rename " +
-    "not yet done, readLatest adopts a temp naming an existing version") {
+  test("versioned readers mid-publish: between a flip's publish record and " +
+    "its marker, readers resolve v=0 and the next write heals the record") {
     import spark.implicits._
     import graft.ops.Versioned
     val root = Files.createTempDirectory("graft-vmid").toString
     Versioned.write(spark, root, Seq(1, 2).toDF("v"))       // v=0 published
-    val latest = new java.io.File(root, "_latest")
-    val tmp = new java.io.File(root, "_latest.tmp")
-    // writePointer's window: v=1 committed, temp written, old pointer
-    // deleted, rename pending — no recover has run
     Seq(1, 2, 3).toDF("v").write.parquet(s"$root/v=1")
-    java.nio.file.Files.writeString(tmp.toPath, "1")
-    latest.delete() shouldBe true
+    val record = new java.io.File(root, "_published.v=1")
+    record.createNewFile() shouldBe true
+    Versioned.latestVersion(spark, root) shouldBe Some(0L)
+    Versioned.readLatest(spark, root).count() shouldBe 2
+    record.exists() shouldBe true                            // readers never repair
+    // the next publish skips the crashed number and heals its record
+    Versioned.write(spark, root, Seq(4).toDF("v")) shouldBe 2L
+    record.exists() shouldBe false
+    Versioned.readLatest(spark, root).count() shouldBe 1
+  }
+
+  test("versioned write killed after its data write, before its publish " +
+    "record: v=0 stays live, rollback refuses the partial v=1, the next " +
+    "write skips its number and vacuum reclaims it") {
+    import spark.implicits._
+    import graft.ops.Versioned
+    val root = Files.createTempDirectory("graft-vorphan").toString
+    Versioned.write(spark, root, Seq(1, 2).toDF("v"))       // v=0 published
+    Seq(1, 2, 3).toDF("v").write.parquet(s"$root/v=1")      // no record, no marker
+    Versioned.latestVersion(spark, root) shouldBe Some(0L)
+    an[IllegalArgumentException] should be thrownBy Versioned.rollback(spark, root, 1L)
+    Versioned.readLatest(spark, root).count() shouldBe 2
+    Versioned.write(spark, root, Seq(4).toDF("v")) shouldBe 2L
+    // keep = 2 retains the published v=0; the orphan never counts
+    Versioned.vacuum(spark, root, keep = 2) shouldBe Seq(1L)
+    Versioned.versions(spark, root) shouldBe Seq(0L, 2L)
+  }
+
+  test("versioned rollback killed after its new marker, before the higher " +
+    "marker's delete: the old live version stands, a retry completes it") {
+    import spark.implicits._
+    import graft.ops.Versioned
+    val root = Files.createTempDirectory("graft-vroll").toString
+    Versioned.write(spark, root, Seq(1, 2).toDF("v"))
+    Versioned.write(spark, root, Seq(1, 2, 3).toDF("v"))    // v=1 live
+    new java.io.File(root, "_latest.v=0").createNewFile() shouldBe true
     Versioned.latestVersion(spark, root) shouldBe Some(1L)
     Versioned.readLatest(spark, root).count() shouldBe 3
-    tmp.exists() shouldBe true                               // readers never repair
-    // a temp naming a version that does not exist is not a publish
-    java.nio.file.Files.writeString(tmp.toPath, "7")
-    Versioned.latestVersion(spark, root) shouldBe None
-    intercept[RuntimeException](Versioned.readLatest(spark, root))
+    Versioned.rollback(spark, root, 0L)
+    Versioned.latestVersion(spark, root) shouldBe Some(0L)
+    new java.io.File(root).list().filter(_.startsWith("_latest")).toSeq shouldBe
+      Seq("_latest.v=0")
+  }
+
+  test("versioned root written by the single-file pointer: reads its live " +
+    "version, rolls back before any write, and the next write migrates it") {
+    import spark.implicits._
+    import graft.ops.Versioned
+    def legacyRoot(): String = {
+      val root = Files.createTempDirectory("graft-vlegacy").toString
+      Seq(1).toDF("v").write.parquet(s"$root/v=0")
+      Seq(1, 2).toDF("v").write.parquet(s"$root/v=1")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_latest"), "1")
+      root
+    }
+    val a = legacyRoot()
+    Versioned.readLatest(spark, a).count() shouldBe 2
+    Versioned.rollback(spark, a, 0L)
+    Versioned.readLatest(spark, a).count() shouldBe 1
+    val b = legacyRoot()
+    Versioned.write(spark, b, Seq(1, 2, 3).toDF("v")) shouldBe 2L
+    new java.io.File(b, "_latest").exists() shouldBe false
+    Versioned.readLatest(spark, b).count() shouldBe 3
+    Versioned.versions(spark, b) shouldBe Seq(0L, 1L, 2L)
   }
 
   // ---- single-writer lease -------------------------------------------
