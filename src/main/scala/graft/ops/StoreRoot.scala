@@ -35,10 +35,17 @@ import org.apache.spark.sql.functions.lit
   */
 private[graft] object StoreRoot {
 
-  private val Marker = "_latest.v=(\\d+)".r
-  private val Published = "_published.v=(\\d+)".r
-  private val VersionDir = "v=(\\d+)".r
-  private val TickMarker = "_tick.n=(\\d+)".r
+  /** The numbers N of the `<prefix>N` entries directly under `root`,
+    * ascending; empty when the root does not exist. The one listing of
+    * the markers, the records and the `v=N` directories.
+    */
+  private def numbered(fs: FileSystem, root: Path, prefix: String): Seq[Int] = {
+    val entry = (java.util.regex.Pattern.quote(prefix) + "(\\d+)").r
+    Option(fs.globStatus(new Path(root, prefix + "*"))).toSeq.flatten
+      .map(_.getPath.getName)
+      .collect { case entry(n) => n.toInt }
+      .sorted
+  }
 
   /** A version dir's reference manifest (`v=N/_refs`): each line names
     * a batch directory of a PRIOR version (`v=K/b=M`) whose data this
@@ -278,9 +285,7 @@ private[graft] object StoreRoot {
   }
 
   private def markers(fs: FileSystem, root: Path): Seq[Int] =
-    Option(fs.globStatus(new Path(root, "_latest.v=*"))).toSeq.flatten
-      .map(_.getPath.getName)
-      .collect { case Marker(n) => n.toInt }
+    numbered(fs, root, "_latest.v=")
 
   /** The live version: max over the pointer markers, one glob listing;
     * a marker-less root falls back to the legacy single-file pointer.
@@ -294,55 +299,68 @@ private[graft] object StoreRoot {
     * ascending; empty when the root does not exist.
     */
   private[ops] def versionDirs(fs: FileSystem, root: Path): Seq[Int] =
-    Option(fs.globStatus(new Path(root, "v=*"))).toSeq.flatten
-      .map(_.getPath.getName)
-      .collect { case VersionDir(n) => n.toInt }
-      .sorted
+    numbered(fs, root, "v=")
 
   /** The permanent publish record of version `v`, `_published.v=N`. */
   private def publishRecord(root: Path, v: Long): Path =
     new Path(root, s"_published.v=$v")
 
   private def publishedVersions(fs: FileSystem, root: Path): Set[Int] =
-    Option(fs.globStatus(new Path(root, "_published.v=*"))).toSeq.flatten
-      .map(_.getPath.getName)
-      .collect { case Published(n) => n.toInt }.toSet
+    numbered(fs, root, "_published.v=").toSet
+
+  /** The retirement record of version `v`, `_retired.v=N`: a downward
+    * flip left `v` above the live pointer after it had served. */
+  private def retiredRecord(root: Path, v: Int): Path =
+    new Path(root, s"_retired.v=$v")
+
+  private def retiredVersions(fs: FileSystem, root: Path): Set[Int] =
+    numbered(fs, root, "_retired.v=").toSet
+
+  /** The legacy-root rule: on a root still on the single-file pointer,
+    * every directory at or below the legacy live version counts as
+    * published (those versions predate the records). Dirs below a
+    * legacy live COULD be crash orphans, but that is unknowable post
+    * hoc; counting them all errs toward OVER-retention, the protocol's
+    * stated failure direction.
+    */
+  private def legacyPublished(fs: FileSystem, root: Path): Long => Boolean = {
+    val lv = legacyPointer(fs, root)
+    n => lv.exists(n <= _)
+  }
 
   /** Whether `v` may be published again (a rollback target): its
-    * directory exists and carries a publish record or, on a root still
-    * on the legacy single-file pointer, lies at or below the legacy live
-    * version (the versions [[flipPointer]]'s migration records). A
-    * directory a crashed write left half-written has neither.
+    * directory exists and carries a publish record or falls under the
+    * legacy-root rule. A directory a crashed write left half-written
+    * has neither.
     */
   private[ops] def wasPublished(fs: FileSystem, root: Path, v: Long): Boolean =
     fs.exists(versionDir(root, v)) &&
-      (fs.exists(publishRecord(root, v)) || legacyPointer(fs, root).exists(v <= _))
+      (fs.exists(publishRecord(root, v)) || legacyPublished(fs, root)(v))
 
   /** HEAL CRASHED FLIPS — delete every publish record ABOVE the live
-    * pointer (except `publishing`, the version a flip is about to
-    * publish) and return the healed versions, ascending. Such a record
-    * is one of two things:
+    * pointer that carries no retirement record (except `publishing`,
+    * the version a flip is about to publish) and return the healed
+    * versions, ascending. Such a record is a flip that crashed between
+    * its `_published` create and its `_latest` create: that version
+    * never served, so letting the record stand would make
+    * [[gcSuperseded]] count a never-live orphan toward the retention
+    * budget, displacing a real snapshot a reader could actually be
+    * pinned to (UNDER-retention).
     *
-    *  - a flip that crashed between its `_published` create and its
-    *    `_latest` create: that version never served, so letting the
-    *    record stand would make [[gcSuperseded]] count a never-live
-    *    orphan toward the retention budget, displacing a real snapshot
-    *    a reader could actually be pinned to (UNDER-retention);
-    *  - a version a downward flip (a `Versioned` rollback) moved the
-    *    pointer below: the rollback retired it, and it keeps its record
-    *    — so it stays a rollback target — only until this heal runs.
-    *
-    * An upward flip sweeps a marker only once a newer one exists, so
-    * without rollbacks live >= M for every M that ever had a marker and
-    * "record above live" is exactly the crashed flips; the stores never
-    * flip down. Runs first in every [[flipPointer]], and as
-    * `Versioned.recover`. Healed versions become orphans that
-    * [[gcSuperseded]] reclaims once live is above them.
+    * An upward flip sweeps a marker only once a newer one exists, and a
+    * downward flip (a `Versioned` rollback; the stores never flip down)
+    * writes a `_retired.v=N` record for every published version above
+    * its target before its marker lands. So every M that ever had a
+    * marker is at or below live or carries a retirement record, and
+    * "unretired record above live" is exactly the crashed flips. Runs
+    * first in every [[flipPointer]], and as `Versioned.recover`. Healed
+    * versions become orphans that [[gcSuperseded]] reclaims once live
+    * is above them.
     */
   private[ops] def healCrashedFlips(fs: FileSystem, root: Path,
                                     publishing: Option[Int] = None): Seq[Int] = {
     val live = pointerOf(fs, root).getOrElse(-1)
-    val healed = publishedVersions(fs, root).toSeq
+    val healed = (publishedVersions(fs, root) -- retiredVersions(fs, root)).toSeq
       .filter(n => n > live && !publishing.contains(n)).sorted
     healed.foreach(n => fs.delete(publishRecord(root, n), false))
     healed
@@ -355,21 +373,23 @@ private[graft] object StoreRoot {
     * until the sweep deletes the higher marker the old live version
     * stands, and a retried flip completes the move. The sweep goes in
     * ascending order, so the old live marker — the max — goes last and
-    * no stale marker between `v` and it is ever resolved as live.
+    * no stale marker between `v` and it is ever resolved as live. The
+    * versions a downward flip leaves above live keep their publish
+    * records (they stay rollback targets, and count toward retention
+    * once a later write moves live above them): each gets a retirement
+    * record, which [[healCrashedFlips]] skips, before the marker lands.
     */
   def flipPointer(fs: FileSystem, root: Path, v: Int): Unit = {
     healCrashedFlips(fs, root, Some(v))
     // legacy-protocol versions were genuinely published but predate
-    // the records — give every legacy dir at-or-below the legacy live
-    // one before they go below the new live, or [[gcSuperseded]] would
-    // treat them as unconditional orphans and under-retain. Dirs below
-    // a legacy live COULD be crash orphans, but that is unknowable
-    // post hoc; recording them all errs toward OVER-retention, the
-    // protocol's stated failure direction.
-    legacyPointer(fs, root).foreach { lv =>
-      versionDirs(fs, root).filter(n => n <= lv && n != v)
-        .foreach(n => fs.create(publishRecord(root, n), true).close())
-    }
+    // the records — record every dir the legacy-root rule counts before
+    // they go below the new live, or [[gcSuperseded]] would treat them
+    // as unconditional orphans and under-retain
+    val legacy = legacyPublished(fs, root)
+    versionDirs(fs, root).filter(n => legacy(n) && n != v)
+      .foreach(n => fs.create(publishRecord(root, n), true).close())
+    publishedVersions(fs, root).filter(_ > v)
+      .foreach(n => fs.create(retiredRecord(root, n), true).close())
     // a PERMANENT publish record first (never swept while its dir
     // lives): [[gcSuperseded]] uses it to tell genuinely superseded
     // snapshots — the only dirs a reader can be pinned to — from crash
@@ -502,6 +522,7 @@ private[graft] object StoreRoot {
         order.foreach { v =>
           fs.delete(versionDir(root, v), true)
           fs.delete(publishRecord(root, v), false)
+          fs.delete(retiredRecord(root, v), false)
         }
         order
     }
@@ -519,10 +540,7 @@ private[graft] object StoreRoot {
     * CALLS, which nothing else advances.
     */
   def tickCount(fs: FileSystem, root: Path): Int =
-    Option(fs.globStatus(new Path(root, "_tick.n=*"))).toSeq.flatten
-      .map(_.getPath.getName)
-      .collect { case TickMarker(n) => n.toInt }
-      .foldLeft(0)(math.max)
+    numbered(fs, root, "_tick.n=").lastOption.getOrElse(0)
 
   /** Durably advance the tick counter by one: create the next marker,
     * then best-effort sweep the older ones (max-wins absorbs a crash
@@ -535,13 +553,8 @@ private[graft] object StoreRoot {
   def bumpTick(fs: FileSystem, root: Path): Int = {
     val t = tickCount(fs, root) + 1
     fs.create(new Path(root, s"_tick.n=$t"), true).close()
-    Option(fs.globStatus(new Path(root, "_tick.n=*"))).toSeq.flatten
-      .map(_.getPath).foreach { p =>
-        p.getName match {
-          case TickMarker(n) if n.toInt < t => fs.delete(p, false)
-          case _ => ()
-        }
-      }
+    numbered(fs, root, "_tick.n=").filter(_ < t)
+      .foreach(n => fs.delete(new Path(root, s"_tick.n=$n"), false))
     t
   }
 

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Snapshot-versioned table: every write lands in a fresh immutable
   * `v=N` directory and the [[StoreRoot]] pointer protocol (the one the
@@ -19,13 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     reproducibility story a training pipeline needs: "which corpus
   *     snapshot trained this model" is just a version number).
   *
-  * A rollback retires the versions above its target: they keep their
-  * publish records (and stay rollback targets) until the next flip or
-  * `recover` heals those records away, after which `vacuum` reclaims
-  * them as orphans once a later write moves the pointer above them.
-  * The heal cannot tell which of them a later flip moves back above, so
-  * rolling back past a version and then forward over it leaves that
-  * version recordless too.
+  * A rollback retires the versions above its target: each keeps its
+  * publish record, so it stays a rollback target and, once a later
+  * write moves the pointer above it, counts toward `vacuum`'s `keep`
+  * like any superseded snapshot.
   *
   * This is deliberately the minimal core of the table-format idea
   * (snapshot + pointer): no manifest-level file tracking, because the
@@ -72,10 +69,8 @@ object Versioned {
     */
   def write(spark: SparkSession, root: String, df: DataFrame): Long =
     withWriterLease(spark, root) { (fs, r) =>
-      val v = StoreRoot.nextVersion(fs, r)
-      val dir = StoreRoot.versionDir(r, v)
-      StoreRoot.claimVersionDir(fs, dir)
-      df.write.parquet(dir.toString)
+      val (v, dir) = StoreRoot.claimNextVersion(fs, r)
+      df.write.mode(SaveMode.Append).parquet(dir.toString) // claimed: empty
       fence(spark, r)
       StoreRoot.flipPointer(fs, r, v)
       v
@@ -107,15 +102,16 @@ object Versioned {
     * the crashed-flip heal ([[StoreRoot.healCrashedFlips]]) that every
     * flip runs first. A `write` killed between its publish record and
     * its marker left a record above the live version; the record is
-    * dropped and the live version stands. Idempotent; healthy roots are
-    * a no-op. Returns the actions taken.
+    * dropped and the live version stands; the versions a rollback
+    * retired keep theirs. Idempotent; healthy roots are a no-op.
+    * Returns the actions taken.
     */
   def recover(spark: SparkSession, root: String): Seq[String] =
     withWriterLease(spark, root) { (fs, r) =>
       fence(spark, r)
       StoreRoot.healCrashedFlips(fs, r).map(v =>
-        s"dropped the publish record of v=$v, above the live version " +
-          "(a flip that never landed, or a version a rollback retired)")
+        s"dropped the publish record of v=$v, a flip that never landed " +
+          "above the live version")
     }
 
   /** Drop all versions except the live one and the `keep` most recent

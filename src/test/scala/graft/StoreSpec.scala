@@ -756,6 +756,27 @@ class StoreSpec extends SparkSpec {
       Seq("_latest.v=0")
   }
 
+  test("versioned rollback past a version and forward over it: the retired " +
+    "versions keep their publish records, so recover leaves them and vacuum " +
+    "keeps the newest superseded one") {
+    import spark.implicits._
+    import graft.ops.Versioned
+    val root = Files.createTempDirectory("graft-vretire").toString
+    (0 to 2).foreach(i => Versioned.write(spark, root, Seq.fill(i + 1)(i).toDF("v")))
+    Versioned.rollback(spark, root, 0L)
+    Versioned.recover(spark, root) shouldBe empty            // nothing crashed
+    Versioned.rollback(spark, root, 2L)
+    Versioned.vacuum(spark, root, keep = 2) shouldBe Seq(0L)
+    Versioned.versions(spark, root) shouldBe Seq(1L, 2L)
+    Versioned.rollback(spark, root, 1L)
+    Versioned.readLatest(spark, root).count() shouldBe 2
+    // once live is above them, vacuum reclaims them with their records
+    Versioned.write(spark, root, Seq(3).toDF("v")) shouldBe 3L
+    Versioned.vacuum(spark, root, keep = 1) shouldBe Seq(1L, 2L)
+    new java.io.File(root).list().filter(n => n.startsWith("_published") ||
+      n.startsWith("_retired")).toSeq shouldBe Seq("_published.v=3")
+  }
+
   test("versioned root written by the single-file pointer: reads its live " +
     "version, rolls back before any write, and the next write migrates it") {
     import spark.implicits._
